@@ -1,11 +1,10 @@
 package graft.jobs
 
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
 
 import graft.core._
-import graft.operators.SketchAggs._
+import graft.plans.{FusedTokensNative, NativeAggs}
 
 /** Production-shape sketch-build job (north rule: "resumable from checkpoint
   * with per-partition lineage + metrics, salt-based skew mitigation").
@@ -22,6 +21,13 @@ import graft.operators.SketchAggs._
   *   3. appends them to the checkpoint (bucket = the commit unit),
   *   4. `finalize` merges all partials per source — pure sketch merges,
   *      the same monoid the aggregation itself uses.
+  *
+  * Both halves run on native `TypedImperativeAggregate`s that read rows in
+  * place: the increment is ONE `FusedTokensNative` (bloom + HLL + CMS from
+  * two hashes per token), finalize is one `SketchMergeNative` per sketch
+  * column plus plain aggregates, so its plan has a single exchange. The
+  * job's parameters travel in the expressions (`cfg`), never through the
+  * session-global `NativeAggs.register`.
   *
   * Because merge is associative+commutative and buckets are disjoint,
   * resume-then-finalize is byte-identical to a single uninterrupted build
@@ -97,10 +103,10 @@ object SketchJob {
       failAfterBuckets: Option[Int] = None): Int = {
     graft.plans.GraftFunctions.registerExpressions(spark)
     val done = committedBuckets(spark, ckptDir)
-    val tokensEnc = ExpressionEncoder[Array[Int]]()
-    val bloomU = udaf(new BloomTokensAgg(cfg.bloomCfg), tokensEnc)
-    val hllU = udaf(new HllTokensAgg(cfg.k0, cfg.k1, cfg.hllP), tokensEnc)
-    val cmsU = udaf(new CmsTokensAgg(cfg.cmsCfg), tokensEnc)
+    // one fused native build (two hashes per token, rows read in place);
+    // the config travels in the expression, not in a session-global name
+    val fused = NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(col("tokens")),
+      cfg.bloomK, cfg.bloomLog2l, cfg.hllP, cfg.cmsDepth, cfg.cmsLog2Width, cfg.k0, cfg.k1))
 
     val withBucket = tokens.withColumn("bucket", bucketCol(cfg.k0, cfg.k1, cfg.numBuckets))
     val todoAll = (0 until cfg.numBuckets).filterNot(done)
@@ -113,11 +119,11 @@ object SketchJob {
       .where(col("bucket").isin(todo: _*))
       .groupBy(col("bucket"), col("source"))
       .agg(
-        bloomU(col("tokens")).as("bloom"),
-        hllU(col("tokens")).as("hll"),
-        cmsU(col("tokens")).as("cms"),
+        fused.as("f"),
         count(lit(1)).as("n_rows"),
         sum(col("n_tok")).cast("long").as("n_tokens"))
+      .select(col("bucket"), col("source"), col("f.bloom").as("bloom"), col("f.hll").as("hll"),
+        col("f.cms").as("cms"), col("n_rows"), col("n_tokens"))
       .withColumn("committed_at_ms", lit(t0))
       .withColumn("build_host", lit(java.net.InetAddress.getLocalHost.getHostName))
     // fresh run dir per increment: the parquet job writes _SUCCESS only on
@@ -131,20 +137,19 @@ object SketchJob {
     * per-source sketches (plus rolled-up lineage metrics). */
   def finalizeSketches(spark: SparkSession, ckptDir: String,
       cfg: JobConfig = DefaultConfig): DataFrame = {
-    val binEnc = ExpressionEncoder[Array[Byte]]()
-    val bloomMergeU = udaf(new BloomMergeAgg(cfg.k0, cfg.k1), binEnc)
-    val hllMergeU = udaf(new HllBytesMergeAgg(), binEnc)
-    val cmsMergeU = udaf(new CmsBytesMergeAgg(), binEnc)
+    def sketch(name: String) = GraftColumnBridge.expression(col(name))
     committedPartials(spark, ckptDir)
       .getOrElse(throw new IllegalStateException(s"no committed runs under $ckptDir"))
       .groupBy(col("source"))
       .agg(
-        bloomMergeU(col("bloom")).as("bloom"),
-        hllMergeU(col("hll")).as("hll"),
-        cmsMergeU(col("cms")).as("cms"),
+        NativeAggs.column(NativeAggs.bloomMerge(sketch("bloom"), cfg.k0, cfg.k1)).as("bloom"),
+        NativeAggs.column(NativeAggs.hllMerge(sketch("hll"))).as("hll"),
+        NativeAggs.column(NativeAggs.cmsMerge(sketch("cms"))).as("cms"),
         sum(col("n_rows")).as("n_rows"),
         sum(col("n_tokens")).as("n_tokens"),
-        countDistinct(col("bucket")).as("n_buckets"))
+        // == countDistinct for the non-null int bucket, but a plain
+        // aggregate: one exchange instead of countDistinct's two
+        size(collect_set(col("bucket"))).cast("long").as("n_buckets"))
   }
 
   /** Per-bucket lineage view (what resumed, when, how much). */

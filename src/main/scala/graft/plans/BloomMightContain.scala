@@ -571,10 +571,12 @@ object GraftFunctions {
     (SketchReaders.SampleWeightedStringsName, classOf[BottomKStringsExpr],
       SketchReaders.sampleWeightedStringsBuilder _),
     (VectorFunctions.CosineSimName, classOf[CosineSimExpr], VectorFunctions.cosineBuilder _),
-    (VectorFunctions.SrpBandsName, classOf[SrpBandsExpr], VectorFunctions.srpBandsBuilder _))
+    (VectorFunctions.SrpBandsName, classOf[SrpBandsExpr], VectorFunctions.srpBandsBuilder _)) ++
+    NativeAggs.mergeBuilders.map { case (name, b) => (name, classOf[SketchMergeNative[_]], b) }
 
-  /** Register every native expression (cheap, idempotent) — enough for the
-    * Column-API entry points; `register` layers the SQL UDAF surface on top. */
+  /** Register every native expression and native merge aggregate (cheap,
+    * idempotent) — enough for the Column-API entry points; `register`
+    * layers the SQL UDAF surface on top. */
   def registerExpressions(spark: SparkSession): Unit =
     nativeExpressions.foreach { case (name, _, b) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
@@ -597,7 +599,6 @@ object GraftFunctions {
     spark.udf.register("graft_cms_tokens", udaf(new CmsTokensAgg(cmsCfg), tokensEnc))
     spark.udf.register("graft_kll", udaf(new KllDoubleAgg(200), ExpressionEncoder[Double]()))
     spark.udf.register("graft_tdigest", udaf(new TDigestDoubleAgg(100), ExpressionEncoder[Double]()))
-    spark.udf.register("graft_bloom_merge", udaf(new BloomMergeAgg(Keys.DefaultK0, Keys.DefaultK1), ExpressionEncoder[Array[Byte]]()))
     spark.udf.register("graft_bloom_tokens_newcount",
       udaf(new BloomTokensNewCountAgg(bloomCfg), tokensEnc))
     spark.udf.register("graft_heavyhitter",
@@ -631,10 +632,6 @@ object GraftFunctions {
     spark.udf.register("graft_sample_weighted_str_merge",
       udaf(new BottomKWeightedStringMergeAgg(Keys.DefaultK0, Keys.DefaultK1),
         ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_hll_merge",
-      udaf(new graft.jobs.HllBytesMergeAgg, ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_cms_merge",
-      udaf(new graft.jobs.CmsBytesMergeAgg, ExpressionEncoder[Array[Byte]]()))
     spark.udf.register("graft_kll_merge",
       udaf(new KllBytesMergeAgg, ExpressionEncoder[Array[Byte]]()))
     spark.udf.register("graft_tdigest_merge",

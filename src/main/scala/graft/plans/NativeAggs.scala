@@ -3,10 +3,12 @@ package graft.plans
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.types._
 
 import graft.core._
@@ -20,7 +22,9 @@ import graft.core._
   * columnar batch) — no per-row allocation or copy, the tightest build
   * loop Spark's aggregation framework allows without custom codegen.
   * Outputs are byte-identical to the udaf-based aggregators (tested), so
-  * the two surfaces interoperate freely.
+  * the two surfaces interoperate freely. `SketchJob` runs on these: one
+  * `FusedTokensNative` per (bucket, source) in the increment, one
+  * [[SketchMergeNative]] per sketch column in finalize.
   */
 abstract class TokensAggBase[B] extends TypedImperativeAggregate[B] with UnaryLike[Expression] {
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -115,16 +119,14 @@ final class FusedNativeBuf(val bloom: Array[Long], val hll: Array[Byte], val cms
 }
 
 /** `graft_fused_tokens_native(tokens)` -> struct(bloom, hll, cms) binaries.
-  * One ArrayData read + two hashes per token; the flagship build kernel. */
+  * One ArrayData read + two hashes per token (64-bit for bloom and HLL,
+  * 128-bit for CMS, and for a bloom whose 6k + log2l > 64); the flagship
+  * build kernel, valid for every `SketchJob.JobConfig`. */
 case class FusedTokensNative(
     child: Expression,
     k: Int, log2l: Int, hllP: Int, cmsDepth: Int, cmsLog2Width: Int, k0: Long, k1: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0) extends TokensAggBase[FusedNativeBuf] {
-
-  require(6 * k + log2l <= 64,
-    "FusedTokensNative requires a 64-bit-hash bloom config (6k + log2l <= 64); " +
-      "use BloomTokensNative / the individual aggregators for larger configs")
 
   @transient private lazy val bloomCfg = BloomConfig(k0, k1, k, log2l)
   @transient private lazy val cmsCfg = CmsConfig(k0, k1, cmsDepth, cmsLog2Width)
@@ -167,7 +169,10 @@ case class FusedTokensNative(
         i += 1
       }
       i = 0
-      while (i < cnt) { BlockedBloom.insertHash64(buf.bloom, bloomCfg, buf.h64(i)); i += 1 }
+      if (bloomCfg.hash64Enough)
+        while (i < cnt) { BlockedBloom.insertHash64(buf.bloom, bloomCfg, buf.h64(i)); i += 1 }
+      else // 6k + log2l > 64: the 128-bit hashes gathered for the CMS feed the bloom too
+        while (i < cnt) { BlockedBloom.insertHash128(buf.bloom, bloomCfg, buf.hi(i), buf.lo(i)); i += 1 }
       i = 0
       while (i < cnt) { Hll.addHash(buf.hll, hllP, buf.h64(i)); i += 1 }
       val width = cmsCfg.width
@@ -233,6 +238,46 @@ case class FusedTokensNative(
     copy(child = newChild)
 }
 
+/** Native merge over serialized sketches (`binary` column), wrapping one
+  * of the bytes -> bytes merge `Aggregator`s (`BloomMergeAgg`,
+  * `HllBytesMergeAgg`, `CmsBytesMergeAgg`): their validation, cross-size
+  * fold and empty-payload convention are reused as is. Unlike the `udaf`
+  * wrapper, the buffer crosses the shuffle in the sketch's own wire format
+  * (`serialize = finish`, `deserialize = reduce(zero, _)`), not through an
+  * encoder round trip. */
+case class SketchMergeNative[B](
+    child: Expression,
+    agg: Aggregator[Array[Byte], B, Array[Byte]],
+    name: String,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[B] with UnaryLike[Expression] {
+
+  override def prettyName: String = name
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got ${child.dataType}")
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+
+  override def createAggregationBuffer(): B = agg.zero
+  override def update(buf: B, input: InternalRow): B = {
+    val v = child.eval(input)
+    if (v == null) buf else agg.reduce(buf, v.asInstanceOf[Array[Byte]])
+  }
+  override def merge(b1: B, b2: B): B = agg.merge(b1, b2)
+  override def eval(buf: B): Any = agg.finish(buf)
+  override def serialize(buf: B): Array[Byte] = agg.finish(buf)
+  override def deserialize(bytes: Array[Byte]): B = agg.reduce(agg.zero, bytes)
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): SketchMergeNative[B] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): SketchMergeNative[B] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): SketchMergeNative[B] =
+    copy(child = newChild)
+}
+
 /** Registration of the native aggregates (SQL + call_function Column API).
   *
   * NOTE: registration is session-global and last-wins — a second
@@ -246,6 +291,36 @@ object NativeAggs {
 
   val BloomName = "graft_bloom_tokens_native"
   val FusedName = "graft_fused_tokens_native"
+  val BloomMergeName = "graft_bloom_merge"
+  val HllMergeName = "graft_hll_merge"
+  val CmsMergeName = "graft_cms_merge"
+
+  def bloomMerge(sk: Expression, k0: Long, k1: Long): SketchMergeNative[_] =
+    SketchMergeNative(sk, new graft.operators.SketchAggs.BloomMergeAgg(k0, k1), BloomMergeName)
+  def hllMerge(sk: Expression): SketchMergeNative[_] =
+    SketchMergeNative(sk, new graft.jobs.HllBytesMergeAgg, HllMergeName)
+  def cmsMerge(sk: Expression): SketchMergeNative[_] =
+    SketchMergeNative(sk, new graft.jobs.CmsBytesMergeAgg, CmsMergeName)
+
+  /** SQL builders (`GraftFunctions.nativeExpressions`) for
+    * `graft_bloom_merge(sk)` (default keys), `graft_hll_merge(sk)` and
+    * `graft_cms_merge(sk)`. */
+  private[plans] val mergeBuilders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq[(String, Expression => Expression)](
+      BloomMergeName -> (bloomMerge(_, Keys.DefaultK0, Keys.DefaultK1)),
+      HllMergeName -> (hllMerge(_)),
+      CmsMergeName -> (cmsMerge(_))
+    ).map { case (name, make) =>
+      name -> ((exprs: Seq[Expression]) => exprs match {
+        case Seq(e) => make(e)
+        case _ => throw new IllegalArgumentException(s"$name expects (sketch BINARY)")
+      })
+    }
+
+  /** A native aggregate as a `Column`, with no session registration: the
+    * parameters travel in the expression, not in a session-global name. */
+  def column(f: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction): org.apache.spark.sql.Column =
+    org.apache.spark.sql.GraftColumnBridge.column(f.toAggregateExpression())
 
   def register(spark: org.apache.spark.sql.SparkSession,
       bloomK: Int = graft.SketchQueries.bloomCfg.k,

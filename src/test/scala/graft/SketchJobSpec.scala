@@ -1,16 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ScalaAggregator}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 import graft.jobs.SketchJob
+import graft.plans.{FusedTokensNative, NativeAggs, SketchMergeNative}
 
 /** Checkpoint/resume semantics (north rule): a job killed mid-way and
   * resumed must produce final sketches byte-identical to an uninterrupted
   * run, with per-bucket lineage rows recording what was committed when. */
-class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -29,7 +38,36 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.getAbsolutePath
   }
 
-  test("interrupted build + resume == uninterrupted build (byte-identical sketches)") {
+  /** A tokens table in the job's input shape (doc_id, tokens, n_tok, source);
+    * source "rare" has 6 docs, so it spans fewer buckets than the others. */
+  def generatedTokens(): DataFrame = {
+    val rows = (0 until 600).map { i =>
+      val toks = Array.tabulate(1 + i % 37)(j => 1 + (i * 31 + j * 7) % 900)
+      (s"doc-$i", toks, toks.length, if (i % 100 == 0) "rare" else s"src${i % 5}")
+    }
+    spark.createDataFrame(rows).toDF("doc_id", "tokens", "n_tok", "source")
+  }
+
+  /** 6k + log2l = 88 > 64: the bloom takes the 128-bit hash path. */
+  val cfg128 = cfg.copy(bloomK = 13, bloomLog2l = 10)
+
+  def sketchBytes(rows: Array[Row]): Map[String, Seq[Seq[Byte]]] =
+    rows.map(r => r.getAs[String]("source") ->
+      Seq("bloom", "hll", "cms").map(c => r.getAs[Array[Byte]](c).toSeq)).toMap
+
+  /** The job's reference: one uncheckpointed per-source fused build. */
+  def oneShot(tokens: DataFrame, c: SketchJob.JobConfig): Map[String, Seq[Seq[Byte]]] =
+    sketchBytes(tokens.groupBy(col("source"))
+      .agg(NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(col("tokens")),
+        c.bloomK, c.bloomLog2l, c.hllP, c.cmsDepth, c.cmsLog2Width, c.k0, c.k1)).as("f"))
+      .select(col("source"), col("f.bloom").as("bloom"), col("f.hll").as("hll"), col("f.cms").as("cms"))
+      .collect())
+
+  /** Every aggregate function the executed plan (adaptive stages included) runs. */
+  def aggFunctions(plan: SparkPlan): Seq[AggregateFunction] =
+    collect(plan) { case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction) }.flatten
+
+  def checkResume(cfg: SketchJob.JobConfig): Unit = {
     val tokens = graft.sources.Tokens.table(spark, "/root/testdata/sf0.001")
 
     // uninterrupted reference run
@@ -57,6 +95,82 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ra.getLong(4) === rb.getLong(4), "n_rows differs")
       assert(ra.getLong(5) === rb.getLong(5), "n_tokens differs")
     }
+  }
+
+  test("interrupted build + resume == uninterrupted build (byte-identical sketches)") {
+    checkResume(cfg)
+  }
+
+  test("interrupted build + resume == uninterrupted build for a 128-bit bloom config") {
+    checkResume(cfg128)
+  }
+
+  test("finalized sketches equal a one-shot fused build; n_buckets counts distinct buckets") {
+    val tokens = generatedTokens()
+    // the per-source distinct bucket count, computed off Spark
+    val bucketsBySource = tokens.select("doc_id", "source").collect()
+      .groupBy(_.getString(1))
+      .map { case (src, rows) => src -> rows.map { r =>
+        val id = Option(r.getString(0)).getOrElse("").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        ((SipHash.hash64(cfg.k0, cfg.k1, id) >>> 1) % cfg.numBuckets).toInt
+      }.distinct.length.toLong }
+    for (c <- Seq(cfg, cfg128)) {
+      val ckpt = freshDir()
+      SketchJob.runIncrement(spark, tokens, ckpt, c, failAfterBuckets = Some(3))
+      SketchJob.runIncrement(spark, tokens, ckpt, c)
+      val fin = SketchJob.finalizeSketches(spark, ckpt, c).collect()
+      assert(sketchBytes(fin) === oneShot(tokens, c),
+        s"checkpointed job differs from the one-shot fused build (bloom k=${c.bloomK})")
+      assert(bucketsBySource("rare") < cfg.numBuckets)
+      assert(fin.map(r => r.getAs[String]("source") -> r.getAs[Long]("n_buckets")).toMap === bucketsBySource)
+    }
+  }
+
+  test("plan shape: finalize has one shuffle exchange; neither half runs a ScalaAggregator") {
+    val tokens = generatedTokens()
+    val ckpt = freshDir()
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def incrementAggs = plans.synchronized(plans.toList).flatMap(aggFunctions)
+    spark.listenerManager.register(listener)
+    try {
+      SketchJob.runIncrement(spark, tokens, ckpt, cfg)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!incrementAggs.exists(_.isInstanceOf[FusedTokensNative]) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(incrementAggs.exists(_.isInstanceOf[FusedTokensNative]), "increment must run the fused native build")
+    assert(!incrementAggs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), s"increment runs a udaf: $incrementAggs")
+
+    val fin = SketchJob.finalizeSketches(spark, ckpt, cfg)
+    fin.collect()
+    val plan = fin.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeLike => e }.size === 1, s"finalize plan:\n$plan")
+    val finalizeAggs = aggFunctions(plan)
+    assert(finalizeAggs.count(_.isInstanceOf[SketchMergeNative[_]]) >= 3, s"finalize aggregates: $finalizeAggs")
+    assert(!finalizeAggs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), s"finalize runs a udaf: $finalizeAggs")
+  }
+
+  test("checkpoint parquet schema is pinned (checkpoints written earlier still resume)") {
+    val tokens = generatedTokens()
+    val ckpt = freshDir()
+    SketchJob.runIncrement(spark, tokens, ckpt, cfg, failAfterBuckets = Some(2))
+    val expected = StructType(Seq(
+      StructField("bucket", IntegerType),
+      StructField("source", StringType),
+      StructField("bloom", BinaryType),
+      StructField("hll", BinaryType),
+      StructField("cms", BinaryType),
+      StructField("n_rows", LongType),
+      StructField("n_tokens", LongType),
+      StructField("committed_at_ms", LongType),
+      StructField("build_host", StringType)))
+    assert(spark.read.parquet(ckpt + "/run_*").schema === expected)
   }
 
   test("a crashed (no _SUCCESS) run dir is ignored; its buckets re-run on resume") {

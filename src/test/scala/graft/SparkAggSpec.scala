@@ -175,7 +175,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(java.util.Arrays.equals(repart, udafBloom))
   }
 
-  test("native aggs: 128-bit-config bloom matches udaf; fused rejects >64-bit configs; SQL arity errors") {
+  test("native aggs: 128-bit-config bloom matches udaf; fused 128-bit config is byte-identical; SQL arity errors") {
     val enc = ExpressionEncoder[Array[Int]]()
     val df = tokenDf(400, 3)
     // 6*13 + 10 = 88 > 64: 128-bit hash path through the native agg
@@ -184,10 +184,18 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nat = df.agg(graft.plans.NativeAggs.bloomTokensNative(col("tokens"))).head().getAs[Array[Byte]](0)
     val ud = df.agg(udaf(new BloomTokensAgg(cfg128), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(nat, ud), "128-bit native bloom differs from udaf")
-    // fused must refuse a config whose bloom needs the 128-bit hash
-    assertThrows[IllegalArgumentException](
-      graft.plans.FusedTokensNative(org.apache.spark.sql.catalyst.expressions.Literal(null),
-        13, 10, 12, 5, 11, K0, K1))
+    // the fused build serves the same config: every field equals its
+    // individual aggregator (bloom on the 128-bit path)
+    val cms = SketchQueries.cmsCfg
+    val fused = df.agg(graft.plans.NativeAggs.column(graft.plans.FusedTokensNative(
+      org.apache.spark.sql.GraftColumnBridge.expression(col("tokens")),
+      13, 10, 12, cms.depth, cms.log2Width, K0, K1)).as("sk"))
+      .select("sk.bloom", "sk.hll", "sk.cms").head()
+    val hll = df.agg(udaf(new HllTokensAgg(K0, K1, 12), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
+    val cmsB = df.agg(udaf(new CmsTokensAgg(cms), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](0), ud), "128-bit fused bloom differs")
+    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](1), hll), "128-bit fused hll differs")
+    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](2), cmsB), "128-bit fused cms differs")
     // SQL arity misuse fails with a named error, not NoSuchElementException
     df.createOrReplaceTempView("native_arity_t")
     val e = intercept[Exception](
@@ -197,6 +205,71 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val perCall = spark.sql(
       "SELECT graft_bloom_tokens_native(tokens, 13, 10) FROM native_arity_t").head().getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(perCall, ud), "per-call (k, log2l) SQL args ignored")
+  }
+
+  test("SQL graft_bloom/hll/cms_merge run natively, byte-identical to the merge aggregators") {
+    graft.plans.GraftFunctions.register(spark)
+    val enc = ExpressionEncoder[Array[Int]]()
+    val cms = SketchQueries.cmsCfg
+    val df = tokenDf(800, 5)
+    val built = df.groupBy(col("source"), col("doc_id").substr(-1, 1).as("shard"))
+      .agg(udaf(new BloomTokensAgg(cfg), enc)(col("tokens")).as("b"),
+        udaf(new HllTokensAgg(K0, K1, 12), enc)(col("tokens")).as("h"),
+        udaf(new CmsTokensAgg(cms), enc)(col("tokens")).as("c"))
+    // materialized, so the merge plans below hold no build aggregate
+    val partials = spark.createDataFrame(
+      spark.sparkContext.parallelize(built.collect().toSeq, 3), built.schema)
+    partials.createOrReplaceTempView("merge_partials")
+    val binEnc = ExpressionEncoder[Array[Byte]]()
+    val viaUdaf = partials.groupBy(col("source")).agg(
+      udaf(new BloomMergeAgg(K0, K1), binEnc)(col("b")),
+      udaf(new graft.jobs.HllBytesMergeAgg, binEnc)(col("h")),
+      udaf(new graft.jobs.CmsBytesMergeAgg, binEnc)(col("c")))
+      .collect().map(r => r.getString(0) -> (1 to 3).map(i => r.getAs[Array[Byte]](i).toSeq)).toMap
+    val sqlDf = spark.sql(
+      """SELECT source, graft_bloom_merge(b), graft_hll_merge(h), graft_cms_merge(c)
+        |FROM merge_partials GROUP BY source""".stripMargin)
+    val viaSql = sqlDf.collect()
+      .map(r => r.getString(0) -> (1 to 3).map(i => r.getAs[Array[Byte]](i).toSeq)).toMap
+    assert(viaSql === viaUdaf)
+    // two-level == one-level: the merged bloom equals the direct build
+    val direct = df.groupBy(col("source")).agg(udaf(new BloomTokensAgg(cfg), enc)(col("tokens")))
+      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    assert(viaSql.map { case (s, v) => s -> v.head } === direct)
+    object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val funcs = plans.collect(sqlDf.queryExecution.executedPlan) {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
+        a.aggregateExpressions.map(_.aggregateFunction)
+    }.flatten
+    assert(funcs.count(_.isInstanceOf[graft.plans.SketchMergeNative[_]]) >= 3 &&
+      !funcs.exists(_.isInstanceOf[org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _]]),
+      s"SQL merges must run natively: $funcs")
+  }
+
+  test("SQL native merges: empty payload convention (zero rows finish empty; empty inputs skipped)") {
+    graft.plans.GraftFunctions.register(spark)
+    val enc = ExpressionEncoder[Array[Int]]()
+    val df = tokenDf(200, 3)
+    df.agg(udaf(new BloomTokensAgg(cfg), enc)(col("tokens")).as("b"),
+      udaf(new HllTokensAgg(K0, K1, 12), enc)(col("tokens")).as("h"),
+      udaf(new CmsTokensAgg(SketchQueries.cmsCfg), enc)(col("tokens")).as("c"))
+      .createOrReplaceTempView("merge_one")
+    val one = spark.table("merge_one").head()
+    for ((fn, colName, i) <- Seq(("graft_bloom_merge", "b", 0), ("graft_hll_merge", "h", 1),
+        ("graft_cms_merge", "c", 2))) {
+      // a merge over ZERO rows finishes to the empty payload, not null
+      val emptyOut = spark.sql(s"SELECT $fn($colName) FROM merge_one WHERE false").head().getAs[Array[Byte]](0)
+      assert(emptyOut != null && emptyOut.isEmpty, s"$fn over zero rows must finish to empty bytes")
+      // empty and null inputs are skipped: the merge returns the one real sketch
+      val merged = spark.sql(
+        s"""SELECT $fn(sk) FROM (
+           |  SELECT $colName AS sk FROM merge_one
+           |  UNION ALL SELECT CAST(X'' AS BINARY) AS sk
+           |  UNION ALL SELECT CAST(NULL AS BINARY) AS sk
+           |  UNION ALL SELECT $fn($colName) AS sk FROM merge_one WHERE false
+           |)""".stripMargin).head().getAs[Array[Byte]](0)
+      assert(java.util.Arrays.equals(merged, one.getAs[Array[Byte]](i)), s"$fn must skip empty inputs")
+    }
   }
 
   test("typed Dataset facade: per-source sketches + probe, no false negatives") {
