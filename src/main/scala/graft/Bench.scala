@@ -82,8 +82,15 @@ object Bench {
     * interference in THAT measurement window. */
   private def cotenancyLap(): Double = {
     val iters = 100000000L
-    val (_, sec) = time(graft.tools.ScaleProbe.work(iters))
+    val (_, sec) = time(sipHashWork(iters))
     iters / sec / 1e6
+  }
+
+  /** Fixed pure-CPU SipHash loop (the co-tenancy lap's work). */
+  private def sipHashWork(iters: Long): Long = {
+    var h = 0L; var i = 0L
+    while (i < iters) { h ^= SipHash.hashInt(0x5eed, 0xf00d, (i & 0xffffff).toInt); i += 1 }
+    h
   }
 
   private def jsonArr(xs: Seq[Double]): String =
@@ -176,9 +183,9 @@ object Bench {
     // ---- phase 3: same job at multiple parallelism levels ----
     // Default levels 2, 8, 32: the headline N -> 4N efficiency is taken at
     // 2 -> 8, the regime where this sandbox's vCPUs behave like independent
-    // cores (a pure-CPU probe, graft.tools.ScaleProbe, shows the VM itself
-    // stops scaling past ~8 threads: ~75M siphash/s/thread at 2-8 threads
-    // vs ~48M at 16-32). 8 -> 32 is reported as well as the saturated
+    // cores (a pure-CPU SipHash probe, recorded in BASELINE.md, shows the VM
+    // itself stops scaling past ~8 threads: ~75M siphash/s/thread at 2-8
+    // threads vs ~48M at 16-32). 8 -> 32 is reported as well as the saturated
     // figure, with peak throughput at 32.
     val lowCpus = math.max(1, cpus / 16)
     val midCpus = math.max(1, cpus / 4)
@@ -360,7 +367,7 @@ object Bench {
 
     // ---- phase 3e: n-gram decontamination throughput ----
     // The flagship Bloom-in-its-natural-role op: a ~0.1% relabeled eval
-    // slice, 4-gram kernel UDF (measured ~40x the HOF twin, DeconProbe),
+    // slice, 4-gram kernel UDF (measured ~40x the HOF twin, BASELINE.md),
     // Bloom prefilter + broadcast exact confirm. The corpus is random, so
     // true hits ~ 0 — the realistic regime where the prefilter carries all
     // the selectivity; the report sums are deterministic and lap-compared.

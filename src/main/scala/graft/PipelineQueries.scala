@@ -559,8 +559,18 @@ object PipelineQueries {
     * per-source aggregate below exactly as it fell out of the old
     * distinct-grams frame — the emitted pair matrix is identical. */
   private def overlapSources(spark: SparkSession, dir: String): Array[String] =
-    graft.sources.Tokens.table(spark, dir).select(col("source")).distinct()
-      .collect().map(_.getString(0)).sorted
+    checkOverlapSourceCount(graft.sources.Tokens.table(spark, dir).select(col("source"))
+      .distinct().collect().map(_.getString(0)).sorted)
+
+  /** Pair keys pack two source bit indices as a*65536 + b (see
+    * [[MaskPairsUdf]]), so a 65,537th source (index 65536) would collide
+    * with the next pair's key: more sources are rejected, not corrupted. */
+  private[graft] def checkOverlapSourceCount(sources: Array[String]): Array[String] = {
+    require(sources.length <= 65536,
+      s"sourceOverlapMatrix: ${sources.length} sources exceed the packed pair-key limit " +
+        "of 65536 (pair = a*65536 + b)")
+    sources
+  }
 
   /** Per-gram source-set bitmask aggregation over the RAW per-doc gram
     * rows. OPTIMIZATION r07 (guide §2.4): the old shape distinct-ed

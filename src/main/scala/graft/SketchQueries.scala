@@ -57,7 +57,7 @@ object SketchQueries {
     * generate-filter inference plus filter/projection substitution made
     * plain explode evaluate the WHOLE tokenization expression three times
     * per document (once in the inferred `size(...) > 0 AND isnotnull(...)`
-    * filter, once in the project — measured 2x wall time, TokProbe);
+    * filter, once in the project — measured 2x wall time, OPTIMIZATION_r07.md);
     * the outer variant skips the inference, and the cheap not-null filter
     * on the exploded COLUMN drops the same rows (token arrays never hold
     * null elements — the vocab map is total by construction; a null/empty

@@ -252,83 +252,6 @@ object SketchAggs {
     override def outputEncoder: Encoder[Array[Byte]] = byteArrayEnc
   }
 
-  /** Count-min over a string column. */
-  final class CmsStringAgg(cfg: CmsConfig) extends Aggregator[String, Array[Long], Array[Byte]] {
-    override def zero: Array[Long] = CountMin.empty(cfg)
-    override def reduce(buf: Array[Long], s: String): Array[Long] = {
-      if (s != null) CountMin.addString(buf, cfg, s)
-      buf
-    }
-    override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = CountMin.merge(b1, b2)
-    override def finish(buf: Array[Long]): Array[Byte] =
-      CountMin.toBytes(buf, cfg, BlockedBloom.TypeTag.String)
-    override def bufferEncoder: Encoder[Array[Long]] = longArrayEnc
-    override def outputEncoder: Encoder[Array[Byte]] = byteArrayEnc
-  }
-
-  // ----------------------------------------------------------- fused
-
-  /** All-in-one buffer for the fused build (arrays encode natively). */
-  final case class FusedBuf(bloom: Array[Long], hll: Array[Byte], cms: Array[Long])
-
-  /** Finished fused sketches (each independently deserializable and
-    * merge-compatible with the single-sketch aggregators). */
-  final case class FusedSketch(bloom: Array[Byte], hll: Array[Byte], cms: Array[Byte])
-
-  /** Fused Bloom + HLL + CMS build in ONE pass: the token array is decoded
-    * once per row and each token is hashed exactly twice (one 64-bit value
-    * shared by Bloom and HLL — the same value the individual aggregators
-    * use, so results are byte-identical and cross-mergeable — plus one
-    * 128-bit value for CMS), instead of 3 input decodes + 3 hashes with
-    * three separate UDAFs. This is the flagship-scale build path.
-    *
-    * Requires `bloomCfg.hash64Enough` (the fused fast path shares the
-    * 64-bit hash; large k+log2l configs should use the individual aggs). */
-  final class FusedTokensAgg(bloomCfg: BloomConfig, hllP: Int, cmsCfg: CmsConfig)
-      extends Aggregator[Array[Int], FusedBuf, FusedSketch] {
-    require(bloomCfg.hash64Enough,
-      "FusedTokensAgg requires a 64-bit-hash bloom config (6k + log2l <= 64)")
-    require(bloomCfg.k0 == cmsCfg.k0 && bloomCfg.k1 == cmsCfg.k1,
-      "FusedTokensAgg: bloom and cms must share the SipKey")
-    private val k0 = bloomCfg.k0
-    private val k1 = bloomCfg.k1
-
-    override def zero: FusedBuf =
-      FusedBuf(new Array[Long](bloomCfg.l), Hll.empty(hllP), CountMin.empty(cmsCfg))
-
-    override def reduce(buf: FusedBuf, tokens: Array[Int]): FusedBuf = {
-      if (tokens != null) {
-        val scratch = new Array[Long](2) // one alloc per row, not per token
-        var i = 0
-        while (i < tokens.length) {
-          val t = tokens(i)
-          val h64 = SipHash.hashInt(k0, k1, t)
-          BlockedBloom.insertHash64(buf.bloom, bloomCfg, h64)
-          Hll.addHash(buf.hll, hllP, h64)
-          SipHash.hash128IntInto(k0, k1, t, scratch)
-          CountMin.addHash(buf.cms, cmsCfg, scratch(1), scratch(0) | 1L)
-          i += 1
-        }
-      }
-      buf
-    }
-
-    override def merge(b1: FusedBuf, b2: FusedBuf): FusedBuf = {
-      BlockedBloom.unionInPlace(b1.bloom, b2.bloom)
-      Hll.merge(b1.hll, b2.hll)
-      CountMin.merge(b1.cms, b2.cms)
-      b1
-    }
-
-    override def finish(buf: FusedBuf): FusedSketch = FusedSketch(
-      BlockedBloom.toBytes(buf.bloom, bloomCfg, BlockedBloom.TypeTag.Int),
-      Hll.toBytes(buf.hll, hllP, BlockedBloom.TypeTag.Int, SipHash.hashLong(k0, k1, k0 ^ k1)),
-      CountMin.toBytes(buf.cms, cmsCfg, BlockedBloom.TypeTag.Int))
-
-    override def bufferEncoder: Encoder[FusedBuf] = ExpressionEncoder[FusedBuf]()
-    override def outputEncoder: Encoder[FusedSketch] = ExpressionEncoder[FusedSketch]()
-  }
-
   // ----------------------------------------------------------- quantiles
 
   /** KLL quantile sketch over a double column. Buffer is the sketch object

@@ -118,7 +118,7 @@ object TextPipeline {
     * (asserted on the fixture by PipelineSpec). This is the DEFAULT scale
     * path: the winnowing kernel dominates the UDF encoder boundary by far
     * (the HOF pipeline never codegens — Catalyst evaluates lambda
-    * expressions interpreted — so this is the SrpProbe rule again:
+    * expressions interpreted — so the measured kernel-vs-boundary rule applies:
     * nativize/UDF-ize where the kernel, not the encoder copy, is the
     * cost; measured numbers in BASELINE.md). */
   def withWinnowFingerprints(docs: DataFrame, textCol: String = "text",
@@ -213,8 +213,8 @@ object TextPipeline {
     * partition evenly), group pairs, keep those sharing >= minShared
     * fingerprints. Pair orientation is idA < idB (numeric — callers must
     * pass a numeric id) and `sa` is the smaller doc's group. Shared by the
-    * production query and the WinnowProbe cross-engine diff tool so the
-    * semantics cannot diverge.
+    * production query and PipelineSpec's df-cap tests so the semantics
+    * cannot diverge.
     *
     * The document-frequency cap is the standard hot-shingle suppression:
     * the inverted-index self-join is O(df^2) PER fingerprint value, so a
@@ -537,8 +537,8 @@ object TextPipeline {
       top_word_count: Long, n_bigrams: Long, n_distinct_bigrams: Long)
 
   /** One-pass repetition kernel: one HashMap walk over the words. An
-    * imperative UDF by the measured text-kernel rule (DeconProbe /
-    * WinnowProbe timed the value-identical HOF pipelines 12-40x slower —
+    * imperative UDF by the measured text-kernel rule (BASELINE.md records
+    * the value-identical HOF pipelines 12-40x slower —
     * lambda expressions never codegen; the kernel here IS the counting,
     * the encoder boundary is the small share). */
   private[graft] def repetitionKernel(text: String): RepetitionStats = {

@@ -1,16 +1,20 @@
 package graft.operators
 
+import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import graft.core.{BloomConfig, CmsConfig, Keys}
+import graft.plans.{FusedTokensNative, GraftFunctions, NativeAggs}
 import graft.sources.Tokens.TokenRow
 
 /** Typed `Dataset[TokenRow]` façade over the sketch builds — compile-time
   * field checking for pipelines that model the input-hint row as a case
   * class (SURVEY.md §1.2: `Dataset[T]` where type safety helps, `DataFrame`
-  * where schema is dynamic). Same physical plans as the DataFrame surface.
+  * where schema is dynamic). Same physical plans as the DataFrame surface:
+  * the build is one native `FusedTokensNative`, the probe the native
+  * `graft_bloom_might_contain` expression.
   */
 object TypedSketchOps {
 
@@ -28,13 +32,15 @@ object TypedSketchOps {
       bloomCfg: BloomConfig = BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 12),
       hllP: Int = 12,
       cmsCfg: CmsConfig = CmsConfig(Keys.DefaultK0, Keys.DefaultK1, 5, 11)): Dataset[SourceSketches] = {
-    val spark = tokens.sparkSession
+    require(bloomCfg.k0 == cmsCfg.k0 && bloomCfg.k1 == cmsCfg.k1,
+      "TypedSketchOps.perSourceSketches: bloom and cms must share the SipKey")
     implicit val outEnc = ExpressionEncoder[SourceSketches]()
-    val fusedU = udf0(spark, bloomCfg, hllP, cmsCfg)
+    val fused = NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(col("tokens")),
+      bloomCfg.k, bloomCfg.log2l, hllP, cmsCfg.depth, cmsCfg.log2Width, bloomCfg.k0, bloomCfg.k1))
     tokens.toDF()
       .groupBy(col("source"))
       .agg(
-        fusedU(col("tokens")).as("sk"),
+        fused.as("sk"),
         count(lit(1)).as("n_rows"),
         sum(col("n_tok")).cast("long").as("n_tokens"))
       .select(
@@ -47,19 +53,17 @@ object TypedSketchOps {
       .as[SourceSketches]
   }
 
-  private def udf0(spark: org.apache.spark.sql.SparkSession,
-      bloomCfg: BloomConfig, hllP: Int, cmsCfg: CmsConfig) =
-    udaf(new SketchAggs.FusedTokensAgg(bloomCfg, hllP, cmsCfg), ExpressionEncoder[Array[Int]]())
-
-  /** Typed probe: which of each row's tokens are present in its source's
-    * sketch (demonstrates joining typed results back onto typed input). */
+  /** Typed probe: how many of each row's tokens are present in its source's
+    * sketch (demonstrates joining typed results back onto typed input). The
+    * whole token array is probed in one `filter` with no explode; a null
+    * token array counts 0 (coalesced before `size`, whose null result
+    * depends on `spark.sql.legacy.sizeOfNull`). */
   def probeOwnSource(tokens: Dataset[TokenRow], sketches: Dataset[SourceSketches]): DataFrame = {
-    import graft.functions.SketchFunctions
+    GraftFunctions.registerExpressions(tokens.sparkSession)
     tokens.toDF()
       .join(broadcast(sketches.toDF().select(col("source"), col("bloom"))), "source")
-      .withColumn("n_present",
-        SketchFunctions.bloomCountContainedTokens(Keys.DefaultK0, Keys.DefaultK1)(
-          col("bloom"), col("tokens")))
+      .withColumn("n_present", size(filter(coalesce(col("tokens"), typedLit(Array.empty[Int])),
+        t => GraftFunctions.bloomMightContain(col("bloom"), t))).cast("long"))
       .select(col("doc_id"), col("source"), col("n_tok"), col("n_present"))
   }
 }

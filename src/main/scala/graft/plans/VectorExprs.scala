@@ -121,7 +121,7 @@ case class SrpBandsExpr(child: Expression, b: Int, chunks: Int) extends UnaryExp
     // products as tight primitive loops: unlike the one-pass cosine kernel,
     // this kernel reads every element b times, so per-element ArrayData
     // getter calls in the inner loop cost ~2x the single up-front copy
-    // (measured in tools.SrpProbe — the copy-once shape beats the UDF,
+    // (measured, BASELINE.md — the copy-once shape beats the UDF,
     // the getter-in-loop shape lost to it)
     val isFloat = childIsFloat
     val v = new Array[Double](n)
@@ -162,7 +162,7 @@ case class SrpBandsExpr(child: Expression, b: Int, chunks: Int) extends UnaryExp
 /** Native nearest-centroid assignment (`graft_ivf_assign`) — ivfBuild's
   * full-table assignment pass without the UDF encoder boundary. The
   * kernel reads every element once per centroid, so it follows the
-  * measured copy-once rule (tools.SrpProbe ivf phase: the encoder copy
+  * measured copy-once rule (BASELINE.md, ivf assignment: the encoder copy
   * was ~half the assign-UDF's cost at dim 64 × 16 centroids — material,
   * unlike the text kernels). Byte-for-byte the same per-centroid cosine
   * loop as `Similarity.nearestCluster` (same truncation to the shorter

@@ -5,6 +5,7 @@ import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.core.{BloomConfig, CmsConfig}
@@ -42,6 +43,37 @@ object StreamingSketch {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
     f.delete(): Unit
+  }
+
+  /** Replay harness shared by the driver replays: runs `out` into the
+    * memory sink `sinkName` (dropped first) under `outputMode`, feeding
+    * `stream` one micro-batch per element of `batches`, then stops the
+    * query and deletes its tmpfs checkpoint. The state-store partition
+    * count is fixed at stream start from spark.sql.shuffle.partitions; 8
+    * stores suffice for the replay volume and cut per-micro-batch store
+    * open/commit I/O 4x vs a 32-partition session default (at production
+    * scale this is sized to executors). The session value is restored. */
+  private def replayIntoMemorySink[T](spark: SparkSession, sinkName: String, outputMode: String,
+      out: DataFrame, stream: MemoryStream[T], batches: Seq[Seq[T]]): Unit = {
+    spark.catalog.dropTempView(sinkName)
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    val ckpt = replayCheckpointDir(sinkName)
+    try {
+      val query = out.writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(sinkName)
+        .option("checkpointLocation", ckpt.getAbsolutePath)
+        .start()
+      try batches.foreach { batch =>
+        stream.addData(batch)
+        query.processAllAvailable()
+      } finally query.stop()
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      deleteRecursively(ckpt)
+    }
   }
 
   /** Per-(event-time window, source) Bloom + HLL sketches over a streaming
@@ -88,7 +120,6 @@ object StreamingSketch {
     * [[perSourceWindowedSketches]] on a real `readStream` source. */
   def replayBloomWindows(spark: SparkSession, dir: String,
       bloomCfg: BloomConfig, hllP: Int): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -108,31 +139,8 @@ object StreamingSketch {
       streamed, "ts", watermarkDelay = "660 seconds", windowDuration = "60 seconds",
       bloomCfg, hllP)
     val sinkName = "graft_stream_windows"
-    spark.catalog.dropTempView(sinkName)
-    // the state-store partition count is fixed at stream start from
-    // spark.sql.shuffle.partitions; 8 stores suffice for the replay volume
-    // and cut per-micro-batch store open/commit I/O 4x vs a 32-partition
-    // session default (at production scale this is sized to executors)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = replayCheckpointDir(sinkName)
-    try {
-      val query = windowed.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(sinkName)
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .start()
-      try {
-        (0 until 3).foreach { chunk =>
-          stream.addData(rows.filter(r => r._3.length % 3 == chunk).toSeq)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckpt)
-    }
+    replayIntoMemorySink(spark, sinkName, "complete", windowed, stream,
+      (0 until 3).map(chunk => rows.filter(r => r._3.length % 3 == chunk).toSeq))
 
     // finished-window sketches collected ONCE (<= #windows x #sources rows)
     // and folded into the probe as a keyed literal pack — the former
@@ -204,7 +212,6 @@ object StreamingSketch {
     * or inflated counts would break the hash match. */
   def replayBloomWindowsAppend(spark: SparkSession, dir: String,
       bloomCfg: BloomConfig, hllP: Int): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -221,27 +228,8 @@ object StreamingSketch {
       streamed, "ts", watermarkDelay = "120 seconds", windowDuration = "60 seconds",
       bloomCfg, hllP)
     val sinkName = "graft_stream_append_windows"
-    spark.catalog.dropTempView(sinkName)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = replayCheckpointDir(sinkName)
-    try {
-      val query = windowed.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sinkName)
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .start()
-      try {
-        Seq(onTime.toSeq, late.toSeq, Seq(sentinel(900)), Seq(sentinel(901))).foreach { batch =>
-          stream.addData(batch)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckpt)
-    }
+    replayIntoMemorySink(spark, sinkName, "append", windowed, stream,
+      Seq(onTime.toSeq, late.toSeq, Seq(sentinel(900)), Seq(sentinel(901))))
 
     // emitted-window sketches collected ONCE and probed via the keyed
     // literal pack (see replayBloomWindows); a probe row whose (win,
@@ -357,7 +345,6 @@ object StreamingSketch {
     * level, but the guarantees are not), so the DuckDB oracle enumerates
     * the (window, source) domain as constant-true rows. */
   def replayTrendingTokens(spark: SparkSession, dir: String, capacity: Int = 16): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -375,27 +362,8 @@ object StreamingSketch {
       keyed, "ts", "key", watermarkDelay = "660 seconds", windowDuration = "60 seconds",
       capacity)
     val sinkName = "graft_stream_trending"
-    spark.catalog.dropTempView(sinkName)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = replayCheckpointDir(sinkName)
-    try {
-      val query = windowed.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(sinkName)
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .start()
-      try {
-        (0 until 3).foreach { chunk =>
-          stream.addData(rows.filter(r => r._4.length % 3 == chunk).toSeq)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckpt)
-    }
+    replayIntoMemorySink(spark, sinkName, "complete", windowed, stream,
+      (0 until 3).map(chunk => rows.filter(r => r._4.length % 3 == chunk).toSeq))
 
     graft.plans.GraftFunctions.registerExpressions(spark)
     val winCol = ((col("window.start").cast("long") - epoch0) / 60).cast("long").as("win")
@@ -471,7 +439,6 @@ object StreamingSketch {
     * row and break the oracle's row enumeration. */
   def replaySessionKmv(spark: SparkSession, dir: String,
       k0: Long, k1: Long, k: Int): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -489,34 +456,12 @@ object StreamingSketch {
     val out = sessionKmv(streamed, "ts", watermarkDelay = "900 seconds",
       gapDuration = "60 seconds", k0, k1, k)
     val sinkName = "graft_stream_session_kmv"
-    spark.catalog.dropTempView(sinkName)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = replayCheckpointDir(sinkName)
-    try {
-      val query = out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sinkName)
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .start()
-      try {
-        (0 until 3).foreach { chunk =>
-          stream.addData(rows.filter(r => r._4.length % 3 == chunk).toSeq)
-          query.processAllAvailable()
-        }
-        // sentinels: watermark -> 5001 - 900 = 4101 s > every session end
-        stream.addData(Seq((Timestamp.from(Instant.ofEpochSecond(epoch0 + 5000)),
-          -1L, "zz", Array.empty[Int])))
-        query.processAllAvailable()
-        stream.addData(Seq((Timestamp.from(Instant.ofEpochSecond(epoch0 + 5001)),
-          -1L, "zz", Array.empty[Int])))
-        query.processAllAvailable()
-      } finally query.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckpt)
-    }
+    // sentinels: watermark -> 5001 - 900 = 4101 s > every session end
+    def sentinel(sec: Long) =
+      Seq((Timestamp.from(Instant.ofEpochSecond(epoch0 + sec)), -1L, "zz", Array.empty[Int]))
+    replayIntoMemorySink(spark, sinkName, "append", out, stream,
+      (0 until 3).map(chunk => rows.filter(r => r._4.length % 3 == chunk).toSeq) ++
+        Seq(sentinel(5000), sentinel(5001)))
 
     graft.plans.GraftFunctions.registerExpressions(spark)
     // materialize the <= sources x 5 session rows once (LocalRelation —
@@ -680,7 +625,6 @@ object StreamingSketch {
     * are exact, so DuckDB recomputes them all from raw text. */
   def replayDecontamination(spark: SparkSession, dir: String,
       bloomCfg: BloomConfig, evalSource: String = "src0", n: Int = 4): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -705,27 +649,8 @@ object StreamingSketch {
     val windowed = windowedDecon(
       streamed, "ts", watermarkDelay = "660 seconds", windowDuration = "60 seconds", scorer)
     val sinkName = "graft_stream_decon"
-    spark.catalog.dropTempView(sinkName)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = replayCheckpointDir(sinkName)
-    try {
-      val query = windowed.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(sinkName)
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .start()
-      try {
-        (0 until 3).foreach { chunk =>
-          stream.addData(rows.filter(r => r._3.length % 3 == chunk).toSeq)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckpt)
-    }
+    replayIntoMemorySink(spark, sinkName, "complete", windowed, stream,
+      (0 until 3).map(chunk => rows.filter(r => r._3.length % 3 == chunk).toSeq))
 
     spark.table(sinkName).select(
       ((col("window.start").cast("long") - epoch0) / 60).cast("long").as("win"),

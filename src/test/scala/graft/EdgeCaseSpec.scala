@@ -251,4 +251,12 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s2 = BlockedBloom.toBytes(new Array[Long](1 << 8), BloomConfig(K0, K1, 4, 8), 1L)
     assertThrows[IllegalArgumentException](mergeAgg.reduce(mergeAgg.reduce(mergeAgg.zero, s1), s2))
   }
+
+  test("source overlap matrix: source count bounded by the packed pair key (65,536 ok, 65,537 throws)") {
+    val atLimit = Array.tabulate(65536)(i => f"src$i%05d")
+    assert(PipelineQueries.checkOverlapSourceCount(atLimit) eq atLimit)
+    val ex = intercept[IllegalArgumentException](
+      PipelineQueries.checkOverlapSourceCount(atLimit :+ "one-more"))
+    assert(ex.getMessage.contains("65537 sources exceed the packed pair-key limit of 65536"))
+  }
 }

@@ -7,7 +7,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
-import graft.functions.SketchFunctions
 import graft.plans.GraftFunctions
 import graft.operators.SketchAggs._
 import graft.sources.Tokens
@@ -43,6 +42,27 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "tokens", "n_tok", "source")
   }
 
+  /** Bloom, HLL and CMS bytes from the three individual udaf aggregators:
+    * the reference every fused build must equal byte for byte. */
+  def individualSketches(df: DataFrame, bloom: BloomConfig, hllP: Int, cms: CmsConfig): Seq[Array[Byte]] = {
+    val enc = ExpressionEncoder[Array[Int]]()
+    val r = df.agg(udaf(new BloomTokensAgg(bloom), enc)(col("tokens")),
+      udaf(new HllTokensAgg(bloom.k0, bloom.k1, hllP), enc)(col("tokens")),
+      udaf(new CmsTokensAgg(cms), enc)(col("tokens"))).head()
+    (0 until 3).map(r.getAs[Array[Byte]](_))
+  }
+
+  /** A one-shot `FusedTokensNative` build over `tokens`, as a Column. */
+  def fusedNative(bloom: BloomConfig, hllP: Int, cms: CmsConfig): org.apache.spark.sql.Column =
+    graft.plans.NativeAggs.column(graft.plans.FusedTokensNative(
+      org.apache.spark.sql.GraftColumnBridge.expression(col("tokens")),
+      bloom.k, bloom.log2l, hllP, cms.depth, cms.log2Width, bloom.k0, bloom.k1))
+
+  def assertSameSketches(got: Seq[Array[Byte]], want: Seq[Array[Byte]], what: String): Unit =
+    Seq("bloom", "hll", "cms").zipWithIndex.foreach { case (name, i) =>
+      assert(java.util.Arrays.equals(got(i), want(i)), s"$what: $name differs")
+    }
+
   def serialBloom(df: DataFrame): Array[Byte] = {
     val words = new Array[Long](cfg.l)
     df.select("tokens").collect().foreach { r =>
@@ -74,9 +94,10 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = tokenDf(300, 4)
     val bloomUdaf = udaf(new BloomTokensAgg(cfg), ExpressionEncoder[Array[Int]]())
     val sketches = df.groupBy(col("source")).agg(bloomUdaf(col("tokens")).as("sketch"))
+    GraftFunctions.registerExpressions(spark)
     val missing = df.select(col("source"), explode(col("tokens")).as("token"))
       .join(broadcast(sketches), "source")
-      .where(!SketchFunctions.bloomMightContainInt(K0, K1)(col("sketch"), col("token")))
+      .where(!GraftFunctions.bloomMightContain(col("sketch"), col("token")))
       .count()
     assert(missing === 0L, "bloom reported a false negative through the Spark query path")
   }
@@ -138,18 +159,13 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fused agg output is byte-identical to the three individual aggregators") {
+    // FusedTokensNative at the default 64-bit config (6*3 + 12 <= 64)
     val hllP = 12
     val cms = SketchQueries.cmsCfg
-    val enc = ExpressionEncoder[Array[Int]]()
     val df = tokenDf(800, 5)
-    val fusedU = udaf(new FusedTokensAgg(cfg, hllP, cms), enc)
-    val fused = df.agg(fusedU(col("tokens")).as("sk")).select("sk.bloom", "sk.hll", "sk.cms").head()
-    val bloom = df.agg(udaf(new BloomTokensAgg(cfg), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
-    val hll = df.agg(udaf(new HllTokensAgg(K0, K1, hllP), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
-    val cmsB = df.agg(udaf(new CmsTokensAgg(cms), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
-    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](0), bloom), "fused bloom differs")
-    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](1), hll), "fused hll differs")
-    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](2), cmsB), "fused cms differs")
+    val fused = df.agg(fusedNative(cfg, hllP, cms).as("sk")).select("sk.bloom", "sk.hll", "sk.cms").head()
+    assertSameSketches((0 until 3).map(fused.getAs[Array[Byte]](_)),
+      individualSketches(df, cfg, hllP, cms), "fused native")
   }
 
   test("native TypedImperativeAggregates are byte-identical to the udaf aggregators") {
@@ -159,14 +175,11 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val udafBloom = df.agg(udaf(new BloomTokensAgg(cfg), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
     val nativeBloom = df.agg(graft.plans.NativeAggs.bloomTokensNative(col("tokens"))).head().getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(nativeBloom, udafBloom), "native bloom differs from udaf bloom")
-    val fusedU = udaf(new FusedTokensAgg(cfg, 12, SketchQueries.cmsCfg), enc)
-    val udafFused = df.agg(fusedU(col("tokens")).as("sk")).select("sk.bloom", "sk.hll", "sk.cms").head()
+    // the registered SQL name serves the same fused build
     val nativeFused = df.agg(graft.plans.NativeAggs.fusedTokensNative(col("tokens")).as("sk"))
       .select("sk.bloom", "sk.hll", "sk.cms").head()
-    for (i <- 0 until 3)
-      assert(java.util.Arrays.equals(
-        nativeFused.getAs[Array[Byte]](i), udafFused.getAs[Array[Byte]](i)),
-        s"native fused field $i differs")
+    assertSameSketches((0 until 3).map(nativeFused.getAs[Array[Byte]](_)),
+      individualSketches(df, cfg, 12, SketchQueries.cmsCfg), "registered native fused")
     // shuffle-path (serialize/deserialize of the native buffer) exercised
     val repart = df.repartition(9).groupBy(col("source"))
       .agg(graft.plans.NativeAggs.bloomTokensNative(col("tokens")).as("sk"))
@@ -187,15 +200,10 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the fused build serves the same config: every field equals its
     // individual aggregator (bloom on the 128-bit path)
     val cms = SketchQueries.cmsCfg
-    val fused = df.agg(graft.plans.NativeAggs.column(graft.plans.FusedTokensNative(
-      org.apache.spark.sql.GraftColumnBridge.expression(col("tokens")),
-      13, 10, 12, cms.depth, cms.log2Width, K0, K1)).as("sk"))
+    val fused = df.agg(fusedNative(cfg128, 12, cms).as("sk"))
       .select("sk.bloom", "sk.hll", "sk.cms").head()
-    val hll = df.agg(udaf(new HllTokensAgg(K0, K1, 12), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
-    val cmsB = df.agg(udaf(new CmsTokensAgg(cms), enc)(col("tokens"))).head().getAs[Array[Byte]](0)
-    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](0), ud), "128-bit fused bloom differs")
-    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](1), hll), "128-bit fused hll differs")
-    assert(java.util.Arrays.equals(fused.getAs[Array[Byte]](2), cmsB), "128-bit fused cms differs")
+    assertSameSketches((0 until 3).map(fused.getAs[Array[Byte]](_)),
+      individualSketches(df, cfg128, 12, cms), "128-bit fused")
     // SQL arity misuse fails with a named error, not NoSuchElementException
     df.createOrReplaceTempView("native_arity_t")
     val e = intercept[Exception](
@@ -274,14 +282,53 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("typed Dataset facade: per-source sketches + probe, no false negatives") {
     import spark.implicits._
+    import graft.operators.TypedSketchOps
     val ds = Tokens.table(spark, "/root/testdata/sf0.001").as[Tokens.TokenRow]
-    val sketches = graft.operators.TypedSketchOps.perSourceSketches(ds)
-    val rows = sketches.collect()
-    assert(rows.map(_.n_rows).sum === 500L)
-    rows.foreach(r => assert(r.bloom.nonEmpty && r.hll.nonEmpty && r.cms.nonEmpty))
-    val probed = graft.operators.TypedSketchOps.probeOwnSource(ds, sketches)
-    // no false negatives: every token of every doc is present in its sketch
-    assert(probed.where(col("n_present") =!= col("n_tok")).count() === 0L)
+    val hllP = 12
+    val cms = CmsConfig(K0, K1, 5, 11)
+    val cfg128 = BloomConfig(K0, K1, 13, 10) // 6*13 + 10 > 64: the 128-bit bloom path
+    for (bloomCfg <- Seq(BloomConfig(K0, K1, 3, 12), cfg128)) {
+      val sketches = TypedSketchOps.perSourceSketches(ds, bloomCfg, hllP, cms)
+      val rows = sketches.collect()
+      assert(rows.map(_.n_rows).sum === 500L)
+      rows.foreach(r => assert(r.bloom.nonEmpty && r.hll.nonEmpty && r.cms.nonEmpty))
+      // each source's bytes equal a one-shot fused build and the three
+      // individual aggregators over that source's rows
+      val enc = ExpressionEncoder[Array[Int]]()
+      val want = ds.toDF().groupBy(col("source")).agg(
+        fusedNative(bloomCfg, hllP, cms).as("sk"),
+        udaf(new BloomTokensAgg(bloomCfg), enc)(col("tokens")).as("b"),
+        udaf(new HllTokensAgg(K0, K1, hllP), enc)(col("tokens")).as("h"),
+        udaf(new CmsTokensAgg(cms), enc)(col("tokens")).as("c"),
+        sum(col("n_tok")).cast("long").as("n"))
+        .select("source", "sk.bloom", "sk.hll", "sk.cms", "b", "h", "c", "n")
+        .collect()
+      assert(want.length === rows.length)
+      val bySource = rows.map(r => r.source -> r).toMap
+      want.foreach { w =>
+        val r = bySource(w.getString(0))
+        val got = Seq(r.bloom, r.hll, r.cms)
+        assertSameSketches(got, (1 to 3).map(w.getAs[Array[Byte]](_)), s"${r.source} vs one-shot fused")
+        assertSameSketches(got, (4 to 6).map(w.getAs[Array[Byte]](_)), s"${r.source} vs individual aggs")
+        assert(r.n_tokens === w.getLong(7))
+      }
+      val probed = TypedSketchOps.probeOwnSource(ds, sketches)
+      // no false negatives: every token of every doc is present in its sketch
+      assert(probed.where(col("n_present") =!= col("n_tok")).count() === 0L)
+      assert(probed.schema("n_present").dataType === org.apache.spark.sql.types.LongType)
+      // build and probe both run natively: no udaf, no scalar UDF
+      object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      for (q <- Seq(sketches.toDF(), probed)) {
+        val foreign = plans.flatMap(q.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
+          case e: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] => e.getClass.getSimpleName
+          case e: org.apache.spark.sql.catalyst.expressions.ScalaUDF => e.getClass.getSimpleName
+        }))
+        assert(foreign.isEmpty, s"typed facade plan holds $foreign:\n${q.queryExecution.executedPlan}")
+      }
+    }
+    // bloom and cms must share the SipKey
+    intercept[IllegalArgumentException](
+      TypedSketchOps.perSourceSketches(ds, cmsCfg = CmsConfig(K0 + 1, K1, 5, 11)))
   }
 
   test("driver contract: entry() returns rows on sf0.001 and every query name has a body") {

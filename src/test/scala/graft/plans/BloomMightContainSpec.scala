@@ -162,14 +162,6 @@ class BloomMightContainSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(chainMsg(exCol).contains("probed/loaded as string"), s"unexpected: ${chainMsg(exCol)}")
 
-    // UDF surface enforces too
-    val exUdf = intercept[Throwable] {
-      Seq((skInt, 7L)).toDF("sk", "x")
-        .where(graft.functions.SketchFunctions.bloomMightContainLong(
-          Keys.DefaultK0, Keys.DefaultK1)(col("sk"), col("x"))).count()
-    }
-    assert(chainMsg(exUdf).contains("probed/loaded as bigint"), s"unexpected: ${chainMsg(exUdf)}")
-
     // matching type still probes fine after the guard
     val ok = Seq(1, 2, 3).toDF("t")
       .where(GraftFunctions.bloomMightContain(lit(skInt), col("t"))).count()
