@@ -676,15 +676,10 @@ object SketchQueries {
   def sketchJobResumeProbeExact(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
     val t = Tokens.table(spark, dir)
-    // tmpfs-backed checkpoint when available: the two increments write +
-    // re-read ~40 MB of partial sketches per invocation; /tmp is
-    // disk-backed in this sandbox (the streaming replayCheckpointDir
-    // rationale — production jobs point ckpt at HDFS/S3)
-    val ckptBase = {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    }
+    // tmpfs-backed checkpoint when it has room (ScratchDir): the two
+    // increments write + re-read the partial sketches per invocation —
+    // production jobs point ckpt at HDFS/S3
+    val ckptBase = ScratchDir.base().getPath
     val ckpt = s"$ckptBase/graft_job_ckpt_q"
     val path = new org.apache.hadoop.fs.Path(ckpt)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -23,9 +23,11 @@ import graft.plans.{FusedTokensNative, NativeAggs}
   *      the same monoid the aggregation itself uses.
   *
   * Both halves run on native `TypedImperativeAggregate`s that read rows in
-  * place: the increment is ONE `FusedTokensNative` (bloom + HLL + CMS from
-  * two hashes per token), finalize is one `SketchMergeNative` per sketch
-  * column plus plain aggregates, so its plan has a single exchange. The
+  * place: the increment is ONE `FusedTokensNative` (bloom + HLL + CMS;
+  * its partial buffers hold token ids until the dense sketches would be
+  * smaller, so small (bucket, source) groups shuffle ids, not sketches),
+  * finalize is one `SketchMergeNative` per sketch column plus plain
+  * aggregates, so its plan has a single exchange. The
   * job's parameters travel in the expressions (`cfg`), never through the
   * session-global `NativeAggs.register`.
   *
@@ -103,7 +105,7 @@ object SketchJob {
       failAfterBuckets: Option[Int] = None): Int = {
     graft.plans.GraftFunctions.registerExpressions(spark)
     val done = committedBuckets(spark, ckptDir)
-    // one fused native build (two hashes per token, rows read in place);
+    // one fused native build (rows read in place, sparse partial buffers);
     // the config travels in the expression, not in a session-global name
     val fused = NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(col("tokens")),
       cfg.bloomK, cfg.bloomLog2l, cfg.hllP, cfg.cmsDepth, cfg.cmsLog2Width, cfg.k0, cfg.k1))

@@ -21,19 +21,17 @@ import graft.operators.SketchAggs._
   */
 object StreamingSketch {
 
-  /** Replay-harness checkpoint placement: a fresh tmpfs-backed dir per
-    * replay (falling back to the process tmpdir off Linux), deleted after
-    * the query stops. Spark's default temp checkpoint lands on /tmp —
-    * disk-backed here — and every micro-batch pays offset/commit-log and
-    * state-delta writes with checksums per state partition, which is pure
-    * I/O latency for a fixture replay (the Bench session already keeps
-    * shuffle dirs on /dev/shm for the same reason). Production streams
-    * configure a DURABLE checkpoint location; this path is only for the
-    * in-process replay of a batch fixture. */
+  /** Replay-harness checkpoint placement: a fresh dir per replay under
+    * `ScratchDir.base` (tmpfs with enough free space, else the process
+    * tmpdir), deleted after the query stops. Spark's default temp
+    * checkpoint lands on /tmp, often disk-backed, and every micro-batch
+    * pays offset/commit-log and state-delta writes with checksums per
+    * state partition, which is pure I/O latency for a fixture replay (the
+    * Bench session already keeps shuffle dirs on /dev/shm for the same
+    * reason). Production streams configure a DURABLE checkpoint location;
+    * this path is only for the in-process replay of a batch fixture. */
   private def replayCheckpointDir(name: String): java.io.File = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft_stream_ckpt")
-      else new java.io.File(System.getProperty("java.io.tmpdir"), "graft_stream_ckpt")
+    val base = new java.io.File(graft.ScratchDir.base(), "graft_stream_ckpt")
     val d = new java.io.File(base, s"${name}_${java.util.UUID.randomUUID()}")
     d.mkdirs()
     d

@@ -36,6 +36,15 @@ object GoldenGen {
     (1 to 5000).foreach(i => kmvSize = Kmv.add(kmv, kmvSize, SipHash.hashInt(k0, k1, i)))
     java.nio.file.Files.write(outDir.resolve("kmv_64.bin"),
       Kmv.toBytes(kmv, kmvSize, BlockedBloom.TypeTag.Int, SipHash.hashLong(k0, k1, k0 ^ k1)))
+    // KLL and t-digest: the values 1..5000 in a fixed permuted order (7919
+    // is coprime to 5000); insertion order steers compaction, so it is fixed
+    val quantilePayload = (0 until 5000).map(i => 1.0 + (i * 7919) % 5000)
+    val kll = new KllSketch(64)
+    quantilePayload.foreach(kll.add)
+    java.nio.file.Files.write(outDir.resolve("kll_64.bin"), kll.toBytes)
+    val td = new TDigest(100)
+    quantilePayload.foreach(td.add(_))
+    java.nio.file.Files.write(outDir.resolve("tdigest_100.bin"), td.toBytes)
     println("golden files written")
   }
 }

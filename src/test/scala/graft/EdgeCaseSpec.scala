@@ -259,4 +259,15 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
       PipelineQueries.checkOverlapSourceCount(atLimit :+ "one-more"))
     assert(ex.getMessage.contains("65537 sources exceed the packed pair-key limit of 65536"))
   }
+
+  test("scratch dir: a candidate below the free-space floor falls back to java.io.tmpdir") {
+    val tmpdir = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val candidate = java.nio.file.Files.createTempDirectory("graft_scratch_candidate").toFile
+    try {
+      assert(ScratchDir.base(candidate, minFree = 0L) === candidate)
+      assert(ScratchDir.base(candidate, minFree = candidate.getUsableSpace + (1L << 40)) === tmpdir)
+      assert(ScratchDir.base(new java.io.File(candidate, "missing"), minFree = 0L) === tmpdir)
+      assert(ScratchDir.MinFreeBytes === (256L << 20))
+    } finally candidate.delete(): Unit
+  }
 }

@@ -84,6 +84,38 @@ class GoldenFilesSpec extends AnyFunSuite {
     assert(math.abs(Kmv.estimate(h2, s2) - 5000) <= 4 * Kmv.stdError(64) * 5000)
   }
 
+  /** GoldenGen's KLL / t-digest payload: 1..5000 in a fixed permuted order. */
+  private val quantilePayload = (0 until 5000).map(i => 1.0 + (i * 7919) % 5000)
+
+  test("kll golden file: byte-identical rebuild, quantiles within the published rank error") {
+    val sk = new KllSketch(64)
+    quantilePayload.foreach(sk.add)
+    val stored = golden("kll_64.bin")
+    assert(java.util.Arrays.equals(sk.toBytes, stored), "KLL golden drift")
+    val back = Kll.fromBytes(stored)
+    assert(back.n === 5000L)
+    val eps = Kll.normalizedRankError(64)
+    for (q <- Seq(0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)) {
+      val rankErr = math.abs(back.quantile(q) / 5000 - q) // the data is 1..n: rank(x) = x / n
+      assert(rankErr <= eps, s"golden KLL q=$q rank error $rankErr > $eps")
+    }
+  }
+
+  test("t-digest golden file: byte-identical rebuild, quantiles inside the envelope") {
+    val d = new TDigest(100)
+    quantilePayload.foreach(d.add(_))
+    val stored = golden("tdigest_100.bin")
+    assert(java.util.Arrays.equals(d.toBytes, stored), "t-digest golden drift")
+    val back = TDigest.fromBytes(stored)
+    assert(back.n === 5000.0 && back.quantile(0.0) === 1.0 && back.quantile(1.0) === 5000.0)
+    for (q <- Seq(0.001, 0.01, 0.1, 0.5, 0.9, 0.99, 0.999)) {
+      // k1 scale function: rank error O(1/delta) at the median, tighter at the tails
+      val bound = if (q <= 0.01 || q >= 0.99) 0.005 else 0.03
+      val rankErr = math.abs(back.quantile(q) / 5000 - q)
+      assert(rankErr <= bound, s"golden t-digest q=$q rank error $rankErr > $bound")
+    }
+  }
+
   test("cms golden file: byte-identical rebuild and exact point estimates") {
     val cms = CmsConfig(k0, k1, 4, 8)
     val buf = CountMin.empty(cms)
