@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.operators.{Multimodal, Similarity, TextPipeline}
 
@@ -230,13 +230,11 @@ object PipelineQueries {
   /** Stats + gate over a (usually persisted) slim frame; lazy, so
     * PlanCheck can capture the real plan via [[samplingFramePlan]]. */
   private def samplingFrameOn(spark: SparkSession, flagged: DataFrame): DataFrame = {
-    import graft.operators.SketchAggs.BottomKWeightedLongAgg
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     graft.plans.GraftFunctions.registerExpressions(spark)
     val k = 8
-    val aggW = udaf(new BottomKWeightedLongAgg(
-      graft.core.Keys.DefaultK0, graft.core.Keys.DefaultK1, k),
-      ExpressionEncoder[(Long, Long)]())
+    val sampleW = graft.operators.SketchKinds.Sample(
+      graft.core.Keys.DefaultK0, graft.core.Keys.DefaultK1, k, weighted = true)
+    val aggW = (v: Column, w: Column) => graft.plans.NativeAggs.column(sampleW, v, w)
     val stats = flagged.groupBy(col("source")).agg(
       count(lit(1)).as("n_docs"),
       sum(col("word_count")).as("tok_mass"),
@@ -657,18 +655,15 @@ object PipelineQueries {
     * old distinct (source, gram) frame fed, so count and sketch bytes are
     * identical. Gram-less sources never appear, as before. */
   private def perSourceAgg(masks: DataFrame, sources: Array[String]): DataFrame = {
-    import graft.operators.SketchAggs
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     val nWords = math.max(1, (sources.length + 63) / 64)
     val mcols = array((0 until nWords).map(w => col(s"m$w")): _*)
     val bitsUdf = udf(new MaskBitsUdf)
-    val kmvU = udaf(new SketchAggs.KmvStringAgg(
-      graft.core.Keys.DefaultK0, graft.core.Keys.DefaultK1, SketchQueries.kmvK),
-      ExpressionEncoder[String]())
+    val kmv = graft.operators.SketchKinds.KmvKind(
+      graft.core.Keys.DefaultK0, graft.core.Keys.DefaultK1, SketchQueries.kmvK)
     masks
       .select(explode(bitsUdf(mcols)).as("idx"), col("gram"))
       .groupBy(col("idx"))
-      .agg(count(lit(1)).as("n"), kmvU(col("gram")).as("sk"))
+      .agg(count(lit(1)).as("n"), graft.plans.NativeAggs.column(kmv, col("gram")).as("sk"))
       .select(element_at(lit(sources), col("idx") + 1).as("source"),
         col("n"), col("sk"))
   }

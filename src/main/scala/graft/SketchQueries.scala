@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core._
-import graft.plans.{GraftFunctions, SketchReaders}
-import graft.operators.SketchAggs._
+import graft.plans.{GraftFunctions, NativeAggs, SketchReaders}
+import graft.operators.SketchKinds._
 import graft.sources.Tokens
 
 /** The driver-checkable query surface (SparkEntry.queries bodies).
@@ -35,22 +34,16 @@ object SketchQueries {
   val kllK = 200
   val tdigestDelta = 100.0
 
-  private def tokensEnc = ExpressionEncoder[Array[Int]]()
-  private def stringEnc = ExpressionEncoder[String]()
-  private def doubleEnc = ExpressionEncoder[Double]()
-  private def binaryEnc = ExpressionEncoder[Array[Byte]]()
-
   val kmvK = 256
 
-  private def bloomTokensUdaf = udaf(new BloomTokensAgg(bloomCfg), tokensEnc)
-  private def kmvLongUdaf = udaf(new KmvLongAgg(K0, K1, kmvK), ExpressionEncoder[Long]())
-  private def kmvMergeUdaf = udaf(new KmvMergeAgg(K0, K1), binaryEnc)
-  private def bloomMergeUdaf = udaf(new BloomMergeAgg(K0, K1), binaryEnc)
-  private def hllTokensUdaf = udaf(new HllTokensAgg(K0, K1, hllP), tokensEnc)
-  private def hllStringUdaf = udaf(new HllStringAgg(K0, K1, hllP), stringEnc)
-  private def cmsTokensUdaf = udaf(new CmsTokensAgg(cmsCfg), tokensEnc)
-  private def kllUdaf = udaf(new KllDoubleAgg(kllK), doubleEnc)
-  private def tdigestUdaf = udaf(new TDigestDoubleAgg(tdigestDelta), doubleEnc)
+  // the query surface's sketches as native aggregates: each builds over
+  // its value column and merges a column of its serialized sketches
+  private def bloomAgg(c: Column) = NativeAggs.column(Bloom(bloomCfg), c)
+  private def kmvAgg(c: Column) = NativeAggs.column(KmvKind(K0, K1, kmvK), c)
+  private def hllAgg(c: Column) = NativeAggs.column(HllKind(K0, K1, hllP), c)
+  private def cmsAgg(c: Column) = NativeAggs.column(Cms(cmsCfg), c)
+  private def kllAgg(c: Column) = NativeAggs.column(KllKind(kllK), c)
+  private def tdigestAgg(c: Column) = NativeAggs.column(TDigestKind(tdigestDelta), c)
 
   /** (source, token) occurrence rows. `explode_outer` + not-null filter
     * rather than plain `explode` (optimization r07): the optimizer's
@@ -69,7 +62,7 @@ object SketchQueries {
 
   /** Per-source Bloom sketches (the flagship build). */
   def perSourceBloom(t: DataFrame): DataFrame =
-    t.groupBy(col("source")).agg(bloomTokensUdaf(col("tokens")).as("sketch"))
+    t.groupBy(col("source")).agg(bloomAgg(col("tokens")).as("sketch"))
 
   // ------------------------------------------------------------ queries
 
@@ -116,7 +109,7 @@ object SketchQueries {
     // 128-bit config's 32 KB filters made the per-row copy+verify cost of
     // the join path 4x the 64-bit twin's (see bloomProbeExact)
     val packed = collectSketches(t.groupBy(col("source"))
-      .agg(udaf(new BloomTokensAgg(cfg128), tokensEnc)(col("tokens")).as("sketch")), "sketch")
+      .agg(NativeAggs.column(Bloom(cfg128), col("tokens")).as("sketch")), "sketch")
     exploded(t)
       .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
       .groupBy(col("source"))
@@ -128,7 +121,7 @@ object SketchQueries {
     * per-source fused Bloom+HLL+CMS via the native TypedImperativeAggregate
     * (ArrayData read in place — the path Bench measures at 10^9 tokens),
     * then probe the bloom member with every (source, token) occurrence. No
-    * false negatives + byte-identity with the udaf aggregators (tested) ⇒
+    * false negatives + byte-identity with the reference aggregators (tested) ⇒
     * the per-source present-count equals the exact token count, same
     * oracle as q_bloom_probe_exact. */
   def fusedNativeProbeExact(spark: SparkSession, dir: String): DataFrame = {
@@ -169,7 +162,7 @@ object SketchQueries {
     try {
       // build the Bloom on the build side and ship it into the probe filter
       val sketchBytes = buildSide
-        .agg(udaf(new BloomIntAgg(bloomCfg), ExpressionEncoder[Int]())(col("token")))
+        .agg(bloomAgg(col("token")))
         .head().getAs[Array[Byte]](0)
       GraftFunctions.register(spark)
       val probe = exploded(t).distinct()
@@ -192,7 +185,7 @@ object SketchQueries {
   def bloomUnionGlobal(spark: SparkSession, dir: String): DataFrame = {
     val t = Tokens.table(spark, dir)
     val globalBytes = perSourceBloom(t)
-      .agg(bloomMergeUdaf(col("sketch")))
+      .agg(bloomAgg(col("sketch")))
       .head().getAs[Array[Byte]](0)
     GraftFunctions.register(spark)
     t.select(explode_outer(col("tokens")).as("token"))
@@ -206,7 +199,7 @@ object SketchQueries {
     * "partitioning / shuffle / skew handled explicitly"). A hot source is
     * split across 8 salt shards — `groupBy(source, salt)` spreads its rows
     * over 8 reducers instead of one — and the per-shard partial filters are
-    * merged back per source with [[SketchAggs.BloomMergeAgg]]. Bloom union
+    * merged back per source by the same Bloom kind's merge. Bloom union
     * is bitwise OR (commutative, associative, idempotent; reference
     * `unionInto`, `Internal.hs:509-550`), so the salted two-level build
     * must produce BYTE-IDENTICAL filters to the direct one-level build —
@@ -219,9 +212,9 @@ object SketchQueries {
     val salted = t
       .withColumn("salt", pmod(hash(col("doc_id")), lit(8)))
       .groupBy(col("source"), col("salt"))
-      .agg(bloomTokensUdaf(col("tokens")).as("partial"))
+      .agg(bloomAgg(col("tokens")).as("partial"))
       .groupBy(col("source"))
-      .agg(bloomMergeUdaf(col("partial")).as("salted_sketch"))
+      .agg(bloomAgg(col("partial")).as("salted_sketch"))
     // equivalence rows collected ONCE (one per source); the probe runs
     // against the keyed literal pack instead of carrying the salted sketch
     // column through a broadcast join (see bloomProbeExact), and the
@@ -267,7 +260,7 @@ object SketchQueries {
     val se = Kmv.stdError(kmvK)
     val orders = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderstatus").as("status"), col("o_custkey").cast("long").as("custkey"))
-    val sk = orders.groupBy(col("status")).agg(kmvLongUdaf(col("custkey")).as("sk"))
+    val sk = orders.groupBy(col("status")).agg(kmvAgg(col("custkey")).as("sk"))
     // exact truth for the gate (status domain is tiny; distinct pairs only)
     val d = orders.distinct()
     val exactPer = d.groupBy(col("status")).agg(count(lit(1)).as("nd"))
@@ -277,7 +270,7 @@ object SketchQueries {
       .groupBy(col("a.status").as("status_a"), col("b.status").as("status_b"))
       .agg(count(lit(1)).as("exact_inter"))
     // merge path: per-status sketches -> one global union sketch (1 row)
-    val globalEst = sk.agg(kmvMergeUdaf(col("sk")).as("g"))
+    val globalEst = sk.agg(kmvAgg(col("sk")).as("g"))
       .select(SketchReaders.kmvEstimate(col("g")).as("g_est"))
     val globalExact = d.select(col("custkey")).distinct()
       .agg(count(lit(1)).as("g_exact"))
@@ -288,7 +281,7 @@ object SketchQueries {
     val k2 = kmvK / 2
     val se2 = Kmv.stdError(k2)
     val skSmall = orders.groupBy(col("status"))
-      .agg(udaf(new KmvLongAgg(K0, K1, k2), ExpressionEncoder[Long]())(col("custkey")).as("sk_small"))
+      .agg(NativeAggs.column(KmvKind(K0, K1, k2), col("custkey")).as("sk_small"))
     val pairs = sk.as("sa")
       .join(sk.as("sb"), col("sa.status") < col("sb.status"))
       .join(broadcast(skSmall.select(col("status").as("sb_status"), col("sk_small"))),
@@ -353,7 +346,7 @@ object SketchQueries {
   def hllDistinctTokensBound(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
-    val est = t.groupBy(col("source")).agg(hllTokensUdaf(col("tokens")).as("sk"))
+    val est = t.groupBy(col("source")).agg(hllAgg(col("tokens")).as("sk"))
       .select(col("source"), SketchReaders.hllEstimate(col("sk")).as("est"))
     val exact = exploded(t).groupBy(col("source"))
       .agg(countDistinct(col("token")).as("exact"))
@@ -369,7 +362,7 @@ object SketchQueries {
   def hllDistinctDocsBound(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
-    val est = t.groupBy(col("source")).agg(hllStringUdaf(col("doc_id")).as("sk"))
+    val est = t.groupBy(col("source")).agg(hllAgg(col("doc_id")).as("sk"))
       .select(col("source"), SketchReaders.hllEstimate(col("sk")).as("est"))
     val exact = t.groupBy(col("source")).agg(countDistinct(col("doc_id")).as("exact"))
     est.join(exact, "source")
@@ -389,7 +382,7 @@ object SketchQueries {
     val w = Window.partitionBy(col("source")).orderBy(col("cnt").desc, col("token").asc)
     val top = counts.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
       .select(col("source"), col("token"), col("cnt"))
-    val sk = t.groupBy(col("source")).agg(cmsTokensUdaf(col("tokens")).as("sk"))
+    val sk = t.groupBy(col("source")).agg(cmsAgg(col("tokens")).as("sk"))
     top.join(sk, "source")
       .select(
         col("source"),
@@ -418,7 +411,7 @@ object SketchQueries {
     val t = Tokens.table(spark, dir)
     val qs = Seq(25 -> 0.25, 50 -> 0.5, 75 -> 0.75)
     val sk = t.groupBy(col("source"))
-      .agg((if (isKll) kllUdaf else tdigestUdaf)(col("n_tok").cast("double")).as("sk"))
+      .agg((if (isKll) kllAgg _ else tdigestAgg _)(col("n_tok").cast("double")).as("sk"))
     val estCols = qs.map { case (tag, q) =>
       (if (isKll) SketchReaders.kllQuantile _ else SketchReaders.tdigestQuantile _)(
         col("sk"), lit(q)).as(s"est_$tag")
@@ -440,8 +433,7 @@ object SketchQueries {
 
   /** TWO-LEVEL quantile merge under the driver gate: per-source KLL and
     * t-digest sketches are serialized, merged globally through
-    * [[graft.operators.SketchAggs.KllBytesMergeAgg]] /
-    * [[graft.operators.SketchAggs.TDigestBytesMergeAgg]] (the
+    * the KLL and t-digest kinds' merges (the
     * checkpoint-merge shape — every family member's serialized-merge path
     * now has a gate), and the merged estimates are checked against GLOBAL
     * exact ranks. KLL merge preserves the rank-error guarantee (levelwise
@@ -450,13 +442,11 @@ object SketchQueries {
   def quantileMergeBound(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
-    val kllMergeUdaf = udaf(new KllBytesMergeAgg, binaryEnc)
-    val tdMergeUdaf = udaf(new TDigestBytesMergeAgg, binaryEnc)
     val perSource = t.groupBy(col("source")).agg(
-      kllUdaf(col("n_tok").cast("double")).as("kll"),
-      tdigestUdaf(col("n_tok").cast("double")).as("td"))
+      kllAgg(col("n_tok").cast("double")).as("kll"),
+      tdigestAgg(col("n_tok").cast("double")).as("td"))
     val merged = perSource.agg(
-      kllMergeUdaf(col("kll")).as("kll"), tdMergeUdaf(col("td")).as("td"))
+      kllAgg(col("kll")).as("kll"), tdigestAgg(col("td")).as("td"))
     val qs = Seq(25 -> 0.25, 50 -> 0.5, 75 -> 0.75)
     val est = merged.select(
       qs.flatMap { case (tag, q) => Seq(
@@ -490,7 +480,7 @@ object SketchQueries {
   def cmsTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
-    val sk = t.groupBy(col("source")).agg(cmsTokensUdaf(col("tokens")).as("sk"))
+    val sk = t.groupBy(col("source")).agg(cmsAgg(col("tokens")).as("sk"))
     val candidates = exploded(t).distinct()
     val est = candidates
       .join(broadcast(sk), "source")
@@ -580,7 +570,7 @@ object SketchQueries {
     val buildSide = orders.where(col("o_orderstatus") === "P")
       .select(col("o_orderkey")).persist()
     val sketchBytes = buildSide
-      .agg(udaf(new BloomLongAgg(bloomCfg), ExpressionEncoder[Long]())(col("o_orderkey")))
+      .agg(bloomAgg(col("o_orderkey").cast("long")))
       .head().getAs[Array[Byte]](0)
     val prefiltered = lineitem
       .where(GraftFunctions.bloomMightContain(lit(sketchBytes), col("l_orderkey")))
@@ -597,8 +587,7 @@ object SketchQueries {
   def hllEventUsersBound(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.registerExpressions(spark)
     val events = spark.read.parquet(s"$dir/events.parquet")
-    val hllLongUdaf = udaf(new HllLongAgg(K0, K1, hllP), ExpressionEncoder[Long]())
-    val est = events.groupBy(col("event_type")).agg(hllLongUdaf(col("user_id")).as("sk"))
+    val est = events.groupBy(col("event_type")).agg(hllAgg(col("user_id")).as("sk"))
       .select(col("event_type"), SketchReaders.hllEstimate(col("sk")).as("est"))
     val exact = events.groupBy(col("event_type")).agg(countDistinct(col("user_id")).as("exact"))
     est.join(exact, "event_type")
@@ -625,8 +614,6 @@ object SketchQueries {
   def sketchRollup(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.registerExpressions(spark)
     val events = spark.read.parquet(s"$dir/events.parquet")
-    val hllLongUdaf = udaf(new HllLongAgg(K0, K1, hllP), ExpressionEncoder[Long]())
-    val hllMergeUdaf = udaf(new graft.jobs.HllBytesMergeAgg, binaryEnc)
     // level 0: the daily sketch table (what a production job would persist
     // per Iceberg snapshot); level 1: merge partials per type — one small
     // shuffle of sketch bytes, never raw rows. `ts` is TIMESTAMP_NTZ, so
@@ -635,16 +622,16 @@ object SketchQueries {
     val daily = events
       .withColumn("day", to_date(col("ts")))
       .groupBy(col("event_type"), col("day"))
-      .agg(hllLongUdaf(col("user_id")).as("hll_sk"),
-        kmvLongUdaf(col("user_id")).as("kmv_sk"))
+      .agg(hllAgg(col("user_id")).as("hll_sk"),
+        kmvAgg(col("user_id")).as("kmv_sk"))
     val merged = daily.groupBy(col("event_type")).agg(
       count(lit(1)).as("n_days"),
-      hllMergeUdaf(col("hll_sk")).as("hll_m"),
-      kmvMergeUdaf(col("kmv_sk")).as("kmv_m"))
+      hllAgg(col("hll_sk")).as("hll_m"),
+      kmvAgg(col("kmv_sk")).as("kmv_m"))
     // direct single-pass build + exact distinct, for the identity/bound gate
     val direct = events.groupBy(col("event_type")).agg(
-      hllLongUdaf(col("user_id")).as("hll_d"),
-      kmvLongUdaf(col("user_id")).as("kmv_d"),
+      hllAgg(col("user_id")).as("hll_d"),
+      kmvAgg(col("user_id")).as("kmv_d"),
       countDistinct(col("user_id")).as("n_exact_users"))
     // sparse-encoding gate (round 5): the small per-(type, day) partials
     // must take the v2 sparse layout — strictly below the dense size —
@@ -732,8 +719,7 @@ object SketchQueries {
       .select(col("source"), col("doc_id"), explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull) // one tokenize evaluation (see `exploded`)
       .select(col("source"), keyBlowup(col("token"), col("doc_id")).as("key"))
-    val hhUdaf = udaf(new HeavyHittersLongAgg(capacity), ExpressionEncoder[Long]())
-    val sk = stream.groupBy(col("source")).agg(hhUdaf(col("key")).as("sk"))
+    val sk = stream.groupBy(col("source")).agg(NativeAggs.column(HeavyHitters(capacity), col("key")).as("sk"))
     val exact = stream.groupBy(col("source"), col("key")).agg(count(lit(1)).as("cnt"))
     mgGuaranteeGate(spark, sk, exact, capacity)
   }
@@ -807,8 +793,8 @@ object SketchQueries {
     val perDoc = stream
       .groupBy(col("source"), col("doc_id"), col("key"))
       .agg(count(lit(1)).as("w"))
-    val hhW = udaf(new HeavyHittersWeightedLongAgg(capacity), ExpressionEncoder[(Long, Long)]())
-    val sk = perDoc.groupBy(col("source")).agg(hhW(col("key"), col("w")).as("sk"))
+    val sk = perDoc.groupBy(col("source"))
+      .agg(NativeAggs.column(HeavyHitters(capacity), col("key"), col("w")).as("sk"))
     val exact = stream.groupBy(col("source"), col("key")).agg(count(lit(1)).as("cnt"))
     mgGuaranteeGate(spark, sk, exact, capacity)
   }
@@ -850,8 +836,7 @@ object SketchQueries {
     val big = t
       .select(col("source"), explode_outer(pairs).as("key"))
       .where(col("key").isNotNull)
-    val hhUdaf = udaf(new HeavyHittersLongAgg(capacity), ExpressionEncoder[Long]())
-    val sk = big.groupBy(col("source")).agg(hhUdaf(col("key")).as("sk"))
+    val sk = big.groupBy(col("source")).agg(NativeAggs.column(HeavyHitters(capacity), col("key")).as("sk"))
     val exact = big.groupBy(col("source"), col("key")).agg(count(lit(1)).as("cnt"))
     val stats = exact.groupBy(col("source")).agg(
       sum(col("cnt")).as("n_bigrams"),
@@ -882,7 +867,7 @@ object SketchQueries {
     *     input is first repartitioned by doc_id (merge-order invariance,
     *     the determinism the `rand()` formulation cannot give);
     *  4. merge_matches_direct — per-shard partials folded through the
-    *     serialized `BottomKMergeAgg` (checkpoint-merge shape) are
+    *     serialized sample merge (checkpoint-merge shape) are
     *     byte-identical to the direct build.
     * At 100 TB: one partial-aggregated groupBy; the shuffle carries one
     * <= k-entry summary per (partition, source). */
@@ -891,8 +876,9 @@ object SketchQueries {
     val k = 32
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("source"), col("doc_id").cast("long").as("doc_id"))
-    val aggU = udaf(new BottomKLongAgg(K0, K1, k), ExpressionEncoder[Long]())
-    val mergeU = udaf(new BottomKMergeAgg(K0, K1), binaryEnc)
+    val sample = Sample(K0, K1, k, weighted = false)
+    val aggU = (c: Column) => NativeAggs.column(sample, c)
+    val mergeU = aggU // the kind merges its own serialized partials
     val direct = docs.groupBy(col("source")).agg(aggU(col("doc_id")).as("sk"))
     val repart = docs.repartition(7, col("doc_id"))
       .groupBy(col("source")).agg(aggU(col("doc_id")).as("sk_repart"))
@@ -911,8 +897,9 @@ object SketchQueries {
     // schema's doc_id is a string; the sampler must work without a numeric
     // cast (round-4 string-layout variant, gated with its own exact booleans)
     val docsStr = docs.select(col("source"), col("doc_id").cast("string").as("doc_id_str"))
-    val strAggU = udaf(new BottomKStringAgg(K0, K1, k), ExpressionEncoder[String]())
-    val strMergeU = udaf(new BottomKStringMergeAgg(K0, K1), binaryEnc)
+    val strSample = StringSample(K0, K1, k, weighted = false)
+    val strAggU = (c: Column) => NativeAggs.column(strSample, c)
+    val strMergeU = strAggU
     val strDirect = docsStr.groupBy(col("source")).agg(strAggU(col("doc_id_str")).as("ssk"))
     // cast-free shard key (the variant's whole point is non-numeric ids):
     // the native SipHash over the STRING spreads shards uniformly with no
@@ -958,7 +945,7 @@ object SketchQueries {
     *     source;
     *  3. partition_invariant — byte-identical under input repartition;
     *  4. merge_matches_direct — serialized two-level
-    *     `BottomKWeightedMergeAgg` ≡ direct build, byte-identical;
+    *     weighted-sample merge ≡ direct build, byte-identical;
     *  5. matches_exact_topk — the sampled id set EQUALS an independent
     *     per-row recomputation of the k smallest ES keys, where the key
     *     -ln(u)/w is rebuilt from scratch in SQL (native `graft_sip_hash64`
@@ -987,8 +974,9 @@ object SketchQueries {
       .select(col("source"), col("doc_id").cast("long").as("doc_id"),
         size(filter(split(col("text"), " "), w => w =!= lit(""))).cast("long").as("w"))
       .where(col("w") > 0L)
-    val aggW = udaf(new BottomKWeightedLongAgg(K0, K1, k), ExpressionEncoder[(Long, Long)]())
-    val mergeW = udaf(new BottomKWeightedMergeAgg(K0, K1), binaryEnc)
+    val sampleW = Sample(K0, K1, k, weighted = true)
+    val aggW = (v: Column, w: Column) => NativeAggs.column(sampleW, v, w)
+    val mergeW = (c: Column) => NativeAggs.column(sampleW, c)
     val direct = docs.groupBy(col("source")).agg(aggW(col("doc_id"), col("w")).as("sk"))
     val repart = docs.repartition(7, col("doc_id"))
       .groupBy(col("source")).agg(aggW(col("doc_id"), col("w")).as("sk_repart"))
@@ -1023,9 +1011,9 @@ object SketchQueries {
     // is a DIFFERENT (equally weighted) draw with its own exact-topk twin
     val docsStr = docs.select(col("source"),
       col("doc_id").cast("string").as("doc_id_str"), col("w"))
-    val strAggW = udaf(new BottomKWeightedStringAgg(K0, K1, k),
-      ExpressionEncoder[(String, Long)]())
-    val strMergeW = udaf(new BottomKWeightedStringMergeAgg(K0, K1), binaryEnc)
+    val strSampleW = StringSample(K0, K1, k, weighted = true)
+    val strAggW = (v: Column, w: Column) => NativeAggs.column(strSampleW, v, w)
+    val strMergeW = (c: Column) => NativeAggs.column(strSampleW, c)
     val strDirect = docsStr.groupBy(col("source"))
       .agg(strAggW(col("doc_id_str"), col("w")).as("wssk"))
     val strTwoLevel = docsStr

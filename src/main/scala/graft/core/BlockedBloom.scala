@@ -28,8 +28,8 @@ final case class BloomConfig(k0: Long, k1: Long, k: Int, log2l: Int) {
   if (log2l < 0 || log2l > 27)
     throw BloomConfig.invalid(
       s"log2l must be in [0, 27] (8*2^28+64 overflows the JVM byte-array limit), got $log2l")
-  if (6 * k + log2l > 128)
-    throw BloomConfig.invalid(s"6*k + log2l must be <= 128, got ${6 * k + log2l}")
+  if (6L * k + log2l > 128)
+    throw BloomConfig.invalid(s"6*k + log2l must be <= 128, got ${6L * k + log2l}")
 
   /** Words in the filter. */
   val l: Int = 1 << log2l
@@ -152,8 +152,12 @@ object BlockedBloom {
     else { val (hi, lo) = SipHash.hash128Long(cfg.k0, cfg.k1, x); containsHash128(words, cfg, hi, lo) }
 
   def insertString(words: Array[Long], cfg: BloomConfig, s: String): Boolean =
-    if (cfg.hash64Enough) insertHash64(words, cfg, SipHash.hashString(cfg.k0, cfg.k1, s))
-    else { val (hi, lo) = SipHash.hash128String(cfg.k0, cfg.k1, s); insertHash128(words, cfg, hi, lo) }
+    insertUtf8(words, cfg, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** [[insertString]] over the string's UTF-8 bytes. */
+  def insertUtf8(words: Array[Long], cfg: BloomConfig, utf8: Array[Byte]): Boolean =
+    if (cfg.hash64Enough) insertHash64(words, cfg, SipHash.hash64(cfg.k0, cfg.k1, utf8))
+    else { val (hi, lo) = SipHash.hash128(cfg.k0, cfg.k1, utf8); insertHash128(words, cfg, hi, lo) }
 
   def containsString(words: Array[Long], cfg: BloomConfig, s: String): Boolean =
     if (cfg.hash64Enough) containsHash64(words, cfg, SipHash.hashString(cfg.k0, cfg.k1, s))
@@ -318,6 +322,8 @@ object BlockedBloom {
       throw BloomConfig.invalid(s"metadata log2l $storedLog2l disagrees with data size ($log2l)")
     if (storedKeyHash != keyHash(k0, k1))
       throw BloomConfig.invalid("serialized filter was built with a different SipKey")
+    if (k < 1L || k > 128L)
+      throw BloomConfig.invalid(s"serialized k $k out of range")
     val cfg = BloomConfig(k0, k1, k.toInt, log2l)
     (cfg, words, typeTag)
   }

@@ -135,17 +135,21 @@ object CountMin {
     * header ranges (a corrupted depth/log2Width must fail loudly, not
     * overflow); callers merging sketches must require equal keyHash. */
   def fromBytesFull(bytes: Array[Byte]): (Int, Int, Array[Long], Long, Long) = {
+    require(bytes.length >= 40, s"CMS serialized size ${bytes.length} < 40-byte header")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     val version = bb.getLong()
     require(version == SerialVersion, s"CMS serialized version $version")
     val typeTag = bb.getLong()
     val keyHash = bb.getLong()
-    val depth = bb.getLong().toInt
-    val log2Width = bb.getLong().toInt
-    require(depth >= 1 && depth <= 12, s"CMS serialized depth $depth out of [1,12]")
-    require(log2Width >= 2 && log2Width <= 26, s"CMS serialized log2Width $log2Width out of [2,26]")
+    // range-check BEFORE narrowing (2^32 + 5 must not read as depth 5)
+    val depth64 = bb.getLong()
+    val log2Width64 = bb.getLong()
+    require(depth64 >= 1 && depth64 <= 12, s"CMS serialized depth $depth64 out of [1,12]")
+    require(log2Width64 >= 2 && log2Width64 <= 26, s"CMS serialized log2Width $log2Width64 out of [2,26]")
+    val depth = depth64.toInt
+    val log2Width = log2Width64.toInt
     val n = depth * (1 << log2Width) + 1
-    require(bytes.length == 40 + 8 * n, s"CMS serialized size ${bytes.length}")
+    require(bytes.length == 40L + 8L * n, s"CMS serialized size ${bytes.length}")
     val buf = new Array[Long](n)
     var i = 0
     while (i < n) { buf(i) = bb.getLong(); i += 1 }

@@ -148,7 +148,7 @@ object FrequentItems {
     val sizeL = bb.getLong()
     require(sizeL >= 0 && sizeL <= capacity, s"FrequentItems size $sizeL for capacity $capacity")
     val size = sizeL.toInt
-    require(bytes.length == 40 + 16 * size, s"FrequentItems serialized size ${bytes.length}")
+    require(bytes.length == 40L + 16L * size, s"FrequentItems serialized size ${bytes.length}")
     var i = 0
     while (i < size) { s.counts.put(bb.getLong(), bb.getLong()); i += 1 }
     s

@@ -127,7 +127,9 @@ object Hll {
     val keyHash = bb.getLong()
     version match {
       case SerialVersion =>
-        val p = bb.getLong().toInt
+        val p64 = bb.getLong()
+        require(p64 >= 4L && p64 <= 18L, s"HLL serialized precision $p64 out of [4,18]")
+        val p = p64.toInt
         require(bytes.length == 32 + numRegisters(p),
           s"HLL serialized size ${bytes.length} for p=$p")
         val regs = new Array[Byte](1 << p)

@@ -140,19 +140,37 @@ final class KllSketch(val k: Int) extends Serializable {
 object Kll {
   final val SerialVersion = 1L
 
+  /** Validated decode: every header field is range-checked against the
+    * byte length before anything is allocated or read. */
   def fromBytes(bytes: Array[Byte]): KllSketch = {
+    require(bytes.length >= 40, s"KLL serialized size ${bytes.length} < 40-byte header")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     val version = bb.getLong()
     require(version == SerialVersion, s"KLL serialized version $version")
-    val k = bb.getLong().toInt
+    val k64 = bb.getLong()
+    require(k64 >= 8L && k64 <= 65535L, s"KLL serialized k=$k64 out of [8, 65535]")
     val count = bb.getLong()
-    val nLevels = bb.getLong().toInt
+    val nLevels64 = bb.getLong()
     val rng = bb.getLong()
+    // each level costs at least its 4-byte size field
+    require(nLevels64 >= 1L && nLevels64 <= (bytes.length - 40L) / 4,
+      s"KLL serialized level count $nLevels64 for ${bytes.length} bytes")
+    val nLevels = nLevels64.toInt
     val sizes = Array.fill(nLevels)(bb.getInt())
-    val s = new KllSketch(k)
+    var items = 0L
+    var h = 0
+    while (h < nLevels) {
+      require(sizes(h) >= 0, s"KLL serialized level $h size ${sizes(h)}")
+      items += sizes(h)
+      h += 1
+    }
+    require(bytes.length == 40L + 4L * nLevels + 8L * items,
+      s"KLL serialized size ${bytes.length} for $nLevels levels of $items items")
+    require(count >= 0L, s"KLL serialized count $count")
+    val s = new KllSketch(k64.toInt)
     s.rng = rng
     s.levels = ArrayBuffer.fill(nLevels)(ArrayBuffer.empty[Double])
-    var h = 0
+    h = 0
     while (h < nLevels) {
       var i = 0
       while (i < sizes(h)) { s.levels(h) += bb.getDouble(); i += 1 }

@@ -167,7 +167,9 @@ final class TDigest(val compression: Double) extends Serializable {
 object TDigest {
   final val SerialVersion = 1L
 
+  /** Validated decode: the centroid count must match the byte length. */
   def fromBytes(bytes: Array[Byte]): TDigest = {
+    require(bytes.length >= 48, s"t-digest serialized size ${bytes.length} < 48-byte header")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     val version = bb.getLong()
     require(version == SerialVersion, s"t-digest serialized version $version")
@@ -175,7 +177,10 @@ object TDigest {
     val total = bb.getDouble()
     val minV = bb.getDouble()
     val maxV = bb.getDouble()
-    val nC = bb.getLong().toInt
+    val nC64 = bb.getLong()
+    require(nC64 >= 0L && bytes.length == 48L + 16L * nC64,
+      s"t-digest serialized size ${bytes.length} for $nC64 centroids")
+    val nC = nC64.toInt
     val d = new TDigest(compression)
     d.minV = minV
     d.maxV = maxV

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
 
 import graft.core._
+import graft.operators.SketchKinds.{Bloom, Cms, HllKind}
 import graft.plans.{FusedTokensNative, NativeAggs}
 
 /** Production-shape sketch-build job (north rule: "resumable from checkpoint
@@ -26,7 +27,7 @@ import graft.plans.{FusedTokensNative, NativeAggs}
   * place: the increment is ONE `FusedTokensNative` (bloom + HLL + CMS;
   * its partial buffers hold token ids until the dense sketches would be
   * smaller, so small (bucket, source) groups shuffle ids, not sketches),
-  * finalize is one `SketchMergeNative` per sketch column plus plain
+  * finalize is one merge-mode `SketchAgg` per sketch column plus plain
   * aggregates, so its plan has a single exchange. The
   * job's parameters travel in the expressions (`cfg`), never through the
   * session-global `NativeAggs.register`.
@@ -139,14 +140,13 @@ object SketchJob {
     * per-source sketches (plus rolled-up lineage metrics). */
   def finalizeSketches(spark: SparkSession, ckptDir: String,
       cfg: JobConfig = DefaultConfig): DataFrame = {
-    def sketch(name: String) = GraftColumnBridge.expression(col(name))
     committedPartials(spark, ckptDir)
       .getOrElse(throw new IllegalStateException(s"no committed runs under $ckptDir"))
       .groupBy(col("source"))
       .agg(
-        NativeAggs.column(NativeAggs.bloomMerge(sketch("bloom"), cfg.k0, cfg.k1)).as("bloom"),
-        NativeAggs.column(NativeAggs.hllMerge(sketch("hll"))).as("hll"),
-        NativeAggs.column(NativeAggs.cmsMerge(sketch("cms"))).as("cms"),
+        NativeAggs.column(Bloom(cfg.bloomCfg), col("bloom")).as("bloom"),
+        NativeAggs.column(HllKind(cfg.k0, cfg.k1, cfg.hllP), col("hll")).as("hll"),
+        NativeAggs.column(Cms(cfg.cmsCfg), col("cms")).as("cms"),
         sum(col("n_rows")).as("n_rows"),
         sum(col("n_tokens")).as("n_tokens"),
         // == countDistinct for the non-null int bucket, but a plain
@@ -165,73 +165,4 @@ object SketchJob {
         min(col("committed_at_ms")).as("committed_at_ms"),
         first(col("build_host")).as("build_host"))
       .orderBy(col("bucket"))
-}
-
-/** Decoded HLL merge buffer (`regs == null` marks empty) — inputs are
-  * parsed and key-validated once each; the accumulated registers stay
-  * decoded and are serialized only in `finish` (no per-reduce
-  * fromBytes+toBytes churn, VERDICT round 1 "What's wrong" #3). */
-final case class HllMergeBuf(regs: Array[Byte], p: Int, typeTag: Long, keyHash: Long)
-
-/** Merge aggregator over already-serialized HLL sketch bytes
-  * (second-level aggregation; the Bloom analogue lives in SketchAggs). */
-final class HllBytesMergeAgg extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], HllMergeBuf, Array[Byte]] {
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-  import org.apache.spark.sql.{Encoder, Encoders}
-  private def decode(x: Array[Byte]): HllMergeBuf = {
-    val (p, regs, tag, kh) = Hll.fromBytesFull(x)
-    HllMergeBuf(regs, p, tag, kh)
-  }
-  private def mergeBufs(a: HllMergeBuf, b: HllMergeBuf): HllMergeBuf = {
-    if (a.regs == null) return b
-    if (b.regs == null) return a
-    require(a.p == b.p && a.typeTag == b.typeTag,
-      s"HLL merge: precision/type mismatch (${a.p}/${a.typeTag} vs ${b.p}/${b.typeTag})")
-    require(a.keyHash == b.keyHash, "HLL merge: sketches built under different SipHash keys")
-    Hll.merge(a.regs, b.regs)
-    a
-  }
-  def zero: HllMergeBuf = HllMergeBuf(null, 0, 0L, 0L)
-  def reduce(b: HllMergeBuf, x: Array[Byte]): HllMergeBuf =
-    if (x == null || x.isEmpty) b else mergeBufs(b, decode(x))
-  def merge(a: HllMergeBuf, b: HllMergeBuf): HllMergeBuf = mergeBufs(a, b)
-  def finish(b: HllMergeBuf): Array[Byte] =
-    if (b.regs == null) Array.emptyByteArray
-    // stamp the INPUT sketches' key hash (re-stamping under config defaults
-    // would silently relabel the key, defeating the cross-key rejection)
-    else Hll.toBytes(b.regs, b.p, b.typeTag, b.keyHash)
-  def bufferEncoder: Encoder[HllMergeBuf] = ExpressionEncoder[HllMergeBuf]()
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-/** Decoded CMS merge buffer (`counters == null` marks empty). */
-final case class CmsMergeBuf(counters: Array[Long], depth: Int, log2Width: Int, typeTag: Long, keyHash: Long)
-
-final class CmsBytesMergeAgg()
-    extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], CmsMergeBuf, Array[Byte]] {
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-  import org.apache.spark.sql.{Encoder, Encoders}
-  private def decode(x: Array[Byte]): CmsMergeBuf = {
-    val (d, w, c, tag, kh) = CountMin.fromBytesFull(x)
-    CmsMergeBuf(c, d, w, tag, kh)
-  }
-  private def mergeBufs(a: CmsMergeBuf, b: CmsMergeBuf): CmsMergeBuf = {
-    if (a.counters == null) return b
-    if (b.counters == null) return a
-    require(a.depth == b.depth && a.log2Width == b.log2Width && a.typeTag == b.typeTag,
-      "CMS merge: shape/type mismatch")
-    require(a.keyHash == b.keyHash, "CMS merge: sketches built under different SipHash keys")
-    CountMin.merge(a.counters, b.counters)
-    a
-  }
-  def zero: CmsMergeBuf = CmsMergeBuf(null, 0, 0, 0L, 0L)
-  def reduce(b: CmsMergeBuf, x: Array[Byte]): CmsMergeBuf =
-    if (x == null || x.isEmpty) b else mergeBufs(b, decode(x))
-  def merge(a: CmsMergeBuf, b: CmsMergeBuf): CmsMergeBuf = mergeBufs(a, b)
-  def finish(b: CmsMergeBuf): Array[Byte] =
-    if (b.counters == null) Array.emptyByteArray
-    // stamp the INPUT sketches' key hash (see HllBytesMergeAgg.finish)
-    else CountMin.toBytesWithKeyHash(b.counters, b.depth, b.log2Width, b.typeTag, b.keyHash)
-  def bufferEncoder: Encoder[CmsMergeBuf] = ExpressionEncoder[CmsMergeBuf]()
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }

@@ -49,49 +49,9 @@ object Bpe {
     ("an", "d"), ("o", "n"), ("e", "n"), ("o", "r"), ("r", "e"),
     ("a", "t"), ("s", "t"))
 
-  /** Greedy BPE encode of one pre-token: start from single characters,
-    * repeatedly merge ALL occurrences (leftmost-first, non-overlapping) of
-    * the present pair with the lowest rank. O(len^2 * distinct-pairs) worst
-    * case on pathological words; linear-ish on natural text. */
-  private[graft] def encodeWord(word: String,
-      ranks: java.util.HashMap[String, Integer]): Array[String] = {
-    if (word.isEmpty) return Array.empty[String]
-    var syms = new Array[String](word.length)
-    var i = 0
-    while (i < word.length) { syms(i) = String.valueOf(word.charAt(i)); i += 1 }
-    var n = syms.length
-    while (n > 1) {
-      // lowest-rank pair present
-      var best = Int.MaxValue
-      var bi = 0
-      while (bi < n - 1) {
-        val r = ranks.get(syms(bi) + " " + syms(bi + 1))
-        if (r != null && r.intValue() < best) best = r.intValue()
-        bi += 1
-      }
-      if (best == Int.MaxValue) return java.util.Arrays.copyOf(syms, n)
-      // merge all occurrences of the best pair, leftmost-first
-      val out = new Array[String](n)
-      var o = 0
-      var j = 0
-      while (j < n) {
-        if (j < n - 1 && {
-          val r = ranks.get(syms(j) + " " + syms(j + 1)); r != null && r.intValue() == best
-        }) {
-          out(o) = syms(j) + syms(j + 1); j += 2
-        } else {
-          out(o) = syms(j); j += 1
-        }
-        o += 1
-      }
-      syms = out
-      n = o
-    }
-    java.util.Arrays.copyOf(syms, n)
-  }
-
   /** Compiled merge table — the OPTIMIZATION r07 (guide §1.2 per-task
-    * work) twin of the string kernel above, used by [[withBpeTokens]]:
+    * work) twin of the greedy string kernel (kept as the test reference
+    * `ReferenceTwins.encodeWord`), used by [[withBpeTokens]]:
     * symbols become canonical int ids (a single UTF-16 unit -> its char
     * code, 0..65535; a merge product -> 65536 + the FIRST rank producing
     * that string, so duplicate product strings share one id exactly as
@@ -101,7 +61,7 @@ object Bpe {
     * concat + UTF-16 hash + boxed HashMap probe — the string kernel
     * allocated one pair-key String per adjacency per merge round.
     * Duplicate (left, right) pairs keep `HashMap.put` semantics (last
-    * rank wins). Greedy semantics are value-identical to [[encodeWord]]
+    * rank wins). Greedy semantics are value-identical to the string kernel
     * for any table whose symbols contain no space (the string kernel's
     * `a + " " + b` key is ambiguous there; id keys are not) — asserted by
     * PipelineSpec across the fixture, random words, and random valid
@@ -163,7 +123,7 @@ object Bpe {
       else if (id < 128) asciiSyms(id)
       else String.valueOf(id.toChar)
     /** Greedy-encode one pre-token, appending the final symbol strings to
-      * `out`. Identical merge rule to [[encodeWord]]: repeatedly merge all
+      * `out`. Identical merge rule to the string kernel: repeatedly merge all
       * occurrences (leftmost-first, non-overlapping) of the lowest-ranked
       * pair present. The merge pass rewrites the id array IN PLACE (writes
       * land strictly below the read cursor). */

@@ -1,12 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.core.BloomConfig
-import graft.operators.SketchAggs.BloomStringAgg
-import graft.plans.GraftFunctions
+import graft.plans.{GraftFunctions, NativeAggs}
 
 /** Train/eval n-gram DECONTAMINATION — the canonical LLM-training-pipeline
   * use of a Bloom filter (the reference's membership sketch in its natural
@@ -124,7 +122,7 @@ object Decontamination {
     val evalGrams = grams.where(col("source") === evalSource)
       .select(col("gram")).distinct().persist()
     val sketch = evalGrams
-      .agg(udaf(new BloomStringAgg(cfg), ExpressionEncoder[String]())(col("gram")))
+      .agg(NativeAggs.column(SketchKinds.Bloom(cfg), col("gram")))
       .head().getAs[Array[Byte]](0)
     val train = grams.where(col("source") =!= evalSource)
     val prefiltered =

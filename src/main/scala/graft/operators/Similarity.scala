@@ -108,7 +108,7 @@ object Similarity {
     // candidates carry ids only (distinct on two longs, not on embedding
     // arrays); embeddings join back afterwards — at scale this keeps the
     // shuffle payload minimal. Banding is the native codegen expression
-    // graft_srp_bands (bit-identical to the SrpChunker UDF, tested) — the
+    // graft_srp_bands (bit-identical to the SrpChunker test twin) — the
     // last per-row UDF in a scale path, removed per round-3 VERDICT #8.
     val banded = embeddings
       .select(col(idCol).as("id"),
@@ -127,22 +127,6 @@ object Similarity {
       .withColumn("cos", cosineCols(col("emb_a"), col("emb_b")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
-  }
-
-  /** SRP banding function with per-executor cached hyperplanes (the matrix
-    * is deterministic from (plane, dim), so lazily building it per task is
-    * safe; rebuilding it per ROW would cost b*dim SipHash calls each).
-    * Production banding is the native `graft_srp_bands` expression
-    * ([[graft.plans.SrpBandsExpr]]); this UDF remains as the bit-identity
-    * test twin (its measured comparison is recorded in BASELINE.md). */
-  private[graft] class SrpChunker(b: Int, chunks: Int, bitsPerChunk: Int)
-      extends (Array[Float] => Array[Int]) with Serializable {
-    @transient private var planes: Array[Array[Double]] = _
-    override def apply(emb: Array[Float]): Array[Int] = {
-      if (planes == null || planes(0).length < emb.length) planes = planeMatrix(b, emb.length)
-      val bits = srpBitsWith(emb, planes)
-      Array.tabulate(chunks)(c => ((bits >>> (c * bitsPerChunk)) & ((1L << bitsPerChunk) - 1)).toInt)
-    }
   }
 
   // ------------------------------------------------------------- IVF-Flat

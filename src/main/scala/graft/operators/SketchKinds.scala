@@ -1,0 +1,503 @@
+package graft.operators
+
+import java.nio.{ByteBuffer, ByteOrder}
+
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core._
+import graft.core.BlockedBloom.TypeTag
+
+/** What an aggregate reads from its first input column, fixed by that
+  * column's type at analysis time. `Sketches` (a `binary` column of
+  * serialized sketches) is merge mode; every other input is a build. */
+sealed abstract class SketchInput(val sqlType: String, val typeTag: Long)
+
+object SketchInput {
+  /** `array<int>`: every non-null element is inserted (token ids). */
+  case object Tokens extends SketchInput("array<int>", TypeTag.Int)
+  case object Ints extends SketchInput("int", TypeTag.Int)
+  /** Any integral column, widened to `bigint`. */
+  case object Longs extends SketchInput("bigint", TypeTag.Long)
+  case object Strings extends SketchInput("string", TypeTag.String)
+  /** Any fixed-width numeric column, widened to `double`. */
+  case object Doubles extends SketchInput("double", 0L)
+  /** Serialized sketches of the same kind: merge mode. */
+  case object Sketches extends SketchInput("binary", 0L)
+
+  def isIntegral(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** A boxed integral Catalyst value, widened to `Long`. */
+  def longOf(v: Any): Long = v.asInstanceOf[Number].longValue()
+}
+
+/** One mergeable sketch: the monoid and its wire format — insert, union,
+  * serialize and validated deserialize, the whole API of the reference's
+  * one structure (reference `Internal.hs:443-454,485-550`). The generic
+  * native aggregate `graft.plans.SketchAgg` runs every kind, in build and
+  * merge mode, and ships its buffers through the shuffle and the streaming
+  * state store as `toBytes` output.
+  *
+  * A kind is parameterized by its sketch config and SipHash key. Buffers
+  * are mutable: `update` and `merge` may mutate and return their left
+  * argument (the aggregate owns it); `merge` never mutates its right one
+  * unless that becomes the result.
+  */
+abstract class SketchKind[B <: AnyRef] extends Serializable {
+
+  /** Default display name of an aggregate over this kind. */
+  def name: String
+
+  /** The build input this kind reads from a column of type `dt`. */
+  protected def buildInput(dt: DataType): Option[SketchInput]
+
+  /** Whether serialized sketches of this kind merge (a `binary` input). */
+  def mergeable: Boolean = true
+
+  /** Whether a build accepts / requires a second integral weight column. */
+  def acceptsWeight: Boolean = false
+  def requiresWeight: Boolean = false
+
+  final def inputOf(dt: DataType): Option[SketchInput] =
+    if (dt == BinaryType) (if (mergeable) Some(SketchInput.Sketches) else None)
+    else buildInput(dt)
+
+  /** The empty sketch a build over `in` starts from. */
+  def empty(in: SketchInput): B
+
+  /** Adds one non-null input row `v` (a Catalyst value: `ArrayData`,
+    * boxed number or `UTF8String`) of weight `w` (1 without a weight
+    * column). One call per row: array elements are looped here. */
+  def update(b: B, in: SketchInput, v: Any, w: Long): B
+
+  def merge(a: B, b: B): B
+
+  /** The published serialized format (golden-pinned). */
+  def toBytes(b: B): Array[Byte]
+
+  /** Validated decode: throws `IllegalArgumentException` on any payload
+    * that is not a sketch this kind may merge (wrong key, shape, type or
+    * version, or corrupt bytes). */
+  def fromBytes(x: Array[Byte]): B
+
+  /** The aggregate's result type and value. */
+  def dataType: DataType = BinaryType
+  def eval(b: B): Any = toBytes(b)
+}
+
+object SketchKinds {
+  import SketchInput._
+
+  private def keyHash(k0: Long, k1: Long): Long = SipHash.hashLong(k0, k1, k0 ^ k1)
+
+  private def utf8(v: Any): Array[Byte] = v.asInstanceOf[UTF8String].getBytes
+
+  // ------------------------------------------------------------- Bloom
+
+  /** Decoded blocked Bloom filter: words under `cfg`, element `typeTag`. */
+  final case class BloomBuf(words: Array[Long], cfg: BloomConfig, typeTag: Long)
+
+  /** Blocked Bloom filter over token arrays, ints, longs or strings. Merges
+    * accept mixed sizes, folding larger filters down to the smallest (the
+    * distributed analogue of the reference's different-size `unionInto`,
+    * `Internal.hs:509-550`); key, k, element type and hash width must
+    * match. */
+  final case class Bloom(cfg: BloomConfig) extends SketchKind[BloomBuf] {
+    def name: String = "graft_bloom"
+    protected def buildInput(dt: DataType): Option[SketchInput] = dt match {
+      case ArrayType(IntegerType, _) => Some(Tokens)
+      case ByteType | ShortType | IntegerType => Some(Ints)
+      case LongType => Some(Longs)
+      case StringType => Some(Strings)
+      case _ => None
+    }
+    def empty(in: SketchInput): BloomBuf = BloomBuf(new Array[Long](cfg.l), cfg, in.typeTag)
+    def update(b: BloomBuf, in: SketchInput, v: Any, w: Long): BloomBuf = {
+      in match {
+        case Tokens =>
+          val a = v.asInstanceOf[ArrayData]
+          var i = 0
+          while (i < a.numElements()) {
+            if (!a.isNullAt(i)) BlockedBloom.insertInt(b.words, cfg, a.getInt(i))
+            i += 1
+          }
+        case Ints => BlockedBloom.insertInt(b.words, cfg, v.asInstanceOf[Number].intValue())
+        case Longs => BlockedBloom.insertLong(b.words, cfg, longOf(v))
+        case _ => BlockedBloom.insertUtf8(b.words, cfg, utf8(v))
+      }
+      b
+    }
+    def merge(a: BloomBuf, b: BloomBuf): BloomBuf = {
+      require(a.cfg.k == b.cfg.k, s"bloom merge: k mismatch ${a.cfg.k} vs ${b.cfg.k}")
+      require(a.typeTag == b.typeTag, s"bloom merge: element type mismatch ${a.typeTag} vs ${b.typeTag}")
+      require(a.cfg.hash64Enough == b.cfg.hash64Enough,
+        "bloom merge: hash-width mismatch (different-size filters must share the hash path)")
+      if (a.cfg.log2l <= b.cfg.log2l) {
+        val src = if (a.cfg.log2l == b.cfg.log2l) b.words else BlockedBloom.fold(b.words, a.cfg.log2l)
+        BlockedBloom.unionInPlace(a.words, src)
+        a
+      } else {
+        val folded = BlockedBloom.fold(a.words, b.cfg.log2l)
+        BlockedBloom.unionInPlace(folded, b.words)
+        BloomBuf(folded, b.cfg, a.typeTag)
+      }
+    }
+    def toBytes(b: BloomBuf): Array[Byte] = BlockedBloom.toBytes(b.words, b.cfg, b.typeTag)
+    def fromBytes(x: Array[Byte]): BloomBuf = {
+      val (c, words, tag) = BlockedBloom.fromBytes(cfg.k0, cfg.k1, x)
+      BloomBuf(words, c, tag)
+    }
+  }
+
+  /** Bloom words plus the count of inserts that set at least one new bit. */
+  final class NewCountBuf(val words: Array[Long], var newCount: Long)
+
+  /** Bloom build over token arrays that also surfaces the reference
+    * insert's "probably new" Bool (`Internal.hs:449-454`) as a count:
+    * within one task it is exactly the number of inserts that set at least
+    * one new bit (<= distinct, equal up to in-filter collisions); across
+    * merged partials the counts sum, an UPPER bound on that quantity (the
+    * same element can be first-seen in two partitions). Use HLL when a
+    * tight distributed distinct estimate is the goal. Result:
+    * `struct<bloom: binary, approx_new: bigint>`; the wire form is the
+    * filter bytes followed by the 8-byte count. Builds only. */
+  final case class BloomNewCount(cfg: BloomConfig) extends SketchKind[NewCountBuf] {
+    def name: String = "graft_bloom_tokens_newcount"
+    protected def buildInput(dt: DataType): Option[SketchInput] = dt match {
+      case ArrayType(IntegerType, _) => Some(Tokens)
+      case _ => None
+    }
+    override def mergeable: Boolean = false
+    def empty(in: SketchInput): NewCountBuf = new NewCountBuf(new Array[Long](cfg.l), 0L)
+    def update(b: NewCountBuf, in: SketchInput, v: Any, w: Long): NewCountBuf = {
+      val a = v.asInstanceOf[ArrayData]
+      var i = 0
+      while (i < a.numElements()) {
+        if (!a.isNullAt(i) && BlockedBloom.insertInt(b.words, cfg, a.getInt(i))) b.newCount += 1L
+        i += 1
+      }
+      b
+    }
+    def merge(a: NewCountBuf, b: NewCountBuf): NewCountBuf = {
+      BlockedBloom.unionInPlace(a.words, b.words)
+      a.newCount += b.newCount
+      a
+    }
+    private def bloomBytes(b: NewCountBuf) = BlockedBloom.toBytes(b.words, cfg, TypeTag.Int)
+    def toBytes(b: NewCountBuf): Array[Byte] = {
+      val f = bloomBytes(b)
+      ByteBuffer.allocate(f.length + 8).put(f).putLong(b.newCount).array()
+    }
+    def fromBytes(x: Array[Byte]): NewCountBuf = {
+      require(x.length == cfg.sizeBytes + 64 + 8, s"bloom new-count buffer of ${x.length} bytes")
+      val (c, words, tag) = BlockedBloom.fromBytes(cfg.k0, cfg.k1, java.util.Arrays.copyOf(x, x.length - 8))
+      require(c == cfg && tag == TypeTag.Int, "bloom new-count buffer built under another config")
+      val n = ByteBuffer.wrap(x, x.length - 8, 8).getLong()
+      require(n >= 0L, s"bloom new-count buffer count $n")
+      new NewCountBuf(words, n)
+    }
+    override def dataType: DataType = StructType(Seq(
+      StructField("bloom", BinaryType, nullable = true),
+      StructField("approx_new", LongType, nullable = false)))
+    override def eval(b: NewCountBuf): Any =
+      org.apache.spark.sql.catalyst.InternalRow(bloomBytes(b), b.newCount)
+  }
+
+  // --------------------------------------------------------------- HLL
+
+  /** Decoded HLL registers with the header they serialize under. */
+  final case class HllBuf(regs: Array[Byte], p: Int, typeTag: Long, keyHash: Long)
+
+  /** HyperLogLog distinct count over token arrays, integral columns or
+    * strings. Merges stamp the INPUT sketches' key hash (re-stamping under
+    * this kind's key would silently relabel it, defeating the cross-key
+    * rejection) and require equal precision, type and key. */
+  final case class HllKind(k0: Long, k1: Long, p: Int) extends SketchKind[HllBuf] {
+    def name: String = "graft_hll"
+    protected def buildInput(dt: DataType): Option[SketchInput] = dt match {
+      case ArrayType(IntegerType, _) => Some(Tokens)
+      case t if isIntegral(t) => Some(Longs)
+      case StringType => Some(Strings)
+      case _ => None
+    }
+    def empty(in: SketchInput): HllBuf = HllBuf(Hll.empty(p), p, in.typeTag, keyHash(k0, k1))
+    def update(b: HllBuf, in: SketchInput, v: Any, w: Long): HllBuf = {
+      in match {
+        case Tokens =>
+          val a = v.asInstanceOf[ArrayData]
+          var i = 0
+          while (i < a.numElements()) {
+            if (!a.isNullAt(i)) Hll.addHash(b.regs, p, SipHash.hashInt(k0, k1, a.getInt(i)))
+            i += 1
+          }
+        case Longs => Hll.addHash(b.regs, p, SipHash.hashLong(k0, k1, longOf(v)))
+        case _ => Hll.addHash(b.regs, p, SipHash.hash64(k0, k1, utf8(v)))
+      }
+      b
+    }
+    def merge(a: HllBuf, b: HllBuf): HllBuf = {
+      require(a.p == b.p && a.typeTag == b.typeTag,
+        s"HLL merge: precision/type mismatch (${a.p}/${a.typeTag} vs ${b.p}/${b.typeTag})")
+      require(a.keyHash == b.keyHash, "HLL merge: sketches built under different SipHash keys")
+      Hll.merge(a.regs, b.regs)
+      a
+    }
+    def toBytes(b: HllBuf): Array[Byte] = Hll.toBytes(b.regs, b.p, b.typeTag, b.keyHash)
+    def fromBytes(x: Array[Byte]): HllBuf = {
+      val (pp, regs, tag, kh) = Hll.fromBytesFull(x)
+      HllBuf(regs, pp, tag, kh)
+    }
+  }
+
+  // --------------------------------------------------------- count-min
+
+  /** Decoded count-min counters with the header they serialize under. */
+  final case class CmsBuf(counters: Array[Long], depth: Int, log2Width: Int, typeTag: Long, keyHash: Long)
+
+  /** Count-min over token arrays: one increment per token occurrence.
+    * Merges stamp the input key hash and require equal shape, type and
+    * key. */
+  final case class Cms(cfg: CmsConfig) extends SketchKind[CmsBuf] {
+    def name: String = "graft_cms"
+    protected def buildInput(dt: DataType): Option[SketchInput] = dt match {
+      case ArrayType(IntegerType, _) => Some(Tokens)
+      case _ => None
+    }
+    def empty(in: SketchInput): CmsBuf =
+      CmsBuf(CountMin.empty(cfg), cfg.depth, cfg.log2Width, in.typeTag, keyHash(cfg.k0, cfg.k1))
+    def update(b: CmsBuf, in: SketchInput, v: Any, w: Long): CmsBuf = {
+      val a = v.asInstanceOf[ArrayData]
+      val scratch = new Array[Long](2) // one allocation per row, not per token
+      var i = 0
+      while (i < a.numElements()) {
+        if (!a.isNullAt(i)) {
+          SipHash.hash128IntInto(cfg.k0, cfg.k1, a.getInt(i), scratch)
+          CountMin.addHash(b.counters, cfg, scratch(1), scratch(0) | 1L)
+        }
+        i += 1
+      }
+      b
+    }
+    def merge(a: CmsBuf, b: CmsBuf): CmsBuf = {
+      require(a.depth == b.depth && a.log2Width == b.log2Width && a.typeTag == b.typeTag,
+        "CMS merge: shape/type mismatch")
+      require(a.keyHash == b.keyHash, "CMS merge: sketches built under different SipHash keys")
+      CountMin.merge(a.counters, b.counters)
+      a
+    }
+    def toBytes(b: CmsBuf): Array[Byte] =
+      CountMin.toBytesWithKeyHash(b.counters, b.depth, b.log2Width, b.typeTag, b.keyHash)
+    def fromBytes(x: Array[Byte]): CmsBuf = {
+      val (d, lw, c, tag, kh) = CountMin.fromBytesFull(x)
+      CmsBuf(c, d, lw, tag, kh)
+    }
+  }
+
+  // --------------------------------------------------------------- KMV
+
+  /** KMV hashes (capacity = array length) and the valid prefix length. */
+  final class KmvBuf(var hashes: Array[Long], var size: Int, val typeTag: Long)
+
+  /** KMV distinct sketch (cardinality, intersection, Jaccard; see
+    * [[graft.core.Kmv]]) over token arrays, integral columns or strings.
+    * Merges fold mixed capacities down to the smallest and require this
+    * kind's key and equal element types. */
+  final case class KmvKind(k0: Long, k1: Long, k: Int) extends SketchKind[KmvBuf] {
+    def name: String = "graft_kmv"
+    protected def buildInput(dt: DataType): Option[SketchInput] = dt match {
+      case ArrayType(IntegerType, _) => Some(Tokens)
+      case t if isIntegral(t) => Some(Longs)
+      case StringType => Some(Strings)
+      case _ => None
+    }
+    def empty(in: SketchInput): KmvBuf = new KmvBuf(Kmv.emptyHashes(k), 0, in.typeTag)
+    def update(b: KmvBuf, in: SketchInput, v: Any, w: Long): KmvBuf = {
+      in match {
+        case Tokens =>
+          val a = v.asInstanceOf[ArrayData]
+          var i = 0
+          while (i < a.numElements()) {
+            if (!a.isNullAt(i)) b.size = Kmv.add(b.hashes, b.size, SipHash.hashInt(k0, k1, a.getInt(i)))
+            i += 1
+          }
+        case Longs => b.size = Kmv.add(b.hashes, b.size, SipHash.hashLong(k0, k1, longOf(v)))
+        case _ => b.size = Kmv.add(b.hashes, b.size, SipHash.hash64(k0, k1, utf8(v)))
+      }
+      b
+    }
+    def merge(a: KmvBuf, b: KmvBuf): KmvBuf = {
+      require(a.typeTag == b.typeTag, s"KMV merge: element type mismatch ${a.typeTag} vs ${b.typeTag}")
+      val (h, s) = Kmv.merge(a.hashes, a.size, b.hashes, b.size)
+      a.hashes = h
+      a.size = s
+      a
+    }
+    def toBytes(b: KmvBuf): Array[Byte] = Kmv.toBytes(b.hashes, b.size, b.typeTag, keyHash(k0, k1))
+    def fromBytes(x: Array[Byte]): KmvBuf = {
+      val (h, s, tag, kh) = Kmv.fromBytes(x)
+      require(kh == keyHash(k0, k1), "KMV merge: sketch was built with a different SipHash key")
+      new KmvBuf(h, s, tag)
+    }
+  }
+
+  // ----------------------------------------------------------- quantiles
+
+  private def doubleInput(dt: DataType): Option[SketchInput] = dt match {
+    case t if isIntegral(t) => Some(Doubles)
+    case FloatType | DoubleType => Some(Doubles)
+    case _ => None
+  }
+
+  /** KLL quantile sketch over a numeric column (widened to double). Merges
+    * require equal k (enforced by [[KllSketch.merge]]); the wire form keeps
+    * the compaction-offset state, so a buffer decodes to the sketch it was. */
+  final case class KllKind(k: Int) extends SketchKind[KllSketch] {
+    def name: String = "graft_kll"
+    protected def buildInput(dt: DataType): Option[SketchInput] = doubleInput(dt)
+    def empty(in: SketchInput): KllSketch = new KllSketch(k)
+    def update(b: KllSketch, in: SketchInput, v: Any, w: Long): KllSketch = {
+      b.add(v.asInstanceOf[Number].doubleValue()); b
+    }
+    def merge(a: KllSketch, b: KllSketch): KllSketch = a.merge(b)
+    def toBytes(b: KllSketch): Array[Byte] = b.toBytes
+    def fromBytes(x: Array[Byte]): KllSketch = Kll.fromBytes(x)
+  }
+
+  /** Merging t-digest over a numeric column (widened to double). Merges
+    * require equal compression (enforced by [[TDigest.merge]]). */
+  final case class TDigestKind(compression: Double) extends SketchKind[TDigest] {
+    def name: String = "graft_tdigest"
+    protected def buildInput(dt: DataType): Option[SketchInput] = doubleInput(dt)
+    def empty(in: SketchInput): TDigest = new TDigest(compression)
+    def update(b: TDigest, in: SketchInput, v: Any, w: Long): TDigest = {
+      b.add(v.asInstanceOf[Number].doubleValue()); b
+    }
+    def merge(a: TDigest, b: TDigest): TDigest = a.merge(b)
+    def toBytes(b: TDigest): Array[Byte] = b.toBytes
+    def fromBytes(x: Array[Byte]): TDigest = TDigest.fromBytes(x)
+  }
+
+  // ---------------------------------------------- frequent items (MG/SS)
+
+  /** Misra-Gries heavy hitters over an integral key column, optionally
+    * weighted by a second integral column (token-mass ranking). Exact
+    * invariants (est <= true <= est + D; true > D => present;
+    * D <= N/capacity) hold for any partitioning and merge order, with
+    * N = total weight. Negative weights are rejected by the core; merges
+    * require equal capacity. */
+  final case class HeavyHitters(capacity: Int) extends SketchKind[FrequentItems.Summary] {
+    def name: String = "graft_heavyhitter"
+    protected def buildInput(dt: DataType): Option[SketchInput] =
+      if (isIntegral(dt)) Some(Longs) else None
+    override def acceptsWeight: Boolean = true
+    def empty(in: SketchInput): FrequentItems.Summary = new FrequentItems.Summary(capacity)
+    def update(b: FrequentItems.Summary, in: SketchInput, v: Any, w: Long): FrequentItems.Summary = {
+      b.add(longOf(v), w); b
+    }
+    def merge(a: FrequentItems.Summary, b: FrequentItems.Summary): FrequentItems.Summary =
+      a.mergeInPlace(b)
+    def toBytes(b: FrequentItems.Summary): Array[Byte] = FrequentItems.toBytes(b)
+    def fromBytes(x: Array[Byte]): FrequentItems.Summary = FrequentItems.fromBytes(x)
+  }
+
+  // ------------------------------------------------- bottom-k value sample
+
+  /** Parallel (slot key, value) arrays, capacity = array length, and the
+    * valid prefix length. */
+  final class SampleBuf[V](var hashes: Array[Long], var values: Array[V], var size: Int, val typeTag: Long)
+
+  private def requireKey(stored: Long, k0: Long, k1: Long): Unit =
+    require(stored == keyHash(k0, k1), "BottomK merge: sample was built with a different SipHash key")
+
+  /** Mergeable sample of k distinct LONG values per group (see
+    * [[graft.core.BottomK]]; deterministic for a fixed SipHash key; the
+    * shuffle carries one <= k-entry summary per partial group).
+    *
+    * Uniform (`weighted = false`, version-1 layout): the k values with the
+    * smallest hashes. ES-weighted (`weighted = true`, version-2 layout, a
+    * weight column is required): the k smallest Efraimidis–Spirakis keys
+    * -ln(u)/w; rows with weight <= 0 are skipped, and the weight must be a
+    * function of the value. The two layouts never merge with each other. */
+  final case class Sample(k0: Long, k1: Long, k: Int, weighted: Boolean)
+      extends SketchKind[SampleBuf[Long]] {
+    def name: String = if (weighted) "graft_sample_weighted" else "graft_sample_bottomk"
+    protected def buildInput(dt: DataType): Option[SketchInput] =
+      if (isIntegral(dt)) Some(Longs) else None
+    override def acceptsWeight: Boolean = weighted
+    override def requiresWeight: Boolean = weighted
+    def empty(in: SketchInput): SampleBuf[Long] = {
+      val (h, v) = BottomK.emptyBuffers(k)
+      new SampleBuf(h, v, 0, in.typeTag)
+    }
+    def update(b: SampleBuf[Long], in: SketchInput, v: Any, w: Long): SampleBuf[Long] = {
+      val x = longOf(v)
+      if (!weighted) b.size = BottomK.add(b.hashes, b.values, b.size, SipHash.hashLong(k0, k1, x), x)
+      else if (w > 0L) b.size = BottomK.addW(b.hashes, b.values, b.size,
+        BottomK.esKey(SipHash.hashLong(k0, k1, x), w.toDouble), x, BottomK.cmpLong)
+      b
+    }
+    def merge(a: SampleBuf[Long], b: SampleBuf[Long]): SampleBuf[Long] = {
+      require(a.typeTag == b.typeTag, s"BottomK merge: element type mismatch ${a.typeTag} vs ${b.typeTag}")
+      // uniform samples dedup by hash identity (the version-1 strict-ascending
+      // invariant); ES-weighted ones by (key, value) pair
+      val (h, v, s) =
+        if (weighted) BottomK.mergeW(a.hashes, a.values, a.size, b.hashes, b.values, b.size, BottomK.cmpLong)
+        else BottomK.merge(a.hashes, a.values, a.size, b.hashes, b.values, b.size)
+      new SampleBuf(h, v, s, a.typeTag)
+    }
+    def toBytes(b: SampleBuf[Long]): Array[Byte] =
+      if (weighted) BottomK.toBytesWeighted(b.hashes, b.values, b.size, b.typeTag, keyHash(k0, k1))
+      else BottomK.toBytes(b.hashes, b.values, b.size, b.typeTag, keyHash(k0, k1))
+    def fromBytes(x: Array[Byte]): SampleBuf[Long] = {
+      val (h, v, s, tag, kh) = if (weighted) BottomK.fromBytesWeighted(x) else BottomK.fromBytes(x)
+      requireKey(kh, k0, k1)
+      new SampleBuf(h, v, s, tag)
+    }
+  }
+
+  /** [[Sample]] over a STRING column (values kept as UTF-8 bytes, hashed
+    * with SipHash-2-4 like the Bloom/KMV string convention; ES-weighted
+    * ties break by unsigned byte order, Spark's UTF8_BINARY). */
+  final case class StringSample(k0: Long, k1: Long, k: Int, weighted: Boolean)
+      extends SketchKind[SampleBuf[Array[Byte]]] {
+    def name: String = if (weighted) "graft_sample_weighted_str" else "graft_sample_bottomk_str"
+    protected def buildInput(dt: DataType): Option[SketchInput] =
+      if (dt == StringType) Some(Strings) else None
+    override def acceptsWeight: Boolean = weighted
+    override def requiresWeight: Boolean = weighted
+    def empty(in: SketchInput): SampleBuf[Array[Byte]] = {
+      val (h, _) = BottomK.emptyBuffers(k)
+      new SampleBuf(h, new Array[Array[Byte]](k), 0, TypeTag.String)
+    }
+    def update(b: SampleBuf[Array[Byte]], in: SketchInput, v: Any, w: Long): SampleBuf[Array[Byte]] = {
+      if (!weighted || w > 0L) {
+        // a private copy: the sample keeps the bytes beyond this row
+        val bytes = v.asInstanceOf[UTF8String].copy().getBytes
+        val h = SipHash.hash64(k0, k1, bytes)
+        b.size =
+          if (weighted)
+            BottomK.addW(b.hashes, b.values, b.size, BottomK.esKey(h, w.toDouble), bytes, BottomK.cmpUtf8)
+          else BottomK.addG(b.hashes, b.values, b.size, h, bytes)
+      }
+      b
+    }
+    def merge(a: SampleBuf[Array[Byte]], b: SampleBuf[Array[Byte]]): SampleBuf[Array[Byte]] = {
+      val (h, v, s) =
+        if (weighted) BottomK.mergeW(a.hashes, a.values, a.size, b.hashes, b.values, b.size, BottomK.cmpUtf8)
+        else BottomK.mergeG(a.hashes, a.values, a.size, b.hashes, b.values, b.size)
+      new SampleBuf(h, v, s, TypeTag.String)
+    }
+    def toBytes(b: SampleBuf[Array[Byte]]): Array[Byte] =
+      if (weighted) BottomK.toBytesStrWeighted(b.hashes, b.values, b.size, keyHash(k0, k1))
+      else BottomK.toBytesStr(b.hashes, b.values, b.size, keyHash(k0, k1))
+    def fromBytes(x: Array[Byte]): SampleBuf[Array[Byte]] = {
+      val (h, v, s, kh) = if (weighted) BottomK.fromBytesStrWeighted(x) else BottomK.fromBytesStr(x)
+      requireKey(kh, k0, k1)
+      new SampleBuf(h, v, s, TypeTag.String)
+    }
+  }
+}

@@ -58,63 +58,15 @@ object TextPipeline {
     * Aiken's MOSS winnowing, SIGMOD'03): polynomial-hash every k-word
     * gram, slide a w-wide window over the gram-hash sequence and select
     * each window's minimum (rightmost position on ties); the document's
-    * fingerprint set is the distinct selected hashes. Guarantee: any
-    * shared run of >= w + k - 1 words between two documents produces at
-    * least one shared fingerprint, at expected density 2/(w+1) — so this
-    * detects PARTIAL overlap (a copied paragraph inside an otherwise
-    * different document), which whole-document MinHash Jaccard cannot.
+    * fingerprint set is the distinct selected hashes. Any shared run of
+    * >= w + k - 1 words between two documents produces at least one shared
+    * fingerprint, so this detects PARTIAL overlap, which whole-document
+    * MinHash Jaccard cannot. Adds `fps: array<bigint>` (empty for docs
+    * with < k words; < w grams winnow as a single window).
     *
-    * Adds `fps: array<bigint>` (empty for docs with < k words; < w grams
-    * winnow as a single window). Implementation is built-in higher-order
-    * functions only (transform/aggregate/slice/array_min/array_position/
-    * array_distinct) — a pure map-side projection, no UDF encoder
-    * boundary, no shuffle; at 100 TB this runs inside the scan stage.
-    * Word symbol = charwise (acc*31 + codepoint) mod P fold; gram hash =
-    * sum_j sym_{i+j} * B^(k-1-j) mod P with a mod after every product.
-    * The char fold reads code points via split("")+ascii, which agrees
-    * with SQL engines' unicode() per character for ASCII/BMP text (the
-    * fixture is pure ASCII — supplementary-plane text would fold per
-    * UTF-16 code unit here but per code point in SQL). */
-  def withWinnowFingerprintsHof(docs: DataFrame, textCol: String = "text",
-      k: Int = 4, w: Int = 5): DataFrame = {
-    require(k >= 1 && w >= 1, s"winnowing needs k >= 1 and w >= 1, got k=$k w=$w")
-    val P = lit(WinnowP)
-    // B^(k-1-j) mod P for j = 0..k-1, exact in BigInt then narrowed
-    val pows: Seq[Long] = winnowPows(k).toSeq
-    val words = filter(split(col(textCol), " "), x => x =!= lit(""))
-    val syms = transform(words, wrd =>
-      aggregate(filter(split(wrd, ""), c => c =!= lit("")), lit(0L),
-        (acc, c) => (acc * lit(31L) + ascii(c)) % P))
-    val gramsOf = (sy: Column) =>
-      when(size(sy) < k, array().cast("array<bigint>")).otherwise(
-        transform(sequence(lit(1), size(sy) - (k - 1)), i =>
-          pows.zipWithIndex.map { case (pw, j) =>
-            (element_at(sy, (i + lit(j)).cast("int")) * lit(pw)) % P
-          }.reduce(_ + _) % P))
-    val fpsOf = (g: Column) =>
-      when(size(g) === 0, array().cast("array<bigint>")).otherwise(
-        array_distinct(transform(
-          array_distinct(transform(sequence(lit(1), greatest(lit(1), size(g) - (w - 1))), s => {
-            val sl = slice(g, s, lit(w))
-            // rightmost position of the window minimum: s + |sl| - (first
-            // index of the min in the REVERSED slice), all 1-based
-            (s + size(sl) - array_position(reverse(sl), array_min(sl))).cast("int")
-          })),
-          p => element_at(g, p))))
-    // Let-bind the intermediates as HOF lambda variables: gramsOf/fpsOf
-    // reference their argument many times, and CollapseProject would
-    // inline a withColumn'd intermediate into EVERY reference — measured
-    // ~1000x re-evaluation (the whole char-fold re-run per window).
-    // transform(array(x), v -> body) evaluates x exactly once per row and
-    // binds it; element_at(..., 1) unwraps the singleton.
-    val fps = element_at(
-      transform(array(syms), sy =>
-        element_at(transform(array(gramsOf(sy)), g => fpsOf(g)), 1)), 1)
-    docs.withColumn("fps", coalesce(fps, array().cast("array<bigint>")))
-  }
-
-  /** Winnowing via the imperative [[winnowKernel]] behind a Scala UDF —
-    * value-identical to [[withWinnowFingerprintsHof]] per document
+    * Runs the imperative [[winnowKernel]] behind a Scala UDF —
+    * value-identical to the built-in higher-order-function formulation
+    * (the test twin `ReferenceTwins.withWinnowFingerprintsHof`) per document
     * (asserted on the fixture by PipelineSpec). This is the DEFAULT scale
     * path: the winnowing kernel dominates the UDF encoder boundary by far
     * (the HOF pipeline never codegens — Catalyst evaluates lambda
@@ -161,7 +113,7 @@ object TextPipeline {
   }
 
   /** Imperative winnowing kernel — the same algorithm as the expression
-    * pipeline in [[withWinnowFingerprintsHof]], value-identical per doc
+    * pipeline of the HOF test twin, value-identical per doc
     * (asserted by PipelineSpec on the fixture): [[wordSymbolsKernel]] word
     * symbols, polynomial k-gram hashes with a mod after every product,
     * rightmost window minima, first-occurrence dedup of positions then
@@ -202,7 +154,7 @@ object TextPipeline {
     out
   }
 
-  private def winnowPows(k: Int): Array[Long] =
+  private[graft] def winnowPows(k: Int): Array[Long] =
     (0 until k).map(j =>
       BigInt(WinnowB).modPow(BigInt(k - 1 - j), BigInt(WinnowP)).toLong).toArray
 

@@ -572,76 +572,20 @@ object GraftFunctions {
       SketchReaders.sampleWeightedStringsBuilder _),
     (VectorFunctions.CosineSimName, classOf[CosineSimExpr], VectorFunctions.cosineBuilder _),
     (VectorFunctions.SrpBandsName, classOf[SrpBandsExpr], VectorFunctions.srpBandsBuilder _)) ++
-    NativeAggs.mergeBuilders.map { case (name, b) => (name, classOf[SketchMergeNative[_]], b) }
+    NativeAggs.sqlAggregates.map { case (name, b) =>
+      (name, if (name == NativeAggs.FusedName) classOf[FusedTokensNative] else classOf[SketchAgg], b)
+    }
 
-  /** Register every native expression and native merge aggregate (cheap,
-    * idempotent) — enough for the Column-API entry points; `register`
-    * layers the SQL UDAF surface on top. */
+  /** Register every native expression and aggregate (cheap, idempotent). */
   def registerExpressions(spark: SparkSession): Unit =
     nativeExpressions.foreach { case (name, _, b) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
     }
 
-  /** Register expressions AND the sketch UDAFs on an existing session, so
-    * the whole library is reachable from pure SQL:
+  /** Registers the whole library on an existing session, so it is
+    * reachable from pure SQL:
     * `SELECT source, graft_hll_estimate(graft_hll_tokens(tokens)) FROM t GROUP BY source`. */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    import org.apache.spark.sql.functions.udaf
-    import graft.core.{BloomConfig, CmsConfig}
-    import graft.operators.SketchAggs._
-    registerExpressions(spark)
-    val tokensEnc = ExpressionEncoder[Array[Int]]()
-    val bloomCfg = BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 12)
-    val cmsCfg = CmsConfig(Keys.DefaultK0, Keys.DefaultK1, 5, 11)
-    spark.udf.register("graft_bloom_tokens", udaf(new BloomTokensAgg(bloomCfg), tokensEnc))
-    spark.udf.register("graft_hll_tokens", udaf(new HllTokensAgg(Keys.DefaultK0, Keys.DefaultK1, 12), tokensEnc))
-    spark.udf.register("graft_cms_tokens", udaf(new CmsTokensAgg(cmsCfg), tokensEnc))
-    spark.udf.register("graft_kll", udaf(new KllDoubleAgg(200), ExpressionEncoder[Double]()))
-    spark.udf.register("graft_tdigest", udaf(new TDigestDoubleAgg(100), ExpressionEncoder[Double]()))
-    spark.udf.register("graft_bloom_tokens_newcount",
-      udaf(new BloomTokensNewCountAgg(bloomCfg), tokensEnc))
-    spark.udf.register("graft_heavyhitter",
-      udaf(new HeavyHittersLongAgg(64), ExpressionEncoder[Long]()))
-    spark.udf.register("graft_heavyhitter_merge",
-      udaf(new HeavyHittersMergeAgg, ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_heavyhitter_weighted",
-      udaf(new HeavyHittersWeightedLongAgg(64), ExpressionEncoder[(Long, Long)]()))
-    spark.udf.register("graft_kmv_tokens",
-      udaf(new KmvTokensAgg(Keys.DefaultK0, Keys.DefaultK1, 256), tokensEnc))
-    spark.udf.register("graft_kmv_long",
-      udaf(new KmvLongAgg(Keys.DefaultK0, Keys.DefaultK1, 256), ExpressionEncoder[Long]()))
-    spark.udf.register("graft_kmv_merge",
-      udaf(new KmvMergeAgg(Keys.DefaultK0, Keys.DefaultK1), ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_sample_bottomk",
-      udaf(new BottomKLongAgg(Keys.DefaultK0, Keys.DefaultK1, 64), ExpressionEncoder[Long]()))
-    spark.udf.register("graft_sample_merge",
-      udaf(new BottomKMergeAgg(Keys.DefaultK0, Keys.DefaultK1), ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_sample_bottomk_str",
-      udaf(new BottomKStringAgg(Keys.DefaultK0, Keys.DefaultK1, 64), ExpressionEncoder[String]()))
-    spark.udf.register("graft_sample_str_merge",
-      udaf(new BottomKStringMergeAgg(Keys.DefaultK0, Keys.DefaultK1), ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_sample_weighted",
-      udaf(new BottomKWeightedLongAgg(Keys.DefaultK0, Keys.DefaultK1, 64),
-        ExpressionEncoder[(Long, Long)]()))
-    spark.udf.register("graft_sample_weighted_merge",
-      udaf(new BottomKWeightedMergeAgg(Keys.DefaultK0, Keys.DefaultK1), ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_sample_weighted_str",
-      udaf(new BottomKWeightedStringAgg(Keys.DefaultK0, Keys.DefaultK1, 64),
-        ExpressionEncoder[(String, Long)]()))
-    spark.udf.register("graft_sample_weighted_str_merge",
-      udaf(new BottomKWeightedStringMergeAgg(Keys.DefaultK0, Keys.DefaultK1),
-        ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_kll_merge",
-      udaf(new KllBytesMergeAgg, ExpressionEncoder[Array[Byte]]()))
-    spark.udf.register("graft_tdigest_merge",
-      udaf(new TDigestBytesMergeAgg, ExpressionEncoder[Array[Byte]]()))
-    // The Misra-Gries read path is graft_heavyhitter_summary — a native
-    // struct-returning expression (registered by registerExpressions above),
-    // one deserialize per distinct sketch for topk + error + total together.
-    // graft_bloom_intersect/union + the estimate readers are likewise native
-    // expressions; no UDF readers remain anywhere in the family.
-  }
+  def register(spark: SparkSession): Unit = registerExpressions(spark)
 
   /** Column-API entry points (require `register(spark)` once per session). */
   def bloomMightContain(sketch: Column, elem: Column): Column =

@@ -4,27 +4,24 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 
 import graft.core._
+import graft.operators.{SketchInput, SketchKind}
 
-/** Native Catalyst aggregates over `tokens: array<int>` columns.
+/** Native Catalyst aggregates: [[SketchAgg]], the one aggregate every
+  * sketch build and merge runs on, and [[FusedTokensNative]], the fused
+  * bloom + HLL + CMS build kernel of `SketchJob`'s increment.
   *
-  * The `functions.udaf` wrapper pays a per-row decode: Catalyst's
-  * `ArrayData` is deserialized into a fresh JVM `Array[Int]` before
-  * `Aggregator.reduce` sees it. These `TypedImperativeAggregate`s read the
-  * `ArrayData` in place (`getInt(i)` on the unsafe array backed by the
-  * columnar batch) — no per-row allocation or copy, the tightest build
-  * loop Spark's aggregation framework allows without custom codegen.
-  * Outputs are byte-identical to the udaf-based aggregators (tested), so
-  * the two surfaces interoperate freely. `SketchJob` runs on these: one
-  * `FusedTokensNative` per (bucket, source) in the increment, one
-  * [[SketchMergeNative]] per sketch column in finalize.
+  * Both are `TypedImperativeAggregate`s that read Catalyst values in place
+  * (`getInt(i)` on the unsafe `ArrayData`, `UTF8String` bytes), with no
+  * per-row decode into JVM objects, and ship their buffers through the
+  * shuffle in a compact binary form.
   *
   * `FusedTokensNative`'s buffer is sparse until dense is smaller: it holds
   * the token ids it has seen (4 bytes each) until that would exceed the
@@ -33,81 +30,95 @@ import graft.core._
   * ids, and hashing happens where a buffer densifies (usually the final
   * aggregate), still once per token. Output bytes do not depend on where.
   */
-abstract class TokensAggBase[B] extends TypedImperativeAggregate[B] with UnaryLike[Expression] {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<int>, got $t")
-    }
-  override def nullable: Boolean = false
-}
 
-/** `graft_bloom_tokens_native(tokens)` -> serialized blocked Bloom filter. */
-case class BloomTokensNative(
-    child: Expression,
-    k: Int, log2l: Int, k0: Long, k1: Long,
+/** The one native sketch aggregate: runs a [[SketchKind]] as a build or
+  * as a merge.
+  *
+  * Mode rule, fixed at analysis time by the first child's type:
+  *  - `binary` is merge mode. Each non-null, non-empty payload is decoded
+  *    with the kind's validated `fromBytes` and merged in. A group with no
+  *    payload evaluates to `Array.emptyByteArray`, so chained merge levels
+  *    never feed a decoder an empty payload.
+  *  - Any other type the kind accepts is a build: each non-null row is
+  *    added with `update`, from the kind's empty sketch, whose element type
+  *    tag comes from the input type. A group with no rows evaluates to the
+  *    empty sketch's bytes. An optional second integral child is the row
+  *    weight; a null weight skips the row.
+  * Unsupported types fail in `checkInputDataTypes`; `expected` pins the one
+  * input a SQL name takes (`graft_hll_merge` only merges).
+  *
+  * Partial buffers cross the shuffle and the streaming state store in the
+  * sketch's own wire format (`serialize = toBytes`, `deserialize =
+  * fromBytes`), never through kryo or an encoder; an empty merge buffer
+  * serializes to zero bytes.
+  */
+case class SketchAgg(
+    name: String,
+    kind: SketchKind[_ <: AnyRef],
+    children: Seq[Expression],
+    expected: Option[SketchInput] = None,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends TokensAggBase[Array[Long]] {
+    inputAggBufferOffset: Int = 0) extends TypedImperativeAggregate[AnyRef] {
 
-  @transient private lazy val cfg = BloomConfig(k0, k1, k, log2l)
+  private def k: SketchKind[AnyRef] = kind.asInstanceOf[SketchKind[AnyRef]]
+  @transient private lazy val value: Expression = children.head
+  @transient private lazy val weight: Option[Expression] = children.lift(1)
+  @transient private lazy val input: SketchInput = kind.inputOf(value.dataType).get
 
-  override def prettyName: String = "graft_bloom_tokens_native"
-  override def dataType: DataType = BinaryType
+  /** Whether this aggregate merges serialized sketches. */
+  @transient lazy val isMerge: Boolean = input == SketchInput.Sketches
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](1 << log2l)
+  override def prettyName: String = name
+  override def dataType: DataType = kind.dataType
+  override def nullable: Boolean = false
 
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val a = v.asInstanceOf[ArrayData]
-      val n = a.numElements()
-      var i = 0
-      if (cfg.hash64Enough) {
-        while (i < n) {
-          if (!a.isNullAt(i))
-            BlockedBloom.insertHash64(buf, cfg, SipHash.hashInt(k0, k1, a.getInt(i)))
-          i += 1
-        }
-      } else {
-        val scratch = new Array[Long](2) // allocation-free 128-bit path
-        while (i < n) {
-          if (!a.isNullAt(i)) {
-            SipHash.hash128IntInto(k0, k1, a.getInt(i), scratch)
-            BlockedBloom.insertHash128(buf, cfg, scratch(0), scratch(1))
-          }
-          i += 1
-        }
-      }
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def fail(msg: String) = TypeCheckResult.TypeCheckFailure(s"$prettyName: $msg")
+    val got = children.headOption.map(_.dataType.catalogString).getOrElse("")
+    if (children.isEmpty || children.length > 2) fail(s"takes 1 or 2 arguments, got ${children.length}")
+    else kind.inputOf(children.head.dataType) match {
+      case None => fail(s"does not accept $got")
+      case Some(in) if expected.exists(_ != in) => fail(s"expects ${expected.get.sqlType}, got $got")
+      case Some(SketchInput.Sketches) if children.length == 2 => fail("a merge takes one binary argument")
+      case Some(SketchInput.Sketches) => TypeCheckResult.TypeCheckSuccess
+      case Some(_) if children.length == 2 && !kind.acceptsWeight => fail("takes no weight argument")
+      case Some(_) if children.length == 2 && !SketchInput.isIntegral(children(1).dataType) =>
+        fail(s"weight must be integral, got ${children(1).dataType.catalogString}")
+      case Some(_) if children.length == 1 && kind.requiresWeight => fail("requires a weight argument")
+      case _ => TypeCheckResult.TypeCheckSuccess
     }
-    buf
   }
 
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] =
-    BlockedBloom.unionInPlace(b1, b2)
+  override def createAggregationBuffer(): AnyRef = if (isMerge) null else k.empty(input)
 
-  override def eval(buf: Array[Long]): Any =
-    BlockedBloom.toBytes(buf, cfg, BlockedBloom.TypeTag.Int)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asLongBuffer().put(buf)
-    bb.array()
+  override def update(buf: AnyRef, row: InternalRow): AnyRef = {
+    val v = value.eval(row)
+    if (v == null) buf
+    else if (isMerge) {
+      val x = v.asInstanceOf[Array[Byte]]
+      if (x.isEmpty) buf else merge(buf, k.fromBytes(x))
+    } else weight match {
+      case None => k.update(buf, input, v, 1L)
+      case Some(we) =>
+        val w = we.eval(row)
+        if (w == null) buf else k.update(buf, input, v, SketchInput.longOf(w))
+    }
   }
 
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bytes.length / 8)
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(out)
-    out
-  }
+  override def merge(a: AnyRef, b: AnyRef): AnyRef =
+    if (a == null) b else if (b == null) a else k.merge(a, b)
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomTokensNative =
+  override def eval(buf: AnyRef): Any = if (buf == null) Array.emptyByteArray else k.eval(buf)
+  override def serialize(buf: AnyRef): Array[Byte] =
+    if (buf == null) Array.emptyByteArray else k.toBytes(buf)
+  override def deserialize(x: Array[Byte]): AnyRef = if (x.isEmpty) null else k.fromBytes(x)
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): SketchAgg =
     copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomTokensNative =
+  override def withNewInputAggBufferOffset(newOffset: Int): SketchAgg =
     copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomTokensNative =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): SketchAgg =
+    copy(children = newChildren)
 }
 
 /** Mutable fused buffer, sparse until dense is smaller (the HLL++
@@ -163,7 +174,8 @@ case class FusedTokensNative(
     child: Expression,
     k: Int, log2l: Int, hllP: Int, cmsDepth: Int, cmsLog2Width: Int, k0: Long, k1: Long,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends TokensAggBase[FusedNativeBuf] {
+    inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[FusedNativeBuf] with UnaryLike[Expression] {
 
   @transient private lazy val bloomCfg = BloomConfig(k0, k1, k, log2l)
   @transient private lazy val cmsCfg = CmsConfig(k0, k1, cmsDepth, cmsLog2Width)
@@ -176,6 +188,11 @@ case class FusedTokensNative(
   @transient lazy val sparseLimit: Int = math.min(denseBytes / 4, Int.MaxValue - 16L).toInt
 
   override def prettyName: String = "graft_fused_tokens_native"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects array<int>, got $t")
+  }
+  override def nullable: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("bloom", BinaryType, nullable = false),
     StructField("hll", BinaryType, nullable = false),
@@ -352,90 +369,113 @@ object FusedTokensNative {
   final val InsertChunk = 1024
 }
 
-/** Native merge over serialized sketches (`binary` column), wrapping one
-  * of the bytes -> bytes merge `Aggregator`s (`BloomMergeAgg`,
-  * `HllBytesMergeAgg`, `CmsBytesMergeAgg`): their validation, cross-size
-  * fold and empty-payload convention are reused as is. Unlike the `udaf`
-  * wrapper, the buffer crosses the shuffle in the sketch's own wire format
-  * (`serialize = finish`, `deserialize = reduce(zero, _)`), not through an
-  * encoder round trip. */
-case class SketchMergeNative[B](
-    child: Expression,
-    agg: Aggregator[Array[Byte], B, Array[Byte]],
-    name: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[B] with UnaryLike[Expression] {
 
-  override def prettyName: String = name
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got ${child.dataType}")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): B = agg.zero
-  override def update(buf: B, input: InternalRow): B = {
-    val v = child.eval(input)
-    if (v == null) buf else agg.reduce(buf, v.asInstanceOf[Array[Byte]])
-  }
-  override def merge(b1: B, b2: B): B = agg.merge(b1, b2)
-  override def eval(buf: B): Any = agg.finish(buf)
-  override def serialize(buf: B): Array[Byte] = agg.finish(buf)
-  override def deserialize(bytes: Array[Byte]): B = agg.reduce(agg.zero, bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): SketchMergeNative[B] =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): SketchMergeNative[B] =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): SketchMergeNative[B] =
-    copy(child = newChild)
-}
-
-/** Registration of the native aggregates (SQL + call_function Column API).
+/** Registration of the native aggregates and their Column-API entry points.
   *
-  * NOTE: registration is session-global and last-wins — a second
-  * `register` on the same session rebinds the function names to the new
-  * sketch parameters. Components sharing a session and needing different
-  * configs should pass them per call:
-  * `graft_bloom_tokens_native(tokens, k, log2l)`.
+  * Every `graft_*` SQL aggregate name is in [[sqlAggregates]], which
+  * `GraftFunctions.nativeExpressions` serves to both `registerExpressions`
+  * and the `GraftExtensions` injector. Each name keeps its arity and
+  * defaults: Bloom k = 3, log2l = 12; HLL p = 12; CMS 5 x 2^11; KMV
+  * k = 256; samples k = 64; heavy hitters capacity 64; KLL k = 200;
+  * t-digest compression 100; all under `Keys.DefaultK0/K1`.
+  *
+  * NOTE: `register` is session-global and last-wins — it rebinds
+  * `graft_bloom_tokens_native` / `graft_fused_tokens_native` to its sketch
+  * parameters. Components sharing a session and needing different configs
+  * pass them per call (`graft_bloom_tokens_native(tokens, k, log2l)`) or
+  * use [[column]], whose parameters travel in the expression.
   */
 object NativeAggs {
   import graft.core.Keys
+  import graft.operators.SketchKinds._
+  import SketchInput._
 
   val BloomName = "graft_bloom_tokens_native"
   val FusedName = "graft_fused_tokens_native"
-  val BloomMergeName = "graft_bloom_merge"
-  val HllMergeName = "graft_hll_merge"
-  val CmsMergeName = "graft_cms_merge"
-
-  def bloomMerge(sk: Expression, k0: Long, k1: Long): SketchMergeNative[_] =
-    SketchMergeNative(sk, new graft.operators.SketchAggs.BloomMergeAgg(k0, k1), BloomMergeName)
-  def hllMerge(sk: Expression): SketchMergeNative[_] =
-    SketchMergeNative(sk, new graft.jobs.HllBytesMergeAgg, HllMergeName)
-  def cmsMerge(sk: Expression): SketchMergeNative[_] =
-    SketchMergeNative(sk, new graft.jobs.CmsBytesMergeAgg, CmsMergeName)
-
-  /** SQL builders (`GraftFunctions.nativeExpressions`) for
-    * `graft_bloom_merge(sk)` (default keys), `graft_hll_merge(sk)` and
-    * `graft_cms_merge(sk)`. */
-  private[plans] val mergeBuilders: Seq[(String, Seq[Expression] => Expression)] =
-    Seq[(String, Expression => Expression)](
-      BloomMergeName -> (bloomMerge(_, Keys.DefaultK0, Keys.DefaultK1)),
-      HllMergeName -> (hllMerge(_)),
-      CmsMergeName -> (cmsMerge(_))
-    ).map { case (name, make) =>
-      name -> ((exprs: Seq[Expression]) => exprs match {
-        case Seq(e) => make(e)
-        case _ => throw new IllegalArgumentException(s"$name expects (sketch BINARY)")
-      })
-    }
 
   /** A native aggregate as a `Column`, with no session registration: the
     * parameters travel in the expression, not in a session-global name. */
-  def column(f: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnBridge.column(f.toAggregateExpression())
+  def column(f: AggregateFunction): Column = GraftColumnBridge.column(f.toAggregateExpression())
 
+  /** [[SketchAgg]] over `kind` as a `Column`: `inputs` is the value column
+    * (serialized sketches for a merge) and, where the kind takes one, a
+    * weight column. */
+  def column(kind: SketchKind[_ <: AnyRef], inputs: Column*): Column =
+    column(SketchAgg(kind.name, kind, inputs.map(GraftColumnBridge.expression)))
+
+  private def sql(name: String, kind: SketchKind[_ <: AnyRef], in: SketchInput,
+      arity: Int): (String, Seq[Expression] => Expression) =
+    name -> { exprs =>
+      if (exprs.length != arity) throw new IllegalArgumentException(
+        s"$name expects $arity argument(s) (${in.sqlType}${if (arity == 2) ", weight BIGINT" else ""}); " +
+          s"got ${exprs.length}")
+      SketchAgg(name, kind, exprs, Some(in))
+    }
+
+  private def bloomNative(k: Int, log2l: Int, k0: Long, k1: Long): Seq[Expression] => Expression = {
+    case Seq(e) => SketchAgg(BloomName, Bloom(BloomConfig(k0, k1, k, log2l)), Seq(e), Some(Tokens))
+    case Seq(e, Literal(kk: Int, IntegerType), Literal(ll: Int, IntegerType)) =>
+      SketchAgg(BloomName, Bloom(BloomConfig(k0, k1, kk, ll)), Seq(e), Some(Tokens))
+    case other => throw new IllegalArgumentException(
+      s"$BloomName expects (tokens array<int>) or (tokens, k INT, log2l INT); got ${other.length} arguments")
+  }
+
+  private def fusedNative(bloomK: Int, bloomLog2l: Int, hllP: Int, cmsDepth: Int, cmsLog2Width: Int,
+      k0: Long, k1: Long): Seq[Expression] => Expression = {
+    case Seq(e) => FusedTokensNative(e, bloomK, bloomLog2l, hllP, cmsDepth, cmsLog2Width, k0, k1)
+    case other => throw new IllegalArgumentException(
+      s"$FusedName expects exactly (tokens array<int>); got ${other.length} arguments")
+  }
+
+  /** Every SQL aggregate name with its builder (defaults in the header;
+    * the two `*_native` names take `register`'s defaults). */
+  private[plans] def sqlAggregates: Seq[(String, Seq[Expression] => Expression)] = {
+    val (k0, k1) = (Keys.DefaultK0, Keys.DefaultK1)
+    val bloom = Bloom(BloomConfig(k0, k1, 3, 12))
+    val hll = HllKind(k0, k1, 12)
+    val cms = Cms(CmsConfig(k0, k1, 5, 11))
+    val kmv = KmvKind(k0, k1, 256)
+    val kll = KllKind(200)
+    val tdigest = TDigestKind(100)
+    val hh = HeavyHitters(64)
+    val sample = Sample(k0, k1, 64, weighted = false)
+    val sampleW = Sample(k0, k1, 64, weighted = true)
+    val strSample = StringSample(k0, k1, 64, weighted = false)
+    val strSampleW = StringSample(k0, k1, 64, weighted = true)
+    def q = graft.SketchQueries // read per call: no object-initialization cycle
+    Seq(
+      sql("graft_bloom_tokens", bloom, Tokens, 1),
+      sql("graft_bloom_merge", bloom, Sketches, 1),
+      sql("graft_bloom_tokens_newcount", BloomNewCount(bloom.cfg), Tokens, 1),
+      sql("graft_hll_tokens", hll, Tokens, 1),
+      sql("graft_hll_merge", hll, Sketches, 1),
+      sql("graft_cms_tokens", cms, Tokens, 1),
+      sql("graft_cms_merge", cms, Sketches, 1),
+      sql("graft_kmv_tokens", kmv, Tokens, 1),
+      sql("graft_kmv_long", kmv, Longs, 1),
+      sql("graft_kmv_merge", kmv, Sketches, 1),
+      sql("graft_kll", kll, Doubles, 1),
+      sql("graft_kll_merge", kll, Sketches, 1),
+      sql("graft_tdigest", tdigest, Doubles, 1),
+      sql("graft_tdigest_merge", tdigest, Sketches, 1),
+      sql("graft_heavyhitter", hh, Longs, 1),
+      sql("graft_heavyhitter_weighted", hh, Longs, 2),
+      sql("graft_heavyhitter_merge", hh, Sketches, 1),
+      sql("graft_sample_bottomk", sample, Longs, 1),
+      sql("graft_sample_merge", sample, Sketches, 1),
+      sql("graft_sample_bottomk_str", strSample, Strings, 1),
+      sql("graft_sample_str_merge", strSample, Sketches, 1),
+      sql("graft_sample_weighted", sampleW, Longs, 2),
+      sql("graft_sample_weighted_merge", sampleW, Sketches, 1),
+      sql("graft_sample_weighted_str", strSampleW, Strings, 2),
+      sql("graft_sample_weighted_str_merge", strSampleW, Sketches, 1),
+      BloomName -> (e => bloomNative(q.bloomCfg.k, q.bloomCfg.log2l, k0, k1)(e)),
+      FusedName -> (e => fusedNative(q.bloomCfg.k, q.bloomCfg.log2l, q.hllP, q.cmsCfg.depth,
+        q.cmsCfg.log2Width, k0, k1)(e)))
+  }
+
+  /** Rebinds `graft_bloom_tokens_native` and `graft_fused_tokens_native` on
+    * `spark` to these sketch parameters (see the NOTE above). */
   def register(spark: org.apache.spark.sql.SparkSession,
       bloomK: Int = graft.SketchQueries.bloomCfg.k,
       bloomLog2l: Int = graft.SketchQueries.bloomCfg.log2l,
@@ -443,33 +483,15 @@ object NativeAggs {
       cmsDepth: Int = graft.SketchQueries.cmsCfg.depth,
       cmsLog2Width: Int = graft.SketchQueries.cmsCfg.log2Width,
       k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.IntegerType
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BloomName,
-      {
-        case Seq(e) => BloomTokensNative(e, bloomK, bloomLog2l, k0, k1).toAggregateExpression()
-        case Seq(e, Literal(kk: Int, IntegerType), Literal(ll: Int, IntegerType)) =>
-          BloomTokensNative(e, kk, ll, k0, k1).toAggregateExpression()
-        case other => throw new IllegalArgumentException(
-          s"$BloomName expects (tokens array<int>) or (tokens, k INT, log2l INT); got ${other.length} arguments")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FusedName,
-      {
-        case Seq(e) =>
-          FusedTokensNative(e, bloomK, bloomLog2l, hllP, cmsDepth, cmsLog2Width, k0, k1)
-            .toAggregateExpression()
-        case other => throw new IllegalArgumentException(
-          s"$FusedName expects exactly (tokens array<int>); got ${other.length} arguments")
-      },
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction(BloomName, bloomNative(bloomK, bloomLog2l, k0, k1), "built-in")
+    registry.createOrReplaceTempFunction(FusedName,
+      fusedNative(bloomK, bloomLog2l, hllP, cmsDepth, cmsLog2Width, k0, k1), "built-in")
   }
 
-  def bloomTokensNative(tokens: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def bloomTokensNative(tokens: Column): Column =
     org.apache.spark.sql.functions.call_function(BloomName, tokens)
 
-  def fusedTokensNative(tokens: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def fusedTokensNative(tokens: Column): Column =
     org.apache.spark.sql.functions.call_function(FusedName, tokens)
 }

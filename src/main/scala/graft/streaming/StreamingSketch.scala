@@ -4,17 +4,19 @@ import java.sql.Timestamp
 import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.core.{BloomConfig, CmsConfig}
-import graft.operators.SketchAggs._
+import graft.operators.SketchKinds._
+import graft.plans.NativeAggs.column
 
-/** Structured Streaming surface: the sketch Aggregators are associative +
-  * commutative monoids, so they drop straight into watermarked windowed
-  * `groupBy().agg()` — per-micro-batch partials reduce into the state
-  * store's buffer exactly like per-partition partials reduce in batch.
+/** Structured Streaming surface: the sketch kinds are associative +
+  * commutative monoids, so their native aggregates (`SketchAgg`) drop
+  * straight into watermarked windowed `groupBy().agg()` — per-micro-batch
+  * partials reduce into the state store's buffer, which holds each sketch
+  * in its own wire format, exactly like per-partition partials reduce in
+  * batch.
   * This realizes the reference's concurrency story (order-insensitive
   * inserts, non-linearizable union — reference `Internal.hs:443-454,
   * 485-487`) as event-time streaming (SURVEY.md §2.2 "Streaming").
@@ -85,15 +87,12 @@ object StreamingSketch {
       windowDuration: String,
       bloomCfg: BloomConfig,
       hllP: Int): DataFrame = {
-    val tokensEnc = ExpressionEncoder[Array[Int]]()
-    val bloomU = udaf(new BloomTokensAgg(bloomCfg), tokensEnc)
-    val hllU = udaf(new HllTokensAgg(bloomCfg.k0, bloomCfg.k1, hllP), tokensEnc)
     tokens
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration), col("source"))
       .agg(
-        bloomU(col("tokens")).as("bloom"),
-        hllU(col("tokens")).as("hll"),
+        column(Bloom(bloomCfg), col("tokens")).as("bloom"),
+        column(HllKind(bloomCfg.k0, bloomCfg.k1, hllP), col("tokens")).as("hll"),
         count(lit(1)).as("n_rows"),
         sum(expr("size(tokens)")).as("n_tokens"))
   }
@@ -264,12 +263,10 @@ object StreamingSketch {
       watermarkDelay: String,
       windowDuration: String,
       cmsCfg: CmsConfig): DataFrame = {
-    val tokensEnc = ExpressionEncoder[Array[Int]]()
-    val cmsU = udaf(new CmsTokensAgg(cmsCfg), tokensEnc)
     tokens
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration), col("source"))
-      .agg(cmsU(col("tokens")).as("cms"))
+      .agg(column(Cms(cmsCfg), col("tokens")).as("cms"))
   }
 
   /** Per-(window, source) KMV distinct sketch. KMV content is fully
@@ -284,12 +281,10 @@ object StreamingSketch {
       watermarkDelay: String,
       windowDuration: String,
       k0: Long, k1: Long, k: Int): DataFrame = {
-    val tokensEnc = ExpressionEncoder[Array[Int]]()
-    val kmvU = udaf(new KmvTokensAgg(k0, k1, k), tokensEnc)
     tokens
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration), col("source"))
-      .agg(kmvU(col("tokens")).as("kmv"))
+      .agg(column(KmvKind(k0, k1, k), col("tokens")).as("kmv"))
   }
 
   /** Per-(window, source) Misra-Gries heavy-hitter summary — "trending
@@ -320,11 +315,10 @@ object StreamingSketch {
       watermarkDelay: String,
       windowDuration: String,
       capacity: Int): DataFrame = {
-    val hhU = udaf(new HeavyHittersLongAgg(capacity), ExpressionEncoder[Long]())
     keyed
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration), col("source"))
-      .agg(hhU(col(keyCol)).as("hh"))
+      .agg(column(HeavyHitters(capacity), col(keyCol)).as("hh"))
   }
 
   /** Complete-mode driver query (`q_streaming_trending_tokens`): the
@@ -473,14 +467,13 @@ object StreamingSketch {
     val sinkRows = sinkSel.collect()
     val sk = spark.createDataFrame(java.util.Arrays.asList(sinkRows: _*), sinkSel.schema)
       .withColumn("sess", floor((col("start") - epoch0) / 200L).cast("long"))
-    val kmvU = udaf(new KmvTokensAgg(k0, k1, k), ExpressionEncoder[Array[Int]]())
     val batch = t
       .select(col("doc_id").cast("long").as("id"), col("source"), col("tokens"))
       .withColumn("sess", pmod(floor(col("id") / 20L).cast("long"), lit(5L)))
       .withColumn("off", pmod(floor(col("id") / 100L).cast("long"), lit(3L)) * 20L)
     val batchAgg = batch
       .groupBy(col("source"), col("sess"))
-      .agg(kmvU(col("tokens")).as("kmv_batch"),
+      .agg(column(KmvKind(k0, k1, k), col("tokens")).as("kmv_batch"),
         min(col("off")).as("min_off"), max(col("off")).as("max_off"))
     val exactNd = batch
       .select(col("source"), col("sess"), explode_outer(col("tokens")).as("token"))
@@ -518,12 +511,10 @@ object StreamingSketch {
       watermarkDelay: String,
       gapDuration: String,
       k0: Long, k1: Long, k: Int): DataFrame = {
-    val tokensEnc = ExpressionEncoder[Array[Int]]()
-    val kmvU = udaf(new KmvTokensAgg(k0, k1, k), tokensEnc)
     tokens
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(session_window(col(tsCol), gapDuration), col("source"))
-      .agg(kmvU(col("tokens")).as("kmv"))
+      .agg(column(KmvKind(k0, k1, k), col("tokens")).as("kmv"))
   }
 
   /** Per-(window, source) WEIGHTED bottom-k sample over keyed rows
@@ -540,11 +531,10 @@ object StreamingSketch {
       watermarkDelay: String,
       windowDuration: String,
       k0: Long, k1: Long, k: Int): DataFrame = {
-    val wU = udaf(new BottomKWeightedLongAgg(k0, k1, k), ExpressionEncoder[(Long, Long)]())
     rows
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration), col("source"))
-      .agg(wU(col("id"), col("w")).as("sample"))
+      .agg(column(Sample(k0, k1, k, weighted = true), col("id"), col("w")).as("sample"))
   }
 
   /** Per-(window, source) bottom-k uniform sample of distinct tokens
@@ -558,12 +548,11 @@ object StreamingSketch {
       watermarkDelay: String,
       windowDuration: String,
       k0: Long, k1: Long, k: Int): DataFrame = {
-    val bkU = udaf(new BottomKLongAgg(k0, k1, k), ExpressionEncoder[Long]())
     tokens
       .withWatermark(tsCol, watermarkDelay)
       .select(col(tsCol), col("source"), explode(col("tokens")).as("token"))
       .groupBy(window(col(tsCol), windowDuration), col("source"))
-      .agg(bkU(col("token").cast("long")).as("sample"))
+      .agg(column(Sample(k0, k1, k, weighted = false), col("token").cast("long")).as("sample"))
   }
 
   /** Per-row decontamination scorer for the streaming twin: number of the

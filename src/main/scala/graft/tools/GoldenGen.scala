@@ -45,6 +45,34 @@ object GoldenGen {
     val td = new TDigest(100)
     quantilePayload.foreach(td.add(_))
     java.nio.file.Files.write(outDir.resolve("tdigest_100.bin"), td.toBytes)
+    // bottom-k string (uniform, version 1), ES-weighted long and
+    // ES-weighted string (version 2): values 1..5000 / "doc-1".."doc-5000",
+    // weight 1 + i % 7
+    val keyHash = SipHash.hashLong(k0, k1, k0 ^ k1)
+    val (sh, _) = BottomK.emptyBuffers(32)
+    val sv = new Array[Array[Byte]](32)
+    var ss = 0
+    (1 to 5000).foreach { i =>
+      val b = s"doc-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      ss = BottomK.addG(sh, sv, ss, SipHash.hash64(k0, k1, b), b)
+    }
+    java.nio.file.Files.write(outDir.resolve("bottomk_str_32.bin"), BottomK.toBytesStr(sh, sv, ss, keyHash))
+    val (wh, wv) = BottomK.emptyBuffers(32)
+    var ws = 0
+    (1L to 5000L).foreach(x => ws = BottomK.addW(wh, wv, ws,
+      BottomK.esKey(SipHash.hashLong(k0, k1, x), (1 + x % 7).toDouble), x, BottomK.cmpLong))
+    java.nio.file.Files.write(outDir.resolve("bottomk_weighted_32.bin"),
+      BottomK.toBytesWeighted(wh, wv, ws, BlockedBloom.TypeTag.Long, keyHash))
+    val (swh, _) = BottomK.emptyBuffers(32)
+    val swv = new Array[Array[Byte]](32)
+    var sws = 0
+    (1 to 5000).foreach { i =>
+      val b = s"doc-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      sws = BottomK.addW(swh, swv, sws,
+        BottomK.esKey(SipHash.hash64(k0, k1, b), (1 + i % 7).toDouble), b, BottomK.cmpUtf8)
+    }
+    java.nio.file.Files.write(outDir.resolve("bottomk_weighted_str_32.bin"),
+      BottomK.toBytesStrWeighted(swh, swv, sws, keyHash))
     println("golden files written")
   }
 }

@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 import graft.operators.SketchAggs._
+import graft.operators.SketchKinds._
+import graft.plans.NativeAggs
 
 /** SURVEY.md §7 step 6: cross-check the from-scratch sketches against
   * Spark's built-in approximations (`approx_count_distinct`,
@@ -82,10 +84,10 @@ class BuiltinCrossCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
     val data = new scala.util.Random(21).shuffle((1 to n).toVector)
       .toDF("x").select(col("x").cast("double").as("x")).repartition(4)
     val qs = Seq(0.1, 0.5, 0.9)
-    val kllBytes = data.agg(udaf(new KllDoubleAgg(200), ExpressionEncoder[Double]())(col("x")))
+    val kllBytes = data.agg(NativeAggs.column(KllKind(200), col("x")))
       .head().getAs[Array[Byte]](0)
     val kll = Kll.fromBytes(kllBytes)
-    val tdBytes = data.agg(udaf(new TDigestDoubleAgg(100), ExpressionEncoder[Double]())(col("x")))
+    val tdBytes = data.agg(NativeAggs.column(TDigestKind(100), col("x")))
       .head().getAs[Array[Byte]](0)
     val td = TDigest.fromBytes(tdBytes)
     val builtinQ = data.agg(percentile_approx(col("x"), array(qs.map(lit): _*), lit(10000)))
@@ -105,7 +107,7 @@ class BuiltinCrossCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val items = (1L to 20000L).toDF("x")
     val cfg = BloomConfig(K0, K1, 3, 14)
-    val ours = items.agg(udaf(new BloomLongAgg(cfg), ExpressionEncoder[Long]())(col("x")))
+    val ours = items.agg(NativeAggs.column(Bloom(cfg), col("x")))
       .head().getAs[Array[Byte]](0)
     val (c, w, _) = BlockedBloom.fromBytes(K0, K1, ours)
     (1L to 20000L).foreach(x => assert(BlockedBloom.containsLong(w, c, x)))
@@ -119,7 +121,7 @@ class BuiltinCrossCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = tokensDf
     val exact = df.select(explode(col("tokens"))).distinct().count()
     val kmvBytes = df
-      .agg(udaf(new KmvTokensAgg(K0, K1, 512), ExpressionEncoder[Array[Int]]())(col("tokens")))
+      .agg(NativeAggs.column(KmvKind(K0, K1, 512), col("tokens")))
       .head().getAs[Array[Byte]](0)
     val (h, s, _, _) = Kmv.fromBytes(kmvBytes)
     val ours = Kmv.estimate(h, s)
@@ -132,7 +134,7 @@ class BuiltinCrossCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dfA = df.where(pmod(col("tokens")(0), lit(3)) =!= 0)
     val dfB = df.where(pmod(col("tokens")(0), lit(3)) =!= 1)
     def sketchOf(d: DataFrame): (Array[Long], Int) = {
-      val b = d.agg(udaf(new KmvTokensAgg(K0, K1, 512), ExpressionEncoder[Array[Int]]())(col("tokens")))
+      val b = d.agg(NativeAggs.column(KmvKind(K0, K1, 512), col("tokens")))
         .head().getAs[Array[Byte]](0)
       val (hh, ss, _, _) = Kmv.fromBytes(b)
       (hh, ss)

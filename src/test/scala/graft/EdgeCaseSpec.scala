@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 import graft.operators.SketchAggs._
+import graft.operators.SketchKinds._
+import graft.plans.{DirectSketchAgg, NativeAggs}
 
 /** Edge cases through the Spark surface: null/empty token arrays, empty
   * relations, single rows, cross-size filter merging. */
@@ -67,8 +69,7 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
       BlockedBloom.toBytes(w, c, BlockedBloom.TypeTag.Int)
     }
     val sketches = Seq(build(big, 1 to 100), build(small, 200 to 300)).toDF("sk")
-    val mergeU = udaf(new BloomMergeAgg(K0, K1), ExpressionEncoder[Array[Byte]]())
-    val merged = sketches.agg(mergeU(col("sk"))).head().getAs[Array[Byte]](0)
+    val merged = sketches.agg(NativeAggs.column(Bloom(cfg), col("sk"))).head().getAs[Array[Byte]](0)
     val (mc, mw, _) = BlockedBloom.fromBytes(K0, K1, merged)
     assert(mc.log2l === 8, "merge must fold down to the smallest size")
     ((1 to 100) ++ (200 to 300)).foreach(t =>
@@ -80,10 +81,10 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("KLL/t-digest aggs on empty and single-value input") {
     import spark.implicits._
-    val kllU = udaf(new KllDoubleAgg(64), ExpressionEncoder[Double]())
+    val kllU = (c: org.apache.spark.sql.Column) => NativeAggs.column(KllKind(64), c)
     val one = Seq(42.0).toDF("x").agg(kllU(col("x"))).head().getAs[Array[Byte]](0)
     assert(Kll.fromBytes(one).quantile(0.5) === 42.0)
-    val tdU = udaf(new TDigestDoubleAgg(50), ExpressionEncoder[Double]())
+    val tdU = (c: org.apache.spark.sql.Column) => NativeAggs.column(TDigestKind(50), c)
     val oneTd = Seq(42.0).toDF("x").agg(tdU(col("x"))).head().getAs[Array[Byte]](0)
     assert(TDigest.fromBytes(oneTd).quantile(0.5) === 42.0)
     val emptyKll = spark.emptyDataset[Double].toDF("x").agg(kllU(col("x"))).head().getAs[Array[Byte]](0)
@@ -122,25 +123,24 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("approxNewCount: exact sequential new-count per task, summed across partitions") {
     // direct Aggregator semantics: replicate the reference's sequential
     // insert loop and require the SAME count (deterministic, fixed key)
-    val agg = new BloomTokensNewCountAgg(cfg)
+    val agg = new DirectSketchAgg(BloomNewCount(cfg), ArrayType(IntegerType))
     val rows = Seq(Array(1, 2, 3), Array(2, 3, 4), Array(1, 1, 5), Array.empty[Int])
-    val buf = rows.foldLeft(agg.zero)(agg.reduce)
+    val buf = rows.foldLeft(agg.zero)(agg.reduce(_, _))
     val expectedWords = new Array[Long](cfg.l)
     var expectedNew = 0L
     rows.flatten.foreach(t => if (BlockedBloom.insertInt(expectedWords, cfg, t)) expectedNew += 1L)
-    val out = agg.finish(buf)
-    assert(out.approx_new === expectedNew)
-    assert(BlockedBloom.fromBytes(K0, K1, out.bloom)._2.sameElements(expectedWords))
+    val out = agg.finish(buf).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    assert(out.getLong(1) === expectedNew)
+    assert(BlockedBloom.fromBytes(K0, K1, out.getBinary(0))._2.sameElements(expectedWords))
     // distributed: counts sum across merged partials (upper bound on the
     // sequential count: 2 and 3 are double-counted here by design)
     val b1 = agg.reduce(agg.zero, Array(1, 2, 3))
     val b2 = agg.reduce(agg.zero, Array(2, 3, 4))
-    val merged = agg.finish(agg.merge(b1, b2))
-    assert(merged.approx_new === 6L)
+    val merged = agg.finish(agg.merge(b1, b2)).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    assert(merged.getLong(1) === 6L)
     // and through the Spark surface
     val d = df(Seq(Row("a", Seq(1, 2, 3)), Row("a", Seq(2, 3, 4))), parts = 1)
-    val u = udaf(new BloomTokensNewCountAgg(cfg), ExpressionEncoder[Array[Int]]())
-    val row = d.groupBy(col("source")).agg(u(col("tokens")).as("s")).head()
+    val row = d.groupBy(col("source")).agg(NativeAggs.column(BloomNewCount(cfg), col("tokens")).as("s")).head()
     val s = row.getStruct(1)
     assert(s.getAs[Long]("approx_new") === 4L, "single-partition build must be sequential-exact")
   }
@@ -158,11 +158,11 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("KMV edge cases: empty group, null tokens, cross-capacity SQL merge, cross-type rejection") {
     import graft.core.{Kmv, SipHash}
     // empty + null inputs through the Aggregator surface
-    val agg = new KmvTokensAgg(K0, K1, 16)
-    val empty = agg.finish(agg.zero)
+    val agg = new DirectSketchAgg(KmvKind(K0, K1, 16), ArrayType(IntegerType))
+    val empty = agg.finishBytes(agg.zero)
     val (h0, s0, _, _) = Kmv.fromBytes(empty)
     assert(s0 === 0 && Kmv.estimate(h0, s0) === 0.0)
-    assert(agg.reduce(agg.zero, null).size === 0)
+    assert(agg.reduce(agg.zero, null).asInstanceOf[KmvBuf].size === 0)
     // pairwise ops on an empty sketch: exact zeros, no crash
     val (hx, sx) = {
       val h = Kmv.emptyHashes(16); var s = 0
@@ -177,8 +177,8 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
       elems.foreach(e => s = Kmv.add(h, s, SipHash.hashInt(K0, K1, e)))
       Kmv.toBytes(h, s, BlockedBloom.TypeTag.Int, keyHash)
     }
-    val m = new KmvMergeAgg(K0, K1)
-    val merged = m.finish(m.reduce(m.reduce(m.zero, ser(64, 1 to 1000)), ser(16, 500 to 1500)))
+    val m = new DirectSketchAgg(KmvKind(K0, K1, 16), BinaryType)
+    val merged = m.finishBytes(m.reduce(m.reduce(m.zero, ser(64, 1 to 1000)), ser(16, 500 to 1500)))
     val (hm, sm, _, _) = Kmv.fromBytes(merged)
     assert(hm.length === 16 && sm === 16)
     assert(math.abs(Kmv.estimate(hm, sm) - 1500) <= 5 * Kmv.stdError(16) * 1500)
@@ -203,17 +203,17 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Kmv.difference(hx, sx, h0, s0) === 9.0)
     // BottomK merge agg: empty group -> empty payload; chained level skips it
     val keyHash = SipHash.hashLong(K0, K1, K0 ^ K1)
-    val m = new BottomKMergeAgg(K0, K1)
-    assert(m.finish(m.zero).isEmpty)
+    val m = new DirectSketchAgg(Sample(K0, K1, 8, weighted = false), BinaryType)
+    assert(m.finishBytes(m.zero).isEmpty)
     def serBk(k: Int, elems: Range): Array[Byte] = {
       val (h, v) = BottomK.emptyBuffers(k); var s = 0
       elems.foreach(e => s = BottomK.add(h, v, s, SipHash.hashLong(K0, K1, e.toLong), e.toLong))
       BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, keyHash)
     }
-    val chained = m.finish(m.reduce(m.reduce(m.zero, Array.emptyByteArray), serBk(8, 1 to 100)))
+    val chained = m.finishBytes(m.reduce(m.reduce(m.zero, Array.emptyByteArray), serBk(8, 1 to 100)))
     assert(BottomK.fromBytes(chained)._3 === 8)
     // cross-capacity merge folds down; cross-type and wrong-key rejected
-    val folded = m.finish(m.reduce(m.reduce(m.zero, serBk(32, 1 to 100)), serBk(8, 50 to 150)))
+    val folded = m.finishBytes(m.reduce(m.reduce(m.zero, serBk(32, 1 to 100)), serBk(8, 50 to 150)))
     assert(BottomK.fromBytes(folded)._1.length === 8)
     val typed = BottomK.toBytes(BottomK.emptyBuffers(8)._1, BottomK.emptyBuffers(8)._2, 0,
       BlockedBloom.TypeTag.Int, keyHash)
@@ -243,10 +243,10 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = Hll.empty(10)
     val b = Hll.empty(12)
     assertThrows[IllegalArgumentException](Hll.merge(a, b))
-    val m = new graft.jobs.HllBytesMergeAgg()
+    val m = new DirectSketchAgg(HllKind(K0, K1, 10), BinaryType)
     assertThrows[IllegalArgumentException](
       m.reduce(m.reduce(m.zero, Hll.toBytes(a, 10, 1L, 0L)), Hll.toBytes(b, 12, 1L, 0L)))
-    val mergeAgg = new BloomMergeAgg(K0, K1)
+    val mergeAgg = new DirectSketchAgg(Bloom(cfg), BinaryType)
     val s1 = BlockedBloom.toBytes(new Array[Long](1 << 8), BloomConfig(K0, K1, 3, 8), 1L)
     val s2 = BlockedBloom.toBytes(new Array[Long](1 << 8), BloomConfig(K0, K1, 4, 8), 1L)
     assertThrows[IllegalArgumentException](mergeAgg.reduce(mergeAgg.reduce(mergeAgg.zero, s1), s2))

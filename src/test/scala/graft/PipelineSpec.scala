@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{MinHash, SimHash}
-import graft.operators.{Multimodal, Similarity, TextPipeline}
+import graft.operators.{Multimodal, ReferenceTwins, Similarity, TextPipeline}
 
 /** Dedup / similarity / text-analysis / multimodal pipeline correctness:
   * LSH candidates verified-exact (soundness by construction), recall
@@ -233,7 +233,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val u = TextPipeline.withWinnowFingerprints(docs)
       .select(col("doc_id"), col("fps")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val h = TextPipeline.withWinnowFingerprintsHof(docs)
+    val h = ReferenceTwins.withWinnowFingerprintsHof(docs)
       .select(col("doc_id"), col("fps")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(u.keySet === h.keySet)
@@ -736,11 +736,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("KMV string sketch: exact below capacity, Jaccard within 5 sigma, partition-invariant") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     import graft.core.{Keys, Kmv}
-    import graft.operators.SketchAggs.KmvStringAgg
     val k = 256
-    val kmvU = udaf(new KmvStringAgg(Keys.DefaultK0, Keys.DefaultK1, k), ExpressionEncoder[String]())
+    val kmv = graft.operators.SketchKinds.KmvKind(Keys.DefaultK0, Keys.DefaultK1, k)
+    val kmvU = (c: org.apache.spark.sql.Column) => graft.plans.NativeAggs.column(kmv, c)
     // two groups: 200 distinct strings (< k: estimate EXACT), sharing 100
     val rows = ((0 until 200).map(i => ("a", s"g$i")) ++
       (100 until 300).map(i => ("b", s"g$i"))).toDF("grp", "v")
@@ -938,12 +937,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       syms
     }
-    assert(Bpe.encodeWord("the", ranks).toSeq === Seq("the"))
-    assert(Bpe.encodeWord("and", ranks).toSeq === Seq("and"))
-    assert(Bpe.encodeWord("there", ranks).toSeq === Seq("the", "re"))
-    assert(Bpe.encodeWord("standing", ranks).toSeq === Seq("st", "and", "in", "g"))
-    assert(Bpe.encodeWord("x", ranks).toSeq === Seq("x"))
-    assert(Bpe.encodeWord("", ranks).toSeq === Seq.empty)
+    assert(ReferenceTwins.encodeWord("the", ranks).toSeq === Seq("the"))
+    assert(ReferenceTwins.encodeWord("and", ranks).toSeq === Seq("and"))
+    assert(ReferenceTwins.encodeWord("there", ranks).toSeq === Seq("the", "re"))
+    assert(ReferenceTwins.encodeWord("standing", ranks).toSeq === Seq("st", "and", "in", "g"))
+    assert(ReferenceTwins.encodeWord("x", ranks).toSeq === Seq("x"))
+    assert(ReferenceTwins.encodeWord("", ranks).toSeq === Seq.empty)
     // the DuckDB oracle's EXACT semantics: literal string replace over the
     // 0x01-bounded form, left-to-right non-overlapping, applied TWICE per
     // rank (one replace pass consumes the shared boundary between adjacent
@@ -963,8 +962,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // replace pass gets wrong)
     Seq("inin", "ininin", "inininin", "thethe", "thethethe", "erer", "stinstin")
       .foreach { w =>
-        assert(Bpe.encodeWord(w, ranks).toSeq === sequential(w), s"list replay on '$w'")
-        assert(Bpe.encodeWord(w, ranks).toSeq === stringReplay(w), s"string replay on '$w'")
+        assert(ReferenceTwins.encodeWord(w, ranks).toSeq === sequential(w), s"list replay on '$w'")
+        assert(ReferenceTwins.encodeWord(w, ranks).toSeq === stringReplay(w), s"string replay on '$w'")
       }
     // randomized words over the merge alphabet: greedy == BOTH replays
     val rnd = new scala.util.Random(17)
@@ -976,11 +975,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     (0 until 500).foreach { _ =>
       val word = (0 until 1 + rnd.nextInt(14)).map(_ => chars(rnd.nextInt(chars.length))).mkString
-      assert(Bpe.encodeWord(word, ranks).toSeq === sequential(word),
+      assert(ReferenceTwins.encodeWord(word, ranks).toSeq === sequential(word),
         s"greedy != sequential on '$word'")
-      assert(Bpe.encodeWord(word, ranks).toSeq === stringReplay(word),
+      assert(ReferenceTwins.encodeWord(word, ranks).toSeq === stringReplay(word),
         s"greedy != string replay on '$word'")
-      assert(compiledEncode(word) === Bpe.encodeWord(word, ranks).toSeq,
+      assert(compiledEncode(word) === ReferenceTwins.encodeWord(word, ranks).toSeq,
         s"compiled id kernel != string kernel on '$word'")
     }
     // DataFrame surface: pre-tokens encode independently and concatenate
@@ -1039,11 +1038,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 25).foreach { _ =>
         val word = (0 until 1 + rnd.nextInt(16))
           .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
-        assert(Bpe.encodeWord(word, ranks).toSeq === sequential(word),
+        assert(ReferenceTwins.encodeWord(word, ranks).toSeq === sequential(word),
           s"trial $trial: greedy != sequential on '$word' with merges $uniq")
         val buf = new scala.collection.mutable.ArrayBuffer[String]()
         compiled.encodeInto(word, buf)
-        assert(buf.toSeq === Bpe.encodeWord(word, ranks).toSeq,
+        assert(buf.toSeq === ReferenceTwins.encodeWord(word, ranks).toSeq,
           s"trial $trial: compiled != string kernel on '$word' with merges $uniq")
       }
     }

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 import graft.jobs.SketchJob
-import graft.plans.{FusedTokensNative, NativeAggs, SketchMergeNative}
+import graft.plans.{FusedTokensNative, NativeAggs, SketchAgg}
 
 /** Checkpoint/resume semantics (north rule): a job killed mid-way and
   * resumed must produce final sketches byte-identical to an uninterrupted
@@ -152,7 +152,8 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     val plan = fin.queryExecution.executedPlan
     assert(collect(plan) { case e: ShuffleExchangeLike => e }.size === 1, s"finalize plan:\n$plan")
     val finalizeAggs = aggFunctions(plan)
-    assert(finalizeAggs.count(_.isInstanceOf[SketchMergeNative[_]]) >= 3, s"finalize aggregates: $finalizeAggs")
+    assert(finalizeAggs.count { case a: SketchAgg => a.isMerge; case _ => false } >= 3,
+      s"finalize aggregates: $finalizeAggs")
     assert(!finalizeAggs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), s"finalize runs a udaf: $finalizeAggs")
   }
 

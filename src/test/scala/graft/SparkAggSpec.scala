@@ -1,14 +1,20 @@
 package graft
 
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
-import graft.plans.GraftFunctions
+import graft.plans.{GraftFunctions, NativeAggs, SketchAgg}
 import graft.operators.SketchAggs._
+import graft.operators.SketchKinds._
 import graft.sources.Tokens
 
 /** Distributed-equivalence properties through REAL Spark aggregation:
@@ -105,7 +111,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("BloomMergeAgg merges per-source sketches into a global filter correctly") {
     val df = tokenDf(300, 4)
     val bloomUdaf = udaf(new BloomTokensAgg(cfg), ExpressionEncoder[Array[Int]]())
-    val mergeUdaf = udaf(new BloomMergeAgg(K0, K1), ExpressionEncoder[Array[Byte]]())
+    val mergeUdaf = (c: Column) => NativeAggs.column(Bloom(cfg), c)
     val global = df.groupBy(col("source")).agg(bloomUdaf(col("tokens")).as("sketch"))
       .agg(mergeUdaf(col("sketch"))).head().getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(global, serialBloom(df)),
@@ -144,14 +150,12 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = 50000
     val data = new scala.util.Random(5).shuffle((1 to n).toVector).toDF("x")
       .select(col("x").cast("double").as("x")).repartition(6)
-    val kllUdaf = udaf(new KllDoubleAgg(200), ExpressionEncoder[Double]())
-    val kllBytes = data.agg(kllUdaf(col("x"))).head().getAs[Array[Byte]](0)
+    val kllBytes = data.agg(NativeAggs.column(KllKind(200), col("x"))).head().getAs[Array[Byte]](0)
     val kll = Kll.fromBytes(kllBytes)
     assert(kll.n === n.toLong)
     for (q <- Seq(0.1, 0.5, 0.9))
       assert(math.abs(kll.quantile(q) / n - q) <= Kll.normalizedRankError(200) * 2)
-    val tdUdaf = udaf(new TDigestDoubleAgg(100), ExpressionEncoder[Double]())
-    val tdBytes = data.agg(tdUdaf(col("x"))).head().getAs[Array[Byte]](0)
+    val tdBytes = data.agg(NativeAggs.column(TDigestKind(100), col("x"))).head().getAs[Array[Byte]](0)
     val td = TDigest.fromBytes(tdBytes)
     assert(math.abs(td.n - n) < 1e-6)
     for (q <- Seq(0.1, 0.5, 0.9))
@@ -183,7 +187,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     // shuffle-path (serialize/deserialize of the native buffer) exercised
     val repart = df.repartition(9).groupBy(col("source"))
       .agg(graft.plans.NativeAggs.bloomTokensNative(col("tokens")).as("sk"))
-      .agg(udaf(new BloomMergeAgg(K0, K1), ExpressionEncoder[Array[Byte]]())(col("sk")))
+      .agg(NativeAggs.column(Bloom(cfg), col("sk")))
       .head().getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(repart, udafBloom))
   }
@@ -228,11 +232,11 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val partials = spark.createDataFrame(
       spark.sparkContext.parallelize(built.collect().toSeq, 3), built.schema)
     partials.createOrReplaceTempView("merge_partials")
-    val binEnc = ExpressionEncoder[Array[Byte]]()
+    // the SQL names' default kinds, as explicit Column-API merges
     val viaUdaf = partials.groupBy(col("source")).agg(
-      udaf(new BloomMergeAgg(K0, K1), binEnc)(col("b")),
-      udaf(new graft.jobs.HllBytesMergeAgg, binEnc)(col("h")),
-      udaf(new graft.jobs.CmsBytesMergeAgg, binEnc)(col("c")))
+      NativeAggs.column(Bloom(cfg), col("b")),
+      NativeAggs.column(HllKind(K0, K1, 12), col("h")),
+      NativeAggs.column(Cms(cms), col("c")))
       .collect().map(r => r.getString(0) -> (1 to 3).map(i => r.getAs[Array[Byte]](i).toSeq)).toMap
     val sqlDf = spark.sql(
       """SELECT source, graft_bloom_merge(b), graft_hll_merge(h), graft_cms_merge(c)
@@ -249,8 +253,8 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
         a.aggregateExpressions.map(_.aggregateFunction)
     }.flatten
-    assert(funcs.count(_.isInstanceOf[graft.plans.SketchMergeNative[_]]) >= 3 &&
-      !funcs.exists(_.isInstanceOf[org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _]]),
+    assert(funcs.count { case a: SketchAgg => a.isMerge; case _ => false } >= 3 &&
+      !funcs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]),
       s"SQL merges must run natively: $funcs")
   }
 
@@ -427,8 +431,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s.topK(1).head._1 === 7L, "the dominant-mass key must rank first")
     // distributed merge over partitions keeps the guarantees
     val bytesParts = rows.toDF("key", "w").repartition(7)
-      .agg(udaf(new HeavyHittersWeightedLongAgg(64),
-        ExpressionEncoder[(Long, Long)]())(col("key"), col("w")))
+      .agg(NativeAggs.column(HeavyHitters(64), col("key"), col("w")))
       .head().getAs[Array[Byte]](0)
     val sp = graft.core.FrequentItems.fromBytes(bytesParts)
     assert(sp.total === totalMass && sp.decremented * sp.capacity <= sp.total)
@@ -472,8 +475,8 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val serialBytes = BottomK.toBytes(sh, sv, ss, BlockedBloom.TypeTag.Long,
       SipHash.hashLong(K0, K1, K0 ^ K1))
     for (parts <- Seq(1, 3, 8)) {
-      val agg = udaf(new BottomKLongAgg(K0, K1, 64), ExpressionEncoder[Long]())
-      val bytes = elems.toDF("x").repartition(parts).agg(agg(col("x")))
+      val bytes = elems.toDF("x").repartition(parts)
+        .agg(NativeAggs.column(Sample(K0, K1, 64, weighted = false), col("x")))
         .head().getAs[Array[Byte]](0)
       assert(bytes.sameElements(serialBytes), s"BottomK at $parts partitions differs from serial")
     }
@@ -508,8 +511,8 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val serialBytes = BottomK.toBytesStr(sh, sv, ss, SipHash.hashLong(K0, K1, K0 ^ K1))
     for (parts <- Seq(1, 4)) {
-      val agg = udaf(new BottomKStringAgg(K0, K1, 64), ExpressionEncoder[String]())
-      val bytes = elems.toDF("x").repartition(parts).agg(agg(col("x")))
+      val bytes = elems.toDF("x").repartition(parts)
+        .agg(NativeAggs.column(StringSample(K0, K1, 64, weighted = false), col("x")))
         .head().getAs[Array[Byte]](0)
       assert(bytes.sameElements(serialBytes), s"string BottomK at $parts partitions != serial")
     }
@@ -538,7 +541,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("KMV agg over Spark partitions: retained bottom-k identical to serial build, any parallelism") {
-    val kmvUdaf = udaf(new KmvTokensAgg(K0, K1, 64), ExpressionEncoder[Array[Int]]())
+    val kmvUdaf = (c: Column) => NativeAggs.column(KmvKind(K0, K1, 64), c)
     // serial truth
     val serialHashes = Kmv.emptyHashes(64)
     var serialSize = 0
@@ -624,5 +627,118 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     // schema is the input_hint shape
     val schema = Tokens.table(spark, dir).schema
     assert(schema.fieldNames.toSeq === Seq("doc_id", "tokens", "n_tok", "source"))
+  }
+
+  /** Every `graft_*` SQL aggregate call, over the `agg_names` view. */
+  private val sqlAggregateCalls = Seq(
+    "graft_bloom_tokens(tokens)", "graft_bloom_tokens_newcount(tokens)",
+    "graft_bloom_tokens_native(tokens)", "graft_fused_tokens_native(tokens)",
+    "graft_hll_tokens(tokens)", "graft_cms_tokens(tokens)", "graft_kmv_tokens(tokens)",
+    "graft_kmv_long(v)", "graft_kll(x)", "graft_tdigest(x)", "graft_heavyhitter(v)",
+    "graft_heavyhitter_weighted(v, w)", "graft_sample_bottomk(v)", "graft_sample_bottomk_str(s)",
+    "graft_sample_weighted(v, w)", "graft_sample_weighted_str(s, w)",
+    "graft_bloom_merge(b)", "graft_hll_merge(h)", "graft_cms_merge(c)", "graft_kmv_merge(kv)",
+    "graft_kll_merge(kl)", "graft_tdigest_merge(td)", "graft_heavyhitter_merge(hh)",
+    "graft_sample_merge(sm)", "graft_sample_str_merge(ss)", "graft_sample_weighted_merge(sw)",
+    "graft_sample_weighted_str_merge(sws)")
+
+  private def aggNamesView(): Unit = {
+    GraftFunctions.register(spark)
+    tokenDf(120, 3).selectExpr("tokens", "CAST(n_tok AS BIGINT) AS v", "CAST(n_tok AS DOUBLE) AS x",
+      "CAST(1 + n_tok % 3 AS BIGINT) AS w", "doc_id AS s").createOrReplaceTempView("agg_src")
+    spark.sql(
+      """SELECT *,
+        |  (SELECT graft_bloom_tokens(tokens) FROM agg_src) AS b,
+        |  (SELECT graft_hll_tokens(tokens) FROM agg_src) AS h,
+        |  (SELECT graft_cms_tokens(tokens) FROM agg_src) AS c,
+        |  (SELECT graft_kmv_long(v) FROM agg_src) AS kv,
+        |  (SELECT graft_kll(x) FROM agg_src) AS kl,
+        |  (SELECT graft_tdigest(x) FROM agg_src) AS td,
+        |  (SELECT graft_heavyhitter(v) FROM agg_src) AS hh,
+        |  (SELECT graft_sample_bottomk(v) FROM agg_src) AS sm,
+        |  (SELECT graft_sample_bottomk_str(s) FROM agg_src) AS ss,
+        |  (SELECT graft_sample_weighted(v, w) FROM agg_src) AS sw,
+        |  (SELECT graft_sample_weighted_str(s, w) FROM agg_src) AS sws
+        |FROM agg_src""".stripMargin).createOrReplaceTempView("agg_names")
+  }
+
+  private def scalaAggregators(plan: LogicalPlan): Seq[ScalaAggregator[_, _, _]] =
+    plan.collect { case p => p.expressions.flatMap(_.collect { case a: ScalaAggregator[_, _, _] => a }) }.flatten
+
+  test("no analyzed plan of a sketch aggregate holds a ScalaAggregator (SQL, streaming, typed, job)") {
+    aggNamesView()
+    sqlAggregateCalls.foreach { call =>
+      val analyzed = spark.sql(s"SELECT $call FROM agg_names").queryExecution.analyzed
+      assert(scalaAggregators(analyzed).isEmpty, s"$call runs a udaf")
+      val funcs = analyzed.collect { case a: Aggregate =>
+        a.aggregateExpressions.flatMap(_.collect { case e: AggregateExpression => e.aggregateFunction })
+      }.flatten
+      assert(funcs.nonEmpty && funcs.forall(f =>
+        f.isInstanceOf[SketchAgg] || f.isInstanceOf[graft.plans.FusedTokensNative]), s"$call: $funcs")
+    }
+    val windowed = graft.streaming.StreamingSketch.perSourceWindowedSketches(
+      tokenDf(50, 2).withColumn("ts", current_timestamp()), "ts", "1 minute", "5 minutes", cfg, 12)
+    assert(scalaAggregators(windowed.queryExecution.analyzed).isEmpty, "windowed sketches run a udaf")
+    import spark.implicits._
+    val typed = graft.operators.TypedSketchOps.perSourceSketches(tokenDf(50, 2).as[Tokens.TokenRow])
+    assert(scalaAggregators(typed.queryExecution.analyzed).isEmpty, "TypedSketchOps runs a udaf")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_agg_plan").toString
+    val analyzed = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        analyzed.synchronized(analyzed += qe.analyzed)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.jobs.SketchJob.runIncrement(spark, tokenDf(60, 2), ckpt)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (analyzed.synchronized(analyzed.isEmpty) && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val fin = graft.jobs.SketchJob.finalizeSketches(spark, ckpt)
+    assert(analyzed.nonEmpty)
+    (analyzed.synchronized(analyzed.toList) :+ fin.queryExecution.analyzed).foreach(p =>
+      assert(scalaAggregators(p).isEmpty, s"SketchJob runs a udaf:\n$p"))
+  }
+
+  test("sketch aggregates reject unsupported input types at analysis") {
+    aggNamesView()
+    for (bad <- Seq("graft_kll('x')", "graft_hll_merge(1)", "graft_bloom_tokens(v)",
+        "graft_kmv_long(s)", "graft_cms_merge(tokens)", "graft_bloom_tokens_newcount(b)",
+        "graft_sample_weighted(v, x)", "graft_tdigest(tokens)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $bad FROM agg_names"))
+      assert(e.getMessage.contains(bad.takeWhile(_ != '(')), s"$bad: ${e.getMessage}")
+    }
+    // SQL names keep their arity: a weighted sample needs its weight, a
+    // plain build takes none
+    for (bad <- Seq("graft_sample_weighted(v)", "graft_kll(x, w)")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $bad FROM agg_names"))
+      assert(e.getMessage.contains(bad.takeWhile(_ != '(')), s"$bad: ${e.getMessage}")
+    }
+  }
+
+  test("numeric sketch builds skip null rows (the udaf path read a null as 0)") {
+    import spark.implicits._
+    aggNamesView()
+    val withNulls = Seq[(Option[Double], Option[Long], Option[Long])](
+      (None, None, Some(5L)), (Some(2.0), Some(3L), None), (Some(4.0), Some(9L), Some(2L)),
+      (Some(8.0), None, Some(1L))).toDF("x", "v", "w")
+    val clean = Seq((2.0, 3L, 1L), (4.0, 9L, 2L), (8.0, 0L, 1L)).toDF("x", "v", "w")
+    def out(df: DataFrame, call: String): Array[Byte] = {
+      // one partition each: the KLL wire form carries merge history
+      df.coalesce(1).createOrReplaceTempView("nulls_in")
+      spark.sql(s"SELECT $call FROM nulls_in").head().getAs[Array[Byte]](0)
+    }
+    assert(Kll.fromBytes(out(withNulls, "graft_kll(x)")).n === 3L)
+    assert(java.util.Arrays.equals(out(withNulls, "graft_kll(x)"), out(clean, "graft_kll(x)")))
+    assert(java.util.Arrays.equals(out(withNulls, "graft_tdigest(x)"), out(clean, "graft_tdigest(x)")))
+    // v: rows (3), (9) survive; w null skips a weighted row
+    val cleanV = Seq(3L, 9L).toDF("v")
+    for (call <- Seq("graft_kmv_long(v)", "graft_heavyhitter(v)", "graft_sample_bottomk(v)"))
+      assert(java.util.Arrays.equals(out(withNulls, call), out(cleanV, call)), call)
+    val cleanVW = Seq((9L, 2L)).toDF("v", "w")
+    for (call <- Seq("graft_heavyhitter_weighted(v, w)", "graft_sample_weighted(v, w)"))
+      assert(java.util.Arrays.equals(out(withNulls, call), out(cleanVW, call)), call)
   }
 }

@@ -127,4 +127,55 @@ class GoldenFilesSpec extends AnyFunSuite {
     assert(CountMin.totalCount(buf2, cms) === 3000L)
     assert(CountMin.estimateInt(buf2, cms, 5) >= 30L)
   }
+
+  private val keyHash = SipHash.hashLong(k0, k1, k0 ^ k1)
+  private def utf8(i: Int): Array[Byte] = s"doc-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  test("bottomk string golden file: byte-identical rebuild; the weighted reader rejects it") {
+    val (h, _) = BottomK.emptyBuffers(32)
+    val v = new Array[Array[Byte]](32)
+    var s = 0
+    (1 to 5000).foreach { i => val b = utf8(i); s = BottomK.addG(h, v, s, SipHash.hash64(k0, k1, b), b) }
+    val stored = golden("bottomk_str_32.bin")
+    assert(java.util.Arrays.equals(BottomK.toBytesStr(h, v, s, keyHash), stored), "string BottomK golden drift")
+    val (h2, v2, s2, kh) = BottomK.fromBytesStr(stored)
+    assert(s2 === 32 && kh === keyHash)
+    (0 until s2).foreach(i => assert(h2(i) === SipHash.hash64(k0, k1, v2(i))))
+    val e = intercept[IllegalArgumentException](BottomK.fromBytesStrWeighted(stored))
+    assert(e.getMessage.contains("must not mix"))
+  }
+
+  test("bottomk weighted golden file: byte-identical rebuild; the uniform reader rejects it") {
+    val (h, v) = BottomK.emptyBuffers(32)
+    var s = 0
+    (1L to 5000L).foreach(x => s = BottomK.addW(h, v, s,
+      BottomK.esKey(SipHash.hashLong(k0, k1, x), (1 + x % 7).toDouble), x, BottomK.cmpLong))
+    val stored = golden("bottomk_weighted_32.bin")
+    assert(java.util.Arrays.equals(
+      BottomK.toBytesWeighted(h, v, s, BlockedBloom.TypeTag.Long, keyHash), stored), "weighted BottomK golden drift")
+    val (h2, v2, s2, tag, _) = BottomK.fromBytesWeighted(stored)
+    assert(tag === BlockedBloom.TypeTag.Long && s2 === 32)
+    (0 until s2).foreach(i => assert(h2(i) ===
+      BottomK.esKey(SipHash.hashLong(k0, k1, v2(i)), (1 + v2(i) % 7).toDouble)))
+    val e = intercept[IllegalArgumentException](BottomK.fromBytes(stored))
+    assert(e.getMessage.contains("must not mix"))
+  }
+
+  test("bottomk weighted string golden file: byte-identical rebuild; the uniform reader rejects it") {
+    val (h, _) = BottomK.emptyBuffers(32)
+    val v = new Array[Array[Byte]](32)
+    var s = 0
+    (1 to 5000).foreach { i =>
+      val b = utf8(i)
+      s = BottomK.addW(h, v, s, BottomK.esKey(SipHash.hash64(k0, k1, b), (1 + i % 7).toDouble), b, BottomK.cmpUtf8)
+    }
+    val stored = golden("bottomk_weighted_str_32.bin")
+    assert(java.util.Arrays.equals(BottomK.toBytesStrWeighted(h, v, s, keyHash), stored),
+      "weighted string BottomK golden drift")
+    val (_, v2, s2, kh) = BottomK.fromBytesStrWeighted(stored)
+    assert(s2 === 32 && kh === keyHash)
+    assert(v2.take(s2).forall(b => new String(b, "UTF-8").startsWith("doc-")))
+    val e = intercept[IllegalArgumentException](BottomK.fromBytesStr(stored))
+    assert(e.getMessage.contains("must not mix"))
+  }
 }

@@ -292,14 +292,16 @@ class SketchFamilySpec extends AnyFunSuite {
     val hA = Hll.empty(10); val hB = Hll.empty(10)
     (1 to 100).foreach(i => Hll.addHash(hA, 10, SipHash.hashInt(1, 2, i)))
     (1 to 100).foreach(i => Hll.addHash(hB, 10, SipHash.hashInt(3, 4, i)))
-    val hllMerge = new graft.jobs.HllBytesMergeAgg()
+    val hllMerge = new graft.plans.DirectSketchAgg(
+      graft.operators.SketchKinds.HllKind(1, 2, 10), org.apache.spark.sql.types.BinaryType)
     assertThrows[IllegalArgumentException](
       hllMerge.reduce(hllMerge.reduce(hllMerge.zero, Hll.toBytes(hA, 10, 1L, 111L)),
         Hll.toBytes(hB, 10, 1L, 222L)))
     val cmsA = CmsConfig(1, 2, 5, 11); val cmsB = CmsConfig(3, 4, 5, 11)
     val bufA = CountMin.empty(cmsA); val bufB = CountMin.empty(cmsB)
     CountMin.addInt(bufA, cmsA, 7); CountMin.addInt(bufB, cmsB, 7)
-    val cmsMerge = new graft.jobs.CmsBytesMergeAgg()
+    val cmsMerge = new graft.plans.DirectSketchAgg(
+      graft.operators.SketchKinds.Cms(cmsA), org.apache.spark.sql.types.BinaryType)
     assertThrows[IllegalArgumentException](
       cmsMerge.reduce(cmsMerge.reduce(cmsMerge.zero, CountMin.toBytes(bufA, cmsA, 1L)),
         CountMin.toBytes(bufB, cmsB, 1L)))

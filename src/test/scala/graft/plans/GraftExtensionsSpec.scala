@@ -117,4 +117,36 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(err.getMessage.contains("different SipHash keys") ||
       Option(err.getCause).exists(_.getMessage.contains("different SipHash keys")))
   }
+
+  test("an extensions-only session resolves and runs every graft_* aggregate") {
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  ('a', array(1, 2, 3), 5L, 2.5D, 2L, 'doc-1'),
+        |  ('a', array(3, 4), 7L, 4.0D, 1L, 'doc-2'),
+        |  ('b', CAST(NULL AS ARRAY<INT>), 5L, 1.0D, 3L, CAST(NULL AS STRING))
+        |  AS t(g, tokens, v, x, w, s)""".stripMargin).createOrReplaceTempView("ext_in")
+    val builds = Map(
+      "graft_bloom_tokens(tokens)" -> "graft_bloom_merge", "graft_hll_tokens(tokens)" -> "graft_hll_merge",
+      "graft_cms_tokens(tokens)" -> "graft_cms_merge", "graft_kmv_tokens(tokens)" -> "graft_kmv_merge",
+      "graft_kll(x)" -> "graft_kll_merge", "graft_tdigest(x)" -> "graft_tdigest_merge",
+      "graft_heavyhitter(v)" -> "graft_heavyhitter_merge",
+      "graft_sample_bottomk(v)" -> "graft_sample_merge",
+      "graft_sample_bottomk_str(s)" -> "graft_sample_str_merge",
+      "graft_sample_weighted(v, w)" -> "graft_sample_weighted_merge",
+      "graft_sample_weighted_str(s, w)" -> "graft_sample_weighted_str_merge")
+    val others = Seq("graft_bloom_tokens_newcount(tokens)", "graft_bloom_tokens_native(tokens)",
+      "graft_fused_tokens_native(tokens)", "graft_kmv_long(v)", "graft_heavyhitter_weighted(v, w)")
+    val names = (builds.keys ++ builds.values.map(_.takeWhile(_ != '(')) ++ others)
+      .map(_.takeWhile(_ != '(')).toSet
+    assert(names.size === 27)
+    for ((build, merge) <- builds) {
+      val rows = spark.sql(
+        s"SELECT $merge(sk) FROM (SELECT g, $build AS sk FROM ext_in GROUP BY g)").collect()
+      assert(rows.length === 1 && rows.head.getAs[Array[Byte]](0).nonEmpty, s"$merge over $build")
+    }
+    for (agg <- others) {
+      val rows = spark.sql(s"SELECT g, $agg FROM ext_in GROUP BY g").collect()
+      assert(rows.length === 2 && !rows.exists(_.isNullAt(1)), agg)
+    }
+  }
 }

@@ -270,7 +270,7 @@ class SketchReadersSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rng = new scala.util.Random(7)
     val vecs = (0 until 200).map(i => (i.toLong, Array.fill(64)(rng.nextFloat() * 2 - 1)))
     val df = vecs.toDF("id", "emb").repartition(3)
-    val udfBand = udf(new graft.operators.Similarity.SrpChunker(64, 8, 8))
+    val udfBand = udf(new graft.operators.ReferenceTwins.SrpChunker(64, 8, 8))
     val both = df.select(col("id"),
       udfBand(col("emb")).as("u"),
       graft.plans.VectorFunctions.srpBands(col("emb"), 64, 8).as("n"))
