@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.operators.{Multimodal, Similarity, TextPipeline}
+import graft.operators.SketchKinds.{KmvJaccard, SampleValues}
 
 /** Training-data pipeline queries (dedup / similarity / text analysis /
   * multimodal) — the beyond-the-reference operator set. Exact-valued ones
@@ -247,7 +248,7 @@ object PipelineQueries {
       // nothing)
       aggW(col("doc_id"), when(col("in_frame"), col("word_count")).otherwise(0L)).as("sk"))
     val withVals = stats.withColumn("vals",
-      graft.plans.SketchReaders.sampleWeightedValues(col("sk")))
+      SampleValues(weighted = true).column(col("sk")))
     val nonMembers = withVals
       .select(col("source"), explode(col("vals")).as("doc_id"))
       .join(flagged.where(col("in_frame")).select(col("source"), col("doc_id")),
@@ -705,7 +706,7 @@ object PipelineQueries {
       .withColumn("union_exact", col("n_a") + col("n_b") - col("inter_exact"))
     val withEst = pairs
       .withColumn("est_j",
-        graft.plans.SketchReaders.kmvJaccard(col("sk_a"), col("sk_b")))
+        KmvJaccard.column(col("sk_a"), col("sk_b")))
       .withColumn("exact_j", col("inter_exact").cast("double") / col("union_exact"))
     // sigma(J-hat) = sqrt(J(1-J)/k); 5 sigma + 0.01 absolute floor —
     // the q_kmv_intersect_bound margin, deterministic for the fixed key

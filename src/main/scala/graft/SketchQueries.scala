@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core._
-import graft.plans.{GraftFunctions, NativeAggs, SketchReaders}
+import graft.plans.{GraftFunctions, NativeAggs}
 import graft.operators.SketchKinds._
 import graft.sources.Tokens
 
@@ -271,7 +271,7 @@ object SketchQueries {
       .agg(count(lit(1)).as("exact_inter"))
     // merge path: per-status sketches -> one global union sketch (1 row)
     val globalEst = sk.agg(kmvAgg(col("sk")).as("g"))
-      .select(SketchReaders.kmvEstimate(col("g")).as("g_est"))
+      .select(KmvEstimate.column(col("g")).as("g_est"))
     val globalExact = d.select(col("custkey")).distinct()
       .agg(count(lit(1)).as("g_exact"))
     // second sketch family at HALF capacity: the pure-SQL pairwise union
@@ -288,16 +288,16 @@ object SketchQueries {
         col("sb.status") === col("sb_status"))
       .select(
         col("sa.status").as("status_a"), col("sb.status").as("status_b"),
-        SketchReaders.kmvEstimate(col("sa.sk")).as("est_a"),
-        SketchReaders.kmvEstimate(col("sb.sk")).as("est_b"),
-        SketchReaders.kmvJaccard(col("sa.sk"), col("sb.sk")).as("est_j"),
-        SketchReaders.kmvIntersect(col("sa.sk"), col("sb.sk")).as("est_inter"),
-        SketchReaders.kmvDifference(col("sa.sk"), col("sb.sk")).as("est_diff"),
+        KmvEstimate.column(col("sa.sk")).as("est_a"),
+        KmvEstimate.column(col("sb.sk")).as("est_b"),
+        KmvJaccard.column(col("sa.sk"), col("sb.sk")).as("est_j"),
+        KmvIntersect.column(col("sa.sk"), col("sb.sk")).as("est_inter"),
+        KmvDifference.column(col("sa.sk"), col("sb.sk")).as("est_diff"),
         // graft_kmv_estimate(graft_kmv_union(a, b)): union cardinality in pure
         // composed SQL scalars (same capacity, and cross-capacity fold-down)
-        SketchReaders.kmvEstimate(SketchReaders.kmvUnion(col("sa.sk"), col("sb.sk")))
+        KmvEstimate.column(KmvUnion.column(col("sa.sk"), col("sb.sk")))
           .as("est_union"),
-        SketchReaders.kmvEstimate(SketchReaders.kmvUnion(col("sa.sk"), col("sk_small")))
+        KmvEstimate.column(KmvUnion.column(col("sa.sk"), col("sk_small")))
           .as("est_union_cc"))
     val ndA = exactPer.select(col("status").as("status_a"), col("nd").as("nd_a"))
     val ndB = exactPer.select(col("status").as("status_b"), col("nd").as("nd_b"))
@@ -347,7 +347,7 @@ object SketchQueries {
     GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val est = t.groupBy(col("source")).agg(hllAgg(col("tokens")).as("sk"))
-      .select(col("source"), SketchReaders.hllEstimate(col("sk")).as("est"))
+      .select(col("source"), HllEstimate.column(col("sk")).as("est"))
     val exact = exploded(t).groupBy(col("source"))
       .agg(countDistinct(col("token")).as("exact"))
     est.join(exact, "source")
@@ -363,7 +363,7 @@ object SketchQueries {
     GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val est = t.groupBy(col("source")).agg(hllAgg(col("doc_id")).as("sk"))
-      .select(col("source"), SketchReaders.hllEstimate(col("sk")).as("est"))
+      .select(col("source"), HllEstimate.column(col("sk")).as("est"))
     val exact = t.groupBy(col("source")).agg(countDistinct(col("doc_id")).as("exact"))
     est.join(exact, "source")
       .select(
@@ -387,8 +387,8 @@ object SketchQueries {
       .select(
         col("source"),
         {
-          val est = SketchReaders.cmsEstimate(col("sk"), col("token"))
-          val n = SketchReaders.cmsTotal(col("sk"))
+          val est = CmsEstimate().column(col("sk"), col("token"))
+          val n = CmsTotal().column(col("sk"))
           (est >= col("cnt") &&
             est <= col("cnt") + greatest(ceil(n * lit(2 * cmsCfg.epsilon)), lit(2.0))).as("within_bound")
         })
@@ -413,7 +413,7 @@ object SketchQueries {
     val sk = t.groupBy(col("source"))
       .agg((if (isKll) kllAgg _ else tdigestAgg _)(col("n_tok").cast("double")).as("sk"))
     val estCols = qs.map { case (tag, q) =>
-      (if (isKll) SketchReaders.kllQuantile _ else SketchReaders.tdigestQuantile _)(
+      (if (isKll) KllQuantile else TDigestQuantile).column(
         col("sk"), lit(q)).as(s"est_$tag")
     }
     val ests = sk.select(col("source") +: estCols: _*)
@@ -450,8 +450,8 @@ object SketchQueries {
     val qs = Seq(25 -> 0.25, 50 -> 0.5, 75 -> 0.75)
     val est = merged.select(
       qs.flatMap { case (tag, q) => Seq(
-        SketchReaders.kllQuantile(col("kll"), lit(q)).as(s"kll_$tag"),
-        SketchReaders.tdigestQuantile(col("td"), lit(q)).as(s"td_$tag")) }: _*)
+        KllQuantile.column(col("kll"), lit(q)).as(s"kll_$tag"),
+        TDigestQuantile.column(col("td"), lit(q)).as(s"td_$tag")) }: _*)
     val withEst = t.crossJoin(broadcast(est))
     val epsKll = Kll.normalizedRankError(kllK) * 2.0
     val epsTd = 0.05
@@ -485,7 +485,7 @@ object SketchQueries {
     val est = candidates
       .join(broadcast(sk), "source")
       .select(col("source"), col("token"),
-        SketchReaders.cmsEstimate(col("sk"), col("token")).as("est"))
+        CmsEstimate().column(col("sk"), col("token")).as("est"))
     val w = Window.partitionBy(col("source")).orderBy(col("est").desc, col("token").asc)
     est.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -588,7 +588,7 @@ object SketchQueries {
     GraftFunctions.registerExpressions(spark)
     val events = spark.read.parquet(s"$dir/events.parquet")
     val est = events.groupBy(col("event_type")).agg(hllAgg(col("user_id")).as("sk"))
-      .select(col("event_type"), SketchReaders.hllEstimate(col("sk")).as("est"))
+      .select(col("event_type"), HllEstimate.column(col("sk")).as("est"))
     val exact = events.groupBy(col("event_type")).agg(countDistinct(col("user_id")).as("exact"))
     est.join(exact, "event_type")
       .select(
@@ -647,7 +647,7 @@ object SketchQueries {
         col("n_exact_users"),
         (col("hll_m") === col("hll_d")).as("hll_merge_eq_direct"),
         (col("kmv_m") === col("kmv_d")).as("kmv_merge_eq_direct"),
-        (abs(SketchReaders.hllEstimate(col("hll_m")) - col("n_exact_users")) <=
+        (abs(HllEstimate.column(col("hll_m")) - col("n_exact_users")) <=
           greatest(col("n_exact_users") * lit(4 * Hll.stdError(hllP)), lit(3.0)))
           .as("est_within_bound"),
         col("partials_sparse_encoded"))
@@ -736,7 +736,7 @@ object SketchQueries {
       capacity: Int): DataFrame = {
     GraftFunctions.registerExpressions(spark)
     val meta = sk
-      .select(col("source"), SketchReaders.heavyHitterSummary(col("sk")).as("s"))
+      .select(col("source"), HeavyHitterSummary.column(col("sk")).as("s"))
       .select(col("source"), col("s.error").as("d"), col("s.total").as("n"),
         col("s.topk").as("entries"))
     val entries = meta.select(col("source"), col("d"), explode(col("entries")).as("e"))
@@ -888,7 +888,7 @@ object SketchQueries {
       .groupBy(col("source")).agg(mergeU(col("partial")).as("sk_merged"))
     val exact = docs.groupBy(col("source")).agg(countDistinct(col("doc_id")).as("nd"))
     val withVals = direct.select(col("source"), col("sk"),
-      SketchReaders.sampleValues(col("sk")).as("vals"))
+      SampleValues(weighted = false).column(col("sk")).as("vals"))
     val nonMembers = withVals
       .select(col("source"), explode(col("vals")).as("doc_id"))
       .join(docs, Seq("source", "doc_id"), "left_anti")
@@ -910,7 +910,7 @@ object SketchQueries {
       .agg(strAggU(col("doc_id_str")).as("partial"))
       .groupBy(col("source")).agg(strMergeU(col("partial")).as("ssk_merged"))
     val strWithVals = strDirect.select(col("source"), col("ssk"),
-      SketchReaders.sampleStrings(col("ssk")).as("svals"))
+      SampleStrings(weighted = false).column(col("ssk")).as("svals"))
     val strNonMembers = strWithVals
       .select(col("source"), explode(col("svals")).as("doc_id_str"))
       .join(docsStr, Seq("source", "doc_id_str"), "left_anti")
@@ -986,7 +986,7 @@ object SketchQueries {
       .groupBy(col("source")).agg(mergeW(col("partial")).as("sk_merged"))
     val exact = docs.groupBy(col("source")).agg(countDistinct(col("doc_id")).as("nd"))
     val withVals = direct.select(col("source"), col("sk"),
-      SketchReaders.sampleWeightedValues(col("sk")).as("vals"))
+      SampleValues(weighted = true).column(col("sk")).as("vals"))
     val nonMembers = withVals
       .select(col("source"), explode(col("vals")).as("doc_id"))
       .join(docs, Seq("source", "doc_id"), "left_anti")
@@ -1022,7 +1022,7 @@ object SketchQueries {
       .agg(strAggW(col("doc_id_str"), col("w")).as("partial"))
       .groupBy(col("source")).agg(strMergeW(col("partial")).as("wssk_merged"))
     val strWithVals = strDirect.select(col("source"), col("wssk"),
-      SketchReaders.sampleWeightedStrings(col("wssk")).as("wsvals"))
+      SampleStrings(weighted = true).column(col("wssk")).as("wsvals"))
     val strRanked = docsStr
       .withColumn("es_key", esKeyOf(GraftFunctions.sipHash64(col("doc_id_str"), K0, K1)))
       .withColumn("rn", row_number().over(

@@ -103,28 +103,9 @@ final class KllSketch(val k: Int) extends Serializable {
     r
   }
 
-  /** Quantile estimate for q in [0,1]. */
-  def quantile(q: Double): Double = {
-    require(q >= 0.0 && q <= 1.0, s"quantile q=$q")
-    if (count == 0L) return Double.NaN
-    val items = ArrayBuffer.empty[(Double, Long)]
-    var h = 0
-    while (h < levels.length) {
-      val w = 1L << h
-      levels(h).foreach(v => items += ((v, w)))
-      h += 1
-    }
-    val sorted = items.sortBy(_._1)
-    val target = math.max(1L, math.ceil(q * count).toLong)
-    var cum = 0L
-    var i = 0
-    while (i < sorted.length) {
-      cum += sorted(i)._2
-      if (cum >= target) return sorted(i)._1
-      i += 1
-    }
-    sorted.last._1
-  }
+  /** Quantile estimate for q in [0,1]; sorts the retained items, so a
+    * caller with many queries builds one [[KllSortedView]] instead. */
+  def quantile(q: Double): Double = new KllSortedView(this).quantile(q)
 
   def toBytes: Array[Byte] = {
     val numItems = totalItems
@@ -134,6 +115,40 @@ final class KllSketch(val k: Int) extends Serializable {
     levels.foreach(l => bb.putInt(l.length))
     levels.foreach(_.foreach(bb.putDouble))
     bb.array()
+  }
+}
+
+/** A KLL sketch's retained items sorted by value, with cumulative weights:
+  * built once in O(m log m) for m items, then each quantile is a binary
+  * search. */
+final class KllSortedView(sketch: KllSketch) {
+  private val count = sketch.count
+  private val (values, cumWeights) = {
+    val items = ArrayBuffer.empty[(Double, Long)]
+    var h = 0
+    while (h < sketch.levels.length) {
+      val w = 1L << h
+      sketch.levels(h).foreach(v => items += ((v, w)))
+      h += 1
+    }
+    val sorted = items.sortBy(_._1)
+    (sorted.map(_._1).toArray, sorted.scanLeft(0L)(_ + _._2).tail.toArray)
+  }
+
+  /** The smallest item whose cumulative weight reaches ceil(q * n) (at
+    * least 1); the largest item if none does. */
+  def quantile(q: Double): Double = {
+    require(q >= 0.0 && q <= 1.0, s"quantile q=$q")
+    if (count == 0L) return Double.NaN
+    require(values.nonEmpty, s"KLL sketch of n=$count retains no items")
+    val target = math.max(1L, math.ceil(q * count).toLong)
+    var lo = 0
+    var hi = values.length - 1
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (cumWeights(mid) >= target) hi = mid else lo = mid + 1
+    }
+    values(lo)
   }
 }
 

@@ -1,6 +1,11 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
 
 import graft.core._
@@ -71,26 +76,65 @@ object SketchJob {
       graft.plans.GraftFunctions.sipHash64(coalesce(col("doc_id"), lit("")), k0, k1), 1)
       % buckets).cast("int")
 
+  /** The checkpoint's parquet schema, one row per (bucket, source): every
+    * increment writes it and every reader reads with it, so no read infers
+    * a schema (a one-task Spark job per read). */
+  val CheckpointSchema: StructType = StructType(Seq(
+    StructField("bucket", IntegerType),
+    StructField("source", StringType),
+    StructField("bloom", BinaryType),
+    StructField("hll", BinaryType),
+    StructField("cms", BinaryType),
+    StructField("n_rows", LongType),
+    StructField("n_tokens", LongType),
+    StructField("committed_at_ms", LongType),
+    StructField("build_host", StringType)))
+
   /** Run directories with a completed (_SUCCESS-marked) parquet commit.
     * Each runIncrement writes its own run dir, so commits are atomic at
     * run granularity: a crashed run leaves no _SUCCESS and is ignored
     * entirely on resume (no partially-visible buckets). Hadoop FS APIs so
-    * checkpoints can live on HDFS/S3, not only the local FS. */
+    * checkpoints can live on HDFS/S3, not only the local FS. Each run dir's
+    * schema is checked against [[CheckpointSchema]] from one parquet footer,
+    * read on the driver. */
   private def committedRunDirs(spark: SparkSession, ckptDir: String): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(ckptDir)
+    val path = new Path(ckptDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) Seq.empty
     else
       fs.listStatus(path).toSeq
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("run_"))
-        .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.toString)
+        .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
+        .map { st =>
+          fs.listStatus(st.getPath).map(_.getPath).find(_.getName.endsWith(".parquet"))
+            .foreach(file => checkRunSchema(spark, st.getPath, file))
+          st.getPath.toString
+        }
+  }
+
+  /** Fails unless `file`'s footer holds every [[CheckpointSchema]] column
+    * with its type: reading a dir that lacks one with the declared schema
+    * would yield nulls instead of an error. */
+  private def checkRunSchema(spark: SparkSession, dir: Path, file: Path): Unit = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    val found = try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(reader.getFooter.getFileMetaData.getSchema)
+    finally reader.close()
+    CheckpointSchema.fields.foreach { f =>
+      found.find(_.name == f.name) match {
+        case None => throw new IllegalStateException(s"checkpoint run $dir has no column ${f.name}")
+        case Some(g) if g.dataType != f.dataType => throw new IllegalStateException(
+          s"checkpoint run $dir column ${f.name} is ${g.dataType.catalogString}, " +
+            s"expected ${f.dataType.catalogString}")
+        case _ =>
+      }
+    }
   }
 
   /** All committed partial-sketch rows across run dirs. */
   private def committedPartials(spark: SparkSession, ckptDir: String): Option[org.apache.spark.sql.DataFrame] = {
     val dirs = committedRunDirs(spark, ckptDir)
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    if (dirs.isEmpty) None else Some(spark.read.schema(CheckpointSchema).parquet(dirs: _*))
   }
 
   /** Buckets already committed to the checkpoint. */
@@ -126,9 +170,9 @@ object SketchJob {
         count(lit(1)).as("n_rows"),
         sum(col("n_tok")).cast("long").as("n_tokens"))
       .select(col("bucket"), col("source"), col("f.bloom").as("bloom"), col("f.hll").as("hll"),
-        col("f.cms").as("cms"), col("n_rows"), col("n_tokens"))
-      .withColumn("committed_at_ms", lit(t0))
-      .withColumn("build_host", lit(java.net.InetAddress.getLocalHost.getHostName))
+        col("f.cms").as("cms"), col("n_rows"), col("n_tokens"),
+        lit(t0).as("committed_at_ms"), lit(java.net.InetAddress.getLocalHost.getHostName).as("build_host"))
+      .select(CheckpointSchema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
     // fresh run dir per increment: the parquet job writes _SUCCESS only on
     // full commit, so a crash mid-run leaves an ignorable junk dir instead
     // of partially-visible buckets in a shared append

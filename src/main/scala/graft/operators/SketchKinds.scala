@@ -2,7 +2,10 @@ package graft.operators
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -87,6 +90,67 @@ abstract class SketchKind[B <: AnyRef] extends Serializable {
   /** The aggregate's result type and value. */
   def dataType: DataType = BinaryType
   def eval(b: B): Any = toBytes(b)
+}
+
+/** One SQL function that reads serialized sketches: the read side of a
+  * [[SketchKind]]. The generic expression `graft.plans.SketchRead` runs
+  * every reader, in whole-stage codegen or interpreted. It checks the
+  * argument types at analysis, maps NULL arguments to NULL and, where
+  * [[emptyIsNull]], an empty payload (what a merge over no rows returns)
+  * to NULL, and decodes each distinct payload once per task through a
+  * content-verified cache. A reader states only its signature, its
+  * validated decode and the per-row function.
+  *
+  * Arguments: [[sketches]] binary sketches, then one value argument when
+  * [[valueTypes]] is non-empty (a DOUBLE value also accepts int, bigint,
+  * float and decimal, cast to double), then, for a reader with [[keys]],
+  * optional `k0, k1` integer literals: the SipHash key its decode checks.
+  */
+abstract class SketchReader[D <: AnyRef](val name: String, val dataType: DataType) extends Serializable {
+
+  /** Sketch arguments: 1, or 2 for the pairwise functions. */
+  def sketches: Int = 1
+
+  /** The types the value argument may take; empty when there is none. */
+  def valueTypes: Seq[DataType] = Nil
+
+  /** The SipHash key of a reader that takes one, and the same reader
+    * under another key. */
+  def keys: Option[(Long, Long)] = None
+  def withKeys(k0: Long, k1: Long): SketchReader[D] = this
+
+  /** Whether an empty payload reads as NULL. When false, `read` gets
+    * `null` for an empty sketch argument. */
+  def emptyIsNull: Boolean = true
+
+  /** Validated decode, once per distinct payload; throws
+    * `IllegalArgumentException` on a payload this reader cannot read. */
+  def decode(x: Array[Byte]): D
+
+  /** One row: the decoded sketches (`b` is null for a one-sketch reader)
+    * and the value argument as a Catalyst value (null if there is none).
+    * Must not mutate `a` or `b`: they are cached across rows. */
+  def read(a: D, b: D, v: Any): Any
+
+  final def arity: Int = sketches + (if (valueTypes.isEmpty) 0 else 1)
+
+  /** The SQL argument list, for error messages. */
+  final def signature: String =
+    (if (sketches == 1) "sketch BINARY" else "a BINARY, b BINARY") +
+      (if (valueTypes.isEmpty) "" else s", value ${valueTypes.map(_.sql).mkString("|")}") +
+      (if (keys.isEmpty) "" else " [, k0 BIGINT, k1 BIGINT]")
+
+  /** This function as a `Column` (needs `GraftFunctions.registerExpressions`
+    * on the session); a reader with keys passes them as literals. */
+  def column(args: Column*): Column =
+    call_function(name, args ++ keys.toSeq.flatMap { case (k0, k1) => Seq(lit(k0), lit(k1)) }: _*)
+}
+
+/** A reader whose whole answer is its decoded payload (estimates,
+  * summaries, samples): computed once per distinct sketch. */
+abstract class DecodedReader[D <: AnyRef](name: String, dataType: DataType)
+    extends SketchReader[D](name, dataType) {
+  def read(a: D, b: D, v: Any): Any = a
 }
 
 object SketchKinds {
@@ -500,4 +564,243 @@ object SketchKinds {
       new SampleBuf(h, v, s, TypeTag.String)
     }
   }
+
+  // ------------------------------------------------------------ readers
+  //
+  // Every SQL read function, next to its kind, decoding with the core
+  // decoders the kinds' `fromBytes` use. The HLL, KMV and sample readers
+  // take no key argument, so they check no key; the pairwise KMV functions
+  // check that both sides share one.
+
+  /** `graft_hll_estimate(sketch)` -> double; the O(m) register scan runs
+    * once per distinct sketch. */
+  case object HllEstimate extends DecodedReader[java.lang.Double]("graft_hll_estimate", DoubleType) {
+    def decode(x: Array[Byte]): java.lang.Double = Hll.estimate(Hll.fromBytes(x)._2)
+  }
+
+  /** Decoded count-min counters under the reader's key. */
+  final class CmsRead(val cfg: CmsConfig, val counters: Array[Long], val typeTag: Long)
+
+  private def cmsRead(k0: Long, k1: Long, x: Array[Byte]): CmsRead = {
+    val (d, lw, c, tag, kh) = CountMin.fromBytesFull(x)
+    require(kh == keyHash(k0, k1), "CMS sketch was built with a different SipHash key")
+    new CmsRead(CmsConfig(k0, k1, d, lw), c, tag)
+  }
+
+  /** `graft_cms_estimate(sketch, elem [, k0, k1])` -> bigint: the point
+    * frequency (one-sided, >= exact) of an int or string element. The
+    * element type must be the one the sketch was built over. */
+  final case class CmsEstimate(k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1)
+      extends SketchReader[CmsRead]("graft_cms_estimate", LongType) {
+    override def valueTypes: Seq[DataType] = Seq(IntegerType, StringType)
+    override def keys: Option[(Long, Long)] = Some((k0, k1))
+    override def withKeys(a: Long, b: Long): CmsEstimate = CmsEstimate(a, b)
+    def decode(x: Array[Byte]): CmsRead = cmsRead(k0, k1, x)
+    private def requireTag(c: CmsRead, tag: Long): Unit =
+      require(c.typeTag == tag, s"$name: the sketch holds ${TypeTag.name(c.typeTag)} elements, " +
+        s"probed as ${TypeTag.name(tag)}")
+    def read(c: CmsRead, b: CmsRead, v: Any): Any = v match {
+      case s: UTF8String =>
+        requireTag(c, TypeTag.String)
+        CountMin.estimateBytes(c.counters, c.cfg, s.getBytes)
+      case x =>
+        requireTag(c, TypeTag.Int)
+        CountMin.estimateInt(c.counters, c.cfg, x.asInstanceOf[Int])
+    }
+  }
+
+  /** `graft_cms_total(sketch [, k0, k1])` -> bigint: the inserted weight N. */
+  final case class CmsTotal(k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1)
+      extends DecodedReader[java.lang.Long]("graft_cms_total", LongType) {
+    override def keys: Option[(Long, Long)] = Some((k0, k1))
+    override def withKeys(a: Long, b: Long): CmsTotal = CmsTotal(a, b)
+    def decode(x: Array[Byte]): java.lang.Long = {
+      val c = cmsRead(k0, k1, x)
+      CountMin.totalCount(c.counters, c.cfg)
+    }
+  }
+
+  /** `graft_kll_quantile(sketch, q)` -> double: the retained items are
+    * sorted once per distinct sketch; each row is a binary search. */
+  case object KllQuantile extends SketchReader[KllSortedView]("graft_kll_quantile", DoubleType) {
+    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    def decode(x: Array[Byte]): KllSortedView = new KllSortedView(Kll.fromBytes(x))
+    def read(a: KllSortedView, b: KllSortedView, v: Any): Any = a.quantile(v.asInstanceOf[Double])
+  }
+
+  /** `graft_kll_rank(sketch, x)` -> bigint: the estimated count <= x. */
+  case object KllRank extends SketchReader[KllSketch]("graft_kll_rank", LongType) {
+    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    def decode(x: Array[Byte]): KllSketch = Kll.fromBytes(x)
+    def read(a: KllSketch, b: KllSketch, v: Any): Any = a.rank(v.asInstanceOf[Double])
+  }
+
+  /** `graft_tdigest_quantile(sketch, q)` -> double. */
+  case object TDigestQuantile extends SketchReader[TDigest]("graft_tdigest_quantile", DoubleType) {
+    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    def decode(x: Array[Byte]): TDigest = TDigest.fromBytes(x)
+    def read(a: TDigest, b: TDigest, v: Any): Any = a.quantile(v.asInstanceOf[Double])
+  }
+
+  /** `graft_tdigest_cdf(sketch, x)` -> double: the estimated mass <= x. */
+  case object TDigestCdf extends SketchReader[TDigest]("graft_tdigest_cdf", DoubleType) {
+    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    def decode(x: Array[Byte]): TDigest = TDigest.fromBytes(x)
+    def read(a: TDigest, b: TDigest, v: Any): Any = a.cdf(v.asInstanceOf[Double])
+  }
+
+  /** `graft_kmv_estimate(sketch)` -> double: the distinct count (exact
+    * below saturation, (k-1)/U(k) at it; see [[graft.core.Kmv]]). */
+  case object KmvEstimate extends DecodedReader[java.lang.Double]("graft_kmv_estimate", DoubleType) {
+    def decode(x: Array[Byte]): java.lang.Double = {
+      val (h, s, _, _) = Kmv.fromBytes(x)
+      Kmv.estimate(h, s)
+    }
+  }
+
+  /** A decoded KMV sketch and the payload it came from. */
+  final class KmvRead(val bytes: Array[Byte]) {
+    val (hashes, size, typeTag, keyHash) = Kmv.fromBytes(bytes)
+  }
+
+  /** The pairwise KMV functions (Beyer et al. 2007, section 5): both
+    * sketches must hold the same element type under the same key, else
+    * the estimate means nothing; capacities may differ. */
+  sealed abstract class KmvPair(name: String, dataType: DataType) extends SketchReader[KmvRead](name, dataType) {
+    override def sketches: Int = 2
+    def decode(x: Array[Byte]): KmvRead = new KmvRead(x)
+    protected def pair(a: KmvRead, b: KmvRead): Unit = {
+      require(a.typeTag == b.typeTag,
+        s"$name: sketches hold different element types (${a.typeTag} vs ${b.typeTag})")
+      require(a.keyHash == b.keyHash, s"$name: sketches were built under different SipHash keys")
+    }
+  }
+
+  /** `graft_kmv_jaccard(a, b)` -> double. */
+  case object KmvJaccard extends KmvPair("graft_kmv_jaccard", DoubleType) {
+    def read(a: KmvRead, b: KmvRead, v: Any): Any = {
+      pair(a, b)
+      Kmv.jaccardAndIntersection(a.hashes, a.size, b.hashes, b.size)._1
+    }
+  }
+
+  /** `graft_kmv_intersect(a, b)` -> double: |A ∩ B|. */
+  case object KmvIntersect extends KmvPair("graft_kmv_intersect", DoubleType) {
+    def read(a: KmvRead, b: KmvRead, v: Any): Any = {
+      pair(a, b)
+      Kmv.jaccardAndIntersection(a.hashes, a.size, b.hashes, b.size)._2
+    }
+  }
+
+  /** `graft_kmv_difference(a, b)` -> double: |A \ B| (asymmetric). */
+  case object KmvDifference extends KmvPair("graft_kmv_difference", DoubleType) {
+    def read(a: KmvRead, b: KmvRead, v: Any): Any = {
+      pair(a, b)
+      Kmv.difference(a.hashes, a.size, b.hashes, b.size)
+    }
+  }
+
+  /** `graft_kmv_union(a, b)` -> binary: the serialized union, folded to the
+    * smaller capacity. An empty payload contributes nothing (the union is
+    * the other side), as in a chained `graft_kmv_merge`. */
+  case object KmvUnion extends KmvPair("graft_kmv_union", BinaryType) {
+    override def emptyIsNull: Boolean = false
+    def read(a: KmvRead, b: KmvRead, v: Any): Any =
+      if (a == null || b == null) Option(if (a == null) b else a).fold(Array.emptyByteArray)(_.bytes)
+      else {
+        pair(a, b)
+        val (h, s) = Kmv.merge(a.hashes, a.size, b.hashes, b.size)
+        Kmv.toBytes(h, s, a.typeTag, a.keyHash)
+      }
+  }
+
+  /** `graft_heavyhitter_summary(sketch)` -> `struct<topk: array<struct<key:
+    * bigint, est: bigint>>, error: bigint, total: bigint>`: every stored
+    * entry ordered by (est desc, key asc), the cumulative decrement D
+    * (est <= true <= est + D, and any key with true > D is present) and
+    * the inserted weight N. The row is immutable, so every row of a group
+    * may share it. */
+  case object HeavyHitterSummary extends DecodedReader[InternalRow]("graft_heavyhitter_summary",
+    StructType(Seq(
+      StructField("topk", ArrayType(StructType(Seq(
+        StructField("key", LongType, nullable = false),
+        StructField("est", LongType, nullable = false))), containsNull = false), nullable = false),
+      StructField("error", LongType, nullable = false),
+      StructField("total", LongType, nullable = false)))) {
+    def decode(x: Array[Byte]): InternalRow = {
+      val s = FrequentItems.fromBytes(x)
+      val entries = s.topK(s.capacity).map { case (k, c) => InternalRow(k, c) }
+      InternalRow(new GenericArrayData(entries.toArray), s.decremented, s.total)
+    }
+  }
+
+  /** `graft_sample_values(sample)` / `graft_sample_weighted_values(sample)`
+    * -> `array<bigint>`: a [[Sample]]'s values in slot-key order (a
+    * uniform random permutation for a fixed key). Each reads only its own
+    * layout. */
+  final case class SampleValues(weighted: Boolean) extends DecodedReader[GenericArrayData](
+      if (weighted) "graft_sample_weighted_values" else "graft_sample_values",
+      ArrayType(LongType, containsNull = false)) {
+    def decode(x: Array[Byte]): GenericArrayData = {
+      val (_, v, s, _, _) = if (weighted) BottomK.fromBytesWeighted(x) else BottomK.fromBytes(x)
+      new GenericArrayData(v.take(s))
+    }
+  }
+
+  /** `graft_sample_strings(sample)` / `graft_sample_weighted_strings(sample)`
+    * -> `array<string>`: a [[StringSample]]'s values in slot-key order. */
+  final case class SampleStrings(weighted: Boolean) extends DecodedReader[GenericArrayData](
+      if (weighted) "graft_sample_weighted_strings" else "graft_sample_strings",
+      ArrayType(StringType, containsNull = false)) {
+    def decode(x: Array[Byte]): GenericArrayData = {
+      val (_, v, s, _) = if (weighted) BottomK.fromBytesStrWeighted(x) else BottomK.fromBytesStr(x)
+      new GenericArrayData(v.take(s).map(b => UTF8String.fromBytes(b): Any))
+    }
+  }
+
+  /** A decoded Bloom filter and the payload it came from. */
+  final class BloomRead(val bytes: Array[Byte], val f: BloomBuf)
+
+  /** `graft_bloom_union(a, b [, k0, k1])` / `graft_bloom_intersect(...)` ->
+    * binary: word-wise OR / AND of two filters (the reference's
+    * `unionInto` / `intersectionInto`, `Internal.hs:494-550`), folding the
+    * larger down to the smaller first. The filters must share key, k,
+    * hash width and element type. An empty payload is what a merge over no
+    * rows returns: the union is the other side (still validated), the
+    * intersection is the empty payload. */
+  final case class BloomCombine(intersection: Boolean, k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1)
+      extends SketchReader[BloomRead](if (intersection) "graft_bloom_intersect" else "graft_bloom_union",
+        BinaryType) {
+    override def sketches: Int = 2
+    override def keys: Option[(Long, Long)] = Some((k0, k1))
+    override def withKeys(a: Long, b: Long): BloomCombine = BloomCombine(intersection, a, b)
+    override def emptyIsNull: Boolean = false
+    def decode(x: Array[Byte]): BloomRead = {
+      val (c, words, tag) = BlockedBloom.fromBytes(k0, k1, x)
+      new BloomRead(x, BloomBuf(words, c, tag))
+    }
+    def read(a: BloomRead, b: BloomRead, v: Any): Any =
+      if (a == null || b == null) {
+        val survivor = Option(if (a == null) b else a)
+        if (intersection) Array.emptyByteArray else survivor.fold(Array.emptyByteArray)(_.bytes)
+      } else {
+        val (fa, fb) = (a.f, b.f)
+        if (fa.typeTag != fb.typeTag)
+          throw new IllegalArgumentException(
+            s"$name: cannot merge a ${TypeTag.name(fa.typeTag)}-element filter " +
+              s"with a ${TypeTag.name(fb.typeTag)}-element filter")
+        val (w, cfg) =
+          if (intersection) BlockedBloom.intersectFold(fa.words, fa.cfg, fb.words, fb.cfg)
+          else BlockedBloom.unionFold(fa.words, fa.cfg, fb.words, fb.cfg)
+        BlockedBloom.toBytes(w, cfg, fa.typeTag)
+      }
+  }
+
+  /** Every SQL read function with its default key. */
+  val readers: Seq[SketchReader[_ <: AnyRef]] = Seq(
+    HllEstimate, CmsEstimate(), CmsTotal(), KllQuantile, KllRank, TDigestQuantile, TDigestCdf,
+    KmvEstimate, KmvJaccard, KmvIntersect, KmvDifference, KmvUnion, HeavyHitterSummary,
+    SampleValues(weighted = false), SampleStrings(weighted = false),
+    SampleValues(weighted = true), SampleStrings(weighted = true),
+    BloomCombine(intersection = false), BloomCombine(intersection = true))
 }

@@ -420,64 +420,6 @@ case class DoubleBitsExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Native pairwise Bloom set ops `graft_bloom_intersect` /
-  * `graft_bloom_union` (reference `intersectionInto` / `unionInto`,
-  * `Internal.hs:494-550`): word-wise AND / OR of two serialized filters,
-  * folding cross-size inputs down to the smaller filter first. Accepts
-  * optional k0/k1 like the probe expression, and reports a type-tag
-  * mismatch with merge wording (not the probe path's "probed/loaded as"). */
-case class BloomSetOp(left: Expression, right: Expression, k0: Long, k1: Long,
-    intersection: Boolean) extends BinaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String =
-    if (intersection) "graft_bloom_intersect" else "graft_bloom_union"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != BinaryType || right.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects two BINARY sketches, got (${left.dataType}, ${right.dataType})")
-    else TypeCheckResult.TypeCheckSuccess
-
-  /** Empty-payload handling mirrors the serialized merge aggregators: for
-    * UNION an empty side contributes nothing (the result IS the other
-    * side); INTERSECTION against an absent filter has no meaningful
-    * answer, so it yields the empty payload (which every downstream
-    * reader maps to NULL — plans.EmptyNull). */
-  def combine(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    if (a.isEmpty || b.isEmpty) {
-      if (intersection) return Array.emptyByteArray
-      val survivor = if (a.isEmpty) b else a
-      // Same key/metadata validation every non-empty path gets: a corrupt
-      // or cross-key filter must fail AT the op, not flow through because
-      // its partner happened to be the empty payload.
-      if (survivor.nonEmpty) BlockedBloom.fromBytes(k0, k1, survivor)
-      return survivor
-    }
-    val (cfgA, wa, tagA) = BlockedBloom.fromBytes(k0, k1, a)
-    val (cfgB, wb, tagB) = BlockedBloom.fromBytes(k0, k1, b)
-    if (tagA != tagB)
-      throw new IllegalArgumentException(
-        s"$prettyName: cannot merge a ${BlockedBloom.TypeTag.name(tagA)}-element filter " +
-          s"with a ${BlockedBloom.TypeTag.name(tagB)}-element filter")
-    val (w, cfg) =
-      if (intersection) BlockedBloom.intersectFold(wa, cfgA, wb, cfgB)
-      else BlockedBloom.unionFold(wa, cfgA, wb, cfgB)
-    BlockedBloom.toBytes(w, cfg, tagA)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    combine(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val selfRef = ctx.addReferenceObj("bloomSetOp", this, classOf[BloomSetOp].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$selfRef.combine($a, $b)")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** SQL/Column registration for the native expressions. */
 object GraftFunctions {
 
@@ -485,8 +427,6 @@ object GraftFunctions {
   val BloomKeyedProbeName = "graft_bloom_might_contain_keyed"
   val SipHash64Name = "graft_sip_hash64"
   val DoubleBitsName = "graft_double_bits"
-  val BloomIntersectName = "graft_bloom_intersect"
-  val BloomUnionName = "graft_bloom_union"
 
   private[plans] def doubleBitsBuilder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(e) => DoubleBitsExpr(e)
@@ -524,17 +464,6 @@ object GraftFunctions {
       s"$BloomMightContainName expects (sketch BINARY, elem, [k0 BIGINT, k1 BIGINT])")
   }
 
-  private[plans] def setOpBuilder(intersection: Boolean)(exprs: Seq[Expression]): Expression = {
-    val name = if (intersection) BloomIntersectName else BloomUnionName
-    exprs match {
-      case Seq(a, b) => BloomSetOp(a, b, Keys.DefaultK0, Keys.DefaultK1, intersection)
-      case Seq(a, b, kk0, kk1) if keyLit(kk0).isDefined && keyLit(kk1).isDefined =>
-        BloomSetOp(a, b, keyLit(kk0).get, keyLit(kk1).get, intersection)
-      case _ => throw new IllegalArgumentException(
-        s"$name expects (a BINARY, b BINARY, [k0 BIGINT, k1 BIGINT])")
-    }
-  }
-
   /** SINGLE SOURCE OF TRUTH for the native-expression SQL surface:
     * (function name, implementing class, builder). Both registration paths
     * — `registerExpressions` on a live session and the
@@ -546,32 +475,9 @@ object GraftFunctions {
     (BloomKeyedProbeName, classOf[BloomKeyedProbe], keyedBuilder _),
     (SipHash64Name, classOf[SipHash64Expr], sipBuilder _),
     (DoubleBitsName, classOf[DoubleBitsExpr], doubleBitsBuilder _),
-    (BloomIntersectName, classOf[BloomSetOp], setOpBuilder(intersection = true) _),
-    (BloomUnionName, classOf[BloomSetOp], setOpBuilder(intersection = false) _),
-    (SketchReaders.HllEstimateName, classOf[HllEstimateExpr], SketchReaders.hllBuilder _),
-    (SketchReaders.CmsEstimateName, classOf[CmsEstimateExpr], SketchReaders.cmsEstimateBuilder _),
-    (SketchReaders.CmsTotalName, classOf[CmsTotalExpr], SketchReaders.cmsTotalBuilder _),
-    (SketchReaders.KllQuantileName, classOf[QuantileReadExpr], SketchReaders.quantileBuilder(isKll = true) _),
-    (SketchReaders.TDigestQuantileName, classOf[QuantileReadExpr], SketchReaders.quantileBuilder(isKll = false) _),
-    (SketchReaders.KllRankName, classOf[RankReadExpr], SketchReaders.rankBuilder(isKll = true) _),
-    (SketchReaders.TDigestCdfName, classOf[RankReadExpr], SketchReaders.rankBuilder(isKll = false) _),
-    (SketchReaders.KmvEstimateName, classOf[KmvEstimateExpr], SketchReaders.kmvEstimateBuilder _),
-    (SketchReaders.KmvJaccardName, classOf[KmvPairExpr], SketchReaders.kmvPairBuilder(KmvPairExpr.Jaccard) _),
-    (SketchReaders.KmvIntersectName, classOf[KmvPairExpr], SketchReaders.kmvPairBuilder(KmvPairExpr.Intersect) _),
-    (SketchReaders.KmvDifferenceName, classOf[KmvPairExpr], SketchReaders.kmvPairBuilder(KmvPairExpr.Difference) _),
-    (SketchReaders.KmvUnionName, classOf[KmvUnionExpr], SketchReaders.kmvUnionBuilder _),
-    (SketchReaders.HeavyHitterSummaryName, classOf[HeavyHitterSummaryExpr],
-      SketchReaders.heavyHitterSummaryBuilder _),
-    (SketchReaders.SampleValuesName, classOf[BottomKValuesExpr],
-      SketchReaders.sampleValuesBuilder _),
-    (SketchReaders.SampleStringsName, classOf[BottomKStringsExpr],
-      SketchReaders.sampleStringsBuilder _),
-    (SketchReaders.SampleWeightedValuesName, classOf[BottomKValuesExpr],
-      SketchReaders.sampleWeightedValuesBuilder _),
-    (SketchReaders.SampleWeightedStringsName, classOf[BottomKStringsExpr],
-      SketchReaders.sampleWeightedStringsBuilder _),
     (VectorFunctions.CosineSimName, classOf[CosineSimExpr], VectorFunctions.cosineBuilder _),
     (VectorFunctions.SrpBandsName, classOf[SrpBandsExpr], VectorFunctions.srpBandsBuilder _)) ++
+    graft.operators.SketchKinds.readers.map(r => (r.name, classOf[SketchRead], SketchRead.builder(r) _)) ++
     NativeAggs.sqlAggregates.map { case (name, b) =>
       (name, if (name == NativeAggs.FusedName) classOf[FusedTokensNative] else classOf[SketchAgg], b)
     }

@@ -367,7 +367,7 @@ object StreamingSketch {
     val sinkRows = sinkSel.collect()
     val sk = spark.createDataFrame(java.util.Arrays.asList(sinkRows: _*), sinkSel.schema)
     val meta = sk
-      .select(col("win"), col("source"), graft.plans.SketchReaders.heavyHitterSummary(col("hh")).as("s"))
+      .select(col("win"), col("source"), HeavyHitterSummary.column(col("hh")).as("s"))
       .select(col("win"), col("source"), col("s.error").as("d"), col("s.total").as("n"),
         col("s.topk").as("entries"))
     val entries = meta
@@ -488,7 +488,7 @@ object StreamingSketch {
         (col("kmv") === col("kmv_batch")).as("bytes_match"),
         (col("start") === lit(epoch0) + col("sess") * 200L + col("min_off") &&
           col("end") === lit(epoch0) + col("sess") * 200L + col("max_off") + 60L).as("bounds_ok"),
-        (abs(graft.plans.SketchReaders.kmvEstimate(col("kmv")) -
+        (abs(KmvEstimate.column(col("kmv")) -
           coalesce(col("nd"), lit(0L)).cast("double")) <=
           greatest(lit(margin) * coalesce(col("nd"), lit(0L)).cast("double"), lit(0.5)))
           .as("est_within_bound"))

@@ -172,6 +172,55 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
       StructField("committed_at_ms", LongType),
       StructField("build_host", StringType)))
     assert(spark.read.parquet(ckpt + "/run_*").schema === expected)
+    assert(SketchJob.CheckpointSchema === expected)
+  }
+
+  test("checkpoint reads start no schema-inference job; a run dir missing a column fails loudly") {
+    val tokens = generatedTokens()
+    val ckpt = freshDir()
+    SketchJob.runIncrement(spark, tokens, ckpt, cfg)
+    // job starts tagged with their thread's job group; a marker job in its
+    // own group, seen last on the in-order listener bus, means every
+    // earlier job start has been delivered
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("finalize-construct", "constructing finalizeSketches")
+      val fin = SketchJob.finalizeSketches(spark, ckpt, cfg)
+      sc.setJobGroup("marker", "listener bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("marker"))
+      assert(!groups.contains("finalize-construct"), s"jobs started while constructing finalize: $groups")
+      assert(fin.count() > 0)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+
+    // a committed run dir whose files lack `cms`, or hold `bucket` as bigint
+    val committed = spark.read.schema(SketchJob.CheckpointSchema).parquet(ckpt + "/run_*")
+    for ((bad, column) <- Seq(
+        committed.drop("cms") -> "column cms",
+        committed.withColumn("bucket", col("bucket").cast("long")) -> "column bucket is bigint")) {
+      val broken = freshDir()
+      SketchJob.runIncrement(spark, tokens, broken, cfg, failAfterBuckets = Some(2))
+      val dir = s"$broken/run_9999999999999_0"
+      bad.limit(3).write.parquet(dir)
+      for (read <- Seq[() => Any](
+          () => SketchJob.finalizeSketches(spark, broken, cfg).collect(),
+          () => SketchJob.committedBuckets(spark, broken))) {
+        val e = intercept[IllegalStateException](read())
+        assert(e.getMessage.contains("run_9999999999999_0") && e.getMessage.contains(column), e.getMessage)
+      }
+    }
   }
 
   test("a crashed (no _SUCCESS) run dir is ignored; its buckets re-run on resume") {

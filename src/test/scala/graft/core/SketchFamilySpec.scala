@@ -240,6 +240,29 @@ class SketchFamilySpec extends AnyFunSuite {
     for (q <- Seq(0.1, 0.5, 0.9)) assert(back.quantile(q) === sk.quantile(q))
   }
 
+  test("KLL: the sorted view answers every quantile like a scan of the retained items") {
+    // the scan: every retained item with its weight 2^level, stably sorted
+    // by value; the first item whose cumulative weight reaches ceil(q * n)
+    def scan(s: KllSketch, q: Double): Double = {
+      val items = s.levels.zipWithIndex.flatMap { case (l, h) => l.map(v => (v, 1L << h)) }.sortBy(_._1)
+      val target = math.max(1L, math.ceil(q * s.n).toLong)
+      val i = items.scanLeft(0L)(_ + _._2).tail.indexWhere(_ >= target)
+      items(if (i >= 0) i else items.length - 1)._1
+    }
+    val rng = new scala.util.Random(11)
+    for (n <- Seq(1, 7, 200, 5000); k <- Seq(8, 64)) {
+      val sk = new KllSketch(k)
+      (0 until n).foreach(_ => sk.add(math.floor(rng.nextGaussian() * 50) / 2))
+      val view = new KllSortedView(sk)
+      for (q <- (0 to 100).map(_ / 100.0) :+ 1e-9) {
+        assert(view.quantile(q) === scan(sk, q), s"n=$n k=$k q=$q")
+        assert(sk.quantile(q) === scan(sk, q))
+      }
+    }
+    assert(new KllSortedView(new KllSketch(8)).quantile(0.5).isNaN)
+    intercept[IllegalArgumentException](new KllSortedView(new KllSketch(8)).quantile(1.5))
+  }
+
   // -------------------------------------------------------------- t-digest
 
   test("t-digest: quantile rank error small at delta=100") {

@@ -149,4 +149,62 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.length === 2 && !rows.exists(_.isNullAt(1)), agg)
     }
   }
+
+  test("an extensions-only session resolves and runs every graft_* scalar function") {
+    val (k0, k1) = (s"${Keys.DefaultK0}L", s"${Keys.DefaultK1}L")
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  ('a', array(1, 2, 3), 5L, 2.5D, 2L, 'doc-1'),
+        |  ('a', array(3, 4), 7L, 4.0D, 1L, 'doc-2'),
+        |  ('b', array(9), 5L, 1.0D, 3L, 'doc-3')
+        |  AS t(g, tokens, v, x, w, s)""".stripMargin).createOrReplaceTempView("ext_scalar_in")
+    spark.sql(
+      """SELECT g, graft_bloom_tokens(tokens) AS bloom, graft_hll_tokens(tokens) AS hll,
+        |  graft_cms_tokens(tokens) AS cms, graft_kmv_tokens(tokens) AS kmv, graft_kll(x) AS kll,
+        |  graft_tdigest(x) AS td, graft_heavyhitter(v) AS hh, graft_sample_bottomk(v) AS samp,
+        |  graft_sample_bottomk_str(s) AS samp_str, graft_sample_weighted(v, w) AS sampw,
+        |  graft_sample_weighted_str(s, w) AS sampw_str,
+        |  array(CAST(max(x) AS FLOAT), CAST(max(v) AS FLOAT)) AS emb
+        |FROM ext_scalar_in GROUP BY g""".stripMargin).createOrReplaceTempView("ext_sk")
+    // a keyed pack holding group a's filter only
+    val pack = BloomFilterPack.encode(Seq(
+      "a" -> spark.sql("SELECT bloom FROM ext_sk WHERE g = 'a'").head().getAs[Array[Byte]](0)))
+    val calls = Map(
+      "graft_bloom_might_contain" -> "graft_bloom_might_contain(bloom, 3)",
+      "graft_bloom_might_contain_keyed" ->
+        s"graft_bloom_might_contain_keyed(X'${pack.map("%02x".format(_)).mkString}', g, 3)",
+      "graft_sip_hash64" -> s"graft_sip_hash64(g, $k0, $k1)",
+      "graft_double_bits" -> "graft_double_bits(CAST(1.5 AS DOUBLE))",
+      "graft_cosine_sim" -> "graft_cosine_sim(emb, emb)",
+      "graft_srp_bands" -> "graft_srp_bands(emb, 8, 2)",
+      "graft_hll_estimate" -> "graft_hll_estimate(hll)",
+      "graft_cms_estimate" -> s"graft_cms_estimate(cms, 3, $k0, $k1)",
+      "graft_cms_total" -> "graft_cms_total(cms)",
+      "graft_kll_quantile" -> "graft_kll_quantile(kll, 0.5)",
+      "graft_kll_rank" -> "graft_kll_rank(kll, 3)",
+      "graft_tdigest_quantile" -> "graft_tdigest_quantile(td, 0.5)",
+      "graft_tdigest_cdf" -> "graft_tdigest_cdf(td, 3)",
+      "graft_kmv_estimate" -> "graft_kmv_estimate(kmv)",
+      "graft_kmv_jaccard" -> "graft_kmv_jaccard(kmv, kmv)",
+      "graft_kmv_intersect" -> "graft_kmv_intersect(kmv, kmv)",
+      "graft_kmv_difference" -> "graft_kmv_difference(kmv, kmv)",
+      "graft_kmv_union" -> "graft_kmv_union(kmv, kmv)",
+      "graft_heavyhitter_summary" -> "graft_heavyhitter_summary(hh)",
+      "graft_sample_values" -> "graft_sample_values(samp)",
+      "graft_sample_strings" -> "graft_sample_strings(samp_str)",
+      "graft_sample_weighted_values" -> "graft_sample_weighted_values(sampw)",
+      "graft_sample_weighted_strings" -> "graft_sample_weighted_strings(sampw_str)",
+      "graft_bloom_union" -> "graft_bloom_union(bloom, bloom)",
+      "graft_bloom_intersect" -> s"graft_bloom_intersect(bloom, bloom, $k0, $k1)")
+    val aggregates = NativeAggs.sqlAggregates.map(_._1).toSet
+    val scalars = GraftFunctions.nativeExpressions.map(_._1).filterNot(aggregates).toSet
+    assert(calls.keySet === scalars, "every registered scalar function needs a call here")
+    for ((name, call) <- calls) {
+      val rows = spark.sql(s"SELECT g, $call FROM ext_sk ORDER BY g").collect()
+      // a group missing from the keyed pack probes as NULL
+      val nullGroups = if (name == "graft_bloom_might_contain_keyed") Seq("b") else Nil
+      assert(rows.map(_.getString(0)).toSeq === Seq("a", "b") &&
+        rows.filter(_.isNullAt(1)).map(_.getString(0)).toSeq === nullGroups, s"$name: ${rows.mkString(", ")}")
+    }
+  }
 }

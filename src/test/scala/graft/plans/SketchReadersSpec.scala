@@ -82,6 +82,26 @@ class SketchReadersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("graft_cms_estimate rejects a probe of another element type than the sketch's") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val cms = graft.core.CmsConfig(Keys.DefaultK0, Keys.DefaultK1, 5, 8)
+    val buf = graft.core.CountMin.empty(cms)
+    graft.core.CountMin.addString(buf, cms, "alpha")
+    val strSk = graft.core.CountMin.toBytes(buf, cms, graft.core.BlockedBloom.TypeTag.String)
+    val intSk = spark.sql("SELECT graft_cms_tokens(array(1, 2, 3))").head().getAs[Array[Byte]](0)
+    for ((sk, probe, held, probed) <- Seq((strSk, "7", "string", "int"), (intSk, "'alpha'", "int", "string"))) {
+      val df = Seq(sk, sk).toDF("sk").repartition(2).selectExpr(s"graft_cms_estimate(sk, $probe)")
+      val ex = intercept[Throwable](df.collect())
+      val msg = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+      assert(msg.contains(s"holds $held elements, probed as $probed"), s"unexpected: $msg")
+    }
+    // same-type probes still read
+    assert(Seq(strSk).toDF("sk").selectExpr("graft_cms_estimate(sk, 'alpha')").head().getLong(0) >= 1L)
+    assert(Seq(intSk).toDF("sk").selectExpr("graft_cms_estimate(sk, 2)").head().getLong(0) >= 1L)
+  }
+
   test("graft_hll_estimate / quantile readers agree with core implementations") {
     import spark.implicits._
     GraftFunctions.register(spark)
