@@ -108,10 +108,9 @@ object Bench {
     * place — no per-row decode — one shared 64-bit hash + one 128-bit hash
     * per token). Returns the global (merged) bloom bytes for the FPR check. */
   private def buildSketches(spark: SparkSession, df: DataFrame, cfg: BloomConfig): Array[Byte] = {
-    graft.plans.NativeAggs.register(spark, bloomK = cfg.k, bloomLog2l = cfg.log2l,
-      k0 = SketchQueries.K0, k1 = SketchQueries.K1)
-    val perSource = df.groupBy(col("source"))
-      .agg(graft.plans.NativeAggs.fusedTokensNative(col("tokens")).as("sk"))
+    val perSource = df.groupBy(col("source")).agg(graft.plans.FusedTokensNative.column(col("tokens"),
+      BloomConfig(SketchQueries.K0, SketchQueries.K1, cfg.k, cfg.log2l), SketchQueries.hllP,
+      SketchQueries.cmsCfg).as("sk"))
     // a merge reads only the bloom kind's key; the filters carry their config
     perSource.agg(NativeAggs.column(Bloom(cfg), col("sk.bloom"))).head().getAs[Array[Byte]](0)
   }
@@ -263,11 +262,9 @@ object Bench {
     val probeTotal = 400000000L
     val probeSecs = {
       val s = session(cpus)
-      graft.plans.GraftFunctions.register(s)
-      import org.apache.spark.sql.functions.{call_function, lit => flit}
       def run(): Long = s.range(0, probeTotal, 1, cpus * 4)
         .select(col("id").cast("int").as("t"))
-        .where(call_function(graft.plans.GraftFunctions.BloomMightContainName, flit(bloomBytes), col("t")))
+        .where(graft.plans.GraftFunctions.bloomMightContain(lit(bloomBytes), col("t")))
         .count()
       run() // warm
       val laps = (1 to 3).map { _ => time(run())._2 }
@@ -378,7 +375,6 @@ object Bench {
           numSources = 16, partitions = cpus * 4)
           .write.mode("overwrite").parquet(path)
       }
-      graft.plans.GraftFunctions.register(s)
       val relabeled = s.read.parquet(path).withColumn("source",
         when(graft.plans.GraftFunctions.sipHash64(col("doc_id")) % 1024 === 0,
           lit("evalset")).otherwise(col("source")))

@@ -231,7 +231,6 @@ object PipelineQueries {
   /** Stats + gate over a (usually persisted) slim frame; lazy, so
     * PlanCheck can capture the real plan via [[samplingFramePlan]]. */
   private def samplingFrameOn(spark: SparkSession, flagged: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.registerExpressions(spark)
     val k = 8
     val sampleW = graft.operators.SketchKinds.Sample(
       graft.core.Keys.DefaultK0, graft.core.Keys.DefaultK1, k, weighted = true)
@@ -357,7 +356,6 @@ object PipelineQueries {
     // PipelineSpec exercises exactly this parameter set.
     val threshold = 0.9
     val sampleN = 128
-    graft.plans.GraftFunctions.registerExpressions(spark)
     val approx = Similarity.srpNearDups(emb, "vec_id", "embedding", b = 64, chunks = 8, threshold = threshold)
       .select(col("id_a"), col("id_b"))
     // deterministic constant-size sample as a broadcast DataFrame — no
@@ -422,7 +420,6 @@ object PipelineQueries {
     * Rademacher rows, so recall on the fixed fixtures is exactly 1
     * (asserted by the equality gate every run, not assumed). */
   def embeddingNearDups(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.registerExpressions(spark)
     val threshold = 0.9
     val base = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
@@ -671,7 +668,6 @@ object PipelineQueries {
 
   private def sourceOverlapFrame(spark: SparkSession, masks: DataFrame,
       perSource: DataFrame, sources: Array[String]): DataFrame = {
-    graft.plans.GraftFunctions.registerExpressions(spark)
     val k = SketchQueries.kmvK
     // OPTIMIZATION r07 (guide §2.4/§3): the pairwise intersection counts
     // used to come from a gram self-join — every gram shared by s sources

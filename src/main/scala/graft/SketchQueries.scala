@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core._
-import graft.plans.{GraftFunctions, NativeAggs}
+import graft.plans.{BloomFilterPack, FusedTokensNative, GraftFunctions, NativeAggs}
 import graft.operators.SketchKinds._
 import graft.sources.Tokens
 
@@ -70,14 +70,13 @@ object SketchQueries {
     * occurrence against its own source's sketch. No false negatives ⇒ the
     * per-source present-count equals the exact per-source token count. */
   def bloomProbeExact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val t = Tokens.table(spark, dir)
     // per-source sketches collected ONCE (one row per source by
     // construction) and folded into the probe as a keyed literal pack: the
     // former broadcast join attached the 8 KB sketch column to EVERY probe
-    // row, costing O(sketch bytes) of copy + content-verify per row (see
-    // BloomKeyedProbe's scaladoc; optimization guide §2.3 — move decisions
-    // to small rows, keep payloads out of the per-row path)
+    // row, costing O(sketch bytes) of copy + content-verify per row
+    // (optimization guide §2.3 — move decisions to small rows, keep
+    // payloads out of the per-row path)
     val packed = collectSketches(perSourceBloom(t), "sketch")
     exploded(t)
       .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
@@ -86,14 +85,10 @@ object SketchQueries {
       .orderBy(col("source"))
   }
 
-  /** Collect a (group key, serialized sketch) frame for the keyed probe
-    * pack — bounded by construction: one row per group (source / window). */
-  private def collectSketches(sk: DataFrame, sketchCol: String,
-      keyCols: Seq[String] = Seq("source")): Seq[(String, Array[Byte])] =
-    sk.select((keyCols.map(col) :+ col(sketchCol)): _*).collect().toSeq.map { r =>
-      val key = keyCols.indices.map(i => String.valueOf(r.get(i))).mkString("|")
-      key -> r.getAs[Array[Byte]](keyCols.length)
-    }
+  /** The (source, serialized sketch) pack entries of a per-source frame,
+    * collected once its size has passed the pack bounds. */
+  private def collectSketches(sk: DataFrame, sketchCol: String): Seq[(String, Array[Byte])] =
+    BloomFilterPack.entries(BloomFilterPack.collect(sk, col("source"), col(sketchCol)).toSeq)
 
   /** The 128-BIT HASH PATH under the driver gate: k=11, log2l=12 needs
     * 6*11+12 = 78 hash bits, so build and probe run through
@@ -101,7 +96,6 @@ object SketchQueries {
     * end. No false negatives ⇒ same exact per-source counts as the 64-bit
     * twin, same oracle. */
   def bloom128ProbeExact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val cfg128 = BloomConfig(K0, K1, k = 11, log2l = 12)
     require(!cfg128.hash64Enough, "query must exercise the 128-bit path")
     val t = Tokens.table(spark, dir)
@@ -125,14 +119,12 @@ object SketchQueries {
     * the per-source present-count equals the exact token count, same
     * oracle as q_bloom_probe_exact. */
   def fusedNativeProbeExact(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.NativeAggs.register(spark)
-    GraftFunctions.register(spark)
     val t = Tokens.table(spark, dir)
     // keyed literal pack instead of the sketch-column broadcast join (see
     // bloomProbeExact) — the fused struct's bloom member is extracted once
     // per source at collect time, not per probe row
     val packed = collectSketches(t.groupBy(col("source"))
-      .agg(graft.plans.NativeAggs.fusedTokensNative(col("tokens")).as("sk"))
+      .agg(FusedTokensNative.column(col("tokens"), bloomCfg, hllP, cmsCfg).as("sk"))
       .select(col("source"), col("sk.bloom").as("sketch")), "sketch")
     exploded(t)
       .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
@@ -164,7 +156,6 @@ object SketchQueries {
       val sketchBytes = buildSide
         .agg(bloomAgg(col("token")))
         .head().getAs[Array[Byte]](0)
-      GraftFunctions.register(spark)
       val probe = exploded(t).distinct()
       // foldable-sketch native expression: deserialized once, probed in codegen
       val prefiltered = probe.where(GraftFunctions.bloomMightContain(lit(sketchBytes), col("token")))
@@ -187,7 +178,6 @@ object SketchQueries {
     val globalBytes = perSourceBloom(t)
       .agg(bloomAgg(col("sketch")))
       .head().getAs[Array[Byte]](0)
-    GraftFunctions.register(spark)
     t.select(explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull) // one tokenize evaluation (see `exploded`)
       .distinct()
@@ -206,7 +196,6 @@ object SketchQueries {
     * checked per source — and probing every (source, token) occurrence
     * against the salted filter stays exact by no-false-negatives. */
   def saltedBuildEquiv(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val t = Tokens.table(spark, dir)
     val direct = perSourceBloom(t).withColumnRenamed("sketch", "direct_sketch")
     val salted = t
@@ -221,15 +210,12 @@ object SketchQueries {
     // per-source equality boolean joins back onto the group-count-sized
     // aggregate — min(bool) over a group whose boolean is constant per
     // source is the boolean itself
-    val equiv = salted.join(direct, "source")
-      .select(col("source"),
-        (col("salted_sketch") === col("direct_sketch")).as("salted_equals_direct"),
-        col("salted_sketch"))
-      .collect()
-    val packed = equiv.toSeq.map(r => r.getString(0) -> r.getAs[Array[Byte]](2))
+    val equiv = BloomFilterPack.collect(salted.join(direct, "source"), col("source"),
+      col("salted_sketch"), (col("salted_sketch") === col("direct_sketch")).as("salted_equals_direct"))
+    val packed = BloomFilterPack.entries(equiv.toSeq)
     val boolRows: java.util.List[org.apache.spark.sql.Row] =
       java.util.Arrays.asList(equiv.map(r =>
-        org.apache.spark.sql.Row(r.getString(0), r.getBoolean(1))): _*)
+        org.apache.spark.sql.Row(r.getString(0), r.getBoolean(2))): _*)
     val bools = spark.createDataFrame(boolRows,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("source",
@@ -256,7 +242,6 @@ object SketchQueries {
     * sigma(Ĵ) = sqrt(J(1-J)/k); booleans are deterministic for the fixed
     * SipKey, so the DuckDB oracle is all-true over the same status pairs. */
   def kmvIntersectBound(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val se = Kmv.stdError(kmvK)
     val orders = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderstatus").as("status"), col("o_custkey").cast("long").as("custkey"))
@@ -344,7 +329,6 @@ object SketchQueries {
   /** HLL distinct tokens per source, asserted within 4 sigma of exact
     * (sigma = 1.04/sqrt(m); linear-counting regime is far tighter). */
   def hllDistinctTokensBound(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val est = t.groupBy(col("source")).agg(hllAgg(col("tokens")).as("sk"))
       .select(col("source"), HllEstimate.column(col("sk")).as("est"))
@@ -360,7 +344,6 @@ object SketchQueries {
 
   /** HLL distinct doc_ids per source (string elements) within bound. */
   def hllDistinctDocsBound(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val est = t.groupBy(col("source")).agg(hllAgg(col("doc_id")).as("sk"))
       .select(col("source"), HllEstimate.column(col("sk")).as("est"))
@@ -376,7 +359,6 @@ object SketchQueries {
   /** Count-min heavy hitter per source: estimate of the top token's
     * frequency is one-sided (>= exact) and within 2*eps*N. */
   def cmsHeavyHitterBound(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val counts = exploded(t).groupBy(col("source"), col("token")).agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("source")).orderBy(col("cnt").desc, col("token").asc)
@@ -407,7 +389,6 @@ object SketchQueries {
     quantileBound(spark, dir, isKll = false, eps = 0.05)
 
   private def quantileBound(spark: SparkSession, dir: String, isKll: Boolean, eps: Double): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val qs = Seq(25 -> 0.25, 50 -> 0.5, 75 -> 0.75)
     val sk = t.groupBy(col("source"))
@@ -440,7 +421,6 @@ object SketchQueries {
     * concat + recompaction); the margin is doubled for the extra
     * compaction round. */
   def quantileMergeBound(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val perSource = t.groupBy(col("source")).agg(
       kllAgg(col("n_tok").cast("double")).as("kll"),
@@ -478,7 +458,6 @@ object SketchQueries {
     * desc, token asc) aligns with the oracle's (count desc, word asc)
     * because token ids are assigned in word-lexical order. */
   def cmsTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val t = Tokens.table(spark, dir)
     val sk = t.groupBy(col("source")).agg(cmsAgg(col("tokens")).as("sk"))
     val candidates = exploded(t).distinct()
@@ -498,7 +477,6 @@ object SketchQueries {
     * EXACT common-token set — intersection never loses a common element,
     * so the present-count equals the exact common distinct count. */
   def bloomIntersectExact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val t = Tokens.table(spark, dir)
     val sketches = perSourceBloom(t).orderBy(col("source")).limit(2).collect()
     require(sketches.length == 2, "need at least two sources")
@@ -549,7 +527,6 @@ object SketchQueries {
     * the shuffle (the pattern behind Spark's own
     * spark.sql.optimizer.runtime.bloomFilter rewrite, SURVEY.md §2.2). */
   def bloomJoinLineitem(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val orders = spark.read.parquet(s"$dir/orders.parquet")
     val lineitem = spark.read.parquet(s"$dir/lineitem.parquet")
     // persisted build side, released deterministically after the single-row
@@ -566,7 +543,6 @@ object SketchQueries {
     * caller owns the unpersist). */
   private[graft] def bloomJoinLineitemLazy(
       spark: SparkSession, orders: DataFrame, lineitem: DataFrame): (DataFrame, DataFrame) = {
-    GraftFunctions.register(spark)
     val buildSide = orders.where(col("o_orderstatus") === "P")
       .select(col("o_orderkey")).persist()
     val sketchBytes = buildSide
@@ -585,7 +561,6 @@ object SketchQueries {
   /** HLL distinct users per event type over the events stream table
     * (long-typed elements), within bound. */
   def hllEventUsersBound(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val events = spark.read.parquet(s"$dir/events.parquet")
     val est = events.groupBy(col("event_type")).agg(hllAgg(col("user_id")).as("sk"))
       .select(col("event_type"), HllEstimate.column(col("sk")).as("est"))
@@ -612,7 +587,6 @@ object SketchQueries {
     * them from the raw table); the identity booleans are computed
     * in-Spark over the actual sketch bytes. */
   def sketchRollup(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val events = spark.read.parquet(s"$dir/events.parquet")
     // level 0: the daily sketch table (what a production job would persist
     // per Iceberg snapshot); level 1: merge partials per type — one small
@@ -661,7 +635,6 @@ object SketchQueries {
     * resume-then-finalize is byte-identical to an uninterrupted build
     * (SketchJobSpec), so no false negatives ⇒ exact per-source counts. */
   def sketchJobResumeProbeExact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val t = Tokens.table(spark, dir)
     // tmpfs-backed checkpoint when it has room (ScratchDir): the two
     // increments write + re-read the partial sketches per invocation —
@@ -734,7 +707,6 @@ object SketchQueries {
     * no UDF readers in the family (round-3 VERDICT #5). */
   private def mgGuaranteeGate(spark: SparkSession, sk: DataFrame, exact: DataFrame,
       capacity: Int): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val meta = sk
       .select(col("source"), HeavyHitterSummary.column(col("sk")).as("s"))
       .select(col("source"), col("s.error").as("d"), col("s.total").as("n"),
@@ -872,7 +844,6 @@ object SketchQueries {
     * At 100 TB: one partial-aggregated groupBy; the shuffle carries one
     * <= k-entry summary per (partition, source). */
   def sampleBottomK(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val k = 32
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("source"), col("doc_id").cast("long").as("doc_id"))
@@ -968,7 +939,6 @@ object SketchQueries {
     * shuffling <= k-entry summaries; the window-ranked branch exists only
     * for gate 5. */
   def sampleWeighted(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerExpressions(spark)
     val k = 16
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("source"), col("doc_id").cast("long").as("doc_id"),

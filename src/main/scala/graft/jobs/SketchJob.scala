@@ -6,7 +6,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.core._
 import graft.operators.SketchKinds.{Bloom, Cms, HllKind}
@@ -69,8 +69,7 @@ object SketchJob {
   /** Deterministic bucket id from doc_id via the NATIVE SipHash expression
     * (codegen, no UDF encoder boundary). Same value as the previous UDF:
     * `(hashString(coalesce(doc_id, "")) >>> 1) % buckets` — the shifted hash
-    * is non-negative, so `%` == `pmod`. Requires expressions registered on
-    * the session (runIncrement does). */
+    * is non-negative, so `%` == `pmod`. */
   private def bucketCol(k0: Long, k1: Long, buckets: Int) =
     (shiftrightunsigned(
       graft.plans.GraftFunctions.sipHash64(coalesce(col("doc_id"), lit("")), k0, k1), 1)
@@ -148,12 +147,10 @@ object SketchJob {
   def runIncrement(spark: SparkSession, tokens: DataFrame, ckptDir: String,
       cfg: JobConfig = DefaultConfig,
       failAfterBuckets: Option[Int] = None): Int = {
-    graft.plans.GraftFunctions.registerExpressions(spark)
     val done = committedBuckets(spark, ckptDir)
     // one fused native build (rows read in place, sparse partial buffers);
     // the config travels in the expression, not in a session-global name
-    val fused = NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(col("tokens")),
-      cfg.bloomK, cfg.bloomLog2l, cfg.hllP, cfg.cmsDepth, cfg.cmsLog2Width, cfg.k0, cfg.k1))
+    val fused = FusedTokensNative.column(col("tokens"), cfg.bloomCfg, cfg.hllP, cfg.cmsCfg)
 
     val withBucket = tokens.withColumn("bucket", bucketCol(cfg.k0, cfg.k1, cfg.numBuckets))
     val todoAll = (0 until cfg.numBuckets).filterNot(done)

@@ -117,7 +117,6 @@ object Decontamination {
     * prefilter in the scan stage, broadcast exact confirm — FP-immune. */
   private def hitRowsLazy(tokens: DataFrame, evalSource: String,
       n: Int, cfg: BloomConfig): (DataFrame, DataFrame) = {
-    GraftFunctions.register(tokens.sparkSession)
     val grams = gramRows(tokens, n)
     val evalGrams = grams.where(col("source") === evalSource)
       .select(col("gram")).distinct().persist()

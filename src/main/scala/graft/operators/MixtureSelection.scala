@@ -69,7 +69,6 @@ object MixtureSelection {
     * .esKey]]'s StrictMath.log, so these keys are BIT-IDENTICAL to the
     * weighted sampling aggregator's. */
   def withEsBits(docs: DataFrame, tokCol: String): DataFrame = {
-    graft.plans.GraftFunctions.registerExpressions(docs.sparkSession)
     val h = graft.plans.GraftFunctions.sipHash64(col("doc_id").cast("long"))
     val u = (shiftrightunsigned(h, 11) + lit(1L)).cast("double") / lit(9007199254740992.0)
     // w <= 0 docs clamp to +Infinity — ordering LAST with zero sampling

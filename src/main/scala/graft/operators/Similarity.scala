@@ -31,8 +31,7 @@ object Similarity {
     * loop), which at 100 TB made one-vs-many cosine the bottleneck of
     * brute-force/IVF search. Zero-norm vectors yield -1.0, never NaN
     * (Spark sorts NaN above every double, so a NaN would rank first in
-    * top-k and pass >= threshold filters). Callers must have registered
-    * the graft expressions (every entry point in this object does). */
+    * top-k and pass >= threshold filters). */
   def cosineTo(embCol: Column, query: Array[Float]): Column =
     graft.plans.VectorFunctions.cosineSim(embCol, typedlit(query))
 
@@ -42,12 +41,7 @@ object Similarity {
     * primitive arrays already beat the higher-order-function formulation
     * ~40x (HOF lambdas evaluate interpretively per element); the native
     * expression additionally removes the UDF encoder copy from every LSH
-    * verify join. NOTE: this is a Column builder with no session in scope,
-    * so it CANNOT self-register — the session must have the graft
-    * expressions registered ([[graft.plans.GraftFunctions.registerExpressions]],
-    * idempotent). Every DataFrame-taking entry point in this object
-    * registers on its input's session; direct cosineCols/cosineTo callers
-    * must register themselves. */
+    * verify join. */
   def cosineCols(a: Column, b: Column): Column =
     graft.plans.VectorFunctions.cosineSim(a, b)
 
@@ -56,7 +50,6 @@ object Similarity {
     * driver k-merge), not a global sort. */
   def bruteForceTopK(embeddings: DataFrame, idCol: String, embCol: String,
       query: Array[Float], k: Int): DataFrame = {
-    graft.plans.GraftFunctions.registerExpressions(embeddings.sparkSession)
     embeddings
       .select(col(idCol), cosineTo(col(embCol), query).as("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
@@ -102,7 +95,6 @@ object Similarity {
       b: Int = 32, chunks: Int = 4, threshold: Double = 0.9): DataFrame = {
     require(chunks >= 1 && chunks <= b && b % chunks == 0,
       s"srpNearDups: chunks ($chunks) must divide b ($b)")
-    graft.plans.GraftFunctions.registerExpressions(embeddings.sparkSession)
     val bitsPerChunk = b / chunks
     require(bitsPerChunk <= 31, s"srpNearDups: bits per chunk ($bitsPerChunk) must fit an Int key")
     // candidates carry ids only (distinct on two longs, not on embedding
@@ -198,7 +190,6 @@ object Similarity {
       lloydIters: Int = 8, trainSample: Int = 65536): IvfIndex = {
     require(trainSample >= numClusters,
       s"ivfBuild: trainSample ($trainSample) must be >= numClusters ($numClusters)")
-    graft.plans.GraftFunctions.registerExpressions(embeddings.sparkSession)
     val e = embeddings.select(col(idCol).cast("long").as("id"), col(embCol).as("emb"))
     val sample: Array[Array[Float]] = e
       .orderBy(graft.plans.GraftFunctions.sipHash64(col("id"), K0, K1), col("id"))
@@ -257,7 +248,6 @@ object Similarity {
     * most similar to the query. nProbe = numClusters degenerates to exact
     * brute force (tested). */
   def ivfSearch(index: IvfIndex, query: Array[Float], k: Int, nProbe: Int): DataFrame = {
-    graft.plans.GraftFunctions.registerExpressions(index.indexed.sparkSession)
     val probes = index.centroids.zipWithIndex
       .map { case (c, i) => (i, localCosine(query, c)) }
       .sortBy { case (i, cos) => (-cos, i) }
@@ -300,7 +290,6 @@ object Similarity {
   /** Exact all-pairs near-duplicates (test oracle; O(n²) — small scale only). */
   def exactNearDups(embeddings: DataFrame, idCol: String, embCol: String,
       threshold: Double): DataFrame = {
-    graft.plans.GraftFunctions.registerExpressions(embeddings.sparkSession)
     val e = embeddings.select(col(idCol).as("id"), col(embCol).as("emb"))
     e.as("a").join(broadcast(e.as("b")), col("a.id") < col("b.id"))
       .withColumn("cos", cosineCols(col("a.emb"), col("b.emb")))

@@ -5,12 +5,12 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 import graft.core.BlockedBloom.TypeTag
+import graft.plans.{LoadedBloomFilter, LoadedBloomPack}
 
 /** What an aggregate reads from its first input column, fixed by that
   * column's type at analysis time. `Sketches` (a `binary` column of
@@ -97,27 +97,33 @@ abstract class SketchKind[B <: AnyRef] extends Serializable {
   * every reader, in whole-stage codegen or interpreted. It checks the
   * argument types at analysis, maps NULL arguments to NULL and, where
   * [[emptyIsNull]], an empty payload (what a merge over no rows returns)
-  * to NULL, and decodes each distinct payload once per task through a
+  * to NULL. It decodes a literal sketch once per expression instance, at
+  * analysis, and every other payload once per distinct value through a
   * content-verified cache. A reader states only its signature, its
   * validated decode and the per-row function.
   *
-  * Arguments: [[sketches]] binary sketches, then one value argument when
-  * [[valueTypes]] is non-empty (a DOUBLE value also accepts int, bigint,
-  * float and decimal, cast to double), then, for a reader with [[keys]],
-  * optional `k0, k1` integer literals: the SipHash key its decode checks.
+  * Arguments: [[sketches]] binary sketches, then the [[values]] arguments
+  * (a DOUBLE value also accepts int, bigint, float and decimal, cast to
+  * double), then, for a reader with [[keys]], optional `k0, k1` integer
+  * literals: the SipHash key its decode checks.
   */
 abstract class SketchReader[D <: AnyRef](val name: String, val dataType: DataType) extends Serializable {
 
   /** Sketch arguments: 1, or 2 for the pairwise functions. */
   def sketches: Int = 1
 
-  /** The types the value argument may take; empty when there is none. */
-  def valueTypes: Seq[DataType] = Nil
+  /** The types each value argument may take, in order (at most two). */
+  def values: Seq[Seq[DataType]] = Nil
 
   /** The SipHash key of a reader that takes one, and the same reader
     * under another key. */
   def keys: Option[(Long, Long)] = None
   def withKeys(k0: Long, k1: Long): SketchReader[D] = this
+
+  /** This reader for value arguments of the (resolved, checked) types
+    * `types`; the expression binds once, before it decodes anything. A
+    * reader whose decode depends on the value type overrides it. */
+  def bind(types: Seq[DataType]): SketchReader[D] = this
 
   /** Whether an empty payload reads as NULL. When false, `read` gets
     * `null` for an empty sketch argument. */
@@ -128,29 +134,34 @@ abstract class SketchReader[D <: AnyRef](val name: String, val dataType: DataTyp
   def decode(x: Array[Byte]): D
 
   /** One row: the decoded sketches (`b` is null for a one-sketch reader)
-    * and the value argument as a Catalyst value (null if there is none).
-    * Must not mutate `a` or `b`: they are cached across rows. */
-  def read(a: D, b: D, v: Any): Any
+    * and the value arguments `v`, `w` as Catalyst values (null where there
+    * is none). Must not mutate `a` or `b`: they are cached across rows. */
+  def read(a: D, b: D, v: Any, w: Any): Any
 
-  final def arity: Int = sketches + (if (valueTypes.isEmpty) 0 else 1)
+  /** For a one-sketch reader, the Java expression of one row's answer
+    * that generated code evaluates on a literal sketch decoded once, given
+    * the decoded object's reference and the value arguments' variables;
+    * the result is boxed, null for SQL NULL. None calls [[read]]. */
+  def readCode: Option[(String, Seq[String]) => String] = None
+
+  final def arity: Int = sketches + values.length
 
   /** The SQL argument list, for error messages. */
   final def signature: String =
     (if (sketches == 1) "sketch BINARY" else "a BINARY, b BINARY") +
-      (if (valueTypes.isEmpty) "" else s", value ${valueTypes.map(_.sql).mkString("|")}") +
+      values.map(ts => s", value ${ts.map(_.sql).mkString("|")}").mkString +
       (if (keys.isEmpty) "" else " [, k0 BIGINT, k1 BIGINT]")
 
-  /** This function as a `Column` (needs `GraftFunctions.registerExpressions`
-    * on the session); a reader with keys passes them as literals. */
-  def column(args: Column*): Column =
-    call_function(name, args ++ keys.toSeq.flatMap { case (k0, k1) => Seq(lit(k0), lit(k1)) }: _*)
+  /** This function as a `Column`, built directly (no session
+    * registration); a reader with keys carries them in the expression. */
+  def column(args: Column*): Column = graft.plans.SketchRead.column(this, args)
 }
 
 /** A reader whose whole answer is its decoded payload (estimates,
   * summaries, samples): computed once per distinct sketch. */
 abstract class DecodedReader[D <: AnyRef](name: String, dataType: DataType)
     extends SketchReader[D](name, dataType) {
-  def read(a: D, b: D, v: Any): Any = a
+  def read(a: D, b: D, v: Any, w: Any): Any = a
 }
 
 object SketchKinds {
@@ -592,14 +603,14 @@ object SketchKinds {
     * element type must be the one the sketch was built over. */
   final case class CmsEstimate(k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1)
       extends SketchReader[CmsRead]("graft_cms_estimate", LongType) {
-    override def valueTypes: Seq[DataType] = Seq(IntegerType, StringType)
+    override def values: Seq[Seq[DataType]] = Seq(Seq(IntegerType, StringType))
     override def keys: Option[(Long, Long)] = Some((k0, k1))
     override def withKeys(a: Long, b: Long): CmsEstimate = CmsEstimate(a, b)
     def decode(x: Array[Byte]): CmsRead = cmsRead(k0, k1, x)
     private def requireTag(c: CmsRead, tag: Long): Unit =
       require(c.typeTag == tag, s"$name: the sketch holds ${TypeTag.name(c.typeTag)} elements, " +
         s"probed as ${TypeTag.name(tag)}")
-    def read(c: CmsRead, b: CmsRead, v: Any): Any = v match {
+    def read(c: CmsRead, b: CmsRead, v: Any, w: Any): Any = v match {
       case s: UTF8String =>
         requireTag(c, TypeTag.String)
         CountMin.estimateBytes(c.counters, c.cfg, s.getBytes)
@@ -623,30 +634,30 @@ object SketchKinds {
   /** `graft_kll_quantile(sketch, q)` -> double: the retained items are
     * sorted once per distinct sketch; each row is a binary search. */
   case object KllQuantile extends SketchReader[KllSortedView]("graft_kll_quantile", DoubleType) {
-    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    override def values: Seq[Seq[DataType]] = Seq(Seq(DoubleType))
     def decode(x: Array[Byte]): KllSortedView = new KllSortedView(Kll.fromBytes(x))
-    def read(a: KllSortedView, b: KllSortedView, v: Any): Any = a.quantile(v.asInstanceOf[Double])
+    def read(a: KllSortedView, b: KllSortedView, v: Any, w: Any): Any = a.quantile(v.asInstanceOf[Double])
   }
 
   /** `graft_kll_rank(sketch, x)` -> bigint: the estimated count <= x. */
   case object KllRank extends SketchReader[KllSketch]("graft_kll_rank", LongType) {
-    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    override def values: Seq[Seq[DataType]] = Seq(Seq(DoubleType))
     def decode(x: Array[Byte]): KllSketch = Kll.fromBytes(x)
-    def read(a: KllSketch, b: KllSketch, v: Any): Any = a.rank(v.asInstanceOf[Double])
+    def read(a: KllSketch, b: KllSketch, v: Any, w: Any): Any = a.rank(v.asInstanceOf[Double])
   }
 
   /** `graft_tdigest_quantile(sketch, q)` -> double. */
   case object TDigestQuantile extends SketchReader[TDigest]("graft_tdigest_quantile", DoubleType) {
-    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    override def values: Seq[Seq[DataType]] = Seq(Seq(DoubleType))
     def decode(x: Array[Byte]): TDigest = TDigest.fromBytes(x)
-    def read(a: TDigest, b: TDigest, v: Any): Any = a.quantile(v.asInstanceOf[Double])
+    def read(a: TDigest, b: TDigest, v: Any, w: Any): Any = a.quantile(v.asInstanceOf[Double])
   }
 
   /** `graft_tdigest_cdf(sketch, x)` -> double: the estimated mass <= x. */
   case object TDigestCdf extends SketchReader[TDigest]("graft_tdigest_cdf", DoubleType) {
-    override def valueTypes: Seq[DataType] = Seq(DoubleType)
+    override def values: Seq[Seq[DataType]] = Seq(Seq(DoubleType))
     def decode(x: Array[Byte]): TDigest = TDigest.fromBytes(x)
-    def read(a: TDigest, b: TDigest, v: Any): Any = a.cdf(v.asInstanceOf[Double])
+    def read(a: TDigest, b: TDigest, v: Any, w: Any): Any = a.cdf(v.asInstanceOf[Double])
   }
 
   /** `graft_kmv_estimate(sketch)` -> double: the distinct count (exact
@@ -678,7 +689,7 @@ object SketchKinds {
 
   /** `graft_kmv_jaccard(a, b)` -> double. */
   case object KmvJaccard extends KmvPair("graft_kmv_jaccard", DoubleType) {
-    def read(a: KmvRead, b: KmvRead, v: Any): Any = {
+    def read(a: KmvRead, b: KmvRead, v: Any, w: Any): Any = {
       pair(a, b)
       Kmv.jaccardAndIntersection(a.hashes, a.size, b.hashes, b.size)._1
     }
@@ -686,7 +697,7 @@ object SketchKinds {
 
   /** `graft_kmv_intersect(a, b)` -> double: |A ∩ B|. */
   case object KmvIntersect extends KmvPair("graft_kmv_intersect", DoubleType) {
-    def read(a: KmvRead, b: KmvRead, v: Any): Any = {
+    def read(a: KmvRead, b: KmvRead, v: Any, w: Any): Any = {
       pair(a, b)
       Kmv.jaccardAndIntersection(a.hashes, a.size, b.hashes, b.size)._2
     }
@@ -694,7 +705,7 @@ object SketchKinds {
 
   /** `graft_kmv_difference(a, b)` -> double: |A \ B| (asymmetric). */
   case object KmvDifference extends KmvPair("graft_kmv_difference", DoubleType) {
-    def read(a: KmvRead, b: KmvRead, v: Any): Any = {
+    def read(a: KmvRead, b: KmvRead, v: Any, w: Any): Any = {
       pair(a, b)
       Kmv.difference(a.hashes, a.size, b.hashes, b.size)
     }
@@ -705,7 +716,7 @@ object SketchKinds {
     * the other side), as in a chained `graft_kmv_merge`. */
   case object KmvUnion extends KmvPair("graft_kmv_union", BinaryType) {
     override def emptyIsNull: Boolean = false
-    def read(a: KmvRead, b: KmvRead, v: Any): Any =
+    def read(a: KmvRead, b: KmvRead, v: Any, w: Any): Any =
       if (a == null || b == null) Option(if (a == null) b else a).fold(Array.emptyByteArray)(_.bytes)
       else {
         pair(a, b)
@@ -779,7 +790,7 @@ object SketchKinds {
       val (c, words, tag) = BlockedBloom.fromBytes(k0, k1, x)
       new BloomRead(x, BloomBuf(words, c, tag))
     }
-    def read(a: BloomRead, b: BloomRead, v: Any): Any =
+    def read(a: BloomRead, b: BloomRead, v: Any, w: Any): Any =
       if (a == null || b == null) {
         val survivor = Option(if (a == null) b else a)
         if (intersection) Array.emptyByteArray else survivor.fold(Array.emptyByteArray)(_.bytes)
@@ -796,11 +807,62 @@ object SketchKinds {
       }
   }
 
+  /** The element-type tag an int, bigint or string probe implies. */
+  private def elemTag(dt: DataType): Long = dt match {
+    case IntegerType => TypeTag.Int
+    case LongType => TypeTag.Long
+    case _ => TypeTag.String
+  }
+
+  private val elemTypes: Seq[DataType] = Seq(IntegerType, LongType, StringType)
+
+  /** `graft_bloom_might_contain(sketch, elem [, k0, k1])` -> boolean: the
+    * reference's `lookup` (`Internal.hs:464-469`), no false negatives. The
+    * filter must hold the probe's element type (the reference's typeHash
+    * check, `Internal.hs:789`), checked once per decode: a literal filter
+    * of another type fails at analysis. On a literal filter, generated
+    * code calls the decoded filter directly. `elem` is the bound element
+    * type. */
+  final case class BloomProbe(k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1, elem: DataType = NullType)
+      extends SketchReader[LoadedBloomFilter]("graft_bloom_might_contain", BooleanType) {
+    override def values: Seq[Seq[DataType]] = Seq(elemTypes)
+    override def keys: Option[(Long, Long)] = Some((k0, k1))
+    override def withKeys(a: Long, b: Long): BloomProbe = copy(k0 = a, k1 = b)
+    override def bind(types: Seq[DataType]): BloomProbe = copy(elem = types.last)
+    def decode(x: Array[Byte]): LoadedBloomFilter =
+      LoadedBloomFilter.loadTyped(k0, k1, x, elemTag(elem))
+    def read(f: LoadedBloomFilter, b: LoadedBloomFilter, v: Any, w: Any): Any =
+      f.contains(v)
+    override def readCode: Option[(String, Seq[String]) => String] = Some((f, vs) =>
+      s"java.lang.Boolean.valueOf($f.${LoadedBloomFilter.method(elem)}(${vs.head}))")
+  }
+
+  /** `graft_bloom_might_contain_keyed(pack, key, elem [, k0, k1])` ->
+    * boolean: probes `elem` against the filter `key` names in a
+    * [[graft.plans.BloomFilterPack]] of per-group filters, decoded once
+    * per expression instance, so per-group sketches need no join onto the
+    * probe rows. A key with no filter, or an empty one, probes as NULL.
+    * Every filter must hold the probe's element type. */
+  final case class KeyedBloomProbe(k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1,
+      elem: DataType = NullType)
+      extends SketchReader[LoadedBloomPack]("graft_bloom_might_contain_keyed", BooleanType) {
+    override def values: Seq[Seq[DataType]] = Seq(Seq(StringType), elemTypes)
+    override def keys: Option[(Long, Long)] = Some((k0, k1))
+    override def withKeys(a: Long, b: Long): KeyedBloomProbe = copy(k0 = a, k1 = b)
+    override def bind(types: Seq[DataType]): KeyedBloomProbe = copy(elem = types.last)
+    def decode(x: Array[Byte]): LoadedBloomPack =
+      LoadedBloomPack.load(k0, k1, x, elemTag(elem))
+    def read(p: LoadedBloomPack, b: LoadedBloomPack, key: Any, v: Any): Any =
+      p.probe(key.asInstanceOf[UTF8String], v)
+    override def readCode: Option[(String, Seq[String]) => String] = Some((p, vs) =>
+      s"$p.${LoadedBloomPack.method(elem)}(${vs(0)}, ${vs(1)})")
+  }
+
   /** Every SQL read function with its default key. */
   val readers: Seq[SketchReader[_ <: AnyRef]] = Seq(
     HllEstimate, CmsEstimate(), CmsTotal(), KllQuantile, KllRank, TDigestQuantile, TDigestCdf,
     KmvEstimate, KmvJaccard, KmvIntersect, KmvDifference, KmvUnion, HeavyHitterSummary,
     SampleValues(weighted = false), SampleStrings(weighted = false),
     SampleValues(weighted = true), SampleStrings(weighted = true),
-    BloomCombine(intersection = false), BloomCombine(intersection = true))
+    BloomCombine(intersection = false), BloomCombine(intersection = true), BloomProbe(), KeyedBloomProbe())
 }

@@ -30,7 +30,6 @@ object TextPipeline {
     * `SipHash.hashString(K0, K1, text)`, with null texts fingerprinting to
     * 0L (the pre-native-UDF convention — countDistinct must see nulls). */
   def fingerprintCol(df: DataFrame, textCol: Column): Column = {
-    graft.plans.GraftFunctions.registerExpressions(df.sparkSession)
     coalesce(graft.plans.GraftFunctions.sipHash64(textCol), lit(0L))
   }
 

@@ -59,7 +59,6 @@ object TypedSketchOps {
     * token array counts 0 (coalesced before `size`, whose null result
     * depends on `spark.sql.legacy.sizeOfNull`). */
   def probeOwnSource(tokens: Dataset[TokenRow], sketches: Dataset[SourceSketches]): DataFrame = {
-    GraftFunctions.registerExpressions(tokens.sparkSession)
     tokens.toDF()
       .join(broadcast(sketches.toDF().select(col("source"), col("bloom"))), "source")
       .withColumn("n_present", size(filter(coalesce(col("tokens"), typedLit(Array.empty[Int])),

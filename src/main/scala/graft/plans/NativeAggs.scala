@@ -2,7 +2,7 @@ package graft.plans
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, TypedImperativeAggregate}
@@ -367,13 +367,19 @@ object FusedTokensNative {
   /** Ids hashed per structure-at-a-time pass: bounds the gather scratch to
     * 24 KB per dense buffer however many ids a densify inserts. */
   final val InsertChunk = 1024
+
+  /** The fused build over `tokens` as a `Column`, its sketch parameters in
+    * the expression (the SipHash key is `bloom`'s). */
+  def column(tokens: Column, bloom: BloomConfig, hllP: Int, cms: CmsConfig): Column =
+    NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(tokens),
+      bloom.k, bloom.log2l, hllP, cms.depth, cms.log2Width, bloom.k0, bloom.k1))
 }
 
 
 /** Registration of the native aggregates and their Column-API entry points.
   *
   * Every `graft_*` SQL aggregate name is in [[sqlAggregates]], which
-  * `GraftFunctions.nativeExpressions` serves to both `registerExpressions`
+  * `GraftFunctions.nativeExpressions` serves to both `GraftFunctions.register`
   * and the `GraftExtensions` injector. Each name keeps its arity and
   * defaults: Bloom k = 3, log2l = 12; HLL p = 12; CMS 5 x 2^11; KMV
   * k = 256; samples k = 64; heavy hitters capacity 64; KLL k = 200;
@@ -381,9 +387,10 @@ object FusedTokensNative {
   *
   * NOTE: `register` is session-global and last-wins — it rebinds
   * `graft_bloom_tokens_native` / `graft_fused_tokens_native` to its sketch
-  * parameters. Components sharing a session and needing different configs
-  * pass them per call (`graft_bloom_tokens_native(tokens, k, log2l)`) or
-  * use [[column]], whose parameters travel in the expression.
+  * parameters, and [[bloomTokensNative]] / [[fusedTokensNative]] build
+  * what the active session binds. The library itself never calls it:
+  * its jobs pass their parameters per call (`FusedTokensNative.column`,
+  * [[column]]), so they never change a binding.
   */
 object NativeAggs {
   import graft.core.Keys
@@ -489,9 +496,16 @@ object NativeAggs {
       fusedNative(bloomK, bloomLog2l, hllP, cmsDepth, cmsLog2Width, k0, k1), "built-in")
   }
 
-  def bloomTokensNative(tokens: Column): Column =
-    org.apache.spark.sql.functions.call_function(BloomName, tokens)
+  /** `name`'s aggregate over `tokens` as the active session binds it
+    * (`register`'s parameters), else with the library defaults. */
+  private def bound(name: String, tokens: Column): Column = {
+    val registered = org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
+      .lookupFunctionBuilder(FunctionIdentifier(name))
+    val build = registered.getOrElse(sqlAggregates.toMap.apply(name))
+    column(build(Seq(GraftColumnBridge.expression(tokens))).asInstanceOf[AggregateFunction])
+  }
 
-  def fusedTokensNative(tokens: Column): Column =
-    org.apache.spark.sql.functions.call_function(FusedName, tokens)
+  def bloomTokensNative(tokens: Column): Column = bound(BloomName, tokens)
+
+  def fusedTokensNative(tokens: Column): Column = bound(FusedName, tokens)
 }

@@ -3,9 +3,10 @@ package graft.plans
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, EmptyBlock, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 
 import graft.operators.SketchReader
 
@@ -44,44 +45,32 @@ private[plans] final class ReaderCache[S <: AnyRef](load: Array[Byte] => S) exte
   }
 }
 
-/** EMPTY-PAYLOAD CONVENTION for the read path: the serialized merges
-  * (`graft_*_merge`) finish an empty group to `Array.emptyByteArray`, so
-  * chained merge levels can skip it; reading that payload yields SQL NULL,
-  * the standard "aggregate over no rows" answer, instead of a decode
-  * exception. [[SketchRead]] applies it to every reader with
-  * `emptyIsNull`; the set functions instead skip the empty side, as the
-  * merges do. `guard` bakes the check into the generated code of
-  * [[BloomMightContain]]. */
-private[plans] object EmptyNull {
-  /** Codegen body: NULL out on an empty payload, else assign the call. */
-  def guard(ev: ExprCode, bytesVar: String, assign: String): String =
-    s"""
-       |if ($bytesVar.length == 0) {
-       |  ${ev.isNull} = true;
-       |} else {
-       |  $assign
-       |}
-     """.stripMargin
-}
-
 /** The one native expression behind every SQL read function over
   * serialized sketches (the [[graft.operators.SketchReader]]s of
   * `SketchKinds.readers`): estimates, pairwise set estimates, summaries,
-  * samples, and the KMV and Bloom set functions.
+  * samples, the KMV and Bloom set functions and the Bloom probes.
   *
-  * `children` are the reader's sketch arguments, then its value argument
-  * if it has one. The reader fixes the types, checked at analysis, and
-  * the result type. Per row: any NULL argument gives NULL; with
-  * `emptyIsNull`, an empty payload gives NULL; otherwise each sketch is
-  * decoded once per distinct payload (one [[ReaderCache]] per sketch
-  * argument, so two alternating inputs do not evict each other) and the
-  * reader computes the answer. Generated code is one direct call on this
-  * instance, so the readers run inside whole-stage codegen.
+  * `children` are the reader's sketch arguments, then its value
+  * arguments. The reader fixes the types, checked at analysis, and the
+  * result type; it is bound once to the value arguments' types. Per row:
+  * any NULL argument gives NULL; with `emptyIsNull`, an empty payload
+  * (what the serialized merges return for no rows) gives NULL; otherwise
+  * each sketch is decoded and the reader computes the answer.
+  *
+  * Load-once rule: a foldable sketch argument is decoded once per
+  * expression instance. Its validation runs in `checkInputDataTypes`, so a
+  * corrupt or mistyped literal fails at analysis, never from generated
+  * code (where Spark would swallow the error into an interpreted
+  * fallback). Any other payload is decoded once per distinct value (one
+  * [[ReaderCache]] per sketch argument, so two alternating inputs do not
+  * evict each other). Generated code is one direct call on this instance,
+  * or, for a reader with `readCode` over a literal sketch, a direct call on
+  * the decoded sketch; either way the readers run in whole-stage codegen.
   */
 case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) extends Expression {
 
-  private def r: SketchReader[AnyRef] = fn.asInstanceOf[SketchReader[AnyRef]]
-  private def hasValue: Boolean = fn.valueTypes.nonEmpty
+  private def sketchArgs: Seq[Expression] = children.take(fn.sketches)
+  private def valueArgs: Seq[Expression] = children.drop(fn.sketches)
 
   override def prettyName: String = fn.name
   override def dataType: DataType = fn.dataType
@@ -91,46 +80,83 @@ case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) 
   override def checkInputDataTypes(): TypeCheckResult = {
     def fail(msg: String) = TypeCheckResult.TypeCheckFailure(s"${fn.name}: $msg")
     if (children.length != fn.arity) fail(s"expects (${fn.signature}), got ${children.length} arguments")
-    else children.take(fn.sketches).find(_.dataType != BinaryType) match {
+    else sketchArgs.find(_.dataType != BinaryType) match {
       case Some(e) => fail(s"sketch arguments must be BINARY, got ${e.dataType.catalogString}")
-      case None if hasValue && !fn.valueTypes.contains(children.last.dataType) =>
-        fail(s"value argument must be ${fn.valueTypes.map(_.catalogString).mkString(" or ")}, " +
-          s"got ${children.last.dataType.catalogString}")
-      case None => TypeCheckResult.TypeCheckSuccess
+      case None => valueArgs.zip(fn.values).find { case (e, ts) => !ts.contains(e.dataType) } match {
+        case Some((e, ts)) =>
+          fail(s"value argument must be ${ts.map(_.catalogString).mkString(" or ")}, " +
+            s"got ${e.dataType.catalogString}")
+        case None => literals.collectFirst { case Some(scala.util.Left(msg)) => fail(msg) }
+          .getOrElse(TypeCheckResult.TypeCheckSuccess)
+      }
     }
   }
 
-  @transient private lazy val caches = Array.fill(fn.sketches)(new ReaderCache[AnyRef](r.decode))
+  /** The reader bound to the value arguments' types. */
+  @transient private lazy val bound: SketchReader[AnyRef] =
+    fn.bind(valueArgs.map(_.dataType)).asInstanceOf[SketchReader[AnyRef]]
 
-  private def load(i: Int, x: Array[Byte]): AnyRef = if (x.isEmpty) null else caches(i).get(x)
+  /** Per sketch argument: None unless it is a non-NULL literal; else its
+    * decode, once (null for an empty payload), or the validation message. */
+  @transient private lazy val literals: Seq[Option[Either[String, AnyRef]]] = sketchArgs.map { e =>
+    if (!e.foldable) None
+    else Option(e.eval(null)).map { x =>
+      val bytes = x.asInstanceOf[Array[Byte]]
+      try scala.util.Right(if (bytes.isEmpty) null else bound.decode(bytes))
+      catch { case ex: IllegalArgumentException => scala.util.Left(ex.getMessage) }
+    }
+  }
+
+  /** Per sketch argument: its decoded literal, or null to decode per row
+    * (a literal that failed validation decodes, and throws, per row). */
+  @transient private lazy val fixed: Array[AnyRef] =
+    literals.map(_.flatMap(_.toOption).orNull).toArray
+
+  @transient private lazy val caches = Array.fill(fn.sketches)(new ReaderCache[AnyRef](bound.decode))
+
+  private def load(i: Int, x: Array[Byte]): AnyRef = {
+    val d = fixed(i)
+    if (d != null) d else if (x.isEmpty) null else caches(i).get(x)
+  }
 
   /** One row of non-null arguments: `b` is null for a one-sketch reader,
-    * `v` without a value argument. */
-  def read(a: Array[Byte], b: Array[Byte], v: Any): Any =
+    * `v` and `w` where there is no such value argument. */
+  def read(a: Array[Byte], b: Array[Byte], v: Any, w: Any): Any =
     if (fn.emptyIsNull && (a.isEmpty || (b != null && b.isEmpty))) null
-    else r.read(load(0, a), if (b == null) null else load(1, b), v)
+    else bound.read(load(0, a), if (b == null) null else load(1, b), v, w)
 
   override def eval(input: InternalRow): Any = {
     val args = children.map(_.eval(input))
     if (args.contains(null)) null
     else read(args.head.asInstanceOf[Array[Byte]],
       if (fn.sketches == 2) args(1).asInstanceOf[Array[Byte]] else null,
-      if (hasValue) args.last else null)
+      args.lift(fn.sketches).orNull, args.lift(fn.sketches + 1).orNull)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("sketchRead", this, classOf[SketchRead].getName)
-    val args = children.map(_.genCode(ctx))
-    val b = if (fn.sketches == 2) args(1).value.toString else "null"
-    val v = if (hasValue) args.last.value.toString else "null"
+    // a one-sketch literal with a direct form: the per-row code reads the
+    // value arguments only and calls the decoded sketch
+    val direct = bound.readCode.filter(_ => fn.sketches == 1 && fixed(0) != null).map { code =>
+      val ref = ctx.addReferenceObj("sketch", fixed(0), fixed(0).getClass.getName)
+      val vs = valueArgs.map(_.genCode(ctx))
+      (vs, code(ref, vs.map(_.value.toString)))
+    }
+    val (args, call) = direct.getOrElse {
+      val self = ctx.addReferenceObj("sketchRead", this, classOf[SketchRead].getName)
+      val args = children.map(_.genCode(ctx))
+      val b = if (fn.sketches == 2) args(1).value.toString else "null"
+      val vs = args.drop(fn.sketches).map(_.value.toString).padTo(2, "null")
+      (args, s"$self.read(${args.head.value}, $b, ${vs.mkString(", ")})")
+    }
     val result = ctx.freshName("read")
+    val anyNull = if (args.isEmpty) "false" else args.map(_.isNull.toString).mkString(" || ")
     ev.copy(code =
       code"""
-        ${args.map(_.code).reduce(_ + _)}
+        ${args.map(_.code).foldLeft(EmptyBlock: Block)(_ + _)}
         boolean ${ev.isNull} = true;
         ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-        if (!(${args.map(_.isNull.toString).mkString(" || ")})) {
-          Object $result = $self.read(${args.head.value}, $b, $v);
+        if (!($anyNull)) {
+          Object $result = $call;
           if ($result != null) {
             ${ev.isNull} = false;
             ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;
@@ -151,6 +177,16 @@ object SketchRead {
     case _ => e
   }
 
+  /** `fn` over `args`, each DOUBLE value argument folded by [[asDouble]]. */
+  def of(fn: SketchReader[_ <: AnyRef], args: Seq[Expression]): SketchRead =
+    SketchRead(fn, args.take(fn.sketches) ++ args.drop(fn.sketches).zipAll(fn.values, null, Nil).collect {
+      case (e, ts) if e != null => if (ts == Seq(DoubleType)) asDouble(e) else e
+    })
+
+  /** `fn` over `args` as a `Column`, with no session registration. */
+  def column(fn: SketchReader[_ <: AnyRef], args: Seq[Column]): Column =
+    GraftColumnBridge.column(of(fn, args.map(GraftColumnBridge.expression)))
+
   /** The SQL builder of `fn`: its arguments, then optional `k0, k1`
     * integer literals for a reader with keys. */
   def builder(fn: SketchReader[_ <: AnyRef])(exprs: Seq[Expression]): Expression = {
@@ -159,8 +195,6 @@ object SketchRead {
       if (exprs.length == fn.arity) fn
       else if (fn.keys.isDefined && keys.length == 2 && keys.forall(_.isDefined)) fn.withKeys(keys(0).get, keys(1).get)
       else throw new IllegalArgumentException(s"${fn.name} expects (${fn.signature})")
-    val args = exprs.take(fn.arity)
-    SketchRead(read,
-      if (fn.valueTypes == Seq(DoubleType)) args.init :+ asDouble(args.last) else args)
+    of(read, exprs.take(fn.arity))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 
 /** `graft_cosine_sim(a, b)` — native codegen cosine similarity between two
   * embedding columns (`array<float>` or `array<double>`).
@@ -168,9 +169,8 @@ case class SrpBandsExpr(child: Expression, b: Int, chunks: Int) extends UnaryExp
   * loop as `Similarity.nearestCluster` (same truncation to the shorter
   * length, same zero-norm -1 convention, same first-wins tie break), so
   * the stored index is identical to the UDF formulation's — tested.
-  * Centroids are index-build-time DATA, not literals, so ivfBuild
-  * constructs this expression directly instead of going through the SQL
-  * function registry. */
+  * Centroids are index-build-time DATA, not literals, so it has no SQL
+  * name; ivfBuild constructs it directly. */
 case class IvfAssignExpr(child: Expression, centroids: Array[Array[Float]])
     extends UnaryExpression {
 
@@ -256,17 +256,14 @@ object VectorFunctions {
       s"$SrpBandsName expects (emb ARRAY, b INT literal, chunks INT literal)")
   }
 
-  def cosineSim(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function(CosineSimName, a, b)
+  def cosineSim(a: Column, b: Column): Column =
+    GraftColumnBridge.column(CosineSimExpr(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
-  def srpBands(emb: org.apache.spark.sql.Column, b: Int, chunks: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function(SrpBandsName, emb,
-      org.apache.spark.sql.functions.lit(b), org.apache.spark.sql.functions.lit(chunks))
+  def srpBands(emb: Column, b: Int, chunks: Int): Column =
+    GraftColumnBridge.column(SrpBandsExpr(GraftColumnBridge.expression(emb), b, chunks))
 
-  /** Direct-construction entry point (centroids are runtime data — see
+  /** Centroids are runtime data, carried in the expression (see
     * [[IvfAssignExpr]]). */
-  def ivfAssign(emb: org.apache.spark.sql.Column,
-      centroids: Array[Array[Float]]): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      IvfAssignExpr(org.apache.spark.sql.GraftColumnBridge.expression(emb), centroids))
+  def ivfAssign(emb: Column, centroids: Array[Array[Float]]): Column =
+    GraftColumnBridge.column(IvfAssignExpr(GraftColumnBridge.expression(emb), centroids))
 }

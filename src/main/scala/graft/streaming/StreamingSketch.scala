@@ -142,12 +142,8 @@ object StreamingSketch {
     // finished-window sketches collected ONCE (<= #windows x #sources rows)
     // and folded into the probe as a keyed literal pack — the former
     // broadcast join attached the 8 KB bloom column to every probe row
-    // (O(sketch bytes) copy + content-verify per row; see BloomKeyedProbe)
-    val packed = spark.table(sinkName).select(
-      ((col("window.start").cast("long") - epoch0) / 60).cast("long").as("win"),
-      col("source"), col("bloom")).collect().toSeq
-      .map(r => s"${r.getLong(0)}|${r.getString(1)}" -> r.getAs[Array[Byte]](2))
-    graft.plans.GraftFunctions.registerExpressions(spark)
+    // (O(sketch bytes) copy + content-verify per row)
+    val packed = windowPack(spark.table(sinkName), epoch0)
     val probe = t.select(
       ((col("doc_id").cast("long") % 600) / 60).cast("long").as("win"),
       col("source"), explode_outer(col("tokens")).as("token"))
@@ -232,13 +228,7 @@ object StreamingSketch {
     // literal pack (see replayBloomWindows); a probe row whose (win,
     // source) was never emitted yields NULL and filters out exactly like
     // the inner join it replaces
-    val packed = spark.table(sinkName)
-      .where(col("source") =!= "zz_sentinel")
-      .select(
-        ((col("window.start").cast("long") - epoch0) / 60).cast("long").as("win"),
-        col("source"), col("bloom")).collect().toSeq
-      .map(r => s"${r.getLong(0)}|${r.getString(1)}" -> r.getAs[Array[Byte]](2))
-    graft.plans.GraftFunctions.registerExpressions(spark)
+    val packed = windowPack(spark.table(sinkName).where(col("source") =!= "zz_sentinel"), epoch0)
     val probe = t
       .where(col("doc_id").cast("long") % 600 >= 300)
       .select(
@@ -252,6 +242,13 @@ object StreamingSketch {
       .agg(count(lit(1)).as("n_present"))
       .orderBy(col("win"), col("source"))
   }
+
+  /** A replay sink's (window, source) Bloom filters as keyed-probe pack
+    * entries, keyed `"<minute>|<source>"`. */
+  private def windowPack(sink: DataFrame, epoch0: Long): Seq[(String, Array[Byte])] =
+    graft.plans.BloomFilterPack.entries(graft.plans.BloomFilterPack.collect(sink,
+      concat(((col("window.start").cast("long") - epoch0) / 60).cast("long").cast("string"), lit("|"),
+        col("source")), col("bloom")).toSeq)
 
   private def secondOf(ts: Timestamp, epoch0: Long): Long =
     ts.toInstant.getEpochSecond - epoch0
@@ -357,7 +354,6 @@ object StreamingSketch {
     replayIntoMemorySink(spark, sinkName, "complete", windowed, stream,
       (0 until 3).map(chunk => rows.filter(r => r._4.length % 3 == chunk).toSeq))
 
-    graft.plans.GraftFunctions.registerExpressions(spark)
     val winCol = ((col("window.start").cast("long") - epoch0) / 60).cast("long").as("win")
     // materialize the sink ONCE (<= #windows x #sources summary rows): the
     // gate reuses it in three branches, and Spark's self-join attribute
@@ -455,7 +451,6 @@ object StreamingSketch {
       (0 until 3).map(chunk => rows.filter(r => r._4.length % 3 == chunk).toSeq) ++
         Seq(sentinel(5000), sentinel(5001)))
 
-    graft.plans.GraftFunctions.registerExpressions(spark)
     // materialize the <= sources x 5 session rows once (LocalRelation —
     // the memory-sink view does not survive the gate's joins, see
     // replayTrendingTokens)

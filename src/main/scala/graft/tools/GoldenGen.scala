@@ -73,6 +73,15 @@ object GoldenGen {
     }
     java.nio.file.Files.write(outDir.resolve("bottomk_weighted_str_32.bin"),
       BottomK.toBytesStrWeighted(swh, swv, sws, keyHash))
+    // keyed filter pack: two int filters of different configs (1..2*dataBytes
+    // and its negation) and an empty entry under the empty key
+    val packed = Seq((3, 2), (2, 1)).map { case (k, log2l) =>
+      val cfg = BloomConfig(k0, k1, k, log2l)
+      val words = new Array[Long](cfg.l)
+      (1 to 2 * cfg.sizeBytes).foreach(i => BlockedBloom.insertInt(words, cfg, -i * k))
+      s"bloom_${k}_$log2l" -> BlockedBloom.toBytes(words, cfg, BlockedBloom.TypeTag.Int)
+    } :+ ("" -> Array.emptyByteArray)
+    java.nio.file.Files.write(outDir.resolve("bloom_pack.bin"), graft.plans.BloomFilterPack.encode(packed))
     println("golden files written")
   }
 }

@@ -264,4 +264,19 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(lin.map(_.getInt(0)).toSet.size === lin.length, "one lineage row per bucket")
     assert(lin.map(_.getLong(1)).sum === tokens.count(), "lineage row counts must sum to input rows")
   }
+
+  test("library calls leave a NativeAggs.register binding in place; GraftFunctions.register is idempotent") {
+    NativeAggs.register(spark, bloomLog2l = 12)
+    val registry = spark.sessionState.functionRegistry
+    val fused = org.apache.spark.sql.catalyst.FunctionIdentifier(NativeAggs.FusedName)
+    val bound = registry.lookupFunctionBuilder(fused)
+    SketchJob.runIncrement(spark, generatedTokens(), freshDir(), cfg.copy(bloomLog2l = 10))
+    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.register(spark)
+    assert(registry.lookupFunctionBuilder(fused) === bound, "a library call rebound a name the session had")
+    val bloom = generatedTokens().agg(NativeAggs.fusedTokensNative(col("tokens")).as("f"))
+      .select(col("f.bloom")).head().getAs[Array[Byte]](0)
+    assert(bloom.length === BloomConfig(cfg.k0, cfg.k1, 3, 12).sizeBytes + 64,
+      s"fused build ran a ${bloom.length}-byte bloom, not the registered 2^12 words")
+  }
 }

@@ -100,7 +100,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = tokenDf(300, 4)
     val bloomUdaf = udaf(new BloomTokensAgg(cfg), ExpressionEncoder[Array[Int]]())
     val sketches = df.groupBy(col("source")).agg(bloomUdaf(col("tokens")).as("sketch"))
-    GraftFunctions.registerExpressions(spark)
+    GraftFunctions.register(spark)
     val missing = df.select(col("source"), explode(col("tokens")).as("token"))
       .join(broadcast(sketches), "source")
       .where(!GraftFunctions.bloomMightContain(col("sketch"), col("token")))

@@ -178,4 +178,26 @@ class GoldenFilesSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](BottomK.fromBytesStr(stored))
     assert(e.getMessage.contains("must not mix"))
   }
+
+  test("keyed filter pack golden file: byte-identical rebuild, decode, keyed probe") {
+    val filters = Seq((3, 2), (2, 1)).map { case (k, log2l) =>
+      val cfg = BloomConfig(k0, k1, k, log2l)
+      val words = new Array[Long](cfg.l)
+      (1 to 2 * cfg.sizeBytes).foreach(i => BlockedBloom.insertInt(words, cfg, -i * k))
+      s"bloom_${k}_$log2l" -> (cfg, BlockedBloom.toBytes(words, cfg, BlockedBloom.TypeTag.Int))
+    }
+    val stored = golden("bloom_pack.bin")
+    val fresh = graft.plans.BloomFilterPack.encode(filters.map { case (key, (_, b)) => key -> b } :+
+      ("" -> Array.emptyByteArray))
+    assert(java.util.Arrays.equals(fresh, stored), "filter pack golden drift")
+    val entries = graft.plans.BloomFilterPack.decode(stored)
+    assert(entries.map(_._1) === Seq("bloom_3_2", "bloom_2_1", "") && entries.last._2.isEmpty)
+    val pack = graft.plans.LoadedBloomPack.load(k0, k1, stored, BlockedBloom.TypeTag.Int)
+    val key = org.apache.spark.unsafe.types.UTF8String.fromString _
+    filters.foreach { case (name, (cfg, _)) =>
+      val k = cfg.k
+      (1 to 2 * cfg.sizeBytes).foreach(i => assert(pack.probeInt(key(name), -i * k) === true))
+    }
+    assert(pack.probeInt(key(""), 1) === null && pack.probeInt(key("absent"), 1) === null)
+  }
 }

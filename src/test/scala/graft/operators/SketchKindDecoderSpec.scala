@@ -17,7 +17,9 @@ import graft.operators.SketchKinds._
   * a negative value), either decodes or throws `IllegalArgumentException`.
   * Nothing else may escape: no `BufferUnderflowException`,
   * `ArrayIndexOutOfBoundsException`, `NegativeArraySizeException` or
-  * out-of-memory allocation. */
+  * out-of-memory allocation. The keyed filter pack, decoded and loaded
+  * the way `graft_bloom_might_contain_keyed` loads its literal, is held to
+  * the same property. */
 class SketchKindDecoderSpec extends AnyFunSuite {
 
   private val (k0, k1) = (Keys.DefaultK0, Keys.DefaultK1)
@@ -103,13 +105,24 @@ class SketchKindDecoderSpec extends AnyFunSuite {
     truncated ++ flipped ++ fields
   }
 
-  for ((label, kind, inputs) <- cases)
+  /** A keyed pack of two small int filters and an empty entry. */
+  private val builtPack: Array[Byte] = graft.plans.BloomFilterPack.encode(Seq(
+    "g0" -> built(Bloom(BloomConfig(k0, k1, 3, 3)), SketchInput.Ints, (1 to 40).map(i => i * 7)),
+    "g1" -> built(Bloom(BloomConfig(k0, k1, 2, 2)), SketchInput.Ints, (1 to 40).map(i => -i)),
+    "" -> Array.emptyByteArray))
+
+  private val decoders: Seq[(String, Array[Byte] => Any, Seq[Array[Byte]])] =
+    cases.map { case (label, kind, inputs) => (label, (x: Array[Byte]) => kind.fromBytes(x), inputs) } :+
+      (("keyed filter pack", (x: Array[Byte]) => graft.plans.LoadedBloomPack.load(k0, k1, x, BlockedBloom.TypeTag.Int),
+        Seq(golden("bloom_pack.bin"), builtPack)))
+
+  for ((label, decode, inputs) <- decoders)
     test(s"$label: fromBytes on golden and built payloads decodes or throws IllegalArgumentException") {
-      inputs.foreach(x => kind.fromBytes(x)) // the unmutated payloads decode
+      inputs.foreach(x => decode(x)) // the unmutated payloads decode
       val escapes = for {
         (x, i) <- inputs.iterator.zipWithIndex
         (what, y) <- mutations(x)
-        err <- (try { kind.fromBytes(y); None } catch {
+        err <- (try { decode(y); None } catch {
           case _: IllegalArgumentException => None
           case t: Throwable => Some(t)
         })
@@ -134,5 +147,25 @@ class SketchKindDecoderSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](TDigest.fromBytes(centroids))
     assertThrows[IllegalArgumentException](TDigest.fromBytes(java.util.Arrays.copyOf(td, td.length - 1)))
     assertThrows[IllegalArgumentException](TDigest.fromBytes(java.util.Arrays.copyOf(td, 20)))
+  }
+
+  test("keyed filter pack: malformed headers are rejected before any allocation; the size bound holds at its cap") {
+    import graft.plans.BloomFilterPack
+    def header(ints: Int*): Array[Byte] = {
+      val bb = ByteBuffer.allocate(4 * ints.length)
+      ints.foreach(bb.putInt)
+      bb.array()
+    }
+    // formerly a NegativeArraySizeException, an Int.MaxValue-byte
+    // allocation and a BufferUnderflowException
+    Seq(header(1, -1), header(1, Int.MaxValue), header(1, 0), header(Int.MaxValue), Array[Byte](0, 0))
+      .foreach(x => assertThrows[IllegalArgumentException](BloomFilterPack.decode(x)))
+    BloomFilterPack.checkBounds(BloomFilterPack.MaxEntries, BloomFilterPack.MaxSketchBytes)
+    val groups = intercept[IllegalArgumentException](
+      BloomFilterPack.checkBounds(BloomFilterPack.MaxEntries + 1, 10L))
+    assert(groups.getMessage.contains(s"${BloomFilterPack.MaxEntries + 1} groups and 10 sketch bytes"))
+    val bytes = intercept[IllegalArgumentException](
+      BloomFilterPack.checkBounds(3L, BloomFilterPack.MaxSketchBytes + 1))
+    assert(bytes.getMessage.contains(s"3 groups and ${BloomFilterPack.MaxSketchBytes + 1} sketch bytes"))
   }
 }

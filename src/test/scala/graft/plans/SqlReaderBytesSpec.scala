@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,8 +15,8 @@ import graft.core.{BlockedBloom, BloomConfig, CmsConfig, CountMin, Keys}
 import graft.operators.SketchKinds.{Bloom, Cms, KmvKind}
 
 /** Pins the output of every `graft_*` SQL read function over serialized
-  * sketches: the 17 estimate / pairwise / sample readers and the two Bloom
-  * set functions.
+  * sketches: the 17 estimate / pairwise / sample readers, the two Bloom
+  * set functions and the two Bloom probes.
   *
   * The sketches are built per group from a one-partition fixture (one
   * partial per group, so the bytes do not depend on merge order), then
@@ -26,7 +26,12 @@ import graft.operators.SketchKinds.{Bloom, Cms, KmvKind}
   * where a function takes keys (`k0, k1` as INT and BIGINT literals, over
   * sketches built under the default and under a non-default key), the
   * numeric -> DOUBLE fold of the value argument (INT, BIGINT, DECIMAL and
-  * NULL values), and KMV sketches of mixed capacity (256 and 64).
+  * NULL values), and KMV sketches of mixed capacity (256 and 64). The
+  * Bloom probes run over sketch columns and over literal sketches (bound
+  * as named parameters `:name`, so the call list stays short): int, bigint
+  * and string elements, a NULL element, an `X''` payload, 64- and 128-bit
+  * hash configs and explicit keys; the keyed probe's pack has a group
+  * whose entry is empty, lacks others, and meets a NULL key.
   *
   * Each call runs twice, in whole-stage codegen (no fallback) and
   * interpreted; both must agree. The SHA-256 of the ordered rows (with the
@@ -78,7 +83,27 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
     "graft_sample_values(a.samp)",
     "graft_sample_strings(a.samp_str)",
     "graft_sample_weighted_values(a.sampw)",
-    "graft_sample_weighted_strings(a.sampw_str)")
+    "graft_sample_weighted_strings(a.sampw_str)",
+    "graft_bloom_might_contain(a.bloom, v.t)",
+    s"graft_bloom_might_contain(a.bloom, v.t, $k0, $k1)",
+    "graft_bloom_might_contain(a.bloom_l, v.l)",
+    "graft_bloom_might_contain(a.bloom_s, v.s)",
+    "graft_bloom_might_contain(a.bloom128, v.t)",
+    "graft_bloom_might_contain(a.bloom_k, v.t, 1, 2)",
+    "graft_bloom_might_contain(a.bloom_k, v.t, 1L, 2L)",
+    "graft_bloom_might_contain(:bloom, v.t)",
+    "graft_bloom_might_contain(:bloom, 7)",
+    "graft_bloom_might_contain(:bloom_l, v.l)",
+    "graft_bloom_might_contain(:bloom_s, v.s)",
+    "graft_bloom_might_contain(:bloom128, v.t)",
+    "graft_bloom_might_contain(:bloom_k, v.t, 1, 2)",
+    "graft_bloom_might_contain(X'', v.t)",
+    "graft_bloom_might_contain_keyed(:pack, a.g, v.t)",
+    "graft_bloom_might_contain_keyed(:pack, v.k, v.t)",
+    "graft_bloom_might_contain_keyed(:pack_l, a.g, v.l)",
+    "graft_bloom_might_contain_keyed(:pack_s, a.g, v.s)",
+    s"graft_bloom_might_contain_keyed(:pack, a.g, v.t, $k0, $k1)",
+    "graft_bloom_might_contain_keyed(:pack_k, v.k, v.t, 1, 2)")
 
   /** Pairwise calls over every ordered pair of sketch rows (a, b). */
   private val pairs: Seq[String] = Seq(
@@ -101,7 +126,10 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
     "graft_bloom_intersect(a.bloom_k, b.bloom_k, 1L, 2L)")
 
   private val sketchCols = Seq("hll", "cms", "cms_str", "cms_k", "kll", "td", "kmv", "kmv64", "hh",
-    "samp", "samp_str", "sampw", "sampw_str", "bloom", "bloom11", "bloom_k")
+    "samp", "samp_str", "sampw", "sampw_str", "bloom", "bloom11", "bloom_k", "bloom_l", "bloom_s", "bloom128")
+
+  /** Literal sketches and packs, bound by name in the calls. */
+  private var params: Map[String, Array[Byte]] = Map.empty
 
   private def setUp(): Unit = {
     GraftFunctions.register(spark)
@@ -112,7 +140,8 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
       "CAST((id * 7919) % 1000 AS DOUBLE) / 3.0 AS x",
       "(id * id) % 89 AS v",
       "1 + id % 4 AS w",
-      "concat('doc', CAST(id % 250 AS STRING)) AS s")
+      "concat('doc', CAST(id % 250 AS STRING)) AS s",
+      "id")
     src.createOrReplaceTempView("rsrc")
     val built = spark.sql(
       """SELECT g, graft_hll_tokens(tokens) AS hll, graft_cms_tokens(tokens) AS cms,
@@ -125,7 +154,13 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .join(src.groupBy(col("g")).agg(
         NativeAggs.column(Cms(CmsConfig(1L, 2L, 5, 11)), col("tokens")).as("cms_k"),
         NativeAggs.column(KmvKind(Keys.DefaultK0, Keys.DefaultK1, 64), col("tokens")).as("kmv64"),
-        NativeAggs.column(Bloom(BloomConfig(1L, 2L, 3, 10)), col("tokens")).as("bloom_k")), "g")
+        NativeAggs.column(Bloom(BloomConfig(1L, 2L, 3, 10)), col("tokens")).as("bloom_k"),
+        NativeAggs.column(Bloom(BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 10)), col("v")).as("bloom_l"),
+        NativeAggs.column(Bloom(BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 10)),
+          expr("concat('w', CAST(id % 23 AS STRING))")).as("bloom_s"),
+        // 6 * 11 + 12 = 78 hash bits: the 128-bit probe path
+        NativeAggs.column(Bloom(BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 11, 12)), col("tokens"))
+          .as("bloom128")), "g")
       .orderBy("g").collect()
     // a string-element CMS per group, built on the driver
     val cmsCfg = CmsConfig(Keys.DefaultK0, Keys.DefaultK1, 5, 11)
@@ -143,10 +178,19 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 4), schema)
       .createOrReplaceTempView("sk")
     val vals = Seq(
-      Row(0, 7, "w3", 0.0, 0.0), Row(1, 123, "w11", 0.1, 50.5), Row(2, 399, "w22", 0.5, 100.0),
-      Row(3, -5, "absent", 0.99, 333.0), Row(4, 42, "", 1.0, 1e9), Row(5, null, null, null, null))
+      Row(0, 7, "w3", 0.0, 0.0, 16L, "g0"), Row(1, 123, "w11", 0.1, 50.5, 4L, "g1"),
+      Row(2, 399, "w22", 0.5, 100.0, 1L, "g2"), Row(3, -5, "absent", 0.99, 333.0, -5L, "gempty"),
+      Row(4, 42, "", 1.0, 1e9, 88L, "missing"), Row(5, null, null, null, null, null, null))
     spark.createDataFrame(spark.sparkContext.parallelize(vals, 2), StructType.fromDDL(
-      "id INT, t INT, s STRING, q DOUBLE, x DOUBLE")).createOrReplaceTempView("vals")
+      "id INT, t INT, s STRING, q DOUBLE, x DOUBLE, l BIGINT, k STRING")).createOrReplaceTempView("vals")
+    def sk(gi: Int, c: String): Array[Byte] = built(gi).getAs[Array[Byte]](c)
+    def pack(c: String, groups: Int*): Array[Byte] =
+      BloomFilterPack.encode(groups.map(gi => built(gi).getString(0) -> sk(gi, c)) :+ ("gempty" -> Array.emptyByteArray))
+    params = Map(
+      "bloom" -> sk(0, "bloom"), "bloom_l" -> sk(1, "bloom_l"), "bloom_s" -> sk(2, "bloom_s"),
+      "bloom128" -> sk(0, "bloom128"), "bloom_k" -> sk(1, "bloom_k"),
+      "pack" -> pack("bloom", 0, 1), "pack_l" -> pack("bloom_l", 1, 2), "pack_s" -> pack("bloom_s", 0, 2),
+      "pack_k" -> pack("bloom_k", 0, 1))
   }
 
   /** SHA-256 over the schema, then the rows in order (each field tagged
@@ -181,13 +225,14 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Digest of `call` in whole-stage codegen and interpreted; both must agree. */
   private def run(call: String): String = {
+    val named: Map[String, Any] = ":([a-z0-9_]+)".r.findAllMatchIn(call).map(m => m.group(1) -> params(m.group(1))).toMap
     val modes = Seq(
       Seq("spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
         "spark.sql.codegen.fallback" -> "false"),
       Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
     val ds = modes.map { conf =>
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try digest(spark.sql(query(call)))
+      try digest(spark.sql(query(call), named))
       finally conf.foreach { case (k, _) => spark.conf.unset(k) }
     }
     assert(ds.distinct.size === 1, s"codegen and interpreted outputs differ for $call")
@@ -210,6 +255,6 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pinned.map(_._1) === actual.map(_._1), "call list differs from the pinned list")
     val drift = actual.filterNot(pinned.contains)
     assert(drift.isEmpty, s"output changed for: ${drift.map(_._1).mkString(", ")}")
-    assert(actual.flatMap { case (c, _) => "graft_[a-z_]+".r.findAllIn(c) }.toSet.size === 19)
+    assert(actual.flatMap { case (c, _) => "graft_[a-z_]+".r.findAllIn(c) }.toSet.size === 21)
   }
 }
