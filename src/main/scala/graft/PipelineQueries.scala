@@ -593,13 +593,19 @@ object PipelineQueries {
 
   /** Packed (bit index a, bit index b) pairs of every two set bits across
     * the mask words — the per-gram "which source pairs share this gram"
-    * fan-out. Bit index = word*64 + bit; pack = a*65536 + b with a < b. */
-  private final class MaskPairsUdf extends (Array[Long] => Array[Long]) with Serializable {
-    override def apply(words: Array[Long]): Array[Long] = {
+    * fan-out. Bit index = word*64 + bit; pack = a*65536 + b with a < b.
+    * The C(s,2) pairs of s set bits (2,147,450,880 at the 65,536-source
+    * cap) are counted in a Long and emitted in chunks of at most
+    * [[MaskPairChunk]] pairs, so no array grows with C(s,2): the caller
+    * explodes twice, chunks then pairs. */
+  private[graft] final val MaskPairChunk = 1 << 16
+
+  private[graft] final class MaskPairsUdf extends (Array[Long] => Array[Array[Long]]) with Serializable {
+    override def apply(words: Array[Long]): Array[Array[Long]] = {
       var total = 0
       var wi = 0
       while (wi < words.length) { total += java.lang.Long.bitCount(words(wi)); wi += 1 }
-      if (total < 2) return Array.emptyLongArray
+      if (total < 2) return Array.empty
       val idx = new Array[Int](total)
       var o = 0
       wi = 0
@@ -612,16 +618,32 @@ object PipelineQueries {
         }
         wi += 1
       }
-      val out = new Array[Long](total * (total - 1) / 2)
-      var p = 0
+      val pairs = total.toLong * (total - 1) / 2
+      val out = Array.tabulate(((pairs + MaskPairChunk - 1) / MaskPairChunk).toInt)(c =>
+        new Array[Long](math.min(MaskPairChunk.toLong, pairs - c.toLong * MaskPairChunk).toInt))
+      var p = 0L
       var i = 0
       while (i < total) {
         var j = i + 1
-        while (j < total) { out(p) = idx(i).toLong * 65536L + idx(j); p += 1; j += 1 }
+        while (j < total) {
+          out((p / MaskPairChunk).toInt)((p % MaskPairChunk).toInt) = idx(i).toLong * 65536L + idx(j)
+          p += 1; j += 1
+        }
         i += 1
       }
       out
     }
+  }
+
+  /** Per packed source pair `pk` (see [[MaskPairsUdf]]), `inter_exact`:
+    * the number of `masks` rows (mask words `m0 … m{nWords-1}`) holding
+    * both bits. */
+  private[graft] def maskPairCounts(masks: DataFrame, nWords: Int): DataFrame = {
+    val pairsUdf = udf(new MaskPairsUdf)
+    masks
+      .select(explode(pairsUdf(array((0 until nWords).map(w => col(s"m$w")): _*))).as("chunk"))
+      .select(explode(col("chunk")).as("pk"))
+      .groupBy(col("pk")).agg(count(lit(1)).as("inter_exact"))
   }
 
   /** Set-bit indices of a multi-word mask (bit index = word*64 + bit) —
@@ -682,12 +704,7 @@ object PipelineQueries {
     // combined aggregate off the same cached masks frame instead of four
     // separate evaluations of the old grams frame (sizes x2 for the
     // self-join sides, sk x2 for the est_j joins).
-    val nWords = math.max(1, (sources.length + 63) / 64)
-    val mcols = array((0 until nWords).map(w => col(s"m$w")): _*)
-    val pairsUdf = udf(new MaskPairsUdf)
-    val pairCounts = masks
-      .select(explode(pairsUdf(mcols)).as("pk"))
-      .groupBy(col("pk")).agg(count(lit(1)).as("inter_exact"))
+    val pairCounts = maskPairCounts(masks, math.max(1, (sources.length + 63) / 64))
       .select(
         element_at(lit(sources), (col("pk") / 65536).cast("int") + 1).as("src_a"),
         element_at(lit(sources), pmod(col("pk"), lit(65536L)).cast("int") + 1).as("src_b"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core._
-import graft.plans.{BloomFilterPack, FusedTokensNative, GraftFunctions, NativeAggs}
+import graft.plans.{FusedTokensNative, GraftFunctions, NativeAggs}
 import graft.operators.SketchKinds._
 import graft.sources.Tokens
 
@@ -71,24 +71,26 @@ object SketchQueries {
     * per-source present-count equals the exact per-source token count. */
   def bloomProbeExact(spark: SparkSession, dir: String): DataFrame = {
     val t = Tokens.table(spark, dir)
-    // per-source sketches collected ONCE (one row per source by
-    // construction) and folded into the probe as a keyed literal pack: the
-    // former broadcast join attached the 8 KB sketch column to EVERY probe
-    // row, costing O(sketch bytes) of copy + content-verify per row
-    // (optimization guide §2.3 — move decisions to small rows, keep
-    // payloads out of the per-row path)
-    val packed = collectSketches(perSourceBloom(t), "sketch")
+    probeOwnSource(t, packOf(perSourceBloom(t), "sketch"))
+  }
+
+  /** The per-source filters of `sk` (columns `source`, `sketchCol`) as one
+    * keyed pack, computed by the probing query itself (a scalar subquery):
+    * the former broadcast join attached the sketch column to EVERY probe
+    * row, costing O(sketch bytes) of copy + content-verify per row
+    * (optimization guide §2.3 — move decisions to small rows, keep
+    * payloads out of the per-row path). */
+  private def packOf(sk: DataFrame, sketchCol: String): Column =
+    sk.agg(GraftFunctions.bloomPack(col("source"), col(sketchCol))).scalar()
+
+  /** Every (source, token) occurrence of `t` probed against its own
+    * source's filter in `pack`, counted per source. */
+  private def probeOwnSource(t: DataFrame, pack: Column): DataFrame =
     exploded(t)
-      .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
+      .where(GraftFunctions.bloomMightContainKeyed(pack, col("source"), col("token")))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_present"))
       .orderBy(col("source"))
-  }
-
-  /** The (source, serialized sketch) pack entries of a per-source frame,
-    * collected once its size has passed the pack bounds. */
-  private def collectSketches(sk: DataFrame, sketchCol: String): Seq[(String, Array[Byte])] =
-    BloomFilterPack.entries(BloomFilterPack.collect(sk, col("source"), col(sketchCol)).toSeq)
 
   /** The 128-BIT HASH PATH under the driver gate: k=11, log2l=12 needs
     * 6*11+12 = 78 hash bits, so build and probe run through
@@ -99,16 +101,11 @@ object SketchQueries {
     val cfg128 = BloomConfig(K0, K1, k = 11, log2l = 12)
     require(!cfg128.hash64Enough, "query must exercise the 128-bit path")
     val t = Tokens.table(spark, dir)
-    // keyed literal pack instead of the sketch-column broadcast join — the
-    // 128-bit config's 32 KB filters made the per-row copy+verify cost of
-    // the join path 4x the 64-bit twin's (see bloomProbeExact)
-    val packed = collectSketches(t.groupBy(col("source"))
-      .agg(NativeAggs.column(Bloom(cfg128), col("tokens")).as("sketch")), "sketch")
-    exploded(t)
-      .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_present"))
-      .orderBy(col("source"))
+    // keyed pack instead of the sketch-column broadcast join — the 128-bit
+    // config's 32 KB filters made the per-row copy+verify cost of the join
+    // path 4x the 64-bit twin's (see packOf)
+    probeOwnSource(t, packOf(t.groupBy(col("source"))
+      .agg(NativeAggs.column(Bloom(cfg128), col("tokens")).as("sketch")), "sketch"))
   }
 
   /** The FLAGSHIP production build path under the driver correctness gate:
@@ -120,17 +117,12 @@ object SketchQueries {
     * oracle as q_bloom_probe_exact. */
   def fusedNativeProbeExact(spark: SparkSession, dir: String): DataFrame = {
     val t = Tokens.table(spark, dir)
-    // keyed literal pack instead of the sketch-column broadcast join (see
-    // bloomProbeExact) — the fused struct's bloom member is extracted once
-    // per source at collect time, not per probe row
-    val packed = collectSketches(t.groupBy(col("source"))
+    // keyed pack instead of the sketch-column broadcast join (see packOf)
+    // — the fused struct's bloom member is extracted once per source, when
+    // the pack is built, not per probe row
+    probeOwnSource(t, packOf(t.groupBy(col("source"))
       .agg(FusedTokensNative.column(col("tokens"), bloomCfg, hllP, cmsCfg).as("sk"))
-      .select(col("source"), col("sk.bloom").as("sketch")), "sketch")
-    exploded(t)
-      .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_present"))
-      .orderBy(col("source"))
+      .select(col("source"), col("sk.bloom").as("sketch")), "sketch"))
   }
 
   /** Runtime-filter pattern (SURVEY.md §2.2 "Joins"): Bloom built on the
@@ -152,13 +144,11 @@ object SketchQueries {
       .select(explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull).distinct().persist()
     try {
-      // build the Bloom on the build side and ship it into the probe filter
-      val sketchBytes = buildSide
-        .agg(bloomAgg(col("token")))
-        .head().getAs[Array[Byte]](0)
+      // the Bloom over the build side, as a scalar subquery of this query:
+      // decoded once per task, probed in codegen
+      val sketch = buildSide.agg(bloomAgg(col("token"))).scalar()
       val probe = exploded(t).distinct()
-      // foldable-sketch native expression: deserialized once, probed in codegen
-      val prefiltered = probe.where(GraftFunctions.bloomMightContain(lit(sketchBytes), col("token")))
+      val prefiltered = probe.where(GraftFunctions.bloomMightContain(sketch, col("token")))
       val result = prefiltered
         .join(buildSide, Seq("token"), "left_semi") // exact confirmation join
         .groupBy(col("source"))
@@ -175,13 +165,11 @@ object SketchQueries {
     * so the present-count is exactly the distinct token count. */
   def bloomUnionGlobal(spark: SparkSession, dir: String): DataFrame = {
     val t = Tokens.table(spark, dir)
-    val globalBytes = perSourceBloom(t)
-      .agg(bloomAgg(col("sketch")))
-      .head().getAs[Array[Byte]](0)
+    val global = perSourceBloom(t).agg(bloomAgg(col("sketch"))).scalar()
     t.select(explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull) // one tokenize evaluation (see `exploded`)
       .distinct()
-      .where(GraftFunctions.bloomMightContain(lit(globalBytes), col("token")))
+      .where(GraftFunctions.bloomMightContain(global, col("token")))
       .agg(count(lit(1)).as("n_present"))
   }
 
@@ -204,30 +192,14 @@ object SketchQueries {
       .agg(bloomAgg(col("tokens")).as("partial"))
       .groupBy(col("source"))
       .agg(bloomAgg(col("partial")).as("salted_sketch"))
-    // equivalence rows collected ONCE (one per source); the probe runs
-    // against the keyed literal pack instead of carrying the salted sketch
-    // column through a broadcast join (see bloomProbeExact), and the
-    // per-source equality boolean joins back onto the group-count-sized
-    // aggregate — min(bool) over a group whose boolean is constant per
-    // source is the boolean itself
-    val equiv = BloomFilterPack.collect(salted.join(direct, "source"), col("source"),
-      col("salted_sketch"), (col("salted_sketch") === col("direct_sketch")).as("salted_equals_direct"))
-    val packed = BloomFilterPack.entries(equiv.toSeq)
-    val boolRows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(equiv.map(r =>
-        org.apache.spark.sql.Row(r.getString(0), r.getBoolean(2))): _*)
-    val bools = spark.createDataFrame(boolRows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType, nullable = true),
-        // nullable like the min(bool) aggregate it replaces, so the
-        // written parquet schema stays optional-boolean
-        org.apache.spark.sql.types.StructField("salted_equals_direct",
-          org.apache.spark.sql.types.BooleanType, nullable = true))))
-    exploded(t)
-      .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_present"))
+    // the probe runs against the keyed pack of the salted filters instead
+    // of carrying the salted sketch column through a broadcast join (see
+    // packOf), and the per-source equality boolean (one row per source)
+    // joins back onto the group-count-sized aggregate
+    val both = salted.join(direct, "source")
+    val bools = both.select(col("source"),
+      (col("salted_sketch") === col("direct_sketch")).as("salted_equals_direct"))
+    probeOwnSource(t, packOf(both, "salted_sketch"))
       .join(broadcast(bools), "source")
       .select(col("source"), col("salted_equals_direct"), col("n_present"))
       .orderBy(col("source"))
@@ -478,20 +450,20 @@ object SketchQueries {
     * so the present-count equals the exact common distinct count. */
   def bloomIntersectExact(spark: SparkSession, dir: String): DataFrame = {
     val t = Tokens.table(spark, dir)
-    val sketches = perSourceBloom(t).orderBy(col("source")).limit(2).collect()
-    require(sketches.length == 2, "need at least two sources")
-    val (srcA, skA) = (sketches(0).getString(0), sketches(0).getAs[Array[Byte]](1))
-    val (srcB, skB) = (sketches(1).getString(0), sketches(1).getAs[Array[Byte]](1))
-    val interBytes = {
-      val (cfgA, wa, tag) = BlockedBloom.fromBytes(K0, K1, skA)
-      val (_, wb, _) = BlockedBloom.fromBytes(K0, K1, skB)
-      BlockedBloom.toBytes(BlockedBloom.intersectInPlace(wa, wb), cfgA, tag)
-    }
-    val tokensOf = (s: String) =>
-      exploded(t).where(col("source") === s).select(col("token")).distinct()
-    val common = tokensOf(srcA).intersect(tokensOf(srcB))
+    val two = t.select(col("source")).distinct().orderBy(col("source")).limit(2)
+    val sketches = perSourceBloom(t.join(two, "source"))
+    // the first and the second source's filter, each a scalar subquery;
+    // fewer than two sources fail the query
+    def sketchOf(pick: (Column, Column) => Column) = sketches.agg(
+      when(count(lit(1)) === 2, pick(col("sketch"), col("source")))
+        .otherwise(raise_error(lit("need at least two sources")))).scalar()
+    val inter = BloomCombine(intersection = true).column(sketchOf(min_by), sketchOf(max_by))
+    // the exact common tokens: those of both sources
+    val common = exploded(t.join(two, "source")).distinct()
+      .groupBy(col("token")).agg(count(lit(1)).as("n_sources"))
+      .where(col("n_sources") === 2)
     common
-      .where(GraftFunctions.bloomMightContain(lit(interBytes), col("token")))
+      .where(GraftFunctions.bloomMightContain(inter, col("token")))
       .agg(count(lit(1)).as("n_common_present"))
   }
 
@@ -545,11 +517,9 @@ object SketchQueries {
       spark: SparkSession, orders: DataFrame, lineitem: DataFrame): (DataFrame, DataFrame) = {
     val buildSide = orders.where(col("o_orderstatus") === "P")
       .select(col("o_orderkey")).persist()
-    val sketchBytes = buildSide
-      .agg(bloomAgg(col("o_orderkey").cast("long")))
-      .head().getAs[Array[Byte]](0)
+    val sketch = buildSide.agg(bloomAgg(col("o_orderkey").cast("long"))).scalar()
     val prefiltered = lineitem
-      .where(GraftFunctions.bloomMightContain(lit(sketchBytes), col("l_orderkey")))
+      .where(GraftFunctions.bloomMightContain(sketch, col("l_orderkey")))
     val result = prefiltered
       .join(buildSide.withColumnRenamed("o_orderkey", "l_orderkey"), Seq("l_orderkey"), "left_semi")
       // quantities are integral doubles; cast BEFORE summing so both engines
@@ -647,16 +617,8 @@ object SketchQueries {
     val cfg = graft.jobs.SketchJob.DefaultConfig
     graft.jobs.SketchJob.runIncrement(spark, t, ckpt, cfg, failAfterBuckets = Some(5))
     graft.jobs.SketchJob.runIncrement(spark, t, ckpt, cfg) // resume the rest
-    // finalized sketches collected ONCE (one per source) and probed via the
-    // keyed literal pack (see bloomProbeExact)
-    val packed = collectSketches(
-      graft.jobs.SketchJob.finalizeSketches(spark, ckpt, cfg)
-        .select(col("source"), col("bloom")), "bloom")
-    exploded(t)
-      .where(GraftFunctions.bloomMightContainKeyed(packed, col("source"), col("token")))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_present"))
-      .orderBy(col("source"))
+    // the finalized filters probed via the keyed pack (see packOf)
+    probeOwnSource(t, packOf(graft.jobs.SketchJob.finalizeSketches(spark, ckpt, cfg), "bloom"))
   }
 
   /** Doc-dependent key blow-up shared by the Misra-Gries gates (batch

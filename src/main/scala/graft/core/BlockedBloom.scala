@@ -263,13 +263,6 @@ object BlockedBloom {
       throw BloomConfig.invalid(
         s"serialized filter holds ${TypeTag.name(actual)} elements, probed/loaded as ${TypeTag.name(expected)}")
 
-  /** As [[fromBytes]] but also enforces the element-type tag. */
-  def fromBytesTyped(k0: Long, k1: Long, bytes: Array[Byte], expectedTag: Long): (BloomConfig, Array[Long], Long) = {
-    val parsed = fromBytes(k0, k1, bytes)
-    requireTypeTag(expectedTag, parsed._3)
-    parsed
-  }
-
   private def keyHash(k0: Long, k1: Long): Long =
     SipHash.hashLong(k0, k1, k0 ^ java.lang.Long.rotateLeft(k1, 32))
 

@@ -72,16 +72,6 @@ object CountMin {
     estimateHash(buf, cfg, lo, hi | 1L)
   }
 
-  def addLong(buf: Array[Long], cfg: CmsConfig, x: Long, count: Long = 1L): Unit = {
-    val (hi, lo) = SipHash.hash128Long(cfg.k0, cfg.k1, x)
-    addHash(buf, cfg, lo, hi | 1L, count)
-  }
-
-  def estimateLong(buf: Array[Long], cfg: CmsConfig, x: Long): Long = {
-    val (hi, lo) = SipHash.hash128Long(cfg.k0, cfg.k1, x)
-    estimateHash(buf, cfg, lo, hi | 1L)
-  }
-
   def addString(buf: Array[Long], cfg: CmsConfig, s: String, count: Long = 1L): Unit = {
     val (hi, lo) = SipHash.hash128String(cfg.k0, cfg.k1, s)
     addHash(buf, cfg, lo, hi | 1L, count)

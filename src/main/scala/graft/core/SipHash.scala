@@ -149,12 +149,6 @@ object SipHash {
   def hashString(k0: Long, k1: Long, s: String): Long =
     hash64(k0, k1, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Hash a Double via normalized IEEE-754 bits (-0.0 → 0.0, canonical NaN). */
-  def hashDouble(k0: Long, k1: Long, x: Double): Long = {
-    val norm = if (x == 0.0) 0.0 else if (x != x) Double.NaN else x
-    hashLong(k0, k1, java.lang.Double.doubleToLongBits(norm))
-  }
-
   // ---------------------------------------------------------------------
   // 128-bit variant (SipHash-2-4-128): v1 ^= 0xee at init, v2 ^= 0xee at
   // finalization; second output word after v1 ^= 0xdd and 4 more rounds.
@@ -414,20 +408,6 @@ object SipHash {
     val a = new Array[Byte](8)
     var i = 0
     while (i < 8) { a(i) = (x >>> (8 * i)).toByte; i += 1 }
-    a
-  }
-
-  def encodeIntArray(xs: Array[Int]): Array[Byte] = {
-    val a = new Array[Byte](4 * xs.length)
-    var i = 0
-    while (i < xs.length) {
-      val x = xs(i)
-      a(4 * i) = x.toByte
-      a(4 * i + 1) = (x >>> 8).toByte
-      a(4 * i + 2) = (x >>> 16).toByte
-      a(4 * i + 3) = (x >>> 24).toByte
-      i += 1
-    }
     a
   }
 }

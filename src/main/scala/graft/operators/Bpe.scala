@@ -68,26 +68,8 @@ object Bpe {
     * tables including self-pairs and duplicate products. */
   private[graft] final class CompiledMerges(merges: Seq[(String, String)]) extends Serializable {
     private val products: Array[String] = merges.map { case (a, b) => a + b }.toArray
-    private val canonOf: java.util.HashMap[String, Integer] = {
-      val m = new java.util.HashMap[String, Integer](products.length * 2)
-      var r = 0
-      while (r < products.length) {
-        if (!m.containsKey(products(r))) m.put(products(r), Integer.valueOf(65536 + r))
-        r += 1
-      }
-      m
-    }
     /** canonical id of the symbol the rank-r merge produces */
-    private val resultIds: Array[Int] =
-      Array.tabulate(products.length)(r => canonOf.get(products(r)).intValue())
-    private def symId(s: String): Int =
-      if (s.length == 1) s.charAt(0).toInt
-      else {
-        val v = canonOf.get(s)
-        require(v != null,
-          s"BPE merge constituent '$s' is neither a single char nor a merge product")
-        v.intValue()
-      }
+    private val resultIds = new Array[Int](products.length)
     // open-addressed long->int table; ids are < 2^17 so every key is
     // non-negative and -1 marks an empty slot. Capacity 4x entries keeps
     // the load factor <= 0.25; linear probing.
@@ -100,11 +82,26 @@ object Bpe {
     private val keys = Array.fill[Long](cap)(-1L)
     private val vals = new Array[Int](cap)
     private def idx(k: Long): Int = (((k * 0x9E3779B97F4A7C15L) >>> 40) ^ k).toInt & mask
-    merges.zipWithIndex.foreach { case ((a, b), r) =>
-      val k = symId(a).toLong << 32 | symId(b).toLong
-      var i = idx(k)
-      while (keys(i) != -1L && keys(i) != k) i = (i + 1) & mask
-      keys(i) = k; vals(i) = r
+    // construction-only state stays local, so it does not ship with the
+    // task closures that carry this table
+    locally {
+      val canonOf = new java.util.HashMap[String, Integer](products.length * 2)
+      products.indices.foreach(r => canonOf.putIfAbsent(products(r), Integer.valueOf(65536 + r)))
+      products.indices.foreach(r => resultIds(r) = canonOf.get(products(r)).intValue())
+      def symId(s: String): Int =
+        if (s.length == 1) s.charAt(0).toInt
+        else {
+          val v = canonOf.get(s)
+          require(v != null,
+            s"BPE merge constituent '$s' is neither a single char nor a merge product")
+          v.intValue()
+        }
+      merges.zipWithIndex.foreach { case ((a, b), r) =>
+        val k = symId(a).toLong << 32 | symId(b).toLong
+        var i = idx(k)
+        while (keys(i) != -1L && keys(i) != k) i = (i + 1) & mask
+        keys(i) = k; vals(i) = r
+      }
     }
     /** rank of the (leftId, rightId) pair, Int.MaxValue when unlearned */
     private def rankOf(left: Int, right: Int): Int = {

@@ -114,18 +114,18 @@ object Decontamination {
 
   /** The shared hit path: confirmed contaminated (doc_id, source, gram)
     * rows plus the persisted eval gram frame (caller unpersists). Bloom
-    * prefilter in the scan stage, broadcast exact confirm — FP-immune. */
+    * prefilter in the scan stage, its filter built in the same query (a
+    * scalar subquery over the eval grams, decoded once per task), then the
+    * broadcast exact confirm — FP-immune. Building the plan runs no job. */
   private def hitRowsLazy(tokens: DataFrame, evalSource: String,
       n: Int, cfg: BloomConfig): (DataFrame, DataFrame) = {
     val grams = gramRows(tokens, n)
     val evalGrams = grams.where(col("source") === evalSource)
       .select(col("gram")).distinct().persist()
-    val sketch = evalGrams
-      .agg(NativeAggs.column(SketchKinds.Bloom(cfg), col("gram")))
-      .head().getAs[Array[Byte]](0)
+    val sketch = evalGrams.agg(NativeAggs.column(SketchKinds.Bloom(cfg), col("gram"))).scalar()
     val train = grams.where(col("source") =!= evalSource)
     val prefiltered =
-      train.where(GraftFunctions.bloomMightContain(lit(sketch), col("gram")))
+      train.where(GraftFunctions.bloomMightContain(sketch, col("gram")))
     // exact confirm: FP-immune, broadcast (eval gram sets are small by
     // construction at any corpus scale)
     (prefiltered.join(broadcast(evalGrams), Seq("gram"), "left_semi"), evalGrams)

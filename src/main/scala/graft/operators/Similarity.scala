@@ -66,10 +66,6 @@ object Similarity {
   def planeMatrix(b: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(b, dim)((i, j) => rademacher(i, j))
 
-  /** Signed-random-projection sign bits for an embedding (b planes). */
-  def srpBits(emb: Array[Float], b: Int): Long =
-    srpBitsWith(emb, planeMatrix(b, emb.length))
-
   def srpBitsWith(emb: Array[Float], planes: Array[Array[Double]]): Long = {
     val b = planes.length
     require(b <= 64, "srp bits capped at 64")

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -28,6 +30,8 @@ object SketchInput {
   case object Doubles extends SketchInput("double", 0L)
   /** Serialized sketches of the same kind: merge mode. */
   case object Sketches extends SketchInput("binary", 0L)
+  /** A `(key, serialized sketch)` struct: one entry of a keyed pack. */
+  case object KeyedSketches extends SketchInput("struct<key: string, sketch: binary>", 0L)
 
   def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -97,10 +101,11 @@ abstract class SketchKind[B <: AnyRef] extends Serializable {
   * every reader, in whole-stage codegen or interpreted. It checks the
   * argument types at analysis, maps NULL arguments to NULL and, where
   * [[emptyIsNull]], an empty payload (what a merge over no rows returns)
-  * to NULL. It decodes a literal sketch once per expression instance, at
-  * analysis, and every other payload once per distinct value through a
-  * content-verified cache. A reader states only its signature, its
-  * validated decode and the per-row function.
+  * to NULL. It decodes a constant sketch (a literal, a scalar subquery or
+  * a read function over those) once per expression instance, and every
+  * other payload once per distinct value through a content-verified cache.
+  * A reader states only its signature, its validated decode and the
+  * per-row function.
   *
   * Arguments: [[sketches]] binary sketches, then the [[values]] arguments
   * (a DOUBLE value also accepts int, bigint, float and decimal, cast to
@@ -139,7 +144,7 @@ abstract class SketchReader[D <: AnyRef](val name: String, val dataType: DataTyp
   def read(a: D, b: D, v: Any, w: Any): Any
 
   /** For a one-sketch reader, the Java expression of one row's answer
-    * that generated code evaluates on a literal sketch decoded once, given
+    * that generated code evaluates on a constant sketch decoded once, given
     * the decoded object's reference and the value arguments' variables;
     * the result is boxed, null for SQL NULL. None calls [[read]]. */
   def readCode: Option[(String, Seq[String]) => String] = None
@@ -225,6 +230,50 @@ object SketchKinds {
     def fromBytes(x: Array[Byte]): BloomBuf = {
       val (c, words, tag) = BlockedBloom.fromBytes(cfg.k0, cfg.k1, x)
       BloomBuf(words, c, tag)
+    }
+  }
+
+  /** A keyed pack under construction: entries by key, and their total
+    * sketch bytes. */
+  final class PackBuf(val entries: java.util.TreeMap[String, Array[Byte]], var sketchBytes: Long)
+
+  /** `graft_bloom_pack(key, sketch)`: the per-group filters of its rows as
+    * one [[graft.plans.BloomFilterPack]], entries in key order, built in
+    * the query that probes it. A repeated key merges by Bloom union under
+    * the kind's key (`graft_bloom_union`: an empty sketch contributes
+    * nothing); a row with a NULL key or sketch is skipped; no rows give
+    * the empty pack. The pack is held to `BloomFilterPack`'s bounds as it
+    * grows. Builds only. */
+  final case class BloomPack(k0: Long, k1: Long) extends SketchKind[PackBuf] {
+    def name: String = "graft_bloom_pack"
+    protected def buildInput(dt: DataType): Option[SketchInput] = dt match {
+      case StructType(Array(StructField(_, StringType, _, _), StructField(_, BinaryType, _, _))) =>
+        Some(KeyedSketches)
+      case _ => None
+    }
+    override def mergeable: Boolean = false
+    private val union = BloomCombine(intersection = false, k0, k1)
+    private def load(x: Array[Byte]) = if (x.isEmpty) null else union.decode(x)
+    private def add(b: PackBuf, key: String, x: Array[Byte]): Unit = {
+      val prev = b.entries.get(key)
+      val merged =
+        if (prev == null) x else union.read(load(prev), load(x), null, null).asInstanceOf[Array[Byte]]
+      b.entries.put(key, merged)
+      b.sketchBytes += merged.length - (if (prev == null) 0 else prev.length)
+      graft.plans.BloomFilterPack.checkBounds(b.entries.size, b.sketchBytes)
+    }
+    def empty(in: SketchInput): PackBuf = new PackBuf(new java.util.TreeMap, 0L)
+    def update(b: PackBuf, in: SketchInput, v: Any, w: Long): PackBuf = {
+      val row = v.asInstanceOf[InternalRow]
+      if (!row.isNullAt(0) && !row.isNullAt(1)) add(b, row.getUTF8String(0).toString, row.getBinary(1))
+      b
+    }
+    def merge(a: PackBuf, b: PackBuf): PackBuf = { b.entries.forEach((k, x) => add(a, k, x)); a }
+    def toBytes(b: PackBuf): Array[Byte] = graft.plans.BloomFilterPack.encode(b.entries.asScala.toSeq)
+    def fromBytes(x: Array[Byte]): PackBuf = {
+      val b = empty(KeyedSketches)
+      graft.plans.BloomFilterPack.decode(x).foreach { case (k, s) => add(b, k, s) }
+      b
     }
   }
 
@@ -820,9 +869,9 @@ object SketchKinds {
     * reference's `lookup` (`Internal.hs:464-469`), no false negatives. The
     * filter must hold the probe's element type (the reference's typeHash
     * check, `Internal.hs:789`), checked once per decode: a literal filter
-    * of another type fails at analysis. On a literal filter, generated
-    * code calls the decoded filter directly. `elem` is the bound element
-    * type. */
+    * of another type fails at analysis. On a constant filter (a literal or
+    * a scalar subquery), generated code calls the decoded filter directly.
+    * `elem` is the bound element type. */
   final case class BloomProbe(k0: Long = Keys.DefaultK0, k1: Long = Keys.DefaultK1, elem: DataType = NullType)
       extends SketchReader[LoadedBloomFilter]("graft_bloom_might_contain", BooleanType) {
     override def values: Seq[Seq[DataType]] = Seq(elemTypes)
@@ -839,7 +888,8 @@ object SketchKinds {
 
   /** `graft_bloom_might_contain_keyed(pack, key, elem [, k0, k1])` ->
     * boolean: probes `elem` against the filter `key` names in a
-    * [[graft.plans.BloomFilterPack]] of per-group filters, decoded once
+    * [[graft.plans.BloomFilterPack]] of per-group filters (built in the
+    * query by [[BloomPack]] and read as a scalar subquery), decoded once
     * per expression instance, so per-group sketches need no join onto the
     * probe rows. A key with no filter, or an empty one, probes as NULL.
     * Every filter must hold the probe's element type. */

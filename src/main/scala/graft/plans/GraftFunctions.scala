@@ -7,13 +7,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{coalesce, count, length, lit, sum}
+import org.apache.spark.sql.functions.struct
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{BlockedBloom, BloomConfig, Keys, SipHash}
-import graft.operators.SketchKinds.{BloomProbe, KeyedBloomProbe}
+import graft.operators.SketchKinds.{BloomPack, BloomProbe, KeyedBloomProbe}
 
 /** Deserialized, probe-ready blocked Bloom filter: what the
   * `graft_bloom_might_contain` reader decodes, and what generated code
@@ -110,9 +110,10 @@ object LoadedBloomPack {
 /** Codec for a PACK of keyed serialized filters, the sketch argument of
   * `graft_bloom_might_contain_keyed`: `[int32 n]` then per entry
   * `[int32 keyLen][utf8 key][int32 filterLen][filter bytes]`, big-endian.
-  * A pack is one plan literal: collected by the driver, shipped with every
-  * task and decoded once per expression instance. It is reachable from SQL
-  * (`X'…'`), so `decode` checks every length against the bytes left. */
+  * The `graft_bloom_pack` aggregate builds one inside the query, where the
+  * probe reads it as a scalar subquery, decoded once per expression
+  * instance. A pack is reachable from SQL (`X'…'`), so `decode` checks
+  * every length against the bytes left. */
 object BloomFilterPack {
 
   /** The most groups, and sketch bytes in total, one pack may hold. */
@@ -162,22 +163,6 @@ object BloomFilterPack {
       s"keyed probe pack of $entries groups and $sketchBytes sketch bytes exceeds the bound of " +
         s"$MaxEntries groups and $MaxSketchBytes bytes")
 
-  /** The rows `(key, sketch, more…)` of `frame` for a pack, collected to
-    * the driver only after one aggregate over them has passed
-    * [[checkBounds]]. `frame` is computed once (persisted for the two
-    * actions). */
-  def collect(frame: DataFrame, key: Column, sketch: Column, more: Column*): Array[Row] = {
-    val rows = frame.select((key +: sketch.as("sketch") +: more): _*).persist()
-    try {
-      val size = rows.agg(count(lit(1)), coalesce(sum(length(rows("sketch"))), lit(0L))).head()
-      checkBounds(size.getLong(0), size.getLong(1))
-      rows.collect()
-    } finally rows.unpersist()
-  }
-
-  /** The pack entries of rows from [[collect]]: the key as text, the sketch. */
-  def entries(rows: Seq[Row]): Seq[(String, Array[Byte])] =
-    rows.map(r => String.valueOf(r.get(0)) -> r.getAs[Array[Byte]](1))
 }
 
 /** Native scalar `graft_sip_hash64(elem [, k0, k1])` — the library's keyed
@@ -307,17 +292,24 @@ object GraftFunctions {
   private def column(e: Expression): Column = GraftColumnBridge.column(e)
   private def expression(c: Column): Expression = GraftColumnBridge.expression(c)
 
-  /** `graft_bloom_might_contain(sketch, elem)`: a literal sketch is decoded
-    * once per expression instance and probed directly in generated code. */
+  /** `graft_bloom_might_contain(sketch, elem)`: a constant sketch (a
+    * literal, or a scalar subquery such as `frame.agg(…).scalar()`) is
+    * decoded once per expression instance and probed directly in generated
+    * code. */
   def bloomMightContain(sketch: Column, elem: Column): Column = BloomProbe().column(sketch, elem)
 
-  /** Keyed probe over a driver-collected (group key -> serialized filter)
-    * table, packed into one literal ([[BloomFilterPack]]; collect it with
-    * `BloomFilterPack.collect`). Per row: one hash lookup of the key, then
-    * one probe; no join carries the sketches to the probe rows. */
-  def bloomMightContainKeyed(filters: Seq[(String, Array[Byte])],
-      key: Column, elem: Column): Column =
-    KeyedBloomProbe().column(lit(BloomFilterPack.encode(filters)), key, elem)
+  /** `graft_bloom_might_contain_keyed(pack, key, elem)`: probes `elem`
+    * against the filter `key` names in a [[BloomFilterPack]], typically
+    * `frame.agg(bloomPack(key, sketch)).scalar()`. Per row: one hash lookup
+    * of the key, then one probe; no join carries the sketches to the probe
+    * rows. */
+  def bloomMightContainKeyed(pack: Column, key: Column, elem: Column): Column =
+    KeyedBloomProbe().column(pack, key, elem)
+
+  /** `graft_bloom_pack(key, sketch)`: the aggregate that packs per-group
+    * filters for [[bloomMightContainKeyed]]. */
+  def bloomPack(key: Column, sketch: Column): Column =
+    NativeAggs.column(BloomPack(Keys.DefaultK0, Keys.DefaultK1), struct(key, sketch))
 
   def sipHash64(elem: Column): Column = sipHash64(elem, Keys.DefaultK0, Keys.DefaultK1)
 

@@ -4,7 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -383,7 +383,8 @@ object FusedTokensNative {
   * and the `GraftExtensions` injector. Each name keeps its arity and
   * defaults: Bloom k = 3, log2l = 12; HLL p = 12; CMS 5 x 2^11; KMV
   * k = 256; samples k = 64; heavy hitters capacity 64; KLL k = 200;
-  * t-digest compression 100; all under `Keys.DefaultK0/K1`.
+  * t-digest compression 100; all under `Keys.DefaultK0/K1`, the key
+  * `graft_bloom_pack` merges a repeated key's filters under.
   *
   * NOTE: `register` is session-global and last-wins — it rebinds
   * `graft_bloom_tokens_native` / `graft_fused_tokens_native` to its sketch
@@ -399,6 +400,7 @@ object NativeAggs {
 
   val BloomName = "graft_bloom_tokens_native"
   val FusedName = "graft_fused_tokens_native"
+  val BloomPackName = "graft_bloom_pack"
 
   /** A native aggregate as a `Column`, with no session registration: the
     * parameters travel in the expression, not in a session-global name. */
@@ -476,6 +478,12 @@ object NativeAggs {
       sql("graft_sample_weighted_merge", sampleW, Sketches, 1),
       sql("graft_sample_weighted_str", strSampleW, Strings, 2),
       sql("graft_sample_weighted_str_merge", strSampleW, Sketches, 1),
+      BloomPackName -> {
+        case Seq(key, sketch) =>
+          SketchAgg(BloomPackName, BloomPack(k0, k1), Seq(CreateStruct(Seq(key, sketch))), Some(KeyedSketches))
+        case other => throw new IllegalArgumentException(
+          s"$BloomPackName expects (key STRING, sketch BINARY); got ${other.length} arguments")
+      },
       BloomName -> (e => bloomNative(q.bloomCfg.k, q.bloomCfg.log2l, k0, k1)(e)),
       FusedName -> (e => fusedNative(q.bloomCfg.k, q.bloomCfg.log2l, q.hllP, q.cmsCfg.depth,
         q.cmsCfg.log2Width, k0, k1)(e)))

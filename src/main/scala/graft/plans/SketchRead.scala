@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, 
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.execution
 
 import graft.operators.SketchReader
 
@@ -57,15 +58,19 @@ private[plans] final class ReaderCache[S <: AnyRef](load: Array[Byte] => S) exte
   * (what the serialized merges return for no rows) gives NULL; otherwise
   * each sketch is decoded and the reader computes the answer.
   *
-  * Load-once rule: a foldable sketch argument is decoded once per
-  * expression instance. Its validation runs in `checkInputDataTypes`, so a
-  * corrupt or mistyped literal fails at analysis, never from generated
-  * code (where Spark would swallow the error into an interpreted
-  * fallback). Any other payload is decoded once per distinct value (one
-  * [[ReaderCache]] per sketch argument, so two alternating inputs do not
-  * evict each other). Generated code is one direct call on this instance,
-  * or, for a reader with `readCode` over a literal sketch, a direct call on
-  * the decoded sketch; either way the readers run in whole-stage codegen.
+  * Load-once rule (the model is Spark's `BloomFilterMightContain` over a
+  * runtime-filter subquery): a constant sketch argument — a literal, an
+  * uncorrelated scalar subquery (`frame.agg(…).scalar()`), or a read
+  * function over those — is evaluated and decoded once per expression
+  * instance, when first needed, and never re-evaluated per row. A
+  * foldable one is validated in `checkInputDataTypes`, so a corrupt or
+  * mistyped literal fails at analysis; a corrupt subquery value fails the
+  * query with the decoder's `IllegalArgumentException`. Any other payload
+  * is decoded once per distinct value (one [[ReaderCache]] per sketch
+  * argument, so two alternating inputs do not evict each other).
+  * Generated code is one direct call on this instance, or, for a reader
+  * with `readCode` over a constant sketch, a direct call on the decoded
+  * sketch; either way the readers run in whole-stage codegen.
   */
 case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) extends Expression {
 
@@ -86,8 +91,11 @@ case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) 
         case Some((e, ts)) =>
           fail(s"value argument must be ${ts.map(_.catalogString).mkString(" or ")}, " +
             s"got ${e.dataType.catalogString}")
-        case None => literals.collectFirst { case Some(scala.util.Left(msg)) => fail(msg) }
-          .getOrElse(TypeCheckResult.TypeCheckSuccess)
+        case None => sketchArgs.zip(constants).collectFirst(Function.unlift {
+          case (e, c) if c != null && e.foldable =>
+            try { c.decoded; None } catch { case ex: IllegalArgumentException => Some(fail(ex.getMessage)) }
+          case _ => None
+        }).getOrElse(TypeCheckResult.TypeCheckSuccess)
       }
     }
   }
@@ -96,27 +104,22 @@ case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) 
   @transient private lazy val bound: SketchReader[AnyRef] =
     fn.bind(valueArgs.map(_.dataType)).asInstanceOf[SketchReader[AnyRef]]
 
-  /** Per sketch argument: None unless it is a non-NULL literal; else its
-    * decode, once (null for an empty payload), or the validation message. */
-  @transient private lazy val literals: Seq[Option[Either[String, AnyRef]]] = sketchArgs.map { e =>
-    if (!e.foldable) None
-    else Option(e.eval(null)).map { x =>
-      val bytes = x.asInstanceOf[Array[Byte]]
-      try scala.util.Right(if (bytes.isEmpty) null else bound.decode(bytes))
-      catch { case ex: IllegalArgumentException => scala.util.Left(ex.getMessage) }
-    }
-  }
+  /** Per sketch argument: its [[SketchRead.Constant]], or null for a
+    * payload that varies per row. */
+  @transient private lazy val constants: Array[SketchRead.Constant] = sketchArgs.map { e =>
+    if (SketchRead.isConstant(e)) new SketchRead.Constant(e, bound.decode) else null
+  }.toArray
 
-  /** Per sketch argument: its decoded literal, or null to decode per row
-    * (a literal that failed validation decodes, and throws, per row). */
-  @transient private lazy val fixed: Array[AnyRef] =
-    literals.map(_.flatMap(_.toOption).orNull).toArray
+  /** `children`, each constant sketch argument replaced by its value. */
+  @transient private lazy val perRow: Seq[Expression] = children.indices.map { i =>
+    if (i < fn.sketches && constants(i) != null) Literal(constants(i).bytes, BinaryType) else children(i)
+  }
 
   @transient private lazy val caches = Array.fill(fn.sketches)(new ReaderCache[AnyRef](bound.decode))
 
   private def load(i: Int, x: Array[Byte]): AnyRef = {
-    val d = fixed(i)
-    if (d != null) d else if (x.isEmpty) null else caches(i).get(x)
+    val c = constants(i)
+    if (c != null) c.decoded else if (x.isEmpty) null else caches(i).get(x)
   }
 
   /** One row of non-null arguments: `b` is null for a one-sketch reader,
@@ -126,7 +129,7 @@ case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) 
     else bound.read(load(0, a), if (b == null) null else load(1, b), v, w)
 
   override def eval(input: InternalRow): Any = {
-    val args = children.map(_.eval(input))
+    val args = perRow.map(_.eval(input))
     if (args.contains(null)) null
     else read(args.head.asInstanceOf[Array[Byte]],
       if (fn.sketches == 2) args(1).asInstanceOf[Array[Byte]] else null,
@@ -134,16 +137,18 @@ case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) 
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // a one-sketch literal with a direct form: the per-row code reads the
-    // value arguments only and calls the decoded sketch
-    val direct = bound.readCode.filter(_ => fn.sketches == 1 && fixed(0) != null).map { code =>
-      val ref = ctx.addReferenceObj("sketch", fixed(0), fixed(0).getClass.getName)
+    // a one-sketch constant that decodes, with a direct form: the per-row
+    // code reads the value arguments only and calls the decoded sketch
+    // (never throw here: a bad payload takes the generic call, which throws)
+    val d = if (fn.sketches > 1 || constants(0) == null) null else scala.util.Try(constants(0).decoded).getOrElse(null)
+    val direct = bound.readCode.filter(_ => d != null).map { code =>
+      val ref = ctx.addReferenceObj("sketch", d, d.getClass.getName)
       val vs = valueArgs.map(_.genCode(ctx))
       (vs, code(ref, vs.map(_.value.toString)))
     }
     val (args, call) = direct.getOrElse {
       val self = ctx.addReferenceObj("sketchRead", this, classOf[SketchRead].getName)
-      val args = children.map(_.genCode(ctx))
+      val args = perRow.map(_.genCode(ctx))
       val b = if (fn.sketches == 2) args(1).value.toString else "null"
       val vs = args.drop(fn.sketches).map(_.value.toString).padTo(2, "null")
       (args, s"$self.read(${args.head.value}, $b, ${vs.mkString(", ")})")
@@ -169,6 +174,23 @@ case class SketchRead(fn: SketchReader[_ <: AnyRef], children: Seq[Expression]) 
 }
 
 object SketchRead {
+
+  /** Whether `e` reads no input column and gives one value per query:
+    * deterministic, with only literals and planned scalar subqueries as
+    * leaves (a subquery is planned only once it is uncorrelated, and has
+    * run before the expression that holds it executes). */
+  private def isConstant(e: Expression): Boolean = e.deterministic && e.collectLeaves().forall {
+    case _: Literal | _: execution.ScalarSubquery => true
+    case _ => false
+  }
+
+  /** A constant sketch argument's value and decode, each computed once,
+    * when first needed (a decode that throws throws again at its next
+    * use): null for a NULL or empty payload. */
+  private final class Constant(e: Expression, decode: Array[Byte] => AnyRef) {
+    lazy val bytes: Array[Byte] = e.eval(null).asInstanceOf[Array[Byte]]
+    lazy val decoded: AnyRef = if (bytes == null || bytes.isEmpty) null else decode(bytes)
+  }
 
   /** SQL fractional literals parse as DECIMAL: a DOUBLE value argument
     * takes int, bigint, float and decimal too, cast (never a string). */

@@ -3,12 +3,13 @@ package graft.streaming
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.core.{BloomConfig, CmsConfig}
 import graft.operators.SketchKinds._
+import graft.plans.GraftFunctions
 import graft.plans.NativeAggs.column
 
 /** Structured Streaming surface: the sketch kinds are associative +
@@ -139,21 +140,11 @@ object StreamingSketch {
     replayIntoMemorySink(spark, sinkName, "complete", windowed, stream,
       (0 until 3).map(chunk => rows.filter(r => r._3.length % 3 == chunk).toSeq))
 
-    // finished-window sketches collected ONCE (<= #windows x #sources rows)
-    // and folded into the probe as a keyed literal pack — the former
-    // broadcast join attached the 8 KB bloom column to every probe row
-    // (O(sketch bytes) copy + content-verify per row)
-    val packed = windowPack(spark.table(sinkName), epoch0)
     val probe = t.select(
       ((col("doc_id").cast("long") % 600) / 60).cast("long").as("win"),
       col("source"), explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull) // one tokenize evaluation (SketchQueries.exploded rule)
-    probe
-      .where(graft.plans.GraftFunctions.bloomMightContainKeyed(packed,
-        concat(col("win").cast("string"), lit("|"), col("source")), col("token")))
-      .groupBy(col("win"), col("source"))
-      .agg(count(lit(1)).as("n_present"))
-      .orderBy(col("win"), col("source"))
+    probeWindows(probe, spark.table(sinkName), epoch0)
   }
 
   /** Replay-harness row collection, capped so the fixture path cannot be
@@ -224,31 +215,32 @@ object StreamingSketch {
     replayIntoMemorySink(spark, sinkName, "append", windowed, stream,
       Seq(onTime.toSeq, late.toSeq, Seq(sentinel(900)), Seq(sentinel(901))))
 
-    // emitted-window sketches collected ONCE and probed via the keyed
-    // literal pack (see replayBloomWindows); a probe row whose (win,
-    // source) was never emitted yields NULL and filters out exactly like
-    // the inner join it replaces
-    val packed = windowPack(spark.table(sinkName).where(col("source") =!= "zz_sentinel"), epoch0)
     val probe = t
       .where(col("doc_id").cast("long") % 600 >= 300)
       .select(
         ((col("doc_id").cast("long") % 600) / 60).cast("long").as("win"),
         col("source"), explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull) // one tokenize evaluation
+    probeWindows(probe, spark.table(sinkName).where(col("source") =!= "zz_sentinel"), epoch0)
+  }
+
+  /** Every `(win, source, token)` row of `probe` probed against the filter
+    * of its own (window, source) in the replay sink `sink`, counted per
+    * (win, source). The sink's filters form one keyed pack, keyed
+    * `"<minute>|<source>"` and computed by this query (a scalar subquery),
+    * so no bloom column rides a join onto the probe rows; a (win, source)
+    * the sink never emitted probes NULL and filters out, exactly like the
+    * inner join the pack replaces. */
+  private def probeWindows(probe: DataFrame, sink: DataFrame, epoch0: Long): DataFrame = {
+    def key(minute: Column) = concat(minute.cast("string"), lit("|"), col("source"))
+    val pack = sink.agg(GraftFunctions.bloomPack(
+      key(((col("window.start").cast("long") - epoch0) / 60).cast("long")), col("bloom"))).scalar()
     probe
-      .where(graft.plans.GraftFunctions.bloomMightContainKeyed(packed,
-        concat(col("win").cast("string"), lit("|"), col("source")), col("token")))
+      .where(GraftFunctions.bloomMightContainKeyed(pack, key(col("win")), col("token")))
       .groupBy(col("win"), col("source"))
       .agg(count(lit(1)).as("n_present"))
       .orderBy(col("win"), col("source"))
   }
-
-  /** A replay sink's (window, source) Bloom filters as keyed-probe pack
-    * entries, keyed `"<minute>|<source>"`. */
-  private def windowPack(sink: DataFrame, epoch0: Long): Seq[(String, Array[Byte])] =
-    graft.plans.BloomFilterPack.entries(graft.plans.BloomFilterPack.collect(sink,
-      concat(((col("window.start").cast("long") - epoch0) / 60).cast("long").cast("string"), lit("|"),
-        col("source")), col("bloom")).toSeq)
 
   private def secondOf(ts: Timestamp, epoch0: Long): Long =
     ts.toInstant.getEpochSecond - epoch0

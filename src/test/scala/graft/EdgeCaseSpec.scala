@@ -260,6 +260,27 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex.getMessage.contains("65537 sources exceed the packed pair-key limit of 65536"))
   }
 
+  test("source overlap pairs: 1,000 sources sharing one gram give 499,500 pairs, counted exactly") {
+    val n = 1000
+    val nWords = (n + 63) / 64
+    def mask(bits: Seq[Int]): Array[Long] = {
+      val w = new Array[Long](nWords)
+      bits.foreach(b => w(b / 64) |= 1L << (b % 64))
+      w
+    }
+    val chunks = new PipelineQueries.MaskPairsUdf()(mask(0 until n))
+    assert(chunks.map(_.length.toLong).sum === 499500L)
+    assert(chunks.forall(_.length <= PipelineQueries.MaskPairChunk))
+    val grams = Seq(0 until n, 0 until 100, (950 until n) :+ 0, Seq(7), 0 until n by 3)
+    val masks = spark.createDataFrame(spark.sparkContext.parallelize(grams.map(g => Row.fromSeq(mask(g).toSeq)), 2),
+      StructType((0 until nWords).map(w => StructField(s"m$w", LongType))))
+    val got = PipelineQueries.maskPairCounts(masks, nWords).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val direct = scala.collection.mutable.HashMap.empty[Long, Long]
+    for (g <- grams; a <- g; b <- g if a < b) direct(a * 65536L + b) = direct.getOrElse(a * 65536L + b, 0L) + 1L
+    assert(got.size === 499500)
+    assert(got === direct.toMap)
+  }
+
   test("scratch dir: a candidate below the free-space floor falls back to java.io.tmpdir") {
     val tmpdir = new java.io.File(System.getProperty("java.io.tmpdir"))
     val candidate = java.nio.file.Files.createTempDirectory("graft_scratch_candidate").toFile

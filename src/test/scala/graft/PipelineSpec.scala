@@ -991,6 +991,33 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out("d2") === Seq.empty)
   }
 
+  test("BPE: a compiled merge table ships only the arrays it reads at run time") {
+    import graft.operators.Bpe
+    // a valid 20,000-merge table: constituents are chars or earlier products
+    val rnd = new scala.util.Random(5)
+    var available = ('a' to 'z').map(String.valueOf(_)).toVector
+    val merges = (0 until 20000).map { _ =>
+      val (a, b) = (available(rnd.nextInt(available.size)), available(rnd.nextInt(available.size)))
+      if (a.length + b.length <= 8) available :+= a + b
+      (a, b)
+    }
+    def serialized(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o)
+      out.close()
+      bytes.size()
+    }
+    // products, rank -> result id, the open-addressed pair table (4x
+    // entries, a power of two) and the 128 ASCII symbol strings
+    val cap = Integer.highestOneBit(4 * merges.size - 1) << 1
+    val runtime = Array[AnyRef](merges.map { case (a, b) => a + b }.toArray, new Array[Int](merges.size),
+      new Array[Long](cap), new Array[Int](cap), Array.tabulate(128)(c => String.valueOf(c.toChar)))
+    val compiled = serialized(new Bpe.CompiledMerges(merges))
+    assert(compiled <= serialized(runtime) + 1024,
+      s"CompiledMerges serializes to $compiled bytes, its run-time arrays to ${serialized(runtime)}")
+  }
+
   test("BPE: greedy equals sequential replay for RANDOM valid merge tables") {
     import graft.operators.Bpe
     // a merge table is VALID when each pair's constituents exist before

@@ -1,0 +1,154 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.execution.{QueryExecution, ScalarSubquery, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.{BloomConfig, Keys}
+import graft.operators.Decontamination
+import graft.operators.SketchKinds.{BloomProbe, KeyedBloomProbe}
+import graft.plans.SketchRead
+import graft.streaming.StreamingSketch
+
+/** Plan gate of the library's Bloom probes: every probe entry point
+  * computes its sketch inside the query, as a scalar subquery, instead of
+  * collecting it and embedding it in the plan as a literal. For each
+  * entry point, over the sf0.001 fixture, every plan it executes (AQE
+  * stages and subqueries included) must hold no binary literal over
+  * 1 KiB, and every Bloom probe's sketch argument must be computed from
+  * scalar subqueries only (a subquery, a field of one, or a read function
+  * over them). Building the decontamination plan must start no Spark
+  * job. */
+class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-probe-plan-test")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  /** The sf0.001 fixture directory, where TESTDATA.md lists it. */
+  private lazy val dir: String = {
+    val src = scala.io.Source.fromFile("TESTDATA.md")(scala.io.Codec.UTF8)
+    val row = try src.getLines().find(_.startsWith("| 0.001 |")).get finally src.close()
+    "`([^`]+)`".r.findFirstMatchIn(row).get.group(1).stripSuffix("/")
+  }
+
+  private val cfg = BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 10)
+
+  /** Every physical plan `body` executes, AQE stages resolved. A marker
+    * query run after `body` is delivered last on the in-order listener
+    * bus, so once it arrives every earlier plan has. */
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = s"plan_gate_marker_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    def seen = plans.asScala.exists(_.output.exists(_.name == marker))
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen, "listener bus marker never arrived")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  private def expressionsOf(plans: Seq[SparkPlan]): Seq[Expression] =
+    plans.flatMap(p => collectWithSubqueries(p) { case node => node.expressions }.flatten)
+      .flatMap(_.collect { case e => e })
+
+  /** The gate over the plans `body` executes; returns the probes found. */
+  private def assertProbesInQuery(name: String)(body: => Unit): Seq[SketchRead] = {
+    val exprs = expressionsOf(plansOf(body))
+    val big = exprs.collect {
+      case Literal(b: Array[Byte], BinaryType) if b.length > 1024 => b.length
+    }
+    assert(big.isEmpty, s"$name: the executed plans hold binary literals of ${big.mkString(", ")} bytes")
+    val probes = exprs.collect {
+      case r: SketchRead if r.fn.isInstanceOf[BloomProbe] || r.fn.isInstanceOf[KeyedBloomProbe] => r
+    }
+    assert(probes.nonEmpty, s"$name: no Bloom probe in the executed plans")
+    // a field of a merged subquery (Spark's MergeScalarSubqueries) or a
+    // read function over subqueries counts: every leaf is a subquery
+    def fromSubqueries(e: Expression): Boolean = e.collectLeaves().forall(_.isInstanceOf[ScalarSubquery])
+    probes.foreach(p => assert(fromSubqueries(p.children.head),
+      s"$name: probe sketch argument is not a scalar subquery: ${p.children.head}"))
+    probes
+  }
+
+  test("every library probe reads its sketch from a scalar subquery, never a plan literal") {
+    def run(name: String, df: => DataFrame): Unit =
+      assertProbesInQuery(name)(assert(df.collect().nonEmpty, s"$name returned no rows"))
+    run("bloomProbeExact", SketchQueries.bloomProbeExact(spark, dir))
+    run("bloom128ProbeExact", SketchQueries.bloom128ProbeExact(spark, dir))
+    run("fusedNativeProbeExact", SketchQueries.fusedNativeProbeExact(spark, dir))
+    run("bloomPrefilterSemijoin", SketchQueries.bloomPrefilterSemijoin(spark, dir))
+    run("bloomUnionGlobal", SketchQueries.bloomUnionGlobal(spark, dir))
+    run("saltedBuildEquiv", SketchQueries.saltedBuildEquiv(spark, dir))
+    run("bloomJoinLineitem", SketchQueries.bloomJoinLineitem(spark, dir))
+    run("sketchJobResumeProbeExact", SketchQueries.sketchJobResumeProbeExact(spark, dir))
+    run("replayBloomWindows", StreamingSketch.replayBloomWindows(spark, dir, cfg, 12))
+    run("replayBloomWindowsAppend", StreamingSketch.replayBloomWindowsAppend(spark, dir, cfg, 12))
+    run("decontaminate", Decontamination.decontaminate(
+      graft.sources.Tokens.table(spark, dir), "src0", 4, cfg))
+    val inter = assertProbesInQuery("bloomIntersectExact")(
+      assert(SketchQueries.bloomIntersectExact(spark, dir).collect().nonEmpty))
+    assert(inter.exists(_.children.head.isInstanceOf[SketchRead]),
+      "bloomIntersectExact probes the intersection of two subqueries")
+  }
+
+  test("building the decontamination plan starts no Spark job") {
+    val rows = (0 until 200).map { i =>
+      val toks = Array.tabulate(6 + i % 9)(j => (i * 7 + j * 3) % 40)
+      (s"doc-$i", toks, toks.length, s"src${i % 3}")
+    }
+    val tokens = spark.createDataFrame(rows).toDF("doc_id", "tokens", "n_tok", "source")
+    // job starts carry their thread's job group; a marker job in its own
+    // group, seen last on the in-order listener bus, means every earlier
+    // job start has been delivered
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (out, evalGrams) = try {
+      sc.setJobGroup("decon-construct", "constructing decontaminateLazy")
+      val built = Decontamination.decontaminateLazy(tokens, "src0", 4, cfg)
+      sc.setJobGroup("marker", "listener bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("marker"))
+      assert(!groups.contains("decon-construct"), s"jobs started while building the plan: $groups")
+      built
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    try {
+      val exact = Decontamination.decontaminateExact(tokens, "src0", 4).collect().toSeq
+      assert(out.collect().toSeq === exact)
+      assert(exact.exists(_.getLong(2) > 0L), "the fixture plants contamination")
+    } finally evalGrams.unpersist()
+  }
+}

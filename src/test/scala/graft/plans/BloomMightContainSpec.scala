@@ -1,7 +1,14 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, ExprId}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.execution.{ScalarSubquery, SubqueryExec}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -187,4 +194,69 @@ class BloomMightContainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hitsS === strs.size.toLong,
       "UTF8String probe must agree with the String insert encoding")
   }
+
+  test("a subquery sketch is decoded once per expression instance, never through ReaderCache") {
+    val bytes = buildSketch(1 to 1000)
+    val sub = new ScalarSubquery(SubqueryExec("sketch",
+      spark.createDataFrame(Seq(Tuple1(bytes))).toDF("s").queryExecution.executedPlan, None), ExprId(0))
+    sub.updateResult()
+    val value = sub.eval(null).asInstanceOf[AnyRef]
+    def probe() = SketchRead(CountingProbe, Seq(sub, BoundReference(0, IntegerType, nullable = false)))
+    CountingProbe.inputs.clear()
+    val interpreted = probe()
+    val generated = GenerateUnsafeProjection.generate(Seq(probe()))
+    val rows = (1 to 3000).map(i => InternalRow(i))
+    val hits = rows.map(r => interpreted.eval(r).asInstanceOf[Boolean])
+    assert(rows.map(r => generated(r).getBoolean(0)) === hits, "codegen and interpreted differ")
+    assert(hits.take(1000).forall(identity), "no false negatives")
+    // one decode per instance, of the subquery's own value: ReaderCache
+    // decodes a private copy
+    assert(CountingProbe.inputs.size === 2)
+    assert(CountingProbe.inputs.asScala.forall(_ eq value))
+    // in a query: at most one decode per task and one for code generation
+    CountingProbe.inputs.clear()
+    val sketch = spark.createDataFrame(Seq(Tuple1(bytes))).toDF("s").select(col("s")).scalar()
+    val present = spark.range(0, 20000, 1, 4)
+      .where(SketchRead.column(CountingProbe, Seq(sketch, col("id").cast("int")))).count()
+    assert(present >= 1000L)
+    assert(CountingProbe.inputs.size <= 5, s"${CountingProbe.inputs.size} decodes")
+  }
+
+  test("a corrupt subquery payload fails the query with the decoder's IAE, codegen and interpreted") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val bad = buildSketch(1 to 10)
+    bad(bad.length - 64 + 7) = 99 // the serial version word
+    val expected = intercept[IllegalArgumentException](
+      LoadedBloomFilter.loadTyped(Keys.DefaultK0, Keys.DefaultK1, bad, graft.core.BlockedBloom.TypeTag.Int))
+    Seq(Tuple1(bad)).toDF("s").createOrReplaceTempView("bad_sketch")
+    val modes = Seq(
+      Seq("spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false"),
+      Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    modes.foreach { conf =>
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val e = intercept[Exception](spark.sql(
+          "SELECT count(*) FROM range(0, 100, 1, 2) " +
+            "WHERE graft_bloom_might_contain((SELECT s FROM bad_sketch), CAST(id AS INT))").collect())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] && c.getMessage == expected.getMessage),
+          s"${conf.head}: expected the decoder's IAE in ${chain.map(_.toString.take(200)).mkString(" <- ")}")
+      } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+}
+
+/** A Bloom probe over int elements that records every payload it decodes. */
+object CountingProbe extends graft.operators.SketchReader[LoadedBloomFilter]("counting_probe", BooleanType) {
+  val inputs = new java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]()
+  override def values: Seq[Seq[DataType]] = Seq(Seq(IntegerType))
+  def decode(x: Array[Byte]): LoadedBloomFilter = {
+    inputs.add(x)
+    LoadedBloomFilter.load(Keys.DefaultK0, Keys.DefaultK1, x)
+  }
+  def read(f: LoadedBloomFilter, b: LoadedBloomFilter, v: Any, w: Any): Any = f.containsInt(v.asInstanceOf[Int])
+  override def readCode: Option[(String, Seq[String]) => String] =
+    Some((f, vs) => s"java.lang.Boolean.valueOf($f.containsInt(${vs.head}))")
 }

@@ -239,6 +239,45 @@ class SqlReaderBytesSpec extends AnyFunSuite with BeforeAndAfterAll {
     ds.head
   }
 
+  /** Bloom probe calls whose sketch or pack is a scalar subquery, each
+    * with the pinned literal-argument call it must hash like. */
+  private val subqueryTwins: Seq[(String, String)] = {
+    def sk(c: String, g: String) = s"(SELECT $c FROM sk WHERE g = '$g')"
+    def pack(c: String, gs: String*) =
+      s"(SELECT graft_bloom_pack(g, $c) FROM sk WHERE g IN (${(gs :+ "gempty").map(g => s"'$g'").mkString(", ")}))"
+    val bloom = "(SELECT graft_bloom_tokens(tokens) FROM rsrc WHERE g = 'g0')"
+    Seq(
+      s"graft_bloom_might_contain($bloom, v.t)" -> "graft_bloom_might_contain(:bloom, v.t)",
+      s"graft_bloom_might_contain($bloom, 7)" -> "graft_bloom_might_contain(:bloom, 7)",
+      s"graft_bloom_might_contain(${sk("bloom_l", "g1")}, v.l)" -> "graft_bloom_might_contain(:bloom_l, v.l)",
+      s"graft_bloom_might_contain(${sk("bloom_s", "g2")}, v.s)" -> "graft_bloom_might_contain(:bloom_s, v.s)",
+      s"graft_bloom_might_contain(${sk("bloom128", "g0")}, v.t)" -> "graft_bloom_might_contain(:bloom128, v.t)",
+      s"graft_bloom_might_contain(${sk("bloom_k", "g1")}, v.t, 1, 2)" ->
+        "graft_bloom_might_contain(:bloom_k, v.t, 1, 2)",
+      s"graft_bloom_might_contain(${sk("bloom", "gempty")}, v.t)" -> "graft_bloom_might_contain(X'', v.t)",
+      s"graft_bloom_might_contain_keyed(${pack("bloom", "g0", "g1")}, a.g, v.t)" ->
+        "graft_bloom_might_contain_keyed(:pack, a.g, v.t)",
+      s"graft_bloom_might_contain_keyed(${pack("bloom", "g0", "g1")}, v.k, v.t)" ->
+        "graft_bloom_might_contain_keyed(:pack, v.k, v.t)",
+      s"graft_bloom_might_contain_keyed(${pack("bloom_l", "g1", "g2")}, a.g, v.l)" ->
+        "graft_bloom_might_contain_keyed(:pack_l, a.g, v.l)",
+      s"graft_bloom_might_contain_keyed(${pack("bloom_s", "g0", "g2")}, a.g, v.s)" ->
+        "graft_bloom_might_contain_keyed(:pack_s, a.g, v.s)",
+      s"graft_bloom_might_contain_keyed(${pack("bloom", "g0", "g1")}, a.g, v.t, $k0, $k1)" ->
+        s"graft_bloom_might_contain_keyed(:pack, a.g, v.t, $k0, $k1)",
+      s"graft_bloom_might_contain_keyed(${pack("bloom_k", "g0", "g1")}, v.k, v.t, 1, 2)" ->
+        "graft_bloom_might_contain_keyed(:pack_k, v.k, v.t, 1, 2)")
+  }
+
+  test("a subquery sketch or pack reads exactly like the literal it replaces") {
+    setUp()
+    subqueryTwins.foreach { case (sub, literal) =>
+      assert(single.contains(literal), s"$literal is not a pinned call")
+      // aliased: the digest covers the column name, which spells the call
+      assert(run(s"$sub AS probe") === run(s"$literal AS probe"), s"$sub differs from $literal")
+    }
+  }
+
   test("every graft_* SQL read function's output matches the pinned digests") {
     setUp()
     val actual = (single ++ pairs).map(c => c -> run(c))
