@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core._
-import graft.operators.SketchKinds.{Bloom, KmvKind}
+import graft.operators.SketchKinds.{Bloom, FusedTokens, KmvKind}
 import graft.plans.NativeAggs
 import graft.sources.Tokens
 
@@ -104,13 +104,13 @@ object Bench {
   }
 
   /** The flagship sketch-build job: per-source Bloom + HLL + CMS in ONE
-    * pass via the native fused TypedImperativeAggregate (ArrayData read in
+    * pass, the native `SketchAgg` over the fused kind (ArrayData read in
     * place — no per-row decode — one shared 64-bit hash + one 128-bit hash
     * per token). Returns the global (merged) bloom bytes for the FPR check. */
   private def buildSketches(spark: SparkSession, df: DataFrame, cfg: BloomConfig): Array[Byte] = {
-    val perSource = df.groupBy(col("source")).agg(graft.plans.FusedTokensNative.column(col("tokens"),
+    val perSource = df.groupBy(col("source")).agg(NativeAggs.column(FusedTokens(
       BloomConfig(SketchQueries.K0, SketchQueries.K1, cfg.k, cfg.log2l), SketchQueries.hllP,
-      SketchQueries.cmsCfg).as("sk"))
+      SketchQueries.cmsCfg), col("tokens")).as("sk"))
     // a merge reads only the bloom kind's key; the filters carry their config
     perSource.agg(NativeAggs.column(Bloom(cfg), col("sk.bloom"))).head().getAs[Array[Byte]](0)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core._
-import graft.plans.{FusedTokensNative, GraftFunctions, NativeAggs}
+import graft.plans.{GraftFunctions, NativeAggs}
 import graft.operators.SketchKinds._
 import graft.sources.Tokens
 
@@ -109,19 +109,19 @@ object SketchQueries {
   }
 
   /** The FLAGSHIP production build path under the driver correctness gate:
-    * per-source fused Bloom+HLL+CMS via the native TypedImperativeAggregate
-    * (ArrayData read in place — the path Bench measures at 10^9 tokens),
-    * then probe the bloom member with every (source, token) occurrence. No
-    * false negatives + byte-identity with the reference aggregators (tested) ⇒
-    * the per-source present-count equals the exact token count, same
-    * oracle as q_bloom_probe_exact. */
+    * per-source fused Bloom+HLL+CMS, the native `SketchAgg` over
+    * [[FusedTokens]] (ArrayData read in place — the path Bench measures at
+    * 10^9 tokens), then probe the bloom member with every (source, token)
+    * occurrence. No false negatives + byte-identity with the reference
+    * aggregators (tested) ⇒ the per-source present-count equals the exact
+    * token count, same oracle as q_bloom_probe_exact. */
   def fusedNativeProbeExact(spark: SparkSession, dir: String): DataFrame = {
     val t = Tokens.table(spark, dir)
     // keyed pack instead of the sketch-column broadcast join (see packOf)
     // — the fused struct's bloom member is extracted once per source, when
     // the pack is built, not per probe row
     probeOwnSource(t, packOf(t.groupBy(col("source"))
-      .agg(FusedTokensNative.column(col("tokens"), bloomCfg, hllP, cmsCfg).as("sk"))
+      .agg(NativeAggs.column(FusedTokens(bloomCfg, hllP, cmsCfg), col("tokens")).as("sk"))
       .select(col("source"), col("sk.bloom").as("sketch")), "sketch"))
   }
 

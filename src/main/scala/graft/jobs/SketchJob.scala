@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.core._
-import graft.operators.SketchKinds.{Bloom, Cms, HllKind}
-import graft.plans.{FusedTokensNative, NativeAggs}
+import graft.operators.SketchKinds.{Bloom, Cms, FusedTokens, HllKind}
+import graft.plans.NativeAggs
 
 /** Production-shape sketch-build job (north rule: "resumable from checkpoint
   * with per-partition lineage + metrics, salt-based skew mitigation").
@@ -28,12 +28,12 @@ import graft.plans.{FusedTokensNative, NativeAggs}
   *   4. `finalize` merges all partials per source — pure sketch merges,
   *      the same monoid the aggregation itself uses.
   *
-  * Both halves run on native `TypedImperativeAggregate`s that read rows in
-  * place: the increment is ONE `FusedTokensNative` (bloom + HLL + CMS;
-  * its partial buffers hold token ids until the dense sketches would be
-  * smaller, so small (bucket, source) groups shuffle ids, not sketches),
-  * finalize is one merge-mode `SketchAgg` per sketch column plus plain
-  * aggregates, so its plan has a single exchange. The
+  * Both halves run on the native `SketchAgg`, which reads rows in place,
+  * and each plan has a single exchange: the increment is ONE build of
+  * `SketchKinds.FusedTokens` (bloom + HLL + CMS; its partial buffers hold
+  * token ids until the dense sketches would be smaller, so small
+  * (bucket, source) groups shuffle ids, not sketches), finalize is one
+  * merge-mode `SketchAgg` per sketch column plus plain aggregates. The
   * job's parameters travel in the expressions (`cfg`), never through the
   * session-global `NativeAggs.register`.
   *
@@ -150,7 +150,7 @@ object SketchJob {
     val done = committedBuckets(spark, ckptDir)
     // one fused native build (rows read in place, sparse partial buffers);
     // the config travels in the expression, not in a session-global name
-    val fused = FusedTokensNative.column(col("tokens"), cfg.bloomCfg, cfg.hllP, cfg.cmsCfg)
+    val fused = NativeAggs.column(FusedTokens(cfg.bloomCfg, cfg.hllP, cfg.cmsCfg), col("tokens"))
 
     val withBucket = tokens.withColumn("bucket", bucketCol(cfg.k0, cfg.k1, cfg.numBuckets))
     val todoAll = (0 until cfg.numBuckets).filterNot(done)

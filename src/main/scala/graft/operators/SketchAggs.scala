@@ -9,8 +9,9 @@ import graft.core._
 /** Typed Dataset `Aggregator`s for the Bloom, HLL and count-min token
   * builds: independent byte references for the native aggregates.
   *
-  * The library builds every sketch with the native `graft.plans.SketchAgg`
-  * (one [[SketchKind]] per sketch) and the fused `FusedTokensNative`.
+  * The library builds every sketch, the fused bloom + HLL + CMS build
+  * included, with the native `graft.plans.SketchAgg` (one [[SketchKind]]
+  * per sketch).
   * These three are written against the core kernels directly, element by
   * element through `functions.udaf`, so tests can compare the native
   * outputs with a second implementation, and the repository benchmark

@@ -83,7 +83,9 @@ abstract class SketchKind[B <: AnyRef] extends Serializable {
 
   def merge(a: B, b: B): B
 
-  /** The published serialized format (golden-pinned). */
+  /** The published serialized format (golden-pinned). A build-only kind
+    * (not [[mergeable]]) publishes [[eval]]'s result instead; its
+    * `toBytes` is only the shuffle form of its partial buffers. */
   def toBytes(b: B): Array[Byte]
 
   /** Validated decode: throws `IllegalArgumentException` on any payload
@@ -418,6 +420,246 @@ object SketchKinds {
     def fromBytes(x: Array[Byte]): CmsBuf = {
       val (d, lw, c, tag, kh) = CountMin.fromBytesFull(x)
       CmsBuf(c, d, lw, tag, kh)
+    }
+  }
+
+  // ------------------------------------------------ fused Bloom+HLL+CMS
+
+  /** Ids hashed per structure-at-a-time pass of [[FusedTokens]]: bounds the
+    * gather scratch to 24 KB per dense buffer however many ids a densify
+    * inserts. */
+  private final val FusedInsertChunk = 1024
+
+  /** [[FusedTokens]]' mutable buffer, sparse until dense is smaller (the
+    * HLL++ sparse→dense rule of Heule–Nunkesser–Hall 2013, applied to the
+    * whole bloom + HLL + CMS buffer).
+    *
+    * Sparse (`bloom == null`): `ids(0 until n)` holds the non-null token ids
+    * seen so far, duplicates kept (the CMS counts multiplicity). All three
+    * sketches depend only on the multiset of inserted tokens (inserts
+    * commute; union is OR / max / add), so deferring the inserts changes no
+    * output byte. Dense: `bloom`/`hll`/`cms` hold the sketches and `ids` is
+    * only the staging area for one row. h64/hi/lo are the hash-gather
+    * scratch of the insert kernel, at most [[FusedInsertChunk]] long
+    * (transient by construction: `fromBytes` recreates them empty). */
+  final class FusedBuf {
+    var ids: Array[Int] = Array.emptyIntArray
+    var n: Int = 0
+    var bloom: Array[Long] = null
+    var hll: Array[Byte] = null
+    var cms: Array[Long] = null
+    val scratch = new Array[Long](2)
+    var h64: Array[Long] = Array.emptyLongArray
+    var hi: Array[Long] = Array.emptyLongArray
+    var lo: Array[Long] = Array.emptyLongArray
+
+    def isDense: Boolean = bloom != null
+
+    /** Room for `need` ids; doubling growth is capped at `limit`, so a
+      * sparse buffer never holds more than `limit` slots. */
+    def ensureIds(need: Int, limit: Int): Unit =
+      if (ids.length < need)
+        ids = java.util.Arrays.copyOf(ids, math.max(need, math.min(math.max(16, 2 * ids.length), limit)))
+
+    def ensureGather(need: Int): Unit =
+      if (h64.length < need) {
+        val cap = math.min(FusedInsertChunk, math.max(need, math.max(64, h64.length * 2)))
+        h64 = new Array[Long](cap); hi = new Array[Long](cap); lo = new Array[Long](cap)
+      }
+  }
+
+  /** `graft_fused_tokens_native(tokens)`: Bloom, HLL and count-min over
+    * token arrays in one pass, the flagship build of `SketchJob`'s
+    * increment, valid for every `SketchJob.JobConfig`. All three hash under
+    * the one SipHash key the bloom and CMS configs must share: per token one
+    * 64-bit hash (bloom, HLL) and one 128-bit hash (CMS, and a bloom whose
+    * 6k + log2l > 64). Result: `struct<bloom, hll, cms>`, each member
+    * byte-identical to its own kind's build. Builds only.
+    *
+    * The buffer stays sparse (token ids, 4 bytes each) while that is
+    * smaller than the dense sketches ([[sparseLimit]] ids) and densifies
+    * past it, so a partial group that sees a few thousand tokens crosses
+    * the shuffle as its ids, not as ~119 KB of sketch (the
+    * `DefaultConfig` size). Hashing happens where a buffer densifies (in
+    * the final aggregate or `eval` for small groups, in the partial for
+    * large ones), still once per token. The shuffle form: sparse, `~n`
+    * (negative, where the dense form starts with its positive bloom word
+    * count) then the n ids, 4 + 4n bytes; dense, the bloom and CMS lengths,
+    * bloom words, HLL registers, CMS counters. Both little-endian. */
+  final case class FusedTokens(bloom: BloomConfig, hllP: Int, cms: CmsConfig) extends SketchKind[FusedBuf] {
+    require(bloom.k0 == cms.k0 && bloom.k1 == cms.k1, "fused build: bloom and CMS must share one SipHash key")
+    private val k0 = bloom.k0
+    private val k1 = bloom.k1
+
+    /** Bytes of the dense buffer: bloom words + HLL registers + CMS counters. */
+    val denseBytes: Long = 8L * bloom.l + Hll.numRegisters(hllP) + 8L * cms.bufferLen
+
+    /** The most ids a buffer holds sparse: one more and 4 bytes per id
+      * exceed the dense form (29,698 at `SketchJob.DefaultConfig`). */
+    val sparseLimit: Int = math.min(denseBytes / 4, Int.MaxValue - 16L).toInt
+
+    def name: String = "graft_fused_tokens_native"
+    protected def buildInput(dt: DataType): Option[SketchInput] = dt match {
+      case ArrayType(IntegerType, _) => Some(Tokens)
+      case _ => None
+    }
+    override def mergeable: Boolean = false
+    def empty(in: SketchInput): FusedBuf = new FusedBuf
+
+    def update(b: FusedBuf, in: SketchInput, v: Any, w: Long): FusedBuf = {
+      val a = v.asInstanceOf[ArrayData]
+      val m = a.numElements()
+      if (!b.isDense && b.n + m > sparseLimit) densify(b)
+      b.ensureIds(b.n + m, sparseLimit)
+      var n = b.n
+      var i = 0
+      while (i < m) {
+        if (!a.isNullAt(i)) { b.ids(n) = a.getInt(i); n += 1 }
+        i += 1
+      }
+      if (b.isDense) { insert(b, b.ids, n); n = 0 }
+      b.n = n
+      b
+    }
+
+    def merge(a: FusedBuf, b: FusedBuf): FusedBuf =
+      if (!b.isDense) { addIds(a, b.ids, b.n); a }
+      else if (!a.isDense) { insert(b, a.ids, a.n); b }
+      else {
+        BlockedBloom.unionInPlace(a.bloom, b.bloom)
+        Hll.merge(a.hll, b.hll)
+        CountMin.merge(a.cms, b.cms)
+        a
+      }
+
+    def toBytes(b: FusedBuf): Array[Byte] =
+      if (!b.isDense) {
+        val bb = ByteBuffer.allocate(4 + 4 * b.n).order(ByteOrder.LITTLE_ENDIAN)
+        bb.putInt(~b.n)
+        bb.asIntBuffer().put(b.ids, 0, b.n)
+        bb.array()
+      } else {
+        val bb = ByteBuffer.allocate(8 + denseBytes.toInt).order(ByteOrder.LITTLE_ENDIAN)
+        bb.putInt(b.bloom.length).putInt(b.cms.length)
+        bb.asLongBuffer().put(b.bloom)
+        bb.position(bb.position() + 8 * b.bloom.length)
+        bb.put(b.hll)
+        bb.asLongBuffer().put(b.cms)
+        bb.array()
+      }
+
+    /** Decodes either shuffle form after checking its lengths against this
+      * config, so no array is sized by an unchecked header. */
+    def fromBytes(x: Array[Byte]): FusedBuf = {
+      require(x.length >= 4, s"fused buffer of ${x.length} bytes")
+      val bb = ByteBuffer.wrap(x).order(ByteOrder.LITTLE_ENDIAN)
+      val head = bb.getInt()
+      val b = new FusedBuf
+      if (head < 0) {
+        val n = ~head
+        require(n <= sparseLimit && x.length == 4L + 4L * n,
+          s"sparse fused buffer of $n ids has ${x.length} bytes (at most $sparseLimit ids)")
+        b.ids = new Array[Int](n)
+        bb.asIntBuffer().get(b.ids)
+        b.n = n
+      } else {
+        require(x.length == 8L + denseBytes && head == bloom.l && bb.getInt(4) == cms.bufferLen,
+          s"dense fused buffer of ${x.length} bytes does not match $bloom, p=$hllP, $cms")
+        bb.position(8)
+        b.bloom = new Array[Long](bloom.l)
+        bb.asLongBuffer().get(b.bloom)
+        bb.position(bb.position() + 8 * bloom.l)
+        b.hll = Hll.empty(hllP)
+        bb.get(b.hll)
+        b.cms = CountMin.empty(cms)
+        bb.asLongBuffer().get(b.cms)
+      }
+      b
+    }
+
+    override def dataType: DataType = StructType(Seq(
+      StructField("bloom", BinaryType, nullable = false),
+      StructField("hll", BinaryType, nullable = false),
+      StructField("cms", BinaryType, nullable = false)))
+
+    override def eval(b: FusedBuf): Any = {
+      if (!b.isDense) densify(b)
+      InternalRow(BlockedBloom.toBytes(b.bloom, bloom, TypeTag.Int),
+        Hll.toBytes(b.hll, hllP, TypeTag.Int, keyHash(k0, k1)),
+        CountMin.toBytes(b.cms, cms, TypeTag.Int))
+    }
+
+    /** Adds ids(0 until n) to `b`: appended while the result stays within
+      * [[sparseLimit]], inserted into the dense sketches otherwise. */
+    private def addIds(b: FusedBuf, ids: Array[Int], n: Int): Unit = {
+      if (!b.isDense && b.n + n > sparseLimit) densify(b)
+      if (b.isDense) insert(b, ids, n)
+      else {
+        b.ensureIds(b.n + n, sparseLimit)
+        System.arraycopy(ids, 0, b.ids, b.n, n)
+        b.n += n
+      }
+    }
+
+    /** Allocates the dense sketches and inserts the held ids into them. */
+    private def densify(b: FusedBuf): Unit = {
+      b.bloom = new Array[Long](bloom.l)
+      b.hll = Hll.empty(hllP)
+      b.cms = CountMin.empty(cms)
+      val ids = b.ids
+      val n = b.n
+      b.ids = Array.emptyIntArray
+      b.n = 0
+      insert(b, ids, n)
+    }
+
+    /** The insert kernel of `update`, `merge` and densify: ids(0 until n)
+      * into the dense sketches of `b`, [[FusedInsertChunk]] ids at a time.
+      *
+      * STRUCTURE-AT-A-TIME passes (optimization r07): hashes are gathered
+      * once per chunk, then each sketch is updated in its own tight loop —
+      * the interleaved per-token form touched ~8 random locations across a
+      * bloom+HLL+CMS working set of ~200 KB per group every token; the split
+      * loops keep one structure (and for CMS one 16 KB depth row) hot at a
+      * time. Every per-token operation is commutative (bloom OR, HLL max,
+      * CMS add), so the reordering is byte-identical — asserted by the
+      * fused ≡ individual-aggregator identity tests. */
+    private def insert(b: FusedBuf, ids: Array[Int], n: Int): Unit = {
+      b.ensureGather(math.min(n, FusedInsertChunk))
+      val width = cms.width
+      val mask = cms.widthMask
+      var off = 0
+      while (off < n) {
+        val cnt = math.min(FusedInsertChunk, n - off)
+        var i = 0
+        while (i < cnt) {
+          val t = ids(off + i)
+          b.h64(i) = SipHash.hashInt(k0, k1, t)
+          SipHash.hash128IntInto(k0, k1, t, b.scratch)
+          b.hi(i) = b.scratch(0)
+          b.lo(i) = b.scratch(1)
+          i += 1
+        }
+        i = 0
+        if (bloom.hash64Enough)
+          while (i < cnt) { BlockedBloom.insertHash64(b.bloom, bloom, b.h64(i)); i += 1 }
+        else // 6k + log2l > 64: the 128-bit hashes gathered for the CMS feed the bloom too
+          while (i < cnt) { BlockedBloom.insertHash128(b.bloom, bloom, b.hi(i), b.lo(i)); i += 1 }
+        i = 0
+        while (i < cnt) { Hll.addHash(b.hll, hllP, b.h64(i)); i += 1 }
+        var j = 0
+        while (j < cms.depth) {
+          val rowOff = j * width
+          i = 0
+          while (i < cnt) {
+            b.cms(rowOff + ((b.lo(i) + j * (b.hi(i) | 1L)) & mask).toInt) += 1L
+            i += 1
+          }
+          j += 1
+        }
+        off += cnt
+      }
+      b.cms(cms.depth * width) += n.toLong
     }
   }
 

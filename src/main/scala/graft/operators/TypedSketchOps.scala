@@ -1,20 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import graft.core.{BloomConfig, CmsConfig, Keys}
-import graft.plans.{FusedTokensNative, GraftFunctions, NativeAggs}
+import graft.plans.{GraftFunctions, NativeAggs}
 import graft.sources.Tokens.TokenRow
 
 /** Typed `Dataset[TokenRow]` façade over the sketch builds — compile-time
   * field checking for pipelines that model the input-hint row as a case
   * class (SURVEY.md §1.2: `Dataset[T]` where type safety helps, `DataFrame`
   * where schema is dynamic). Same physical plans as the DataFrame surface:
-  * the build is one native `FusedTokensNative`, the probe the native
-  * `graft_bloom_might_contain` expression.
+  * the build is one native `SketchAgg` over [[SketchKinds.FusedTokens]]
+  * (which rejects a bloom and CMS under different SipHash keys), the probe
+  * the native `graft_bloom_might_contain` expression.
   */
 object TypedSketchOps {
 
@@ -32,11 +32,8 @@ object TypedSketchOps {
       bloomCfg: BloomConfig = BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 12),
       hllP: Int = 12,
       cmsCfg: CmsConfig = CmsConfig(Keys.DefaultK0, Keys.DefaultK1, 5, 11)): Dataset[SourceSketches] = {
-    require(bloomCfg.k0 == cmsCfg.k0 && bloomCfg.k1 == cmsCfg.k1,
-      "TypedSketchOps.perSourceSketches: bloom and cms must share the SipKey")
     implicit val outEnc = ExpressionEncoder[SourceSketches]()
-    val fused = NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(col("tokens")),
-      bloomCfg.k, bloomCfg.log2l, hllP, cmsCfg.depth, cmsCfg.log2Width, bloomCfg.k0, bloomCfg.k1))
+    val fused = NativeAggs.column(SketchKinds.FusedTokens(bloomCfg, hllP, cmsCfg), col("tokens"))
     tokens.toDF()
       .groupBy(col("source"))
       .agg(

@@ -273,9 +273,7 @@ object GraftFunctions {
     (VectorFunctions.CosineSimName, classOf[CosineSimExpr], VectorFunctions.cosineBuilder _),
     (VectorFunctions.SrpBandsName, classOf[SrpBandsExpr], VectorFunctions.srpBandsBuilder _)) ++
     graft.operators.SketchKinds.readers.map(r => (r.name, classOf[SketchRead], SketchRead.builder(r) _)) ++
-    NativeAggs.sqlAggregates.map { case (name, b) =>
-      (name, if (name == NativeAggs.FusedName) classOf[FusedTokensNative] else classOf[SketchAgg], b)
-    }
+    NativeAggs.sqlAggregates.map { case (name, b) => (name, classOf[SketchAgg], b) }
 
   /** Makes every `graft_*` function callable from SQL on `spark`:
     * `SELECT source, graft_hll_estimate(graft_hll_tokens(tokens)) FROM t GROUP BY source`.

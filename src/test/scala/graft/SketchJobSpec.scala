@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 import graft.jobs.SketchJob
-import graft.plans.{FusedTokensNative, NativeAggs, SketchAgg}
+import graft.operators.SketchKinds.FusedTokens
+import graft.plans.{NativeAggs, SketchAgg}
 
 /** Checkpoint/resume semantics (north rule): a job killed mid-way and
   * resumed must produce final sketches byte-identical to an uninterrupted
@@ -58,8 +59,7 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
   /** The job's reference: one uncheckpointed per-source fused build. */
   def oneShot(tokens: DataFrame, c: SketchJob.JobConfig): Map[String, Seq[Seq[Byte]]] =
     sketchBytes(tokens.groupBy(col("source"))
-      .agg(NativeAggs.column(FusedTokensNative(GraftColumnBridge.expression(col("tokens")),
-        c.bloomK, c.bloomLog2l, c.hllP, c.cmsDepth, c.cmsLog2Width, c.k0, c.k1)).as("f"))
+      .agg(NativeAggs.column(FusedTokens(c.bloomCfg, c.hllP, c.cmsCfg), col("tokens")).as("f"))
       .select(col("source"), col("f.bloom").as("bloom"), col("f.hll").as("hll"), col("f.cms").as("cms"))
       .collect())
 
@@ -126,6 +126,12 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     }
   }
 
+  /** Whether `f` is the fused build. */
+  def isFused(f: AggregateFunction): Boolean = f match {
+    case a: SketchAgg => a.kind.isInstanceOf[FusedTokens]
+    case _ => false
+  }
+
   test("plan shape: finalize has one shuffle exchange; neither half runs a ScalaAggregator") {
     val tokens = generatedTokens()
     val ckpt = freshDir()
@@ -135,16 +141,18 @@ class SketchJobSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
         plans.synchronized(plans += qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    def incrementAggs = plans.synchronized(plans.toList).flatMap(aggFunctions)
+    def incrementPlans = plans.synchronized(plans.toList).filter(p => aggFunctions(p).exists(isFused))
     spark.listenerManager.register(listener)
     try {
       SketchJob.runIncrement(spark, tokens, ckpt, cfg)
       // listener events arrive asynchronously
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!incrementAggs.exists(_.isInstanceOf[FusedTokensNative]) && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      while (incrementPlans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     } finally spark.listenerManager.unregister(listener)
-    assert(incrementAggs.exists(_.isInstanceOf[FusedTokensNative]), "increment must run the fused native build")
+    val incrementAggs = plans.synchronized(plans.toList).flatMap(aggFunctions)
+    assert(incrementPlans.size === 1, s"the increment must run ONE plan with the fused build: $incrementAggs")
+    val increment = incrementPlans.head
+    assert(collect(increment) { case e: ShuffleExchangeLike => e }.size === 1, s"increment plan:\n$increment")
     assert(!incrementAggs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), s"increment runs a udaf: $incrementAggs")
 
     val fin = SketchJob.finalizeSketches(spark, ckpt, cfg)

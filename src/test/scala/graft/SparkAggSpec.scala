@@ -58,11 +58,9 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 until 3).map(r.getAs[Array[Byte]](_))
   }
 
-  /** A one-shot `FusedTokensNative` build over `tokens`, as a Column. */
-  def fusedNative(bloom: BloomConfig, hllP: Int, cms: CmsConfig): org.apache.spark.sql.Column =
-    graft.plans.NativeAggs.column(graft.plans.FusedTokensNative(
-      org.apache.spark.sql.GraftColumnBridge.expression(col("tokens")),
-      bloom.k, bloom.log2l, hllP, cms.depth, cms.log2Width, bloom.k0, bloom.k1))
+  /** A one-shot fused build over `tokens`, as a Column. */
+  def fusedNative(bloom: BloomConfig, hllP: Int, cms: CmsConfig): Column =
+    NativeAggs.column(FusedTokens(bloom, hllP, cms), col("tokens"))
 
   def assertSameSketches(got: Seq[Array[Byte]], want: Seq[Array[Byte]], what: String): Unit =
     Seq("bloom", "hll", "cms").zipWithIndex.foreach { case (name, i) =>
@@ -163,7 +161,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fused agg output is byte-identical to the three individual aggregators") {
-    // FusedTokensNative at the default 64-bit config (6*3 + 12 <= 64)
+    // the fused build at the default 64-bit config (6*3 + 12 <= 64)
     val hllP = 12
     val cms = SketchQueries.cmsCfg
     val df = tokenDf(800, 5)
@@ -673,8 +671,7 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       val funcs = analyzed.collect { case a: Aggregate =>
         a.aggregateExpressions.flatMap(_.collect { case e: AggregateExpression => e.aggregateFunction })
       }.flatten
-      assert(funcs.nonEmpty && funcs.forall(f =>
-        f.isInstanceOf[SketchAgg] || f.isInstanceOf[graft.plans.FusedTokensNative]), s"$call: $funcs")
+      assert(funcs.nonEmpty && funcs.forall(_.isInstanceOf[SketchAgg]), s"$call: $funcs")
     }
     val windowed = graft.streaming.StreamingSketch.perSourceWindowedSketches(
       tokenDf(50, 2).withColumn("ts", current_timestamp()), "ts", "1 minute", "5 minutes", cfg, 12)

@@ -44,15 +44,22 @@ class SketchKindDecoderSpec extends AnyFunSuite {
   private val doubles: Seq[Any] = (1 to 300).map(i => ((i * 7919) % 211) * 0.5)
   private val strings: Seq[Any] = (1 to 300).map(i => UTF8String.fromString(s"doc-${i % 97}"))
 
-  /** (label, kind, serialized inputs): goldens plus a built sketch. */
+  /** (label, kind, serialized inputs): goldens plus a built sketch. The
+    * build-only kinds' forms never leave the shuffle, so they have no
+    * golden files: the fused build is fed one sparse and one dense buffer
+    * (its tiny config densifies past 102 ids). */
   private val cases: Seq[(String, SketchKind[_ <: AnyRef], Seq[Array[Byte]])] = {
     val bloomCfg = BloomConfig(k0, k1, 3, 6)
+    val fused = FusedTokens(BloomConfig(k0, k1, 3, 4), 4, CmsConfig(k0, k1, 2, 4))
     Seq(
       ("bloom", Bloom(bloomCfg),
         Seq("bloom_1_0", "bloom_2_1", "bloom_3_2", "bloom_3_7", "bloom_4_10").map(n => golden(s"$n.bin")) :+
           built(Bloom(bloomCfg), SketchInput.Tokens, (1 to 50).map(i => tokens(i, i * 3)))),
       ("bloom new-count", BloomNewCount(bloomCfg),
         Seq(built(BloomNewCount(bloomCfg), SketchInput.Tokens, (1 to 50).map(i => tokens(i, i + 1))))),
+      ("fused tokens", fused,
+        Seq(built(fused, SketchInput.Tokens, (1 to 20).map(i => tokens(i, i * 5))),
+          built(fused, SketchInput.Tokens, (1 to 60).map(i => tokens(i, i * 5, i % 7))))),
       ("hll", HllKind(k0, k1, 10),
         Seq(golden("hll_10.bin"), built(HllKind(k0, k1, 10), SketchInput.Longs, longs.take(20)))),
       ("cms", Cms(CmsConfig(k0, k1, 4, 8)),

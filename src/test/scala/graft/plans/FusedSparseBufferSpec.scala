@@ -1,21 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{BloomConfig, CmsConfig, Keys}
 import graft.operators.SketchAggs.{BloomTokensAgg, CmsTokensAgg, HllTokensAgg}
+import graft.operators.SketchInput.Tokens
+import graft.operators.SketchKinds.{FusedBuf, FusedTokens}
 
-/** `FusedTokensNative`'s sparse-until-dense buffer: wherever a buffer
+/** `SketchKinds.FusedTokens`' sparse-until-dense buffer: wherever a buffer
   * switches from held token ids to dense sketches — inside one row, in
   * either argument of a merge, across a serialize round trip, at `eval` —
   * the output bytes equal the three individual aggregators over the same
@@ -38,26 +38,27 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
     * dense buffer is 408 bytes (102 ids), and the 128-bit (13, 10) bloom. */
   val tinyConfigs = Seq((3, 4, 4, 2, 4), (13, 10, 4, 2, 4))
 
-  def agg(c: (Int, Int, Int, Int, Int)): FusedTokensNative =
-    FusedTokensNative(BoundReference(0, ArrayType(IntegerType, containsNull = true), nullable = true),
-      c._1, c._2, c._3, c._4, c._5, k0, k1)
+  def agg(c: (Int, Int, Int, Int, Int)): FusedTokens =
+    FusedTokens(BloomConfig(k0, k1, c._1, c._2), c._3, CmsConfig(k0, k1, c._4, c._5))
 
-  def row(ids: Seq[Int]): InternalRow = InternalRow(new GenericArrayData(ids.map(Int.box).toArray[Any]))
+  /** One row's token array, nullable elements as Catalyst holds them. */
+  def tokens(ids: Any*): GenericArrayData = new GenericArrayData(ids.toArray)
 
-  def build(f: FusedTokensNative, rows: Seq[Seq[Int]]): FusedNativeBuf =
-    rows.foldLeft(f.createAggregationBuffer())((b, r) => f.update(b, row(r)))
+  def update(f: FusedTokens, buf: FusedBuf, ids: Seq[Int]): FusedBuf = f.update(buf, Tokens, tokens(ids: _*), 1L)
 
-  def bytesOf(f: FusedTokensNative, buf: FusedNativeBuf): Seq[Array[Byte]] = {
+  def build(f: FusedTokens, rows: Seq[Seq[Int]]): FusedBuf = rows.foldLeft(f.empty(Tokens))(update(f, _, _))
+
+  def bytesOf(f: FusedTokens, buf: FusedBuf): Seq[Array[Byte]] = {
     val r = f.eval(buf).asInstanceOf[InternalRow]
     (0 until 3).map(r.getBinary)
   }
 
   /** The three individual aggregators over `tokens`, called directly. */
-  def reference(f: FusedTokensNative, tokens: Seq[Int]): Seq[Array[Byte]] = {
+  def reference(f: FusedTokens, tokens: Seq[Int]): Seq[Array[Byte]] = {
     val t = tokens.toArray
-    val b = new BloomTokensAgg(BloomConfig(k0, k1, f.k, f.log2l))
+    val b = new BloomTokensAgg(f.bloom)
     val h = new HllTokensAgg(k0, k1, f.hllP)
-    val c = new CmsTokensAgg(CmsConfig(k0, k1, f.cmsDepth, f.cmsLog2Width))
+    val c = new CmsTokensAgg(f.cms)
     Seq(b.finish(b.reduce(b.zero, t)), h.finish(h.reduce(h.zero, t)), c.finish(c.reduce(c.zero, t)))
   }
 
@@ -76,7 +77,7 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
       val crossing = ids(40, 2)
       val buf = build(f, Seq(before))
       assert(!buf.isDense && buf.n === before.length)
-      f.update(buf, row(crossing))
+      update(f, buf, crossing)
       assert(buf.isDense, s"$c: ${f.sparseLimit + 35} ids did not densify")
       assertSame(bytesOf(f, buf), reference(f, before ++ crossing), s"$c crossing row")
       // a single row longer than the threshold on a fresh buffer
@@ -112,10 +113,10 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
       val f = agg(c)
       for (rows <- Seq(Seq(ids(50, 13), ids(3, 14)), Seq(ids(f.sparseLimit + 8, 15)), Seq.empty)) {
         val buf = build(f, rows)
-        val bytes = f.serialize(buf)
-        val back = f.deserialize(bytes)
+        val bytes = f.toBytes(buf)
+        val back = f.fromBytes(bytes)
         assert(back.isDense === buf.isDense && back.n === buf.n)
-        assert(java.util.Arrays.equals(f.serialize(back), bytes), s"$c: round trip changed the bytes")
+        assert(java.util.Arrays.equals(f.toBytes(back), bytes), s"$c: round trip changed the bytes")
         if (!buf.isDense) assert(bytes.length === 4 + 4 * buf.n)
         else assert(bytes.length === 8 + f.denseBytes)
         assertSame(bytesOf(f, back), reference(f, rows.flatten), s"$c round trip")
@@ -127,14 +128,12 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (c <- tinyConfigs) {
       val f = agg(c)
       val zero = reference(f, Seq.empty)
-      assertSame(bytesOf(f, f.createAggregationBuffer()), zero, s"$c empty group")
-      val nulls = f.update(f.createAggregationBuffer(),
-        InternalRow(new GenericArrayData(Array[Any](null, null, null))))
+      assertSame(bytesOf(f, f.empty(Tokens)), zero, s"$c empty group")
+      val nulls = f.update(f.empty(Tokens), Tokens, tokens(null, null, null), 1L)
       assert(nulls.n === 0)
       assertSame(bytesOf(f, nulls), zero, s"$c all-null elements")
       // null elements among ids are skipped, the rest counted
-      val mixed = f.update(f.createAggregationBuffer(),
-        InternalRow(new GenericArrayData(Array[Any](5, null, 5, 9))))
+      val mixed = f.update(f.empty(Tokens), Tokens, tokens(5, null, 5, 9), 1L)
       assertSame(bytesOf(f, mixed), reference(f, Seq(5, 5, 9)), s"$c mixed nulls")
     }
   }
@@ -147,24 +146,35 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
       for (rowLen <- Seq(1, 7)) {
         // rows of rowLen ids up to exactly `limit` ids (the last row may be shorter)
         val rows = ids(limit, 16).grouped(rowLen).toSeq
-        val buf = f.createAggregationBuffer()
+        val buf = f.empty(Tokens)
         rows.foreach { r =>
-          f.update(buf, row(r))
+          update(f, buf, r)
           assert(4L * buf.ids.length <= f.denseBytes + 4L * rowLen, s"$c: ${buf.ids.length} slots held")
         }
         assert(!buf.isDense && buf.n === limit && buf.ids.length <= limit)
-        assert(f.serialize(buf).length <= 4 + 4 * limit)
-        f.update(buf, row(Seq(17)))
+        assert(f.toBytes(buf).length <= 4 + 4 * limit)
+        update(f, buf, Seq(17))
         assert(buf.isDense, s"$c: limit + 1 ids stayed sparse")
         assert(4L * buf.ids.length <= f.denseBytes + 4L * rowLen)
-        assert(f.serialize(buf).length === 8 + f.denseBytes)
+        assert(f.toBytes(buf).length === 8 + f.denseBytes)
         assertSame(bytesOf(f, buf), reference(f, ids(limit, 16) :+ 17), s"$c limit + 1")
       }
       // growth through merges obeys the same cap
-      val acc = f.createAggregationBuffer()
+      val acc = f.empty(Tokens)
       (0 until limit / 9).foreach(i => f.merge(acc, build(f, Seq(ids(9, 20 + i)))))
       assert(!acc.isDense && acc.ids.length <= limit)
     }
+  }
+
+  test("config checks: one SipHash key; a shuffle buffer decodes only under its own config") {
+    intercept[IllegalArgumentException](FusedTokens(BloomConfig(k0, k1, 3, 4), 4, CmsConfig(k0 + 1, k1, 2, 4)))
+    val Seq(f, g) = tinyConfigs.map(agg)
+    val dense = f.toBytes(build(f, Seq(ids(f.sparseLimit + 1, 21))))
+    intercept[IllegalArgumentException](g.fromBytes(dense))
+    // a well-formed sparse payload of one id more than the config holds sparse
+    val n = f.sparseLimit + 1
+    val over = java.nio.ByteBuffer.allocate(4 + 4 * n).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(~n).array()
+    intercept[IllegalArgumentException](f.fromBytes(over))
   }
 
   object PlanWalk extends AdaptiveSparkPlanHelper
@@ -187,8 +197,8 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val defaultCfg = (3, 12, 12, 5, 11)
       for (c <- tinyConfigs :+ defaultCfg) {
-        val f = agg(c).copy(child = GraftColumnBridge.expression(col("tokens")))
-        val fused = df.groupBy("key").agg(NativeAggs.column(f).as("f"))
+        val f = agg(c)
+        val fused = df.groupBy("key").agg(NativeAggs.column(f, col("tokens")).as("f"))
           .select(col("key"), col("f.bloom"), col("f.hll"), col("f.cms"))
         val got = fused.collect().map(r => r.getInt(0) -> (1 to 3).map(r.getAs[Array[Byte]](_))).toMap
         val fellBack = PlanWalk.collect(fused.queryExecution.executedPlan) {
@@ -196,9 +206,9 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
         assert(fellBack.sum > 0, s"$c: no task fell back to sort-based aggregation")
         val want = df.groupBy("key").agg(
-          udaf(new BloomTokensAgg(BloomConfig(k0, k1, f.k, f.log2l)), enc)(col("tokens")),
+          udaf(new BloomTokensAgg(f.bloom), enc)(col("tokens")),
           udaf(new HllTokensAgg(k0, k1, f.hllP), enc)(col("tokens")),
-          udaf(new CmsTokensAgg(CmsConfig(k0, k1, f.cmsDepth, f.cmsLog2Width)), enc)(col("tokens")))
+          udaf(new CmsTokensAgg(f.cms), enc)(col("tokens")))
           .collect().map(r => r.getInt(0) -> (1 to 3).map(r.getAs[Array[Byte]](_))).toMap
         assert(got.keySet === want.keySet && got.size === 60)
         got.foreach { case (key, sk) => assertSame(sk, want(key), s"$c key $key") }
@@ -206,13 +216,13 @@ class FusedSparseBufferSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
     // an empty input and an all-null-elements group through Spark
     import spark.implicits._
-    val f = agg(tinyConfigs.head).copy(child = GraftColumnBridge.expression(col("tokens")))
+    val f = agg(tinyConfigs.head)
     val zero = reference(f, Seq.empty)
-    val empty = spark.emptyDataset[Array[Int]].toDF("tokens").agg(NativeAggs.column(f).as("f"))
+    val empty = spark.emptyDataset[Array[Int]].toDF("tokens").agg(NativeAggs.column(f, col("tokens")).as("f"))
       .select("f.bloom", "f.hll", "f.cms").head()
     assertSame((0 until 3).map(empty.getAs[Array[Byte]](_)), zero, "empty input")
     val allNull = Seq(Seq[java.lang.Integer](null, null), Seq[java.lang.Integer](null)).toDF("tokens")
-      .repartition(2).agg(NativeAggs.column(f).as("f")).select("f.bloom", "f.hll", "f.cms").head()
+      .repartition(2).agg(NativeAggs.column(f, col("tokens")).as("f")).select("f.bloom", "f.hll", "f.cms").head()
     assertSame((0 until 3).map(allNull.getAs[Array[Byte]](_)), zero, "all-null elements")
   }
 }
