@@ -228,8 +228,7 @@ object PipelineQueries {
         col("quality_ok"), col("kept"), col("in_frame"))
   }
 
-  /** Stats + gate over a (usually persisted) slim frame; lazy, so
-    * PlanCheck can capture the real plan via [[samplingFramePlan]]. */
+  /** Stats + gate of [[samplingFrame]] over its persisted slim frame. */
   private def samplingFrameOn(spark: SparkSession, flagged: DataFrame): DataFrame = {
     val k = 8
     val sampleW = graft.operators.SketchKinds.Sample(
@@ -262,11 +261,6 @@ object PipelineQueries {
         (coalesce(col("n_bad"), lit(0L)) === 0L).as("sample_members_ok"))
       .orderBy(col("source"))
   }
-
-  /** Lazy twin for plan capture (PlanCheck) — same plan over the
-    * persisted slim frame, no collect. */
-  private[graft] def samplingFramePlan(spark: SparkSession, dir: String): DataFrame =
-    samplingFrameOn(spark, slimSamplingFlags(spark, dir).persist())
 
   /** Winnowing fingerprint survey — per-source fingerprint mass plus
     * PARTIAL-overlap pairs (docs sharing >= 2 winnowed rolling-hash
@@ -538,15 +532,6 @@ object PipelineQueries {
       perSource.unpersist()
       masks.unpersist()
     }
-  }
-
-  /** The distributed inner frame of [[sourceOverlapMatrix]] WITHOUT the
-    * persist/collect materialization — shared so the PlanDump tool captures
-    * the real plan (the public query returns a LocalRelation). */
-  private[graft] def sourceOverlapMatrixLazy(spark: SparkSession, dir: String): DataFrame = {
-    val sources = overlapSources(spark, dir)
-    val masks = overlapMasks(spark, dir, sources)
-    sourceOverlapFrame(spark, masks, perSourceAgg(masks, sources), sources)
   }
 
   /** Sorted source universe, from a column-pruned scan of the tokens table

@@ -503,29 +503,19 @@ object SketchQueries {
     val lineitem = spark.read.parquet(s"$dir/lineitem.parquet")
     // persisted build side, released deterministically after the single-row
     // result materializes (round-3 VERDICT #3 — no per-invocation cache leak)
-    val (result, buildSide) = bloomJoinLineitemLazy(spark, orders, lineitem)
+    val buildSide = orders.where(col("o_orderstatus") === "P")
+      .select(col("o_orderkey")).persist()
     try {
+      val sketch = buildSide.agg(bloomAgg(col("o_orderkey").cast("long"))).scalar()
+      val result = lineitem
+        .where(GraftFunctions.bloomMightContain(sketch, col("l_orderkey")))
+        .join(buildSide.withColumnRenamed("o_orderkey", "l_orderkey"), Seq("l_orderkey"), "left_semi")
+        // quantities are integral doubles; cast BEFORE summing so both engines
+        // sum integers exactly (double-accumulation order is not portable)
+        .agg(count(lit(1)).as("n_lines"), sum(col("l_quantity").cast("long")).as("sum_qty"))
       val rows = result.collect() // bounded: exactly one row
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
     } finally buildSide.unpersist()
-  }
-
-  /** The lazy plan behind [[bloomJoinLineitem]] plus its persisted build
-    * side (exposed so PlanCheck can capture the REAL distributed plan; the
-    * caller owns the unpersist). */
-  private[graft] def bloomJoinLineitemLazy(
-      spark: SparkSession, orders: DataFrame, lineitem: DataFrame): (DataFrame, DataFrame) = {
-    val buildSide = orders.where(col("o_orderstatus") === "P")
-      .select(col("o_orderkey")).persist()
-    val sketch = buildSide.agg(bloomAgg(col("o_orderkey").cast("long"))).scalar()
-    val prefiltered = lineitem
-      .where(GraftFunctions.bloomMightContain(sketch, col("l_orderkey")))
-    val result = prefiltered
-      .join(buildSide.withColumnRenamed("o_orderkey", "l_orderkey"), Seq("l_orderkey"), "left_semi")
-      // quantities are integral doubles; cast BEFORE summing so both engines
-      // sum integers exactly (double-accumulation order is not portable)
-      .agg(count(lit(1)).as("n_lines"), sum(col("l_quantity").cast("long")).as("sum_qty"))
-    (result, buildSide)
   }
 
   /** HLL distinct users per event type over the events stream table
@@ -656,53 +646,55 @@ object SketchQueries {
       .select(col("source"), keyBlowup(col("token"), col("doc_id")).as("key"))
     val sk = stream.groupBy(col("source")).agg(NativeAggs.column(HeavyHitters(capacity), col("key")).as("sk"))
     val exact = stream.groupBy(col("source"), col("key")).agg(count(lit(1)).as("cnt"))
-    mgGuaranteeGate(spark, sk, exact, capacity)
+    mgGuaranteeGate(sk, exact, capacity)
   }
 
-  /** Shared Misra-Gries guarantee gate: per-source summary frame
-    * (source, sk) vs exactly-recomputed counts (source, key, cnt) ->
-    * per-source within_bound. `cnt` is the true WEIGHT of the key (plain
-    * occurrence count for the unweighted agg, summed weights for the
-    * weighted one — the guarantees are the same with N = total weight).
+  /** Shared Misra-Gries guarantee gate: summary frame (groups..., sk) vs
+    * exactly-recomputed counts (groups..., key, cnt) -> (groups...,
+    * within_bound), ordered by the groups — per source for the batch
+    * gates, per (window, source) for the streaming trending-tokens
+    * replay. `cnt` is the true WEIGHT of the key (plain occurrence count
+    * for the unweighted agg, summed weights for the weighted one — the
+    * guarantees are the same with N = total weight).
     * ONE native struct read per summary (graft_heavyhitter_summary): topk
     * entries + error bound D + total N from a single cached deserialize —
     * no UDF readers in the family (round-3 VERDICT #5). */
-  private def mgGuaranteeGate(spark: SparkSession, sk: DataFrame, exact: DataFrame,
-      capacity: Int): DataFrame = {
+  private[graft] def mgGuaranteeGate(sk: DataFrame, exact: DataFrame, capacity: Int,
+      groups: Seq[String] = Seq("source")): DataFrame = {
+    val g = groups.map(col)
     val meta = sk
-      .select(col("source"), HeavyHitterSummary.column(col("sk")).as("s"))
-      .select(col("source"), col("s.error").as("d"), col("s.total").as("n"),
-        col("s.topk").as("entries"))
-    val entries = meta.select(col("source"), col("d"), explode(col("entries")).as("e"))
-      .select(col("source"), col("d"), col("e.key").as("key"), col("e.est").as("est"))
+      .select(g :+ HeavyHitterSummary.column(col("sk")).as("s"): _*)
+      .select(g ++ Seq(col("s.error").as("d"), col("s.total").as("n"),
+        col("s.topk").as("entries")): _*)
+    val entries = meta.select(g ++ Seq(col("d"), explode(col("entries")).as("e")): _*)
+      .select(g ++ Seq(col("d"), col("e.key").as("key"), col("e.est").as("est")): _*)
     // (1) stored-key sandwich: est <= cnt <= est + D. LEFT join so a stored
     // key with NO exact counterpart (a corrupt summary) produces a FALSE
     // row — an inner join would silently drop it and the group could pass
     // vacuously (review r4)
-    val sandwich = entries.join(exact, Seq("source", "key"), "left")
-      .groupBy(col("source"))
+    val sandwich = entries.join(exact, groups :+ "key", "left")
+      .groupBy(g: _*)
       .agg(min(col("cnt").isNotNull &&
         col("est") <= col("cnt") && col("cnt") <= col("est") + col("d")).as("sandwich_ok"))
     // (2) guaranteed presence: no key with cnt > D missing from the summary
     val missed = exact
-      .join(meta.select(col("source"), col("d")), "source")
+      .join(meta.select(g :+ col("d"): _*), groups)
       .where(col("cnt") > col("d"))
-      .join(entries.select(col("source"), col("key")), Seq("source", "key"), "left_anti")
-      .groupBy(col("source")).agg(count(lit(1)).as("n_missed"))
+      .join(entries.select(g :+ col("key"): _*), groups :+ "key", "left_anti")
+      .groupBy(g: _*).agg(count(lit(1)).as("n_missed"))
     // (3) the error budget: D * capacity <= N
     // LEFT join + coalesce(true) on the sandwich: with the sandwich itself
     // LEFT-joined above, a missing sandwich row can ONLY mean a summary
     // with zero stored entries (inserts can decrement every counter away)
     // — vacuously within bound; any corrupt non-empty summary produces a
-    // FALSE sandwich row instead of a missing one
-    meta.select(col("source"), (col("d") * capacity <= col("n")).as("budget_ok"))
-      .join(sandwich, Seq("source"), "left")
-      .join(missed, Seq("source"), "left")
-      .select(col("source"),
-        (col("budget_ok") && coalesce(col("sandwich_ok"), lit(true)) &&
-          coalesce(col("n_missed"), lit(0L)) === 0L)
-          .as("within_bound"))
-      .orderBy(col("source"))
+    // FALSE sandwich row instead of a missing one. An inner join would
+    // drop the group's row and break the oracle's enumeration
+    meta.select(g :+ (col("d") * capacity <= col("n")).as("budget_ok"): _*)
+      .join(sandwich, groups, "left")
+      .join(missed, groups, "left")
+      .select(g :+ (col("budget_ok") && coalesce(col("sandwich_ok"), lit(true)) &&
+        coalesce(col("n_missed"), lit(0L)) === 0L).as("within_bound"): _*)
+      .orderBy(g: _*)
   }
 
   /** WEIGHTED Misra-Gries under the driver gate
@@ -730,7 +722,7 @@ object SketchQueries {
     val sk = perDoc.groupBy(col("source"))
       .agg(NativeAggs.column(HeavyHitters(capacity), col("key"), col("w")).as("sk"))
     val exact = stream.groupBy(col("source"), col("key")).agg(count(lit(1)).as("cnt"))
-    mgGuaranteeGate(spark, sk, exact, capacity)
+    mgGuaranteeGate(sk, exact, capacity)
   }
 
   /** Train/eval n-gram decontamination under the driver gate
@@ -776,7 +768,7 @@ object SketchQueries {
       sum(col("cnt")).as("n_bigrams"),
       count(lit(1)).as("distinct_bigrams"),
       max(col("cnt")).as("top_bigram_count"))
-    stats.join(mgGuaranteeGate(spark, sk, exact, capacity), Seq("source"))
+    stats.join(mgGuaranteeGate(sk, exact, capacity), Seq("source"))
       .select(col("source"), col("n_bigrams"), col("distinct_bigrams"),
         col("top_bigram_count"), col("within_bound"))
       .orderBy(col("source"))

@@ -142,8 +142,8 @@ object Decontamination {
   }
 
   /** The lazy plan behind [[decontaminate]] plus its persisted eval gram
-    * frame (exposed so PlanCheck can capture the REAL distributed plan;
-    * the caller owns the unpersist). */
+    * frame; the caller owns the unpersist. Building it starts no Spark
+    * job. */
   private[graft] def decontaminateLazy(tokens: DataFrame, evalSource: String,
       n: Int, cfg: BloomConfig): (DataFrame, DataFrame) = {
     val (hits, evalGrams) = hitRowsLazy(tokens, evalSource, n, cfg)

@@ -319,7 +319,8 @@ object StreamingSketch {
     * formula as the batch gate `q_heavyhitter_mg_bound`). For every
     * (60 s window, source) the state-store-merged summary is read through
     * the native `graft_heavyhitter_summary` struct and its EXACT
-    * guarantees are asserted against exactly-recomputed per-window counts:
+    * guarantees are asserted against exactly-recomputed per-window counts
+    * by the batch gates' own check (`SketchQueries.mgGuaranteeGate`):
     * est ≤ true ≤ est + D for stored keys, presence of every key with
     * true > D, and D·capacity ≤ N. The booleans are invariant to
     * micro-batch arrival order (MG's merge is order-dependent at the BYTE
@@ -351,47 +352,16 @@ object StreamingSketch {
     // gate reuses it in three branches, and Spark's self-join attribute
     // dedup does not handle the memory-sink view (INTERNAL_ERROR:
     // conflicting references); a LocalRelation self-joins fine
-    val sinkSel = spark.table(sinkName).select(winCol, col("source"), col("hh"))
+    val sinkSel = spark.table(sinkName).select(winCol, col("source"), col("hh").as("sk"))
     val sinkRows = sinkSel.collect()
     val sk = spark.createDataFrame(java.util.Arrays.asList(sinkRows: _*), sinkSel.schema)
-    val meta = sk
-      .select(col("win"), col("source"), HeavyHitterSummary.column(col("hh")).as("s"))
-      .select(col("win"), col("source"), col("s.error").as("d"), col("s.total").as("n"),
-        col("s.topk").as("entries"))
-    val entries = meta
-      .select(col("win"), col("source"), col("d"), explode(col("entries")).as("e"))
-      .select(col("win"), col("source"), col("d"), col("e.key").as("key"), col("e.est").as("est"))
     val exact = t
       .select(((col("doc_id").cast("long") % 600) / 60).cast("long").as("win"),
         col("source"), col("doc_id"), explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull) // one tokenize evaluation
       .select(col("win"), col("source"), blowup(col("token"), col("doc_id")).as("key"))
       .groupBy(col("win"), col("source"), col("key")).agg(count(lit(1)).as("cnt"))
-    // LEFT join: a stored key with no exact counterpart (corrupt summary)
-    // must yield a FALSE row, not silently vanish from the min()
-    val sandwich = entries.join(exact, Seq("win", "source", "key"), "left")
-      .groupBy(col("win"), col("source"))
-      .agg(min(col("cnt").isNotNull &&
-        col("est") <= col("cnt") && col("cnt") <= col("est") + col("d")).as("sandwich_ok"))
-    val missed = exact
-      .join(meta.select(col("win"), col("source"), col("d")), Seq("win", "source"))
-      .where(col("cnt") > col("d"))
-      .join(entries.select(col("win"), col("source"), col("key")),
-        Seq("win", "source", "key"), "left_anti")
-      .groupBy(col("win"), col("source")).agg(count(lit(1)).as("n_missed"))
-    meta.select(col("win"), col("source"), (col("d") * capacity <= col("n")).as("budget_ok"))
-      // LEFT join + coalesce(true): with the sandwich itself LEFT-joined to
-      // exact, a missing sandwich row can ONLY mean an EMPTY summary
-      // (inserts can decrement every counter to zero) — vacuously within
-      // bound; corrupt non-empty summaries produce FALSE rows. An inner
-      // join would drop the (window, source) row and break the enumeration
-      .join(sandwich, Seq("win", "source"), "left")
-      .join(missed, Seq("win", "source"), "left")
-      .select(col("win"), col("source"),
-        (col("budget_ok") && coalesce(col("sandwich_ok"), lit(true)) &&
-          coalesce(col("n_missed"), lit(0L)) === 0L)
-          .as("within_bound"))
-      .orderBy(col("win"), col("source"))
+    graft.SketchQueries.mgGuaranteeGate(sk, exact, capacity, Seq("win", "source"))
   }
 
   /** SESSION-WINDOW driver query (`q_streaming_session_kmv`): dynamic-gap

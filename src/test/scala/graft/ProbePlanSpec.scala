@@ -2,14 +2,10 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.execution.{QueryExecution, ScalarSubquery, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.ScalarSubquery
 import org.apache.spark.sql.types.BinaryType
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +24,7 @@ import graft.streaming.StreamingSketch
   * scalar subqueries only (a subquery, a field of one, or a read function
   * over them). Building the decontamination plan must start no Spark
   * job. */
-class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
+class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -39,44 +35,13 @@ class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
 
   override def afterAll(): Unit = spark.stop()
 
-  /** The sf0.001 fixture directory, where TESTDATA.md lists it. */
-  private lazy val dir: String = {
-    val src = scala.io.Source.fromFile("TESTDATA.md")(scala.io.Codec.UTF8)
-    val row = try src.getLines().find(_.startsWith("| 0.001 |")).get finally src.close()
-    "`([^`]+)`".r.findFirstMatchIn(row).get.group(1).stripSuffix("/")
-  }
+  private def dir: String = PlanCapture.fixtureDir
 
   private val cfg = BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 10)
 
-  /** Every physical plan `body` executes, AQE stages resolved. A marker
-    * query run after `body` is delivered last on the in-order listener
-    * bus, so once it arrives every earlier plan has. */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val marker = s"plan_gate_marker_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-    def seen = plans.asScala.exists(_.output.exists(_.name == marker))
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(1).toDF(marker).collect()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen, "listener bus marker never arrived")
-    } finally spark.listenerManager.unregister(listener)
-    plans.asScala.toSeq
-  }
-
-  private def expressionsOf(plans: Seq[SparkPlan]): Seq[Expression] =
-    plans.flatMap(p => collectWithSubqueries(p) { case node => node.expressions }.flatten)
-      .flatMap(_.collect { case e => e })
-
   /** The gate over the plans `body` executes; returns the probes found. */
   private def assertProbesInQuery(name: String)(body: => Unit): Seq[SketchRead] = {
-    val exprs = expressionsOf(plansOf(body))
+    val exprs = PlanCapture.expressionsOf(PlanCapture.plansOf(spark)(body).map(_.executedPlan))
     val big = exprs.collect {
       case Literal(b: Array[Byte], BinaryType) if b.length > 1024 => b.length
     }
