@@ -133,23 +133,40 @@ object BlockedBloom {
     (w & m) == m
   }
 
-  // --- typed element entry points (canonical encodings via SipHash) ---
+  // --- typed element entry points (canonical encodings via SipHash; a
+  //     filter wider than 64 hash bits takes the 128-bit hash) ---
 
   def insertInt(words: Array[Long], cfg: BloomConfig, x: Int): Boolean =
     if (cfg.hash64Enough) insertHash64(words, cfg, SipHash.hashInt(cfg.k0, cfg.k1, x))
-    else { val (hi, lo) = SipHash.hash128Int(cfg.k0, cfg.k1, x); insertHash128(words, cfg, hi, lo) }
+    else {
+      val h = new Array[Long](2)
+      SipHash.hash128IntInto(cfg.k0, cfg.k1, x, h)
+      insertHash128(words, cfg, h(0), h(1))
+    }
 
   def containsInt(words: Array[Long], cfg: BloomConfig, x: Int): Boolean =
     if (cfg.hash64Enough) containsHash64(words, cfg, SipHash.hashInt(cfg.k0, cfg.k1, x))
-    else { val (hi, lo) = SipHash.hash128Int(cfg.k0, cfg.k1, x); containsHash128(words, cfg, hi, lo) }
+    else {
+      val h = new Array[Long](2)
+      SipHash.hash128IntInto(cfg.k0, cfg.k1, x, h)
+      containsHash128(words, cfg, h(0), h(1))
+    }
 
   def insertLong(words: Array[Long], cfg: BloomConfig, x: Long): Boolean =
     if (cfg.hash64Enough) insertHash64(words, cfg, SipHash.hashLong(cfg.k0, cfg.k1, x))
-    else { val (hi, lo) = SipHash.hash128Long(cfg.k0, cfg.k1, x); insertHash128(words, cfg, hi, lo) }
+    else {
+      val h = new Array[Long](2)
+      SipHash.hash128LongInto(cfg.k0, cfg.k1, x, h)
+      insertHash128(words, cfg, h(0), h(1))
+    }
 
   def containsLong(words: Array[Long], cfg: BloomConfig, x: Long): Boolean =
     if (cfg.hash64Enough) containsHash64(words, cfg, SipHash.hashLong(cfg.k0, cfg.k1, x))
-    else { val (hi, lo) = SipHash.hash128Long(cfg.k0, cfg.k1, x); containsHash128(words, cfg, hi, lo) }
+    else {
+      val h = new Array[Long](2)
+      SipHash.hash128LongInto(cfg.k0, cfg.k1, x, h)
+      containsHash128(words, cfg, h(0), h(1))
+    }
 
   def insertString(words: Array[Long], cfg: BloomConfig, s: String): Boolean =
     insertUtf8(words, cfg, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -157,11 +174,23 @@ object BlockedBloom {
   /** [[insertString]] over the string's UTF-8 bytes. */
   def insertUtf8(words: Array[Long], cfg: BloomConfig, utf8: Array[Byte]): Boolean =
     if (cfg.hash64Enough) insertHash64(words, cfg, SipHash.hash64(cfg.k0, cfg.k1, utf8))
-    else { val (hi, lo) = SipHash.hash128(cfg.k0, cfg.k1, utf8); insertHash128(words, cfg, hi, lo) }
+    else {
+      val h = new Array[Long](2)
+      SipHash.hash128Into(cfg.k0, cfg.k1, utf8, utf8.length, h)
+      insertHash128(words, cfg, h(0), h(1))
+    }
 
   def containsString(words: Array[Long], cfg: BloomConfig, s: String): Boolean =
-    if (cfg.hash64Enough) containsHash64(words, cfg, SipHash.hashString(cfg.k0, cfg.k1, s))
-    else { val (hi, lo) = SipHash.hash128String(cfg.k0, cfg.k1, s); containsHash128(words, cfg, hi, lo) }
+    containsUtf8(words, cfg, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** [[containsString]] over the string's UTF-8 bytes. */
+  def containsUtf8(words: Array[Long], cfg: BloomConfig, utf8: Array[Byte]): Boolean =
+    if (cfg.hash64Enough) containsHash64(words, cfg, SipHash.hash64(cfg.k0, cfg.k1, utf8))
+    else {
+      val h = new Array[Long](2)
+      SipHash.hash128Into(cfg.k0, cfg.k1, utf8, utf8.length, h)
+      containsHash128(words, cfg, h(0), h(1))
+    }
 
   // --- combining (reference `unionInto`/`intersectionInto`/`combine`,
   //     `Internal.hs:488-550`) ---

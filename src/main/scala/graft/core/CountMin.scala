@@ -63,31 +63,34 @@ object CountMin {
   }
 
   def addInt(buf: Array[Long], cfg: CmsConfig, x: Int, count: Long = 1L): Unit = {
-    val (hi, lo) = SipHash.hash128Int(cfg.k0, cfg.k1, x)
-    addHash(buf, cfg, lo, hi | 1L, count) // h2 forced odd: full-period stride
+    val h = new Array[Long](2)
+    SipHash.hash128IntInto(cfg.k0, cfg.k1, x, h)
+    addHash(buf, cfg, h(1), h(0) | 1L, count) // h2 forced odd: full-period stride
   }
 
   def estimateInt(buf: Array[Long], cfg: CmsConfig, x: Int): Long = {
-    val (hi, lo) = SipHash.hash128Int(cfg.k0, cfg.k1, x)
-    estimateHash(buf, cfg, lo, hi | 1L)
+    val h = new Array[Long](2)
+    SipHash.hash128IntInto(cfg.k0, cfg.k1, x, h)
+    estimateHash(buf, cfg, h(1), h(0) | 1L)
   }
 
+  /** Strings hash as their UTF-8 bytes. */
   def addString(buf: Array[Long], cfg: CmsConfig, s: String, count: Long = 1L): Unit = {
-    val (hi, lo) = SipHash.hash128String(cfg.k0, cfg.k1, s)
-    addHash(buf, cfg, lo, hi | 1L, count)
+    val utf8 = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val h = new Array[Long](2)
+    SipHash.hash128Into(cfg.k0, cfg.k1, utf8, utf8.length, h)
+    addHash(buf, cfg, h(1), h(0) | 1L, count)
   }
 
-  def estimateString(buf: Array[Long], cfg: CmsConfig, s: String): Long = {
-    val (hi, lo) = SipHash.hash128String(cfg.k0, cfg.k1, s)
-    estimateHash(buf, cfg, lo, hi | 1L)
-  }
+  def estimateString(buf: Array[Long], cfg: CmsConfig, s: String): Long =
+    estimateBytes(buf, cfg, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Estimate from raw UTF-8 bytes — same hash as [[estimateString]]
-    * (`hash128String` is `hash128` over UTF-8 bytes), lets codegen callers
-    * probe a `UTF8String` without materializing a `java.lang.String`. */
+  /** [[estimateString]] over raw UTF-8 bytes — lets codegen callers probe a
+    * `UTF8String` without materializing a `java.lang.String`. */
   def estimateBytes(buf: Array[Long], cfg: CmsConfig, utf8: Array[Byte]): Long = {
-    val (hi, lo) = SipHash.hash128(cfg.k0, cfg.k1, utf8)
-    estimateHash(buf, cfg, lo, hi | 1L)
+    val h = new Array[Long](2)
+    SipHash.hash128Into(cfg.k0, cfg.k1, utf8, utf8.length, h)
+    estimateHash(buf, cfg, h(1), h(0) | 1L)
   }
 
   /** Total inserted weight N. */

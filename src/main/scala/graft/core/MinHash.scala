@@ -54,9 +54,11 @@ object MinHash {
   /** Signature of a set of word shingles (n-grams joined with U+0000). */
   def signature(k0: Long, k1: Long, shingles: Iterator[String], h: Int): Array[Long] = {
     val sig = emptySignature(h)
+    val out = new Array[Long](2)
     while (shingles.hasNext) {
-      val (hi, lo) = SipHash.hash128String(k0, k1, shingles.next())
-      addShingle(sig, lo, hi)
+      val utf8 = shingles.next().getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      SipHash.hash128Into(k0, k1, utf8, utf8.length, out)
+      addShingle(sig, out(1), out(0))
     }
     sig
   }
@@ -65,13 +67,12 @@ object MinHash {
     * to `signature(k0, k1, wordShingles(words, n), h)` but allocation-light
     * (the optimization-round hot-kernel rule): each word's UTF-8 bytes are
     * materialized ONCE, every shingle is assembled into one reusable
-    * scratch buffer and hashed with the tuple-free [[SipHash.hash128Into]].
+    * scratch buffer and hashed in place with [[SipHash.hash128Into]].
     * Byte-identity with the string path holds because U+0000 (the shingle
     * joiner) encodes as the single byte 0x00 in standard UTF-8, so the
     * joined string's UTF-8 bytes ARE word bytes + 0x00 separators. The
-    * tuple-per-shingle + string-per-shingle + bytes-per-shingle churn of
-    * the iterator path was the LSH bench phase's dominant allocation
-    * (1M docs x 28 shingles x 3 allocations per lap). */
+    * string-per-shingle + bytes-per-shingle churn of the iterator path was
+    * the LSH bench phase's dominant allocation. */
   def signatureOfWords(k0: Long, k1: Long, words: Array[String], n: Int, h: Int): Array[Long] = {
     val sig = emptySignature(h)
     if (words.length == 0) return sig

@@ -13,8 +13,12 @@ package graft.core
   * behavior equivalence does not require bit-identical hashes, only a keyed,
   * uniform, deterministic 64/128-bit function.
   *
-  * All methods are pure and allocation-free for inputs ≤ 16 bytes (the
-  * Int/Long hot paths used per token insert).
+  * One permutation ([[sip]]) serves every entry point through two message
+  * front-ends: inputs of ≤ 16 bytes packed as words (`hashInt`, `hashLong`,
+  * `hash128IntInto`, `hash128LongInto`: allocation-free, the per-token path
+  * of every build) and a byte range (`hash64`, `hash64Range`, `hashString`,
+  * `hash128Into`). 128-bit results are written as `(hi, lo)` into
+  * `out(0)`, `out(1)`: `lo` is the first output word, `hi` the second.
   */
 object SipHash {
 
@@ -31,16 +35,94 @@ object SipHash {
       ((d(i + 6) & 0xffL) << 48) |
       ((d(i + 7) & 0xffL) << 56)
 
-  /** Final partial block: remaining `n % 8` bytes plus `(n & 0xff) << 56`. */
-  private def tailBlock(d: Array[Byte], from: Int, n: Int): Long = {
-    var b = (n.toLong & 0xff) << 56
-    var j = n - from
-    while (j > 0) {
-      j -= 1
-      b |= (d(from + j) & 0xffL) << (8 * j)
+  /** Final block of a `len`-byte message: its last `len % 8` bytes plus
+    * `(len & 0xff) << 56`. */
+  private def tailBlock(d: Array[Byte], len: Int): Long = {
+    var b = len.toLong << 56
+    var i = len
+    while (i > (len & ~7)) {
+      i -= 1
+      b |= (d(i) & 0xffL) << (8 * (i & 7))
     }
     b
   }
+
+  /** Final block of the canonical 4-byte encoding of an Int. */
+  @inline private def intBlock(x: Int): Long = (4L << 56) | (x.toLong & 0xffffffffL)
+
+  /** SipHash-2-4 over `nWords` full message words, then the final block
+    * `b`. The words are read from `data`, or, when `data` is null (a packed
+    * input of ≤ 16 bytes, so `nWords` ≤ 1), are the one word `m0`.
+    *
+    * With `out == null` this is the 64-bit hash, returned. Otherwise it is
+    * the 128-bit variant, written as `(hi, lo)` into `out(0)`, `out(1)`; it
+    * differs only in `v1 ^= 0xee` at init, `v2 ^= 0xee` (not `0xff`) at
+    * finalization, and a second output word after `v1 ^= 0xdd` and 4 more
+    * rounds.
+    *
+    * The final block is compressed outside the word loop, and the 64-bit
+    * result returns before the 128-bit tail: folding either into the shared
+    * loop or a width branch made the packed per-token path 5-20% slower
+    * (JDK 17, 4-vCPU x86-64 VM).
+    */
+  private def sip(k0: Long, k1: Long, data: Array[Byte], nWords: Int, m0: Long, b: Long,
+      out: Array[Long]): Long = {
+    var v0 = k0 ^ 0x736f6d6570736575L
+    var v1 = k1 ^ 0x646f72616e646f6dL
+    var v2 = k0 ^ 0x6c7967656e657261L
+    var v3 = k1 ^ 0x7465646279746573L
+    if (out ne null) v1 ^= 0xee
+    var w = 0
+    while (w < nWords) {
+      val m = if (data eq null) m0 else le64(data, w << 3)
+      v3 ^= m
+      var r = 0
+      while (r < 2) {
+        v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
+        v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
+        v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
+        v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
+        r += 1
+      }
+      v0 ^= m
+      w += 1
+    }
+    v3 ^= b
+    var r = 0
+    while (r < 2) {
+      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
+      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
+      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
+      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
+      r += 1
+    }
+    v0 ^= b
+    v2 ^= (if (out eq null) 0xffL else 0xeeL)
+    r = 0
+    while (r < 4) {
+      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
+      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
+      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
+      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
+      r += 1
+    }
+    val first = v0 ^ v1 ^ v2 ^ v3
+    if (out eq null) return first
+    out(1) = first
+    v1 ^= 0xdd
+    r = 0
+    while (r < 4) {
+      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
+      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
+      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
+      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
+      r += 1
+    }
+    out(0) = v0 ^ v1 ^ v2 ^ v3
+    first
+  }
+
+  // --- 64-bit output ---
 
   /** SipHash-2-4 over raw bytes, 64-bit output. */
   def hash64(k0: Long, k1: Long, data: Array[Byte]): Long =
@@ -49,365 +131,32 @@ object SipHash {
   /** [[hash64]] over the first `len` bytes of `data` — lets callers hash
     * out of a reusable scratch buffer without per-call array slicing
     * (value-identical to `hash64(k0, k1, data.take(len))`). */
-  def hash64Range(k0: Long, k1: Long, data: Array[Byte], len: Int): Long = {
-    var v0 = k0 ^ 0x736f6d6570736575L
-    var v1 = k1 ^ 0x646f72616e646f6dL
-    var v2 = k0 ^ 0x6c7967656e657261L
-    var v3 = k1 ^ 0x7465646279746573L
-    val n = len
-    val end = n - (n % 8)
-    var i = 0
-    while (i < end) {
-      val m = le64(data, i)
-      v3 ^= m
-      var r = 0
-      while (r < 2) { // SIPROUND x2
-        v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-        v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-        v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-        v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-        r += 1
-      }
-      v0 ^= m
-      i += 8
-    }
-    val b = tailBlock(data, end, n)
-    v3 ^= b
-    var r = 0
-    while (r < 2) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^= b
-    v2 ^= 0xff
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^ v1 ^ v2 ^ v3
-  }
-
-  /** Allocation-free SipHash-2-4 for inputs of ≤ 16 bytes packed as two
-    * little-endian message words. `nBlocks` ∈ {0, 1}: number of full 8-byte
-    * blocks (`m0`); `b` is the final block (tail bytes | length << 56).
-    */
-  private def hash64Short(k0: Long, k1: Long, m0: Long, nBlocks: Int, b: Long): Long = {
-    var v0 = k0 ^ 0x736f6d6570736575L
-    var v1 = k1 ^ 0x646f72616e646f6dL
-    var v2 = k0 ^ 0x6c7967656e657261L
-    var v3 = k1 ^ 0x7465646279746573L
-    if (nBlocks == 1) {
-      v3 ^= m0
-      var r = 0
-      while (r < 2) {
-        v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-        v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-        v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-        v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-        r += 1
-      }
-      v0 ^= m0
-    }
-    v3 ^= b
-    var r = 0
-    while (r < 2) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^= b
-    v2 ^= 0xff
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^ v1 ^ v2 ^ v3
-  }
+  def hash64Range(k0: Long, k1: Long, data: Array[Byte], len: Int): Long =
+    sip(k0, k1, data, len >>> 3, 0L, tailBlock(data, len), null)
 
   /** Hash an Int via its canonical 4-byte little-endian encoding. */
-  def hashInt(k0: Long, k1: Long, x: Int): Long =
-    hash64Short(k0, k1, 0L, 0, (4L << 56) | (x.toLong & 0xffffffffL))
+  def hashInt(k0: Long, k1: Long, x: Int): Long = sip(k0, k1, null, 0, 0L, intBlock(x), null)
 
   /** Hash a Long via its canonical 8-byte little-endian encoding. */
-  def hashLong(k0: Long, k1: Long, x: Long): Long =
-    hash64Short(k0, k1, x, 1, 8L << 56)
+  def hashLong(k0: Long, k1: Long, x: Long): Long = sip(k0, k1, null, 1, x, 8L << 56, null)
 
   /** Hash a String via its UTF-8 bytes. */
   def hashString(k0: Long, k1: Long, s: String): Long =
     hash64(k0, k1, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  // ---------------------------------------------------------------------
-  // 128-bit variant (SipHash-2-4-128): v1 ^= 0xee at init, v2 ^= 0xee at
-  // finalization; second output word after v1 ^= 0xdd and 4 more rounds.
-  // ---------------------------------------------------------------------
+  // --- 128-bit output, written as (hi, lo) into out(0), out(1) ---
 
-  /** SipHash-2-4 with 128-bit output over raw bytes.
-    * Returns `(hi, lo)`: `lo` is the first output word, `hi` the second.
-    */
-  def hash128(k0: Long, k1: Long, data: Array[Byte]): (Long, Long) = {
-    var v0 = k0 ^ 0x736f6d6570736575L
-    var v1 = k1 ^ 0x646f72616e646f6dL ^ 0xee
-    var v2 = k0 ^ 0x6c7967656e657261L
-    var v3 = k1 ^ 0x7465646279746573L
-    val n = data.length
-    val end = n - (n % 8)
-    var i = 0
-    while (i < end) {
-      val m = le64(data, i)
-      v3 ^= m
-      var r = 0
-      while (r < 2) {
-        v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-        v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-        v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-        v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-        r += 1
-      }
-      v0 ^= m
-      i += 8
-    }
-    val b = tailBlock(data, end, n)
-    v3 ^= b
-    var r = 0
-    while (r < 2) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^= b
-    v2 ^= 0xee
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    val lo = v0 ^ v1 ^ v2 ^ v3
-    v1 ^= 0xdd
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    val hi = v0 ^ v1 ^ v2 ^ v3
-    (hi, lo)
-  }
-
-  /** [[hash128]] over the first `len` bytes of `data`, writing (hi, lo)
-    * into `out(0)`, `out(1)` — the allocation-free bulk variant (no Tuple2
-    * per call, no per-call array slice; value-identical to
-    * `hash128(k0, k1, data.take(len))`). The MinHash shingle loop calls
-    * this 10^8+ times per bench lap, where the tuple-returning form's
-    * allocation was pure GC pressure. */
-  def hash128Into(k0: Long, k1: Long, data: Array[Byte], len: Int, out: Array[Long]): Unit = {
-    var v0 = k0 ^ 0x736f6d6570736575L
-    var v1 = k1 ^ 0x646f72616e646f6dL ^ 0xee
-    var v2 = k0 ^ 0x6c7967656e657261L
-    var v3 = k1 ^ 0x7465646279746573L
-    val n = len
-    val end = n - (n % 8)
-    var i = 0
-    while (i < end) {
-      val m = le64(data, i)
-      v3 ^= m
-      var r = 0
-      while (r < 2) {
-        v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-        v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-        v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-        v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-        r += 1
-      }
-      v0 ^= m
-      i += 8
-    }
-    val b = tailBlock(data, end, n)
-    v3 ^= b
-    var r = 0
-    while (r < 2) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^= b
-    v2 ^= 0xee
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    out(1) = v0 ^ v1 ^ v2 ^ v3 // lo
-    v1 ^= 0xdd
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    out(0) = v0 ^ v1 ^ v2 ^ v3 // hi
-  }
+  /** SipHash-2-4-128 over the first `len` bytes of `data` (strings as their
+    * UTF-8 bytes); no per-call slice or result allocation, so scratch-buffer
+    * loops such as the MinHash shingles stay allocation-free. */
+  def hash128Into(k0: Long, k1: Long, data: Array[Byte], len: Int, out: Array[Long]): Unit =
+    sip(k0, k1, data, len >>> 3, 0L, tailBlock(data, len), out)
 
   /** 128-bit hash of an Int (canonical 4-byte LE encoding). */
-  def hash128Int(k0: Long, k1: Long, x: Int): (Long, Long) =
-    hash128Short(k0, k1, 0L, 0, (4L << 56) | (x.toLong & 0xffffffffL))
-
-  /** Allocation-free variant of [[hash128Int]]: writes (hi, lo) into
-    * `out(0)`, `out(1)`. The tuple-returning form allocates per call
-    * (hash128Short is too large for the JIT to inline, so escape analysis
-    * cannot elide the Tuple2) — at 10^9 tokens that is 10^9 allocations in
-    * the hot aggregation loop. */
   def hash128IntInto(k0: Long, k1: Long, x: Int, out: Array[Long]): Unit =
-    hash128ShortInto(k0, k1, 0L, 0, (4L << 56) | (x.toLong & 0xffffffffL), out)
-
-  private def hash128ShortInto(k0: Long, k1: Long, m0: Long, nBlocks: Int, b: Long, out: Array[Long]): Unit = {
-    var v0 = k0 ^ 0x736f6d6570736575L
-    var v1 = k1 ^ 0x646f72616e646f6dL ^ 0xee
-    var v2 = k0 ^ 0x6c7967656e657261L
-    var v3 = k1 ^ 0x7465646279746573L
-    if (nBlocks == 1) {
-      v3 ^= m0
-      var r = 0
-      while (r < 2) {
-        v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-        v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-        v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-        v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-        r += 1
-      }
-      v0 ^= m0
-    }
-    v3 ^= b
-    var r = 0
-    while (r < 2) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^= b
-    v2 ^= 0xee
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    out(1) = v0 ^ v1 ^ v2 ^ v3 // lo
-    v1 ^= 0xdd
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    out(0) = v0 ^ v1 ^ v2 ^ v3 // hi
-  }
+    sip(k0, k1, null, 0, 0L, intBlock(x), out)
 
   /** 128-bit hash of a Long (canonical 8-byte LE encoding). */
-  def hash128Long(k0: Long, k1: Long, x: Long): (Long, Long) =
-    hash128Short(k0, k1, x, 1, 8L << 56)
-
-  /** 128-bit hash of a String (UTF-8 bytes). */
-  def hash128String(k0: Long, k1: Long, s: String): (Long, Long) =
-    hash128(k0, k1, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def hash128Short(k0: Long, k1: Long, m0: Long, nBlocks: Int, b: Long): (Long, Long) = {
-    var v0 = k0 ^ 0x736f6d6570736575L
-    var v1 = k1 ^ 0x646f72616e646f6dL ^ 0xee
-    var v2 = k0 ^ 0x6c7967656e657261L
-    var v3 = k1 ^ 0x7465646279746573L
-    if (nBlocks == 1) {
-      v3 ^= m0
-      var r = 0
-      while (r < 2) {
-        v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-        v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-        v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-        v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-        r += 1
-      }
-      v0 ^= m0
-    }
-    v3 ^= b
-    var r = 0
-    while (r < 2) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    v0 ^= b
-    v2 ^= 0xee
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    val lo = v0 ^ v1 ^ v2 ^ v3
-    v1 ^= 0xdd
-    r = 0
-    while (r < 4) {
-      v0 += v1; v1 = rotl(v1, 13); v1 ^= v0; v0 = rotl(v0, 32)
-      v2 += v3; v3 = rotl(v3, 16); v3 ^= v2
-      v0 += v3; v3 = rotl(v3, 21); v3 ^= v0
-      v2 += v1; v1 = rotl(v1, 17); v1 ^= v2; v2 = rotl(v2, 32)
-      r += 1
-    }
-    val hi = v0 ^ v1 ^ v2 ^ v3
-    (hi, lo)
-  }
-
-  // ---------------------------------------------------------------------
-  // Canonical byte encodings (cross-engine stable; used for golden tests
-  // and for hashing composite values).
-  // ---------------------------------------------------------------------
-
-  def encodeInt(x: Int): Array[Byte] = {
-    val a = new Array[Byte](4)
-    a(0) = x.toByte; a(1) = (x >>> 8).toByte; a(2) = (x >>> 16).toByte; a(3) = (x >>> 24).toByte
-    a
-  }
-
-  def encodeLong(x: Long): Array[Byte] = {
-    val a = new Array[Byte](8)
-    var i = 0
-    while (i < 8) { a(i) = (x >>> (8 * i)).toByte; i += 1 }
-    a
-  }
+  def hash128LongInto(k0: Long, k1: Long, x: Long, out: Array[Long]): Unit =
+    sip(k0, k1, null, 1, x, 8L << 56, out)
 }

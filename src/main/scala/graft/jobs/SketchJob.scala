@@ -73,7 +73,7 @@ object SketchJob {
   private def bucketCol(k0: Long, k1: Long, buckets: Int) =
     (shiftrightunsigned(
       graft.plans.GraftFunctions.sipHash64(coalesce(col("doc_id"), lit("")), k0, k1), 1)
-      % buckets).cast("int")
+      % buckets).cast(IntegerType)
 
   /** The checkpoint's parquet schema, one row per (bucket, source): every
     * increment writes it and every reader reads with it, so no read infers
@@ -165,7 +165,7 @@ object SketchJob {
       .agg(
         fused.as("f"),
         count(lit(1)).as("n_rows"),
-        sum(col("n_tok")).cast("long").as("n_tokens"))
+        sum(col("n_tok")).cast(LongType).as("n_tokens"))
       .select(col("bucket"), col("source"), col("f.bloom").as("bloom"), col("f.hll").as("hll"),
         col("f.cms").as("cms"), col("n_rows"), col("n_tokens"),
         lit(t0).as("committed_at_ms"), lit(java.net.InetAddress.getLocalHost.getHostName).as("build_host"))
@@ -192,7 +192,7 @@ object SketchJob {
         sum(col("n_tokens")).as("n_tokens"),
         // == countDistinct for the non-null int bucket, but a plain
         // aggregate: one exchange instead of countDistinct's two
-        size(collect_set(col("bucket"))).cast("long").as("n_buckets"))
+        size(collect_set(col("bucket"))).cast(LongType).as("n_buckets"))
   }
 
   /** Per-bucket lineage view (what resumed, when, how much). */

@@ -208,8 +208,8 @@ object TextPipeline {
       if (text == null) MinHash.emptySignature(numHashes)
       else {
         val words = text.split(' ').filter(_.nonEmpty)
-        // allocation-light kernel (scratch-buffer shingles + tuple-free
-        // 128-bit hash) — value-identical to the iterator/string path,
+        // allocation-light kernel (scratch-buffer shingles hashed in
+        // place) — value-identical to the iterator/string path,
         // asserted by PipelineSpec; see MinHash.signatureOfWords
         MinHash.signatureOfWords(K0, K1, words, shingleN, numHashes)
       }

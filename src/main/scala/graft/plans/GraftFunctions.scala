@@ -22,13 +22,7 @@ final class LoadedBloomFilter(val cfg: BloomConfig, val words: Array[Long], val 
     extends Serializable {
   def containsInt(x: Int): Boolean = BlockedBloom.containsInt(words, cfg, x)
   def containsLong(x: Long): Boolean = BlockedBloom.containsLong(words, cfg, x)
-  def containsUTF8(s: UTF8String): Boolean =
-    if (cfg.hash64Enough)
-      BlockedBloom.containsHash64(words, cfg, SipHash.hash64(cfg.k0, cfg.k1, s.getBytes))
-    else {
-      val (hi, lo) = SipHash.hash128(cfg.k0, cfg.k1, s.getBytes)
-      BlockedBloom.containsHash128(words, cfg, hi, lo)
-    }
+  def containsUTF8(s: UTF8String): Boolean = BlockedBloom.containsUtf8(words, cfg, s.getBytes)
 
   /** Membership of a Catalyst int, bigint or string value. */
   def contains(v: Any): Boolean = v match {

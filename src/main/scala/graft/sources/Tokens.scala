@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,15 +27,22 @@ object Tokens {
 
   final case class TokenRow(doc_id: String, tokens: Array[Int], n_tok: Int, source: String)
 
-  // cache the vocab MAP per sfDir (plain data — session-independent, no
-  // stopped-session DataFrames pinned, no identityHashCode reuse hazard);
-  // the DataFrame itself is cheap to rebuild from it
-  private val vocabCache = scala.collection.concurrent.TrieMap.empty[String, Map[String, Int]]
+  // cache the vocab MAP per version of the documents file: its path plus
+  // its data files' total length and latest modification time, so a file
+  // rewritten under the same path is read again (plain data —
+  // session-independent, no stopped-session DataFrames pinned, no
+  // identityHashCode reuse hazard); the DataFrame is cheap to rebuild from it
+  private val vocabCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), Map[String, Int]]
 
   def table(spark: SparkSession, sfDir: String): DataFrame = build(spark, sfDir)
 
-  private def vocabOf(spark: SparkSession, sfDir: String): Map[String, Int] =
-    vocabCache.getOrElseUpdate(sfDir, {
+  private def vocabOf(spark: SparkSession, sfDir: String): Map[String, Int] = {
+    val docs = new Path(s"$sfDir/documents.parquet")
+    val files = docs.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(docs)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    val version = (sfDir, files.map(_.getLen).sum, files.map(_.getModificationTime).maxOption.getOrElse(0L))
+    vocabCache.getOrElseUpdate(version, {
       spark.read.parquet(s"$sfDir/documents.parquet")
         .select(explode(split(col("text"), " ")).as("w"))
         .where(col("w") =!= "")
@@ -44,6 +52,7 @@ object Tokens {
         .map(_.getString(0))
         .zipWithIndex.map { case (w, i) => (w, i + 1) }.toMap
     })
+  }
 
   private def build(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

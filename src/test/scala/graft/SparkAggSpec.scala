@@ -627,6 +627,25 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(schema.fieldNames.toSeq === Seq("doc_id", "tokens", "n_tok", "source"))
   }
 
+  test("tokens fixture: a documents file rewritten under the same path is tokenized with its new words") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tokens-fixture").toString
+    def write(texts: String*): Unit = texts.zipWithIndex.map { case (t, i) => (s"d$i", t, "s") }
+      .toDF("doc_id", "text", "source").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def tokens(): Map[String, Seq[Int]] = Tokens.table(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
+    try {
+      write("alpha beta", "beta gamma")
+      assert(tokens() === Map("d0" -> Seq(1, 2), "d1" -> Seq(2, 3)))
+      write("alpha beta", "beta zeta")
+      assert(tokens() === Map("d0" -> Seq(1, 2), "d1" -> Seq(2, 3)), "zeta takes the id gamma had")
+      write("alpha beta delta", "beta zeta")
+      // delta sorts between beta and zeta: every id after beta moves
+      assert(tokens() === Map("d0" -> Seq(1, 2, 3), "d1" -> Seq(2, 4)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   /** Every `graft_*` SQL aggregate call, over the `agg_names` view. */
   private val sqlAggregateCalls = Seq(
     "graft_bloom_tokens(tokens)", "graft_bloom_tokens_newcount(tokens)",

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * kernels: [[MinHash.signatureOfWords]] and [[MinHash.shingleHashes64]]
   * must be VALUE-IDENTICAL to the iterator/string-building paths they
   * replace ([[MinHash.signature]] over [[MinHash.wordShingles]] and the
-  * per-shingle `SipHash.hashString` map) — the scratch-buffer assembly and
-  * the tuple-free [[SipHash.hash128Into]] are pure strength reductions. */
+  * per-shingle `SipHash.hashString` map) — the scratch-buffer assembly is
+  * a pure strength reduction. */
 class MinHashKernelSpec extends AnyFunSuite {
 
   private val k0 = 0x0706050403020100L
@@ -56,8 +56,9 @@ class MinHashKernelSpec extends AnyFunSuite {
       val data = Array.fill(len + 11)(rnd.nextInt().toByte) // trailing garbage past len
       val prefix = data.take(len)
       SipHash.hash128Into(k0, k1, data, len, out)
-      val (hi, lo) = SipHash.hash128(k0, k1, prefix)
-      assert(out(0) == hi && out(1) == lo, s"hash128 len=$len")
+      val whole = new Array[Long](2)
+      SipHash.hash128Into(k0, k1, prefix, prefix.length, whole)
+      assert(out.sameElements(whole), s"hash128 len=$len")
       assert(SipHash.hash64Range(k0, k1, data, len) == SipHash.hash64(k0, k1, prefix),
         s"hash64 len=$len")
     }

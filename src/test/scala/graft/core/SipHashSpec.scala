@@ -1,5 +1,7 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SipHash-2-4 correctness against the published reference test vectors
@@ -7,8 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * key = 00 01 .. 0f, messages = [], [00], [00 01], ...), plus canonical
   * encoding consistency. Hash stability across JVMs is the correctness
   * anchor for every distributed sketch (SURVEY.md §7 "Hard parts").
+  *
+  * Every public entry point is also compared, on random keys and inputs,
+  * with [[SipHashSpec.Reference]]: a plain byte-at-a-time SipHash-2-4 that
+  * shares no code with `SipHash`.
   */
 class SipHashSpec extends AnyFunSuite {
+  import SipHashSpec._
 
   // key bytes 000102...0f little-endian
   val k0 = 0x0706050403020100L
@@ -36,9 +43,9 @@ class SipHashSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(42)
     for (_ <- 0 until 2000) {
       val x = rnd.nextInt()
-      assert(SipHash.hashInt(k0, k1, x) === SipHash.hash64(k0, k1, SipHash.encodeInt(x)))
+      assert(SipHash.hashInt(k0, k1, x) === SipHash.hash64(k0, k1, encodeInt(x)))
       val y = rnd.nextLong()
-      assert(SipHash.hashLong(k0, k1, y) === SipHash.hash64(k0, k1, SipHash.encodeLong(y)))
+      assert(SipHash.hashLong(k0, k1, y) === SipHash.hash64(k0, k1, encodeLong(y)))
     }
   }
 
@@ -58,37 +65,34 @@ class SipHashSpec extends AnyFunSuite {
     "a1f1ebbed8dbc153c0b84aa61ff08239"
   )
 
+  private def le64(hex: String): Long =
+    java.lang.Long.reverseBytes(java.lang.Long.parseUnsignedLong(hex, 16))
+
   test("matches the published SipHash-2-4 128-bit test vectors") {
-    def le64(hex: String): Long =
-      java.lang.Long.reverseBytes(java.lang.Long.parseUnsignedLong(hex, 16))
+    val out = new Array[Long](2)
     for (len <- expected128.indices) {
       val msg = Array.tabulate[Byte](len)(_.toByte)
-      val (hi, lo) = SipHash.hash128(k0, k1, msg)
-      assert(lo === le64(expected128(len).substring(0, 16)),
+      SipHash.hash128Into(k0, k1, msg, len, out)
+      assert(out(1) === le64(expected128(len).substring(0, 16)),
         s"128-bit lo-half mismatch at message length $len")
-      assert(hi === le64(expected128(len).substring(16)),
+      assert(out(0) === le64(expected128(len).substring(16)),
         s"128-bit hi-half mismatch at message length $len")
     }
   }
 
   test("hash128 short-input fast paths agree with the byte-array path") {
     val rnd = new scala.util.Random(43)
+    val fast = new Array[Long](2)
+    val bytes = new Array[Long](2)
     for (_ <- 0 until 2000) {
       val x = rnd.nextInt()
-      assert(SipHash.hash128Int(k0, k1, x) === SipHash.hash128(k0, k1, SipHash.encodeInt(x)))
+      SipHash.hash128IntInto(k0, k1, x, fast)
+      SipHash.hash128Into(k0, k1, encodeInt(x), 4, bytes)
+      assert(fast.sameElements(bytes), s"int $x")
       val y = rnd.nextLong()
-      assert(SipHash.hash128Long(k0, k1, y) === SipHash.hash128(k0, k1, SipHash.encodeLong(y)))
-    }
-  }
-
-  test("hash128IntInto agrees with the tuple-returning hash128Int") {
-    val rnd = new scala.util.Random(45)
-    val out = new Array[Long](2)
-    for (_ <- 0 until 2000) {
-      val x = rnd.nextInt()
-      val (hi, lo) = SipHash.hash128Int(k0, k1, x)
-      SipHash.hash128IntInto(k0, k1, x, out)
-      assert(out(0) === hi && out(1) === lo)
+      SipHash.hash128LongInto(k0, k1, y, fast)
+      SipHash.hash128Into(k0, k1, encodeLong(y), 8, bytes)
+      assert(fast.sameElements(bytes), s"long $y")
     }
   }
 
@@ -116,10 +120,13 @@ class SipHashSpec extends AnyFunSuite {
   }
 
   test("128-bit output: halves are distinct and deterministic") {
-    val (hi1, lo1) = SipHash.hash128String(k0, k1, "graft")
-    val (hi2, lo2) = SipHash.hash128String(k0, k1, "graft")
-    assert(hi1 === hi2 && lo1 === lo2)
-    assert(hi1 !== lo1)
+    val a = new Array[Long](2)
+    val b = new Array[Long](2)
+    val msg = "graft".getBytes(UTF_8)
+    SipHash.hash128Into(k0, k1, msg, msg.length, a)
+    SipHash.hash128Into(k0, k1, msg, msg.length, b)
+    assert(a.sameElements(b))
+    assert(a(0) !== a(1))
   }
 
   test("uniformity smoke: bit balance of hashInt over sequential ints") {
@@ -132,6 +139,109 @@ class SipHashSpec extends AnyFunSuite {
     }
     counts.zipWithIndex.foreach { case (c, b) =>
       assert(math.abs(c.toDouble / n - 0.5) < 0.02, s"bit $b unbalanced: $c/$n")
+    }
+  }
+
+  test("the byte-at-a-time reference matches the published 64- and 128-bit vectors") {
+    for (len <- expected64.indices) {
+      val msg = Array.tabulate[Byte](len)(_.toByte)
+      assert(Reference.hash(k0, k1, msg, wide = false).toSeq === Seq(expected64(len)), s"len $len")
+    }
+    for (len <- expected128.indices) {
+      val msg = Array.tabulate[Byte](len)(_.toByte)
+      val hex = expected128(len)
+      assert(Reference.hash(k0, k1, msg, wide = true).toSeq ===
+        Seq(le64(hex.substring(0, 16)), le64(hex.substring(16))), s"len $len")
+    }
+  }
+
+  test("byte-range entry points match the reference at both widths, lengths 0..64") {
+    val rnd = new scala.util.Random(46)
+    val out = new Array[Long](2)
+    for (len <- 0 to 64; _ <- 0 until 20) {
+      val (a, b) = (rnd.nextLong(), rnd.nextLong())
+      val data = Array.fill(len + rnd.nextInt(12))(rnd.nextInt().toByte) // bytes past len are ignored
+      val msg = data.take(len)
+      val Array(ref64) = Reference.hash(a, b, msg, wide = false)
+      val Array(lo, hi) = Reference.hash(a, b, msg, wide = true)
+      assert(SipHash.hash64(a, b, msg) === ref64, s"hash64 len=$len")
+      assert(SipHash.hash64Range(a, b, data, len) === ref64, s"hash64Range len=$len of ${data.length}")
+      SipHash.hash128Into(a, b, data, len, out)
+      assert(out(0) === hi && out(1) === lo, s"hash128Into len=$len of ${data.length}")
+    }
+  }
+
+  test("packed-word entry points match the reference at both widths") {
+    val rnd = new scala.util.Random(47)
+    val out = new Array[Long](2)
+    for (_ <- 0 until 2000) {
+      val (a, b) = (rnd.nextLong(), rnd.nextLong())
+      val x = rnd.nextInt()
+      assert(SipHash.hashInt(a, b, x) === Reference.hash(a, b, encodeInt(x), wide = false)(0), s"int $x")
+      SipHash.hash128IntInto(a, b, x, out)
+      assert(out.toSeq === Reference.hash(a, b, encodeInt(x), wide = true).reverse.toSeq, s"int128 $x")
+      val y = rnd.nextLong()
+      assert(SipHash.hashLong(a, b, y) === Reference.hash(a, b, encodeLong(y), wide = false)(0), s"long $y")
+      SipHash.hash128LongInto(a, b, y, out)
+      assert(out.toSeq === Reference.hash(a, b, encodeLong(y), wide = true).reverse.toSeq, s"long128 $y")
+    }
+  }
+
+  test("hashString and the 128-bit string path match the reference over UTF-8") {
+    val rnd = new scala.util.Random(48)
+    val alphabet = "ab\u0000é日😀"
+    val out = new Array[Long](2)
+    for (_ <- 0 until 500) {
+      val (a, b) = (rnd.nextLong(), rnd.nextLong())
+      val s = Seq.fill(rnd.nextInt(24))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      val utf8 = s.getBytes(UTF_8)
+      assert(SipHash.hashString(a, b, s) === Reference.hash(a, b, utf8, wide = false)(0), s)
+      SipHash.hash128Into(a, b, utf8, utf8.length, out)
+      assert(out.toSeq === Reference.hash(a, b, utf8, wide = true).reverse.toSeq, s)
+    }
+  }
+}
+
+object SipHashSpec {
+
+  def encodeInt(x: Int): Array[Byte] = Array.tabulate(4)(i => (x >>> (8 * i)).toByte)
+
+  def encodeLong(x: Long): Array[Byte] = Array.tabulate(8)(i => (x >>> (8 * i)).toByte)
+
+  /** SipHash-2-4 (64-bit) and SipHash-2-4-128 written from the paper's
+    * description, one message byte at a time, for checking `SipHash`.
+    * Returns the output words in order: one word, or `(lo, hi)` when `wide`.
+    */
+  object Reference {
+    private def rotl(x: Long, b: Int): Long = java.lang.Long.rotateLeft(x, b)
+
+    private def sipRound(v: Array[Long]): Unit = {
+      v(0) += v(1); v(1) = rotl(v(1), 13); v(1) ^= v(0); v(0) = rotl(v(0), 32)
+      v(2) += v(3); v(3) = rotl(v(3), 16); v(3) ^= v(2)
+      v(0) += v(3); v(3) = rotl(v(3), 21); v(3) ^= v(0)
+      v(2) += v(1); v(1) = rotl(v(1), 17); v(1) ^= v(2); v(2) = rotl(v(2), 32)
+    }
+
+    def hash(k0: Long, k1: Long, msg: Array[Byte], wide: Boolean): Array[Long] = {
+      val v = Array(k0 ^ 0x736f6d6570736575L, k1 ^ 0x646f72616e646f6dL,
+        k0 ^ 0x6c7967656e657261L, k1 ^ 0x7465646279746573L)
+      if (wide) v(1) ^= 0xee
+      def compress(m: Long): Unit = { v(3) ^= m; sipRound(v); sipRound(v); v(0) ^= m }
+      var m = 0L
+      for (i <- msg.indices) {
+        m |= (msg(i) & 0xffL) << (8 * (i % 8))
+        if (i % 8 == 7) { compress(m); m = 0L }
+      }
+      compress(m | (msg.length.toLong << 56))
+      v(2) ^= (if (wide) 0xee else 0xff)
+      for (_ <- 1 to 4) sipRound(v)
+      val first = v(0) ^ v(1) ^ v(2) ^ v(3)
+      if (!wide) Array(first)
+      else {
+        v(1) ^= 0xdd
+        for (_ <- 1 to 4) sipRound(v)
+        Array(first, v(0) ^ v(1) ^ v(2) ^ v(3))
+      }
     }
   }
 }
