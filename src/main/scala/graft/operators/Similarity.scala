@@ -89,10 +89,6 @@ object Similarity {
     * = 1 - theta/pi, so near-parallel vectors collide in some band w.h.p. */
   def srpNearDups(embeddings: DataFrame, idCol: String, embCol: String,
       b: Int = 32, chunks: Int = 4, threshold: Double = 0.9): DataFrame = {
-    require(chunks >= 1 && chunks <= b && b % chunks == 0,
-      s"srpNearDups: chunks ($chunks) must divide b ($b)")
-    val bitsPerChunk = b / chunks
-    require(bitsPerChunk <= 31, s"srpNearDups: bits per chunk ($bitsPerChunk) must fit an Int key")
     // candidates carry ids only (distinct on two longs, not on embedding
     // arrays); embeddings join back afterwards — at scale this keeps the
     // shuffle payload minimal. Banding is the native codegen expression
@@ -102,12 +98,7 @@ object Similarity {
       .select(col(idCol).as("id"),
         posexplode(graft.plans.VectorFunctions.srpBands(col(embCol), b, chunks))
           .as(Seq("band", "key")))
-    val cands = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    val cands = TextPipeline.candidatePairsFromBanded(banded, "id_a", "id_b")
     val e = embeddings.select(col(idCol).as("id"), col(embCol).as("emb"))
     cands
       .join(e.withColumnRenamed("id", "id_a").withColumnRenamed("emb", "emb_a"), "id_a")

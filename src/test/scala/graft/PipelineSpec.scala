@@ -192,6 +192,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"SRP recall ${approx.size}/${exact.size} below 0.9 in the near-dup regime")
   }
 
+  test("SRP-LSH near-dups reject a band count that does not divide b") {
+    import spark.implicits._
+    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f))).toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException](
+      Similarity.srpNearDups(emb, "vec_id", "embedding", b = 32, chunks = 5))
+  }
+
   test("embedding near-dup query: planted twins exactly, LSH set == exact set") {
     // the production query plants a perturbed twin of every fifth vector
     // (100 of 500 at sf0.01); planted pairs land at cos ~0.99837 against a

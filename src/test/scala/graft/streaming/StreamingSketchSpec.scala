@@ -9,6 +9,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{BlockedBloom, BloomConfig, Hll, Keys}
+import graft.operators.SketchKinds.{Cms, HeavyHitters, KmvKind, Sample}
+import graft.plans.NativeAggs.column
 
 /** Streaming ≡ batch: the same Aggregator fed through a MemoryStream in
   * micro-batches must produce sketches byte-identical to a batch build over
@@ -88,7 +90,8 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cms = graft.core.CmsConfig(Keys.DefaultK0, Keys.DefaultK1, 5, 8)
     val stream = MemoryStream[(Timestamp, String, Array[Int])]
     val df = stream.toDF().toDF("ts", "source", "tokens")
-    val out = StreamingSketch.windowedCountMin(df, "ts", "10 minutes", "5 minutes", cms)
+    val out = StreamingSketch.windowed(df, "ts", "10 minutes", window(col("ts"), "5 minutes"))(
+      column(Cms(cms), col("tokens")).as("cms"))
     val query = out.writeStream.outputMode("complete")
       .format("memory").queryName("stream_cms").start()
     try {
@@ -115,8 +118,8 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Timestamp, String, Array[Int])]
     val df = stream.toDF().toDF("ts", "source", "tokens")
-    val out = StreamingSketch.windowedKmv(
-      df, "ts", "10 minutes", "5 minutes", Keys.DefaultK0, Keys.DefaultK1, k = 16)
+    val out = StreamingSketch.windowed(df, "ts", "10 minutes", window(col("ts"), "5 minutes"))(
+      column(KmvKind(Keys.DefaultK0, Keys.DefaultK1, 16), col("tokens")).as("kmv"))
     val query = out.writeStream.outputMode("complete")
       .format("memory").queryName("stream_kmv").start()
     try {
@@ -152,7 +155,10 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Timestamp, String, Array[Int])]
     val df = stream.toDF().toDF("ts", "source", "tokens")
-    val out = StreamingSketch.windowedHeavyHitters(df, "ts", "10 minutes", "5 minutes", capacity = 8)
+    val keyed = df.select(col("ts"), col("source"), explode(col("tokens")).as("token"))
+      .select(col("ts"), col("source"), col("token").cast("long").as("key"))
+    val out = StreamingSketch.windowed(keyed, "ts", "10 minutes", window(col("ts"), "5 minutes"))(
+      column(HeavyHitters(8), col("key")).as("hh"))
     val query = out.writeStream.outputMode("complete")
       .format("memory").queryName("stream_hh").start()
     try {
@@ -184,8 +190,10 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Timestamp, String, Array[Int])]
     val df = stream.toDF().toDF("ts", "source", "tokens")
-    val out = StreamingSketch.windowedSample(
-      df, "ts", "10 minutes", "5 minutes", Keys.DefaultK0, Keys.DefaultK1, k = 8)
+    val exploded = df.select(col("ts"), col("source"), explode(col("tokens")).as("token"))
+    val out = StreamingSketch.windowed(exploded, "ts", "10 minutes", window(col("ts"), "5 minutes"))(
+      column(Sample(Keys.DefaultK0, Keys.DefaultK1, 8, weighted = false), col("token").cast("long"))
+        .as("sample"))
     val query = out.writeStream.outputMode("complete")
       .format("memory").queryName("stream_bk").start()
     try {
@@ -218,8 +226,9 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Timestamp, String, Long, Long)]
     val df = stream.toDF().toDF("ts", "source", "id", "w")
-    val out = StreamingSketch.windowedWeightedSample(
-      df, "ts", "10 minutes", "5 minutes", Keys.DefaultK0, Keys.DefaultK1, k = 4)
+    val out = StreamingSketch.windowed(df, "ts", "10 minutes", window(col("ts"), "5 minutes"))(
+      column(Sample(Keys.DefaultK0, Keys.DefaultK1, 4, weighted = true), col("id"), col("w"))
+        .as("sample"))
     val query = out.writeStream.outputMode("complete")
       .format("memory").queryName("stream_wbk").start()
     try {
@@ -259,8 +268,8 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     // watermark covers the whole out-of-order replay span (as in the
     // complete-mode replays): this test asserts session MERGING, not
     // late-drop — the drop semantics has its own append-mode test above
-    val out = StreamingSketch.sessionKmv(df, "ts", "600 seconds", "60 seconds",
-      Keys.DefaultK0, Keys.DefaultK1, k = 16)
+    val out = StreamingSketch.windowed(df, "ts", "600 seconds", session_window(col("ts"), "60 seconds"))(
+      column(KmvKind(Keys.DefaultK0, Keys.DefaultK1, 16), col("tokens")).as("kmv"))
     val query = out.writeStream.outputMode("append")
       .format("memory").queryName("stream_sess").start()
     try {
@@ -382,6 +391,30 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
     assert(out === expected)
     assert(out.nonEmpty)
+  }
+
+  test("the replay harness collects up to its cap and refuses one row more") {
+    val frame = spark.range(5).toDF("id")
+    assert(StreamingSketch.collectCapped(frame, cap = 5).map(_.getLong(0)).sorted.toSeq === (0L until 5L))
+    intercept[IllegalArgumentException](StreamingSketch.collectCapped(frame, cap = 4))
+  }
+
+  test("a replay whose batch fails restores the shuffle partitions and deletes its checkpoint") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sinkName = "stream_failing_batch"
+    val ckptBase = new java.io.File(graft.ScratchDir.base(), "graft_stream_ckpt")
+    def leftBehind = Option(ckptBase.listFiles()).toSeq.flatten.filter(_.getName.startsWith(sinkName + "_"))
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val stream = MemoryStream[Int]
+    // the first batch succeeds and writes checkpoint state; the second fails
+    val out = stream.toDF().select(
+      when(col("value") > 1, raise_error(lit("boom"))).otherwise(col("value")).as("v"))
+    intercept[Exception](StreamingSketch.replayIntoMemorySink(
+      spark, sinkName, "append", out, stream, Seq(Seq(1), Seq(2))))
+    assert(spark.table(sinkName).count() === 1L, "the first batch must have run")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+    assert(leftBehind.isEmpty, s"checkpoint left behind: ${leftBehind.mkString(", ")}")
   }
 
   test("DeconScorer: bloom short-circuit never changes the exact hit count") {
