@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.core.BottomK.LongValues
 import graft.operators.{Multimodal, Similarity, TextPipeline}
 import graft.operators.SketchKinds.{KmvJaccard, SampleValues}
+import graft.sources.Tokens
 
 /** Training-data pipeline queries (dedup / similarity / text analysis /
   * multimodal) — the beyond-the-reference operator set. Exact-valued ones
@@ -14,7 +16,7 @@ import graft.operators.SketchKinds.{KmvJaccard, SampleValues}
 object PipelineQueries {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tokens.documents(spark, dir)
       .select(col("doc_id").cast("string").as("doc_id"), col("text"), col("lang"), col("source"))
 
   /** Exact dedup via 64-bit content fingerprint: distinct fingerprints per
@@ -80,7 +82,7 @@ object PipelineQueries {
     * The tiny per-source result is materialized before the persisted
     * iteration frames are released (unpersist-in-finally convention). */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
     val pairs = TextPipeline.minHashNearDups(d, "doc_id", "text",
       shingleN = 3, numHashes = 128, bands = 32, threshold = 0.8)
@@ -131,8 +133,7 @@ object PipelineQueries {
         .select(col("source"), col("n_docs"), col("n_dup_docs"),
           col("n_clusters"), col("n_kept"), col("deterministic"))
         .orderBy(col("source"))
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result)
     } finally {
       if (cc != null) cc.unpersist()
       pairs.unpersist()
@@ -209,14 +210,13 @@ object PipelineQueries {
     val flagged = slimSamplingFlags(spark, dir).persist()
     try {
       val result = samplingFrameOn(spark, flagged)
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result)
     } finally flagged.unpersist()
   }
 
   /** The slim (ids + flags, no text) frame both consumers share. */
   private def slimSamplingFlags(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
     TextPipeline.withQualityMetrics(d)
       .withColumn("fp", TextPipeline.fingerprintCol(d, col("text")))
@@ -232,7 +232,7 @@ object PipelineQueries {
   private def samplingFrameOn(spark: SparkSession, flagged: DataFrame): DataFrame = {
     val k = 8
     val sampleW = graft.operators.SketchKinds.Sample(
-      graft.core.Keys.DefaultK0, graft.core.Keys.DefaultK1, k, weighted = true)
+      graft.core.Keys.DefaultK0, graft.core.Keys.DefaultK1, k, weighted = true, LongValues)
     val aggW = (v: Column, w: Column) => graft.plans.NativeAggs.column(sampleW, v, w)
     val stats = flagged.groupBy(col("source")).agg(
       count(lit(1)).as("n_docs"),
@@ -246,7 +246,7 @@ object PipelineQueries {
       // nothing)
       aggW(col("doc_id"), when(col("in_frame"), col("word_count")).otherwise(0L)).as("sk"))
     val withVals = stats.withColumn("vals",
-      SampleValues(weighted = true).column(col("sk")))
+      SampleValues(weighted = true, LongValues).column(col("sk")))
     val nonMembers = withVals
       .select(col("source"), explode(col("vals")).as("doc_id"))
       .join(flagged.where(col("in_frame")).select(col("source"), col("doc_id")),
@@ -279,7 +279,7 @@ object PipelineQueries {
     // orientation (da < db) is numeric like the oracle's — the shared
     // docs() reader casts it to string, where lexicographic '134' < '87'
     // would silently flip pair attribution
-    val base = spark.read.parquet(s"$dir/documents.parquet")
+    val base = Tokens.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
     val fp = TextPipeline.withWinnowFingerprints(base)
       .select(col("doc_id"), col("source"), col("fps")).persist()
@@ -300,8 +300,7 @@ object PipelineQueries {
           coalesce(col("distinct_fps"), lit(0L)).as("distinct_fps"),
           coalesce(col("n_overlap_pairs"), lit(0L)).as("n_overlap_pairs"))
         .orderBy(col("source"))
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result)
     } finally fp.unpersist()
   }
 
@@ -526,8 +525,7 @@ object PipelineQueries {
       val result = sourceOverlapFrame(spark, masks, perSource, sources)
       // materialize the (pairs-sized) matrix before releasing the cache —
       // the dedupClusters convention
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result)
     } finally {
       perSource.unpersist()
       masks.unpersist()
@@ -540,7 +538,7 @@ object PipelineQueries {
     * per-source aggregate below exactly as it fell out of the old
     * distinct-grams frame — the emitted pair matrix is identical. */
   private def overlapSources(spark: SparkSession, dir: String): Array[String] =
-    checkOverlapSourceCount(graft.sources.Tokens.table(spark, dir).select(col("source"))
+    checkOverlapSourceCount(Tokens.table(spark, dir).select(col("source"))
       .distinct().collect().map(_.getString(0)).sorted)
 
   /** Pair keys pack two source bit indices as a*65536 + b (see
@@ -563,7 +561,7 @@ object PipelineQueries {
   private def overlapMasks(spark: SparkSession, dir: String,
       sources: Array[String]): DataFrame = {
     val raw = graft.operators.Decontamination
-      .gramRows(graft.sources.Tokens.table(spark, dir), 4)
+      .gramRows(Tokens.table(spark, dir), 4)
       .select(col("source"), col("gram"))
     val nWords = math.max(1, (sources.length + 63) / 64)
     val idxOf = map(sources.zipWithIndex.flatMap { case (s, i) =>
@@ -722,7 +720,7 @@ object PipelineQueries {
     * cross-multiplication, so every output cell is exact and DuckDB
     * replays the identical prefix scan with a window function. */
   def mixtureSelect(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         size(filter(split(col("text"), " "), w => w =!= "")).cast("long").as("n_tok"))
     operators.MixtureSelection.mixtureReport(d, "n_tok", num = 1L, den = 2L)
@@ -736,7 +734,7 @@ object PipelineQueries {
     * same whitespace tokenization as the token table (injective map makes
     * the counts equal). */
   def seqPacking(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         size(filter(split(col("text"), " "), w => w =!= "")).as("n_tok"))
     operators.SequencePacking.packedSequences(d, capacity = 256, shardDocs = 128)
@@ -755,7 +753,7 @@ object PipelineQueries {
     * aggregation in doc_id order) and hash-matches: one out-of-order or
     * misplaced token breaks the row. */
   def seqPackContent(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
     val withToks = TextPipeline.withWordSymbols(d)
       .select(col("source"), col("doc_id"), col("toks"))
@@ -790,7 +788,7 @@ object PipelineQueries {
     val den = 2L
     // zero-weight docs carry no sampling mass; the weighted frame excludes
     // them (mirrored by the oracle's WHERE)
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         size(filter(split(col("text"), " "), w => w =!= "")).cast("long").as("n_tok"))
       .where(col("n_tok") > 0)
@@ -858,10 +856,10 @@ object PipelineQueries {
     * recomputes all six stages from raw text. */
   def curationFunnel(spark: SparkSession, dir: String,
       evalSource: String = "src0"): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
     val (contamIds, evalGrams) = operators.Decontamination.contaminatedDocIdsLazy(
-      graft.sources.Tokens.table(spark, dir), evalSource, 4, SketchQueries.bloomCfg)
+      Tokens.table(spark, dir), evalSource, 4, SketchQueries.bloomCfg)
     try {
       val flags = TextPipeline.withRepetitionMetrics(TextPipeline.withQualityMetrics(d))
         .withColumn("fp", TextPipeline.fingerprintCol(d, col("text")))
@@ -891,8 +889,7 @@ object PipelineQueries {
           sum(when(col("final"), 1L).otherwise(0L)).as("n_final"),
           sum(when(col("final"), col("word_count")).otherwise(0L)).as("tok_final"))
         .orderBy(col("source"))
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result)
     } finally evalGrams.unpersist()
   }
 
@@ -915,7 +912,7 @@ object PipelineQueries {
     // explode_outer + not-null: one counting-kernel evaluation per doc
     // (plain explode's inferred generate filter re-ran the UDF — the
     // SketchQueries.exploded rule); pair elements are never null
-    val counts = spark.read.parquet(s"$dir/documents.parquet")
+    val counts = Tokens.documents(spark, dir)
       .select(explode_outer(TextPipeline.docTokenCounts(col("text"))).as("kv"))
       .where(col("kv").isNotNull)
       .select(col("kv._1").as("token"), col("kv._2").as("doc_cnt"))
@@ -944,7 +941,7 @@ object PipelineQueries {
     * doc-sized stays the packer's single range exchange. */
   def textToSequences(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
     // persisted: the greedy merge kernel is the dominant per-doc cost and
     // THREE consumers read this frame (the vocab distinct, the id mapping,
@@ -975,8 +972,7 @@ object PipelineQueries {
       // materialize before releasing the cache — the dedupClusters
       // convention (the returned frame must not recompute lazily after
       // unpersist)
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result)
     } finally withBpe.unpersist()
   }
 
@@ -990,7 +986,7 @@ object PipelineQueries {
     * same augmentation — every count and the total redacted length are
     * exact, data-dependent cells. */
   def piiRedact(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tokens.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
     val aug = d.withColumn("text",
       when(col("doc_id") % 10 === 0,

@@ -130,7 +130,7 @@ object SketchQueries {
     * the probe side, then an exact semi-join — exact results regardless of
     * false positives; the Bloom only prunes the shuffle. */
   def bloomPrefilterSemijoin(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tokens.documents(spark, dir)
     val t = Tokens.table(spark, dir)
     val enDocIds = docs.where(col("lang") === "en").select(col("doc_id").cast("string").as("doc_id"))
     // persisted: evaluated once to build the Bloom, reused by the exact
@@ -154,8 +154,7 @@ object SketchQueries {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_shared"))
         .orderBy(col("source"))
-      val rows = result.collect() // bounded: one row per source
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result) // bounded: one row per source
     } finally buildSide.unpersist()
   }
 
@@ -513,8 +512,7 @@ object SketchQueries {
         // quantities are integral doubles; cast BEFORE summing so both engines
         // sum integers exactly (double-accumulation order is not portable)
         .agg(count(lit(1)).as("n_lines"), sum(col("l_quantity").cast("long")).as("sum_qty"))
-      val rows = result.collect() // bounded: exactly one row
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Frames.materialize(result) // bounded: exactly one row
     } finally buildSide.unpersist()
   }
 
@@ -799,9 +797,9 @@ object SketchQueries {
     * <= k-entry summary per (partition, source). */
   def sampleBottomK(spark: SparkSession, dir: String): DataFrame = {
     val k = 32
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tokens.documents(spark, dir)
       .select(col("source"), col("doc_id").cast("long").as("doc_id"))
-    val sample = Sample(K0, K1, k, weighted = false)
+    val sample = Sample(K0, K1, k, weighted = false, BottomK.LongValues)
     val aggU = (c: Column) => NativeAggs.column(sample, c)
     val mergeU = aggU // the kind merges its own serialized partials
     val direct = docs.groupBy(col("source")).agg(aggU(col("doc_id")).as("sk"))
@@ -813,7 +811,7 @@ object SketchQueries {
       .groupBy(col("source")).agg(mergeU(col("partial")).as("sk_merged"))
     val exact = docs.groupBy(col("source")).agg(countDistinct(col("doc_id")).as("nd"))
     val withVals = direct.select(col("source"), col("sk"),
-      SampleValues(weighted = false).column(col("sk")).as("vals"))
+      SampleValues(weighted = false, BottomK.LongValues).column(col("sk")).as("vals"))
     val nonMembers = withVals
       .select(col("source"), explode(col("vals")).as("doc_id"))
       .join(docs, Seq("source", "doc_id"), "left_anti")
@@ -822,7 +820,7 @@ object SketchQueries {
     // schema's doc_id is a string; the sampler must work without a numeric
     // cast (round-4 string-layout variant, gated with its own exact booleans)
     val docsStr = docs.select(col("source"), col("doc_id").cast("string").as("doc_id_str"))
-    val strSample = StringSample(K0, K1, k, weighted = false)
+    val strSample = Sample(K0, K1, k, weighted = false, BottomK.StringValues)
     val strAggU = (c: Column) => NativeAggs.column(strSample, c)
     val strMergeU = strAggU
     val strDirect = docsStr.groupBy(col("source")).agg(strAggU(col("doc_id_str")).as("ssk"))
@@ -835,7 +833,7 @@ object SketchQueries {
       .agg(strAggU(col("doc_id_str")).as("partial"))
       .groupBy(col("source")).agg(strMergeU(col("partial")).as("ssk_merged"))
     val strWithVals = strDirect.select(col("source"), col("ssk"),
-      SampleStrings(weighted = false).column(col("ssk")).as("svals"))
+      SampleValues(weighted = false, BottomK.StringValues).column(col("ssk")).as("svals"))
     val strNonMembers = strWithVals
       .select(col("source"), explode(col("svals")).as("doc_id_str"))
       .join(docsStr, Seq("source", "doc_id_str"), "left_anti")
@@ -894,11 +892,11 @@ object SketchQueries {
     * for gate 5. */
   def sampleWeighted(spark: SparkSession, dir: String): DataFrame = {
     val k = 16
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tokens.documents(spark, dir)
       .select(col("source"), col("doc_id").cast("long").as("doc_id"),
         size(filter(split(col("text"), " "), w => w =!= lit(""))).cast("long").as("w"))
       .where(col("w") > 0L)
-    val sampleW = Sample(K0, K1, k, weighted = true)
+    val sampleW = Sample(K0, K1, k, weighted = true, BottomK.LongValues)
     val aggW = (v: Column, w: Column) => NativeAggs.column(sampleW, v, w)
     val mergeW = (c: Column) => NativeAggs.column(sampleW, c)
     val direct = docs.groupBy(col("source")).agg(aggW(col("doc_id"), col("w")).as("sk"))
@@ -910,7 +908,7 @@ object SketchQueries {
       .groupBy(col("source")).agg(mergeW(col("partial")).as("sk_merged"))
     val exact = docs.groupBy(col("source")).agg(countDistinct(col("doc_id")).as("nd"))
     val withVals = direct.select(col("source"), col("sk"),
-      SampleValues(weighted = true).column(col("sk")).as("vals"))
+      SampleValues(weighted = true, BottomK.LongValues).column(col("sk")).as("vals"))
     val nonMembers = withVals
       .select(col("source"), explode(col("vals")).as("doc_id"))
       .join(docs, Seq("source", "doc_id"), "left_anti")
@@ -935,7 +933,7 @@ object SketchQueries {
     // is a DIFFERENT (equally weighted) draw with its own exact-topk twin
     val docsStr = docs.select(col("source"),
       col("doc_id").cast("string").as("doc_id_str"), col("w"))
-    val strSampleW = StringSample(K0, K1, k, weighted = true)
+    val strSampleW = Sample(K0, K1, k, weighted = true, BottomK.StringValues)
     val strAggW = (v: Column, w: Column) => NativeAggs.column(strSampleW, v, w)
     val strMergeW = (c: Column) => NativeAggs.column(strSampleW, c)
     val strDirect = docsStr.groupBy(col("source"))
@@ -946,7 +944,7 @@ object SketchQueries {
       .agg(strAggW(col("doc_id_str"), col("w")).as("partial"))
       .groupBy(col("source")).agg(strMergeW(col("partial")).as("wssk_merged"))
     val strWithVals = strDirect.select(col("source"), col("wssk"),
-      SampleStrings(weighted = true).column(col("wssk")).as("wsvals"))
+      SampleValues(weighted = true, BottomK.StringValues).column(col("wssk")).as("wsvals"))
     val strRanked = docsStr
       .withColumn("es_key", esKeyOf(GraftFunctions.sipHash64(col("doc_id_str"), K0, K1)))
       .withColumn("rn", row_number().over(
@@ -975,7 +973,7 @@ object SketchQueries {
 
   /** Exact dedup: distinct texts per source (hash-groupBy dedup baseline). */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tokens.documents(spark, dir)
       .groupBy(col("source"))
       .agg(countDistinct(col("text")).as("n_uniq"))
       .orderBy(col("source"))

@@ -2,7 +2,13 @@ package graft.core
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-/** Bottom-k uniform VALUE sample — the mergeable distributed answer to
+/** The bottom-k core: one insert and one merge for every structure that
+  * keeps the k smallest slot keys of its inputs — the [[Kmv]] distinct
+  * sketch (keys only), the uniform value sample and the
+  * Efraimidis–Spirakis weighted sample (keys with values) — plus the
+  * samples' one codec.
+  *
+  * Bottom-k uniform VALUE sample — the mergeable distributed answer to
   * "give me k uniformly random distinct elements per group".
   *
   * The KMV sketch ([[Kmv]]) keeps the k smallest keyed-SipHash values of
@@ -22,8 +28,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   *
   * Distinct semantics: duplicate elements hash identically and are
   * dropped, so the sample is over the distinct-element set (sampling
-  * WITHOUT replacement). Values are stored as longs (element typeTag
-  * recorded, mirroring the Bloom/KMV type enforcement).
+  * WITHOUT replacement). Values are longs or UTF-8 strings ([[ValueType]];
+  * element typeTag recorded, mirroring the Bloom/KMV type enforcement).
   */
 object BottomK {
 
@@ -34,58 +40,97 @@ object BottomK {
     (new Array[Long](k), new Array[Long](k))
   }
 
-  // unsigned compare + binary search shared with Kmv (identical prefix
-  // invariant; one definition so the two cannot drift)
-  @inline private def lt(a: Long, b: Long): Boolean = Kmv.lt(a, b)
-  @inline private def search(hashes: Array[Long], size: Int, h: Long): Int =
-    Kmv.search(hashes, size, h)
+  @inline private[core] def lt(a: Long, b: Long): Boolean =
+    java.lang.Long.compareUnsigned(a, b) < 0
 
-  /** Insert one (hash, value); mutates both arrays, returns the new size.
-    * Saturated inserts fast-reject on one unsigned compare, like KMV.
-    * Generic over the value type so the long- and string-valued samples
-    * share ONE insertion algorithm (boxing only on the rare actual-insert
-    * path; the saturated fast-reject touches no values). */
-  def addG[V](hashes: Array[Long], values: Array[V], size: Int, h: Long, v: V): Int = {
+  /** Unsigned binary search over the valid prefix. Returns the index of
+    * `h` if present, else `-(insertionPoint) - 1` (à la java.util.Arrays). */
+  private[core] def search(hashes: Array[Long], size: Int, h: Long): Int = {
+    var lo = 0
+    var hi = size - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val v = hashes(mid)
+      if (v == h) return mid
+      if (lt(v, h)) lo = mid + 1 else hi = mid - 1
+    }
+    -(lo + 1)
+  }
+
+  /** Insert one slot key `h` with its value `v`; mutates both arrays,
+    * returns the new size. `values` is null for a keys-only sketch (KMV).
+    *
+    * With no `cmp`, entry identity is the key: a duplicate key is dropped,
+    * and a saturated sketch rejects a key >= its largest on one unsigned
+    * compare, touching no values (only ~k·ln(n/k) of n inserts do work).
+    *
+    * With `cmp` (the weighted sample), identity is the (key, value) PAIR:
+    * the ES key is the exponential's double bits, which CAN collide across
+    * DISTINCT elements: u has only 53 bits, weights repeat (w = n_tok), and
+    * the quotient rounds to 52 mantissa bits — at ~1e9 same-weight docs
+    * per group the expected number of key collisions is double digits
+    * (birthday over 2^53). Entries sort by (key asc-unsigned, value asc by
+    * `cmp`) and only an exact pair is a duplicate — mirroring the gate's
+    * `row_number() OVER (ORDER BY es_key, value)` recomputation, which
+    * keeps both colliding docs. */
+  def add[V](hashes: Array[Long], values: Array[V], size: Int, h: Long, v: V,
+      cmp: (V, V) => Int = null): Int = {
     val k = hashes.length
-    if (size == k && !lt(h, hashes(k - 1))) return size
-    val pos = search(hashes, size, h)
-    if (pos >= 0) return size // duplicate element (same hash): distinct semantics
-    val ins = -pos - 1
+    if (size == k) {
+      val last = hashes(k - 1)
+      if (!lt(h, last) && (cmp == null || last != h || cmp(values(k - 1), v) <= 0)) return size
+    }
+    var ins = search(hashes, size, h)
+    if (ins >= 0) {
+      if (cmp == null) return size // duplicate element (same hash): distinct semantics
+      // resolve within the (tiny) equal-key run by value order
+      while (ins > 0 && hashes(ins - 1) == h) ins -= 1
+      while (ins < size && hashes(ins) == h && cmp(values(ins), v) < 0) ins += 1
+      if (ins < size && hashes(ins) == h && cmp(values(ins), v) == 0)
+        return size // exact (key, value) duplicate
+    } else ins = -ins - 1
     val newSize = if (size < k) size + 1 else size
     val moved = newSize - 1 - ins
     if (moved > 0) {
       System.arraycopy(hashes, ins, hashes, ins + 1, moved)
-      System.arraycopy(values, ins, values, ins + 1, moved)
+      if (values != null) System.arraycopy(values, ins, values, ins + 1, moved)
     }
     hashes(ins) = h
-    values(ins) = v
+    if (values != null) values(ins) = v
     newSize
   }
 
-  def add(hashes: Array[Long], values: Array[Long], size: Int, h: Long, v: Long): Int =
-    addG(hashes, values, size, h, v)
-
-  /** Union-merge, capacity min(kA, kB) (cross-capacity folds down exactly
-    * like [[Kmv.merge]]). Returns (hashes, values, size). */
-  def mergeG[V](aH: Array[Long], aV: Array[V], aSize: Int,
-      bH: Array[Long], bV: Array[V], bSize: Int)(
-      implicit ct: scala.reflect.ClassTag[V]): (Array[Long], Array[V], Int) = {
+  /** Union-merge: the k smallest entries of (a ∪ b) under [[add]]'s
+    * identity, capacity k = min(kA, kB) — a bottom-k' sample of the union
+    * is a valid one for any k' <= min(kA, kB), so cross-capacity merges
+    * fold down to the smaller k exactly like the reference's different-size
+    * `unionInto` folds the larger filter (`Internal.hs:509-550`). On equal
+    * keys side A goes first only when `cmp` orders its value first, so
+    * without `cmp` the kept value is side B's. Returns (hashes, values,
+    * size); values is null when both inputs' are. */
+  def merge[V](aH: Array[Long], aV: Array[V], aSize: Int,
+      bH: Array[Long], bV: Array[V], bSize: Int,
+      cmp: (V, V) => Int = null): (Array[Long], Array[V], Int) = {
     val k = math.min(aH.length, bH.length)
     val outH = new Array[Long](k)
-    val outV = new Array[V](k)
+    val outV = if (aV == null) null
+      else java.lang.reflect.Array.newInstance(aV.getClass.getComponentType, k).asInstanceOf[Array[V]]
     var i = 0; var j = 0; var n = 0
     while (n < k && (i < aSize || j < bSize)) {
-      val takeA = j >= bSize || (i < aSize && lt(aH(i), bH(j)))
-      val (h, v) = if (takeA) { val p = (aH(i), aV(i)); i += 1; p }
-                   else { val p = (bH(j), bV(j)); j += 1; p }
-      if (n == 0 || outH(n - 1) != h) { outH(n) = h; outV(n) = v; n += 1 }
+      val takeA = j >= bSize || (i < aSize && (lt(aH(i), bH(j)) ||
+        (cmp != null && aH(i) == bH(j) && cmp(aV(i), bV(j)) < 0)))
+      val h = if (takeA) aH(i) else bH(j)
+      val vs = if (takeA) aV else bV
+      val p = if (takeA) i else j
+      if (takeA) i += 1 else j += 1
+      if (n == 0 || outH(n - 1) != h || (cmp != null && cmp(outV(n - 1), vs(p)) != 0)) {
+        outH(n) = h
+        if (outV != null) outV(n) = vs(p)
+        n += 1
+      }
     }
     (outH, outV, n)
   }
-
-  def merge(aH: Array[Long], aV: Array[Long], aSize: Int,
-      bH: Array[Long], bV: Array[Long], bSize: Int): (Array[Long], Array[Long], Int) =
-    mergeG(aH, aV, aSize, bH, bV, bSize)
 
   // ------------------------------------------- weighted (ES) sampling keys
 
@@ -118,8 +163,6 @@ object BottomK {
     java.lang.Double.doubleToLongBits(-StrictMath.log(u) / weight)
   }
 
-  // ------------------------- weighted (ES) insert/merge: PAIR identity
-
   /** Value tie-break for LONG samples: signed ascending, matching the SQL
     * gate's `ORDER BY es_key, doc_id`. */
   @inline def cmpLong(a: Long, b: Long): Int = java.lang.Long.compare(a, b)
@@ -139,93 +182,102 @@ object BottomK {
     java.lang.Integer.compare(a.length, b.length)
   }
 
-  /** Weighted-sample insert. Unlike [[addG]], the slot key here is the ES
-    * double-bits, which CAN collide across DISTINCT elements: u has only
-    * 53 bits, weights repeat (w = n_tok), and the quotient rounds to 52
-    * mantissa bits — at ~1e9 same-weight docs per group the expected
-    * number of key collisions is double digits (birthday over 2^53).
-    * Entry identity is therefore the (key, value) PAIR: entries sort by
-    * (key asc-unsigned, value asc by `cmp`) and only an exact pair is a
-    * duplicate — mirroring the gate's `row_number() OVER (ORDER BY
-    * es_key, value)` recomputation, which keeps both colliding docs. */
-  def addW[V](hashes: Array[Long], values: Array[V], size: Int, h: Long, v: V,
-      cmp: (V, V) => Int): Int = {
-    val k = hashes.length
-    if (size == k) {
-      val lastH = hashes(k - 1)
-      if (lt(lastH, h) || (lastH == h && cmp(values(k - 1), v) <= 0)) return size
-    }
-    val pos = search(hashes, size, h)
-    val ins = if (pos < 0) -pos - 1
-    else {
-      // resolve within the (tiny) equal-key run by value order
-      var i = pos
-      while (i > 0 && hashes(i - 1) == h) i -= 1
-      while (i < size && hashes(i) == h && cmp(values(i), v) < 0) i += 1
-      if (i < size && hashes(i) == h && cmp(values(i), v) == 0)
-        return size // exact (key, value) duplicate
-      i
-    }
-    val newSize = if (size < k) size + 1 else size
-    val moved = newSize - 1 - ins
-    if (moved > 0) {
-      System.arraycopy(hashes, ins, hashes, ins + 1, moved)
-      System.arraycopy(values, ins, values, ins + 1, moved)
-    }
-    hashes(ins) = h
-    values(ins) = v
-    newSize
-  }
-
-  /** Weighted union-merge: two-pointer over (key, value)-sorted buffers,
-    * deduplicating exact pairs only (the weighted twin of [[mergeG]]). */
-  def mergeW[V](aH: Array[Long], aV: Array[V], aSize: Int,
-      bH: Array[Long], bV: Array[V], bSize: Int, cmp: (V, V) => Int)(
-      implicit ct: scala.reflect.ClassTag[V]): (Array[Long], Array[V], Int) = {
-    val k = math.min(aH.length, bH.length)
-    val outH = new Array[Long](k)
-    val outV = new Array[V](k)
-    var i = 0; var j = 0; var n = 0
-    while (n < k && (i < aSize || j < bSize)) {
-      val takeA = j >= bSize || (i < aSize && (lt(aH(i), bH(j)) ||
-        (aH(i) == bH(j) && cmp(aV(i), bV(j)) <= 0)))
-      val (h, v) = if (takeA) { val p = (aH(i), aV(i)); i += 1; p }
-                   else { val p = (bH(j), bV(j)); j += 1; p }
-      if (n == 0 || outH(n - 1) != h || cmp(outV(n - 1), v) != 0) {
-        outH(n) = h; outV(n) = v; n += 1
-      }
-    }
-    (outH, outV, n)
-  }
-
   // --- serialization: [version, typeTag, keyHash, k, size] BE header +
-  //     hashes[size] + values. LONG layout: values are fixed 8-byte; STRING
-  //     layout: each value is (int length, UTF-8 bytes). The typeTag picks
-  //     the layout, and each decoder REFUSES the other's tag — a string
-  //     payload must not be misparsed as longs. Version 1 = uniform sample
-  //     (slot 1 holds the element's SipHash); version 2 = ES-WEIGHTED
-  //     sample (slot 1 holds the exponential key's double bits) — same
-  //     byte layout, but the two must never merge, so each decoder
-  //     REFUSES the other's version. ---
+  //     hashes[size] + values. Version 1 = uniform sample (slot 1 holds the
+  //     element's SipHash); version 2 = ES-WEIGHTED sample (slot 1 holds
+  //     the exponential key's double bits) — same byte layout, but the two
+  //     must never merge, so the decoder REFUSES the other version. The
+  //     value layout is the sample's [[ValueType]]: LONG values are fixed
+  //     8-byte, STRING values are (int length, UTF-8 bytes); the typeTag
+  //     tells them apart, and a decoder REFUSES the other layout's tag — a
+  //     string payload must not be misparsed as longs. ---
   final val SerialVersion = 1L
   final val SerialVersionWeighted = 2L
 
-  private def header(bb: ByteBuffer, version: Long, typeTag: Long, keyHash: Long,
-      k: Int, size: Int): Unit =
-    bb.putLong(version).putLong(typeTag).putLong(keyHash)
-      .putLong(k.toLong).putLong(size.toLong)
+  /** A sample's value type: its weighted tie-break order `cmp` and its
+    * payload layout. */
+  sealed abstract class ValueType[V](val cmp: (V, V) => Int) extends Serializable {
+    def newArray(k: Int): Array[V]
+    private[core] def width(v: V): Int
+    private[core] def put(bb: ByteBuffer, v: V): Unit
+    /** Refuses the other layout's typeTag and a payload length this layout
+      * cannot hold `size` entries in. */
+    private[core] def check(bytes: Array[Byte], typeTag: Long, size: Int): Unit
+    private[core] def get(bb: ByteBuffer, i: Int): V
+  }
+
+  case object LongValues extends ValueType[Long](cmpLong) {
+    def newArray(k: Int): Array[Long] = new Array[Long](k)
+    private[core] def width(v: Long): Int = 8
+    private[core] def put(bb: ByteBuffer, v: Long): Unit = bb.putLong(v)
+    private[core] def check(bytes: Array[Byte], typeTag: Long, size: Int): Unit = {
+      require(typeTag != BlockedBloom.TypeTag.String,
+        "BottomK: string-valued sample payload decoded with the long-layout reader")
+      require(bytes.length == 40 + 16 * size,
+        s"BottomK serialized length ${bytes.length}, expected ${40 + 16 * size}")
+    }
+    private[core] def get(bb: ByteBuffer, i: Int): Long = bb.getLong()
+  }
+
+  case object StringValues extends ValueType[Array[Byte]](cmpUtf8) {
+    def newArray(k: Int): Array[Array[Byte]] = new Array[Array[Byte]](k)
+    private[core] def width(v: Array[Byte]): Int = 4 + v.length
+    private[core] def put(bb: ByteBuffer, v: Array[Byte]): Unit = bb.putInt(v.length).put(v)
+    private[core] def check(bytes: Array[Byte], typeTag: Long, size: Int): Unit = {
+      require(typeTag == BlockedBloom.TypeTag.String,
+        s"BottomK: tag ${BlockedBloom.TypeTag.name(typeTag)} payload decoded with the string-layout reader")
+      // each value carries at least its 4-byte length prefix; checking 12*size
+      // up front (and remaining() per prefix below) turns every truncation
+      // into a require failure, never a raw BufferUnderflowException
+      require(bytes.length >= 40 + 12 * size,
+        s"BottomK serialized length ${bytes.length} too short for $size string entries")
+    }
+    private[core] def get(bb: ByteBuffer, i: Int): Array[Byte] = {
+      require(bb.remaining() >= 4, s"BottomK serialized payload truncated at entry $i")
+      val len = bb.getInt()
+      require(len >= 0 && len <= bb.remaining(),
+        s"BottomK serialized string length $len exceeds remaining payload")
+      val v = new Array[Byte](len)
+      bb.get(v)
+      v
+    }
+  }
 
   private def versionName(v: Long): String =
     if (v == SerialVersionWeighted) "weighted" else "uniform"
 
-  /** Shared header decode + validation. Returns (typeTag, keyHash, k, size). */
-  private def readHeader(bytes: Array[Byte], bb: ByteBuffer,
-      expectVersion: Long): (Long, Long, Int, Int) = {
+  /** The `version` payload of `size` entries in the `vt` layout. */
+  def toBytes[V](hashes: Array[Long], values: Array[V], size: Int, typeTag: Long, keyHash: Long,
+      version: Long, vt: ValueType[V]): Array[Byte] = {
+    var payload = 0
+    var i = 0
+    while (i < size) { payload += vt.width(values(i)); i += 1 }
+    val bb = ByteBuffer.allocate(40 + 8 * size + payload).order(ByteOrder.BIG_ENDIAN)
+    bb.putLong(version).putLong(typeTag).putLong(keyHash)
+      .putLong(hashes.length.toLong).putLong(size.toLong)
+    i = 0
+    while (i < size) { bb.putLong(hashes(i)); i += 1 }
+    i = 0
+    while (i < size) { vt.put(bb, values(i)); i += 1 }
+    bb.array()
+  }
+
+  /** Returns (hashes[k], values[k], size, typeTag, keyHash) of a `version`
+    * payload in the `vt` layout. Validates the version, ranges BEFORE
+    * narrowing, the layout's tag and declared-vs-actual length, and the
+    * key order: uniform (version-1) payloads hold element hashes, which
+    * [[add]]/[[merge]] dedup by hash identity, so they are strictly
+    * ascending; ES-WEIGHTED (version-2) keys legitimately COLLIDE across
+    * distinct elements (pair identity, see [[add]]), so they are only
+    * non-decreasing, with the (key, value) pairs strictly ascending. */
+  def fromBytes[V](bytes: Array[Byte], version: Long,
+      vt: ValueType[V]): (Array[Long], Array[V], Int, Long, Long) = {
     require(bytes.length >= 40, s"BottomK serialized size ${bytes.length} < header")
-    val version = bb.getLong()
-    require(version == expectVersion,
-      s"BottomK serialized version $version (${versionName(version)}): " +
-        s"expected ${versionName(expectVersion)} sample — uniform and ES-weighted " +
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
+    val got = bb.getLong()
+    require(got == version,
+      s"BottomK serialized version $got (${versionName(got)}): " +
+        s"expected ${versionName(version)} sample — uniform and ES-weighted " +
         "samples must not mix")
     val typeTag = bb.getLong()
     val keyHash = bb.getLong()
@@ -233,18 +285,9 @@ object BottomK {
     val size64 = bb.getLong()
     require(k64 >= 1L && k64 <= (1L << 20), s"BottomK serialized k=$k64 out of range")
     require(size64 >= 0L && size64 <= k64, s"BottomK serialized size=$size64 for k=$k64")
-    (typeTag, keyHash, k64.toInt, size64.toInt)
-  }
-
-  /** Uniform (version-1) payloads hold element hashes, which addG/mergeG
-    * dedup by hash identity — strictly ascending is the invariant. The
-    * ES-WEIGHTED (version-2) layout keys on exponential double bits, which
-    * legitimately COLLIDE across distinct elements (addW/mergeW use
-    * (key, value)-pair identity; see [[addW]]'s birthday analysis), so a
-    * weighted payload is only required to be NON-DECREASING here — the
-    * strict invariant for version 2 is pair-ascending, validated by
-    * [[requirePairsAscending]] once the values have been read. */
-  private def readHashes(bb: ByteBuffer, k: Int, size: Int, strict: Boolean): Array[Long] = {
+    val (k, size) = (k64.toInt, size64.toInt)
+    vt.check(bytes, typeTag, size)
+    val strict = version == SerialVersion
     val hashes = new Array[Long](k)
     var i = 0
     while (i < size) {
@@ -255,129 +298,16 @@ object BottomK {
         else s"BottomK serialized weighted keys not non-decreasing at $i")
       i += 1
     }
-    hashes
-  }
-
-  /** Weighted-layout tail validation: within an equal-key run, values must
-    * be strictly ascending by the layout's own comparator — the serialized
-    * twin of addW/mergeW's (key, value)-pair identity. */
-  private def requirePairsAscending[V](hashes: Array[Long], values: Array[V],
-      size: Int, cmp: (V, V) => Int): Unit = {
-    var i = 1
-    while (i < size) {
-      require(hashes(i - 1) != hashes(i) || cmp(values(i - 1), values(i)) < 0,
+    val values = vt.newArray(k)
+    i = 0
+    while (i < size) { values(i) = vt.get(bb, i); i += 1 }
+    require(bb.remaining() == 0, s"BottomK serialized trailing ${bb.remaining()} bytes")
+    i = 1
+    while (!strict && i < size) {
+      require(hashes(i - 1) != hashes(i) || vt.cmp(values(i - 1), values(i)) < 0,
         s"BottomK serialized weighted (key, value) pairs not strictly ascending at $i")
       i += 1
     }
-  }
-
-  private def toBytesV(version: Long, hashes: Array[Long], values: Array[Long], size: Int,
-      typeTag: Long, keyHash: Long): Array[Byte] = {
-    val bb = ByteBuffer.allocate(40 + 16 * size).order(ByteOrder.BIG_ENDIAN)
-    header(bb, version, typeTag, keyHash, hashes.length, size)
-    var i = 0
-    while (i < size) { bb.putLong(hashes(i)); i += 1 }
-    i = 0
-    while (i < size) { bb.putLong(values(i)); i += 1 }
-    bb.array()
-  }
-
-  def toBytes(hashes: Array[Long], values: Array[Long], size: Int,
-      typeTag: Long, keyHash: Long): Array[Byte] =
-    toBytesV(SerialVersion, hashes, values, size, typeTag, keyHash)
-
-  /** ES-weighted layout: identical bytes, version 2 (the hash slot holds
-    * exponential-key double bits, not element hashes — the decoders keep
-    * the two populations apart). */
-  def toBytesWeighted(hashes: Array[Long], values: Array[Long], size: Int,
-      typeTag: Long, keyHash: Long): Array[Byte] =
-    toBytesV(SerialVersionWeighted, hashes, values, size, typeTag, keyHash)
-
-  private def fromBytesV(bytes: Array[Byte],
-      expectVersion: Long): (Array[Long], Array[Long], Int, Long, Long) = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    val (typeTag, keyHash, k, size) = readHeader(bytes, bb, expectVersion)
-    require(typeTag != BlockedBloom.TypeTag.String,
-      "BottomK: string-valued sample payload decoded with the long-layout reader")
-    require(bytes.length == 40 + 16 * size,
-      s"BottomK serialized length ${bytes.length}, expected ${40 + 16 * size}")
-    val hashes = readHashes(bb, k, size, strict = expectVersion == SerialVersion)
-    val values = new Array[Long](k)
-    var i = 0
-    while (i < size) { values(i) = bb.getLong(); i += 1 }
-    if (expectVersion == SerialVersionWeighted)
-      requirePairsAscending(hashes, values, size, cmpLong)
     (hashes, values, size, typeTag, keyHash)
-  }
-
-  /** Returns (hashes[k], values[k], size, typeTag, keyHash). Validates
-    * version, ranges BEFORE narrowing, declared-vs-actual length, strict
-    * ascending unsigned hash order, and a fixed-width (non-string) tag. */
-  def fromBytes(bytes: Array[Byte]): (Array[Long], Array[Long], Int, Long, Long) =
-    fromBytesV(bytes, SerialVersion)
-
-  /** Same tuple for the ES-WEIGHTED long layout (version 2). */
-  def fromBytesWeighted(bytes: Array[Byte]): (Array[Long], Array[Long], Int, Long, Long) =
-    fromBytesV(bytes, SerialVersionWeighted)
-
-  private def toBytesStrV(version: Long, hashes: Array[Long], values: Array[Array[Byte]],
-      size: Int, keyHash: Long): Array[Byte] = {
-    var payload = 0
-    var i = 0
-    while (i < size) { payload += 4 + values(i).length; i += 1 }
-    val bb = ByteBuffer.allocate(40 + 8 * size + payload).order(ByteOrder.BIG_ENDIAN)
-    header(bb, version, BlockedBloom.TypeTag.String, keyHash, hashes.length, size)
-    i = 0
-    while (i < size) { bb.putLong(hashes(i)); i += 1 }
-    i = 0
-    while (i < size) { bb.putInt(values(i).length); bb.put(values(i)); i += 1 }
-    bb.array()
-  }
-
-  def toBytesStr(hashes: Array[Long], values: Array[Array[Byte]], size: Int,
-      keyHash: Long): Array[Byte] =
-    toBytesStrV(SerialVersion, hashes, values, size, keyHash)
-
-  /** ES-weighted STRING layout (version 2 — same bytes, weighted keys). */
-  def toBytesStrWeighted(hashes: Array[Long], values: Array[Array[Byte]], size: Int,
-      keyHash: Long): Array[Byte] =
-    toBytesStrV(SerialVersionWeighted, hashes, values, size, keyHash)
-
-  /** Returns (hashes[k], values[k], size, keyHash) for the STRING layout. */
-  def fromBytesStr(bytes: Array[Byte]): (Array[Long], Array[Array[Byte]], Int, Long) =
-    fromBytesStrV(bytes, SerialVersion)
-
-  /** Same tuple for the ES-WEIGHTED string layout (version 2). */
-  def fromBytesStrWeighted(bytes: Array[Byte]): (Array[Long], Array[Array[Byte]], Int, Long) =
-    fromBytesStrV(bytes, SerialVersionWeighted)
-
-  private def fromBytesStrV(bytes: Array[Byte],
-      expectVersion: Long): (Array[Long], Array[Array[Byte]], Int, Long) = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    val (typeTag, keyHash, k, size) = readHeader(bytes, bb, expectVersion)
-    require(typeTag == BlockedBloom.TypeTag.String,
-      s"BottomK: tag ${BlockedBloom.TypeTag.name(typeTag)} payload decoded with the string-layout reader")
-    // each value carries at least its 4-byte length prefix; checking 12*size
-    // up front (and remaining() per prefix below) turns every truncation
-    // into a require failure, never a raw BufferUnderflowException
-    require(bytes.length >= 40 + 12 * size,
-      s"BottomK serialized length ${bytes.length} too short for $size string entries")
-    val hashes = readHashes(bb, k, size, strict = expectVersion == SerialVersion)
-    val values = new Array[Array[Byte]](k)
-    var i = 0
-    while (i < size) {
-      require(bb.remaining() >= 4, s"BottomK serialized payload truncated at entry $i")
-      val len = bb.getInt()
-      require(len >= 0 && len <= bb.remaining(),
-        s"BottomK serialized string length $len exceeds remaining payload")
-      val v = new Array[Byte](len)
-      bb.get(v)
-      values(i) = v
-      i += 1
-    }
-    require(bb.remaining() == 0, s"BottomK serialized trailing ${bb.remaining()} bytes")
-    if (expectVersion == SerialVersionWeighted)
-      requirePairsAscending(hashes, values, size, cmpUtf8)
-    (hashes, values, size, keyHash)
   }
 }

@@ -31,6 +31,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * exact (modulo 64-bit hash collisions).
   */
 object Kmv {
+  import BottomK.{lt, search}
 
   /** Buffer of capacity k; `size` valid ascending-unsigned entries. */
   def emptyHashes(k: Int): Array[Long] = {
@@ -38,53 +39,15 @@ object Kmv {
     new Array[Long](k)
   }
 
-  @inline private[core] def lt(a: Long, b: Long): Boolean =
-    java.lang.Long.compareUnsigned(a, b) < 0
-
-  /** Unsigned binary search over the valid prefix. Returns the index of
-    * `h` if present, else `-(insertionPoint) - 1` (à la java.util.Arrays).
-    * Shared with [[BottomK]] (same ascending-unsigned prefix invariant). */
-  private[core] def search(hashes: Array[Long], size: Int, h: Long): Int = {
-    var lo = 0
-    var hi = size - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val v = hashes(mid)
-      if (v == h) return mid
-      if (lt(v, h)) lo = mid + 1 else hi = mid - 1
-    }
-    -(lo + 1)
-  }
-
-  /** Insert one hash; mutates `hashes`, returns the new size. */
-  def add(hashes: Array[Long], size: Int, h: Long): Int = {
-    val k = hashes.length
-    if (size == k && !lt(h, hashes(k - 1))) return size // fast reject
-    val pos = search(hashes, size, h)
-    if (pos >= 0) return size // duplicate hash: distinct semantics
-    val ins = -pos - 1
-    val newSize = if (size < k) size + 1 else size
-    val moved = newSize - 1 - ins
-    if (moved > 0) System.arraycopy(hashes, ins, hashes, ins + 1, moved)
-    hashes(ins) = h
-    newSize
-  }
+  /** Insert one hash; mutates `hashes`, returns the new size (the
+    * [[BottomK.add]] core with no values). */
+  def add(hashes: Array[Long], size: Int, h: Long): Int = BottomK.add[AnyRef](hashes, null, size, h, null)
 
   /** Union-merge: the smallest distinct hashes of (a ∪ b), capacity
-    * `min(a.length, b.length)` — a bottom-k' sample of the union is a valid
-    * KMV of any k' ≤ min(kA,kB), so cross-capacity merges fold down to the
-    * smaller k exactly like the reference's different-size `unionInto`
-    * folds the larger filter (`Internal.hs:509-550`). Returns (hashes, size). */
+    * `min(a.length, b.length)` (see [[BottomK.merge]]). Returns (hashes, size). */
   def merge(a: Array[Long], aSize: Int, b: Array[Long], bSize: Int): (Array[Long], Int) = {
-    val k = math.min(a.length, b.length)
-    val out = new Array[Long](k)
-    var i = 0; var j = 0; var n = 0
-    while (n < k && (i < aSize || j < bSize)) {
-      val takeA = j >= bSize || (i < aSize && lt(a(i), b(j)))
-      val h = if (takeA) { val v = a(i); i += 1; v } else { val v = b(j); j += 1; v }
-      if (n == 0 || out(n - 1) != h) { out(n) = h; n += 1 }
-    }
-    (out, n)
+    val (h, _, n) = BottomK.merge[AnyRef](a, null, aSize, b, null, bSize)
+    (h, n)
   }
 
   /** Map a 64-bit hash to (0,1] using its top 53 bits (exact in a Double). */

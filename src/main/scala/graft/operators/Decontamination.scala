@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Frames
 import graft.core.BloomConfig
 import graft.plans.{GraftFunctions, NativeAggs}
 
@@ -103,13 +104,10 @@ object Decontamination {
     * Exact — the Bloom is a pruning prefilter only. */
   def decontaminate(tokens: DataFrame, evalSource: String, n: Int,
       cfg: BloomConfig): DataFrame = {
-    val spark = tokens.sparkSession
     val (out, evalGrams) = decontaminateLazy(tokens, evalSource, n, cfg)
     // materialize before releasing the persisted eval side
-    try {
-      val rows = out.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally evalGrams.unpersist()
+    try Frames.materialize(out)
+    finally evalGrams.unpersist()
   }
 
   /** The shared hit path: confirmed contaminated (doc_id, source, gram)

@@ -779,91 +779,61 @@ object SketchKinds {
   private def requireKey(stored: Long, k0: Long, k1: Long): Unit =
     require(stored == keyHash(k0, k1), "BottomK merge: sample was built with a different SipHash key")
 
-  /** Mergeable sample of k distinct LONG values per group (see
+  private def sampleVersion(weighted: Boolean): Long =
+    if (weighted) BottomK.SerialVersionWeighted else BottomK.SerialVersion
+
+  /** Mergeable sample of k distinct values per group (see
     * [[graft.core.BottomK]]; deterministic for a fixed SipHash key; the
     * shuffle carries one <= k-entry summary per partial group).
+    *
+    * `valueType`: LONG samples read an integral column,
+    * STRING samples a string column (values kept as UTF-8 bytes, hashed
+    * with SipHash-2-4 like the Bloom/KMV string convention); it also fixes
+    * the weighted tie-break order (signed, or unsigned bytes: Spark's
+    * UTF8_BINARY) and the payload layout, and a decode refuses the other
+    * layout.
     *
     * Uniform (`weighted = false`, version-1 layout): the k values with the
     * smallest hashes. ES-weighted (`weighted = true`, version-2 layout, a
     * weight column is required): the k smallest Efraimidis–Spirakis keys
     * -ln(u)/w; rows with weight <= 0 are skipped, and the weight must be a
     * function of the value. The two layouts never merge with each other. */
-  final case class Sample(k0: Long, k1: Long, k: Int, weighted: Boolean)
-      extends SketchKind[SampleBuf[Long]] {
-    def name: String = if (weighted) "graft_sample_weighted" else "graft_sample_bottomk"
+  final case class Sample[V](k0: Long, k1: Long, k: Int, weighted: Boolean, valueType: BottomK.ValueType[V])
+      extends SketchKind[SampleBuf[V]] {
+    private def longs: Boolean = valueType == BottomK.LongValues
+    // uniform samples dedup by hash identity (the version-1 strict-ascending
+    // invariant); ES-weighted ones by (key, value) pair
+    private def cmp: (V, V) => Int = if (weighted) valueType.cmp else null
+    def name: String =
+      (if (weighted) "graft_sample_weighted" else "graft_sample_bottomk") + (if (longs) "" else "_str")
     protected def buildInput(dt: DataType): Option[SketchInput] =
-      if (isIntegral(dt)) Some(Longs) else None
+      if (longs) { if (isIntegral(dt)) Some(Longs) else None }
+      else if (dt == StringType) Some(Strings) else None
     override def acceptsWeight: Boolean = weighted
     override def requiresWeight: Boolean = weighted
-    def empty(in: SketchInput): SampleBuf[Long] = {
-      val (h, v) = BottomK.emptyBuffers(k)
-      new SampleBuf(h, v, 0, in.typeTag)
-    }
-    def update(b: SampleBuf[Long], in: SketchInput, v: Any, w: Long): SampleBuf[Long] = {
-      val x = longOf(v)
-      if (!weighted) b.size = BottomK.add(b.hashes, b.values, b.size, SipHash.hashLong(k0, k1, x), x)
-      else if (w > 0L) b.size = BottomK.addW(b.hashes, b.values, b.size,
-        BottomK.esKey(SipHash.hashLong(k0, k1, x), w.toDouble), x, BottomK.cmpLong)
-      b
-    }
-    def merge(a: SampleBuf[Long], b: SampleBuf[Long]): SampleBuf[Long] = {
-      require(a.typeTag == b.typeTag, s"BottomK merge: element type mismatch ${a.typeTag} vs ${b.typeTag}")
-      // uniform samples dedup by hash identity (the version-1 strict-ascending
-      // invariant); ES-weighted ones by (key, value) pair
-      val (h, v, s) =
-        if (weighted) BottomK.mergeW(a.hashes, a.values, a.size, b.hashes, b.values, b.size, BottomK.cmpLong)
-        else BottomK.merge(a.hashes, a.values, a.size, b.hashes, b.values, b.size)
-      new SampleBuf(h, v, s, a.typeTag)
-    }
-    def toBytes(b: SampleBuf[Long]): Array[Byte] =
-      if (weighted) BottomK.toBytesWeighted(b.hashes, b.values, b.size, b.typeTag, keyHash(k0, k1))
-      else BottomK.toBytes(b.hashes, b.values, b.size, b.typeTag, keyHash(k0, k1))
-    def fromBytes(x: Array[Byte]): SampleBuf[Long] = {
-      val (h, v, s, tag, kh) = if (weighted) BottomK.fromBytesWeighted(x) else BottomK.fromBytes(x)
-      requireKey(kh, k0, k1)
-      new SampleBuf(h, v, s, tag)
-    }
-  }
-
-  /** [[Sample]] over a STRING column (values kept as UTF-8 bytes, hashed
-    * with SipHash-2-4 like the Bloom/KMV string convention; ES-weighted
-    * ties break by unsigned byte order, Spark's UTF8_BINARY). */
-  final case class StringSample(k0: Long, k1: Long, k: Int, weighted: Boolean)
-      extends SketchKind[SampleBuf[Array[Byte]]] {
-    def name: String = if (weighted) "graft_sample_weighted_str" else "graft_sample_bottomk_str"
-    protected def buildInput(dt: DataType): Option[SketchInput] =
-      if (dt == StringType) Some(Strings) else None
-    override def acceptsWeight: Boolean = weighted
-    override def requiresWeight: Boolean = weighted
-    def empty(in: SketchInput): SampleBuf[Array[Byte]] = {
-      val (h, _) = BottomK.emptyBuffers(k)
-      new SampleBuf(h, new Array[Array[Byte]](k), 0, TypeTag.String)
-    }
-    def update(b: SampleBuf[Array[Byte]], in: SketchInput, v: Any, w: Long): SampleBuf[Array[Byte]] = {
+    def empty(in: SketchInput): SampleBuf[V] =
+      new SampleBuf(BottomK.emptyBuffers(k)._1, valueType.newArray(k), 0, in.typeTag)
+    def update(b: SampleBuf[V], in: SketchInput, v: Any, w: Long): SampleBuf[V] = {
       if (!weighted || w > 0L) {
-        // a private copy: the sample keeps the bytes beyond this row
-        val bytes = v.asInstanceOf[UTF8String].copy().getBytes
-        val h = SipHash.hash64(k0, k1, bytes)
-        b.size =
-          if (weighted)
-            BottomK.addW(b.hashes, b.values, b.size, BottomK.esKey(h, w.toDouble), bytes, BottomK.cmpUtf8)
-          else BottomK.addG(b.hashes, b.values, b.size, h, bytes)
+        // a string value is a private copy: the sample keeps the bytes beyond this row
+        val x = (if (longs) longOf(v) else v.asInstanceOf[UTF8String].copy().getBytes).asInstanceOf[V]
+        val h = if (longs) SipHash.hashLong(k0, k1, longOf(x))
+          else SipHash.hash64(k0, k1, x.asInstanceOf[Array[Byte]])
+        b.size = BottomK.add(b.hashes, b.values, b.size, if (weighted) BottomK.esKey(h, w.toDouble) else h, x, cmp)
       }
       b
     }
-    def merge(a: SampleBuf[Array[Byte]], b: SampleBuf[Array[Byte]]): SampleBuf[Array[Byte]] = {
-      val (h, v, s) =
-        if (weighted) BottomK.mergeW(a.hashes, a.values, a.size, b.hashes, b.values, b.size, BottomK.cmpUtf8)
-        else BottomK.mergeG(a.hashes, a.values, a.size, b.hashes, b.values, b.size)
-      new SampleBuf(h, v, s, TypeTag.String)
+    def merge(a: SampleBuf[V], b: SampleBuf[V]): SampleBuf[V] = {
+      require(a.typeTag == b.typeTag, s"BottomK merge: element type mismatch ${a.typeTag} vs ${b.typeTag}")
+      val (h, v, s) = BottomK.merge(a.hashes, a.values, a.size, b.hashes, b.values, b.size, cmp)
+      new SampleBuf(h, v, s, a.typeTag)
     }
-    def toBytes(b: SampleBuf[Array[Byte]]): Array[Byte] =
-      if (weighted) BottomK.toBytesStrWeighted(b.hashes, b.values, b.size, keyHash(k0, k1))
-      else BottomK.toBytesStr(b.hashes, b.values, b.size, keyHash(k0, k1))
-    def fromBytes(x: Array[Byte]): SampleBuf[Array[Byte]] = {
-      val (h, v, s, kh) = if (weighted) BottomK.fromBytesStrWeighted(x) else BottomK.fromBytesStr(x)
+    def toBytes(b: SampleBuf[V]): Array[Byte] =
+      BottomK.toBytes(b.hashes, b.values, b.size, b.typeTag, keyHash(k0, k1), sampleVersion(weighted), valueType)
+    def fromBytes(x: Array[Byte]): SampleBuf[V] = {
+      val (h, v, s, tag, kh) = BottomK.fromBytes(x, sampleVersion(weighted), valueType)
       requireKey(kh, k0, k1)
-      new SampleBuf(h, v, s, TypeTag.String)
+      new SampleBuf(h, v, s, tag)
     }
   }
 
@@ -1037,26 +1007,22 @@ object SketchKinds {
   }
 
   /** `graft_sample_values(sample)` / `graft_sample_weighted_values(sample)`
-    * -> `array<bigint>`: a [[Sample]]'s values in slot-key order (a
-    * uniform random permutation for a fixed key). Each reads only its own
-    * layout. */
-  final case class SampleValues(weighted: Boolean) extends DecodedReader[GenericArrayData](
-      if (weighted) "graft_sample_weighted_values" else "graft_sample_values",
-      ArrayType(LongType, containsNull = false)) {
+    * -> `array<bigint>`, and `graft_sample_strings(sample)` /
+    * `graft_sample_weighted_strings(sample)` -> `array<string>`: a
+    * [[Sample]]'s values in slot-key order (a uniform random permutation
+    * for a fixed key). Each reads only its own version and layout. */
+  final case class SampleValues(weighted: Boolean, valueType: BottomK.ValueType[_])
+      extends DecodedReader[GenericArrayData](
+        s"graft_sample_${if (weighted) "weighted_" else ""}" +
+          (if (valueType == BottomK.LongValues) "values" else "strings"),
+        ArrayType(if (valueType == BottomK.LongValues) LongType else StringType, containsNull = false)) {
     def decode(x: Array[Byte]): GenericArrayData = {
-      val (_, v, s, _, _) = if (weighted) BottomK.fromBytesWeighted(x) else BottomK.fromBytes(x)
-      new GenericArrayData(v.take(s))
-    }
-  }
-
-  /** `graft_sample_strings(sample)` / `graft_sample_weighted_strings(sample)`
-    * -> `array<string>`: a [[StringSample]]'s values in slot-key order. */
-  final case class SampleStrings(weighted: Boolean) extends DecodedReader[GenericArrayData](
-      if (weighted) "graft_sample_weighted_strings" else "graft_sample_strings",
-      ArrayType(StringType, containsNull = false)) {
-    def decode(x: Array[Byte]): GenericArrayData = {
-      val (_, v, s, _) = if (weighted) BottomK.fromBytesStrWeighted(x) else BottomK.fromBytesStr(x)
-      new GenericArrayData(v.take(s).map(b => UTF8String.fromBytes(b): Any))
+      val (_, v, s, _, _) = BottomK.fromBytes(x, sampleVersion(weighted), valueType)
+      v match {
+        case longs: Array[Long] => new GenericArrayData(longs.take(s))
+        case strings: Array[Array[Byte]] =>
+          new GenericArrayData(strings.take(s).map(b => UTF8String.fromBytes(b): Any))
+      }
     }
   }
 
@@ -1154,7 +1120,7 @@ object SketchKinds {
   val readers: Seq[SketchReader[_ <: AnyRef]] = Seq(
     HllEstimate, CmsEstimate(), CmsTotal(), KllQuantile, KllRank, TDigestQuantile, TDigestCdf,
     KmvEstimate, KmvJaccard, KmvIntersect, KmvDifference, KmvUnion, HeavyHitterSummary,
-    SampleValues(weighted = false), SampleStrings(weighted = false),
-    SampleValues(weighted = true), SampleStrings(weighted = true),
+    SampleValues(weighted = false, BottomK.LongValues), SampleValues(weighted = false, BottomK.StringValues),
+    SampleValues(weighted = true, BottomK.LongValues), SampleValues(weighted = true, BottomK.StringValues),
     BloomCombine(intersection = false), BloomCombine(intersection = true), BloomProbe(), KeyedBloomProbe())
 }

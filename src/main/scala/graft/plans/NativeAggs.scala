@@ -180,10 +180,10 @@ object NativeAggs {
     val kll = KllKind(200)
     val tdigest = TDigestKind(100)
     val hh = HeavyHitters(64)
-    val sample = Sample(k0, k1, 64, weighted = false)
-    val sampleW = Sample(k0, k1, 64, weighted = true)
-    val strSample = StringSample(k0, k1, 64, weighted = false)
-    val strSampleW = StringSample(k0, k1, 64, weighted = true)
+    val sample = Sample(k0, k1, 64, weighted = false, BottomK.LongValues)
+    val sampleW = Sample(k0, k1, 64, weighted = true, BottomK.LongValues)
+    val strSample = Sample(k0, k1, 64, weighted = false, BottomK.StringValues)
+    val strSampleW = Sample(k0, k1, 64, weighted = true, BottomK.StringValues)
     def q = graft.SketchQueries // read per call: no object-initialization cycle
     Seq(
       sql("graft_bloom_tokens", bloom, Tokens, 1),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The input table mandated by BASELINE.json `input_hint`:
   *
@@ -37,13 +38,22 @@ object Tokens {
 
   def table(spark: SparkSession, sfDir: String): DataFrame = build(spark, sfDir)
 
+  /** The driver's `documents.parquet` schema (FIXTURES.md §1). */
+  val DocumentsSchema: StructType =
+    StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
+
+  /** `sfDir`'s documents table, read under [[DocumentsSchema]]: no read
+    * starts a schema-inference job. */
+  def documents(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema(DocumentsSchema).parquet(s"$sfDir/documents.parquet")
+
   private def vocabOf(spark: SparkSession, sfDir: String): Map[String, Int] = {
     val docs = new Path(s"$sfDir/documents.parquet")
     val files = docs.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(docs)
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
     val version = (sfDir, files.map(_.getLen).sum, files.map(_.getModificationTime).maxOption.getOrElse(0L))
     vocabCache.getOrElseUpdate(version, {
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      documents(spark, sfDir)
         .select(explode(split(col("text"), " ")).as("w"))
         .where(col("w") =!= "")
         .distinct()
@@ -55,7 +65,7 @@ object Tokens {
   }
 
   private def build(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = documents(spark, sfDir)
     val idOf = vocabOf(spark, sfDir)
     val mapCol = map(idOf.toSeq.sortBy(_._1).flatMap { case (w, i) => Seq(lit(w), lit(i)) }: _*)
     docs

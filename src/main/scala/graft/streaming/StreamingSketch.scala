@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.Frames
 import graft.core.BloomConfig
 import graft.operators.SketchKinds._
 import graft.plans.GraftFunctions
@@ -137,13 +138,6 @@ object StreamingSketch {
       query(stream.toDF().toDF("ts", "doc_id", "source", "tokens")), stream, batches)
     spark.table(sinkName)
   }
-
-  /** `df` collected and re-created as a LocalRelation: the gates use a
-    * sink in several branches, and Spark's self-join attribute dedup does
-    * not handle the memory-sink view (INTERNAL_ERROR: conflicting
-    * references). Sinks hold one row per (window, source). */
-  private def materialize(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Replay-harness checkpoint placement: a fresh dir per replay under
     * `ScratchDir.base` (tmpfs with enough free space, else the process
@@ -283,7 +277,7 @@ object StreamingSketch {
       windowed(keyed, "ts", CoverAll, window(col("ts"), "60 seconds"))(
         column(HeavyHitters(capacity), col("key")).as("hh"))
     }
-    val sk = materialize(sink.select(windowMinute.as("win"), col("source"), col("hh").as("sk")))
+    val sk = Frames.materialize(sink.select(windowMinute.as("win"), col("source"), col("hh").as("sk")))
     val exact = t
       .select(docMinute.as("win"), col("source"), col("doc_id"), explode_outer(col("tokens")).as("token"))
       .where(col("token").isNotNull) // one tokenize evaluation
@@ -328,7 +322,7 @@ object StreamingSketch {
       windowed(s, "ts", "900 seconds", session_window(col("ts"), "60 seconds"))(
         column(KmvKind(k0, k1, k), col("tokens")).as("kmv"))
     }
-    val sk = materialize(sink
+    val sk = Frames.materialize(sink
       .where(col("source") =!= Sentinel)
       .select(col("session_window.start").cast("long").as("start"),
         col("session_window.end").cast("long").as("end"),

@@ -49,30 +49,27 @@ object GoldenGen {
     // ES-weighted string (version 2): values 1..5000 / "doc-1".."doc-5000",
     // weight 1 + i % 7
     val keyHash = SipHash.hashLong(k0, k1, k0 ^ k1)
-    val (sh, _) = BottomK.emptyBuffers(32)
-    val sv = new Array[Array[Byte]](32)
-    var ss = 0
-    (1 to 5000).foreach { i =>
-      val b = s"doc-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      ss = BottomK.addG(sh, sv, ss, SipHash.hash64(k0, k1, b), b)
+    val strings = (1 to 5000).map(i => s"doc-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def sample[V](vt: BottomK.ValueType[V], xs: Seq[V], key: Int => Long, weighted: Boolean,
+        typeTag: Long): Array[Byte] = {
+      val h = BottomK.emptyBuffers(32)._1
+      val v = vt.newArray(32)
+      var s = 0
+      xs.indices.foreach { i =>
+        s = if (weighted) BottomK.add(h, v, s, BottomK.esKey(key(i), (1 + (i + 1) % 7).toDouble), xs(i), vt.cmp)
+          else BottomK.add(h, v, s, key(i), xs(i))
+      }
+      BottomK.toBytes(h, v, s, typeTag, keyHash,
+        if (weighted) BottomK.SerialVersionWeighted else BottomK.SerialVersion, vt)
     }
-    java.nio.file.Files.write(outDir.resolve("bottomk_str_32.bin"), BottomK.toBytesStr(sh, sv, ss, keyHash))
-    val (wh, wv) = BottomK.emptyBuffers(32)
-    var ws = 0
-    (1L to 5000L).foreach(x => ws = BottomK.addW(wh, wv, ws,
-      BottomK.esKey(SipHash.hashLong(k0, k1, x), (1 + x % 7).toDouble), x, BottomK.cmpLong))
+    val stringKey = (i: Int) => SipHash.hash64(k0, k1, strings(i))
+    java.nio.file.Files.write(outDir.resolve("bottomk_str_32.bin"),
+      sample(BottomK.StringValues, strings, stringKey, weighted = false, BlockedBloom.TypeTag.String))
     java.nio.file.Files.write(outDir.resolve("bottomk_weighted_32.bin"),
-      BottomK.toBytesWeighted(wh, wv, ws, BlockedBloom.TypeTag.Long, keyHash))
-    val (swh, _) = BottomK.emptyBuffers(32)
-    val swv = new Array[Array[Byte]](32)
-    var sws = 0
-    (1 to 5000).foreach { i =>
-      val b = s"doc-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      sws = BottomK.addW(swh, swv, sws,
-        BottomK.esKey(SipHash.hash64(k0, k1, b), (1 + i % 7).toDouble), b, BottomK.cmpUtf8)
-    }
+      sample(BottomK.LongValues, (1L to 5000L), i => SipHash.hashLong(k0, k1, i + 1L), weighted = true,
+        BlockedBloom.TypeTag.Long))
     java.nio.file.Files.write(outDir.resolve("bottomk_weighted_str_32.bin"),
-      BottomK.toBytesStrWeighted(swh, swv, sws, keyHash))
+      sample(BottomK.StringValues, strings, stringKey, weighted = true, BlockedBloom.TypeTag.String))
     // keyed filter pack: two int filters of different configs (1..2*dataBytes
     // and its negation) and an empty entry under the empty key
     val packed = Seq((3, 2), (2, 1)).map { case (k, log2l) =>

@@ -203,24 +203,25 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Kmv.difference(hx, sx, h0, s0) === 9.0)
     // BottomK merge agg: empty group -> empty payload; chained level skips it
     val keyHash = SipHash.hashLong(K0, K1, K0 ^ K1)
-    val m = new DirectSketchAgg(Sample(K0, K1, 8, weighted = false), BinaryType)
+    val m = new DirectSketchAgg(Sample(K0, K1, 8, weighted = false, BottomK.LongValues), BinaryType)
     assert(m.finishBytes(m.zero).isEmpty)
     def serBk(k: Int, elems: Range): Array[Byte] = {
       val (h, v) = BottomK.emptyBuffers(k); var s = 0
       elems.foreach(e => s = BottomK.add(h, v, s, SipHash.hashLong(K0, K1, e.toLong), e.toLong))
-      BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, keyHash)
+      BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, keyHash, BottomK.SerialVersion,
+        BottomK.LongValues)
     }
     val chained = m.finishBytes(m.reduce(m.reduce(m.zero, Array.emptyByteArray), serBk(8, 1 to 100)))
-    assert(BottomK.fromBytes(chained)._3 === 8)
+    assert(BottomK.fromBytes(chained, BottomK.SerialVersion, BottomK.LongValues)._3 === 8)
     // cross-capacity merge folds down; cross-type and wrong-key rejected
     val folded = m.finishBytes(m.reduce(m.reduce(m.zero, serBk(32, 1 to 100)), serBk(8, 50 to 150)))
-    assert(BottomK.fromBytes(folded)._1.length === 8)
+    assert(BottomK.fromBytes(folded, BottomK.SerialVersion, BottomK.LongValues)._1.length === 8)
     val typed = BottomK.toBytes(BottomK.emptyBuffers(8)._1, BottomK.emptyBuffers(8)._2, 0,
-      BlockedBloom.TypeTag.Int, keyHash)
+      BlockedBloom.TypeTag.Int, keyHash, BottomK.SerialVersion, BottomK.LongValues)
     assertThrows[IllegalArgumentException](
       m.merge(m.reduce(m.zero, serBk(8, 1 to 10)), m.reduce(m.zero, typed)))
     val wrongKey = BottomK.toBytes(BottomK.emptyBuffers(8)._1, BottomK.emptyBuffers(8)._2, 0,
-      BlockedBloom.TypeTag.Long, keyHash + 1)
+      BlockedBloom.TypeTag.Long, keyHash + 1, BottomK.SerialVersion, BottomK.LongValues)
     assertThrows[IllegalArgumentException](m.reduce(m.zero, wrongKey))
     // SQL null semantics for the new readers
     graft.plans.GraftFunctions.register(spark)

@@ -23,7 +23,7 @@ import graft.streaming.StreamingSketch
   * 1 KiB, and every Bloom probe's sketch argument must be computed from
   * scalar subqueries only (a subquery, a field of one, or a read function
   * over them). Building the decontamination plan must start no Spark
-  * job. */
+  * job, and neither must reading the tokens table after a warm-up call. */
 class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -79,15 +79,11 @@ class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "bloomIntersectExact probes the intersection of two subqueries")
   }
 
-  test("building the decontamination plan starts no Spark job") {
-    val rows = (0 until 200).map { i =>
-      val toks = Array.tabulate(6 + i % 9)(j => (i * 7 + j * 3) % 40)
-      (s"doc-$i", toks, toks.length, s"src${i % 3}")
-    }
-    val tokens = spark.createDataFrame(rows).toDF("doc_id", "tokens", "n_tok", "source")
-    // job starts carry their thread's job group; a marker job in its own
-    // group, seen last on the in-order listener bus, means every earlier
-    // job start has been delivered
+  /** `body`'s result, failing if `body` started a Spark job. Job starts
+    * carry their thread's job group; a marker job in its own group, seen
+    * last on the in-order listener bus, means every earlier job start has
+    * been delivered. */
+  private def withoutJobs[T](what: String)(body: => T): T = {
     val groups = new ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -95,21 +91,36 @@ class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    val (out, evalGrams) = try {
-      sc.setJobGroup("decon-construct", "constructing decontaminateLazy")
-      val built = Decontamination.decontaminateLazy(tokens, "src0", 4, cfg)
+    try {
+      sc.setJobGroup("body", what)
+      val result = body
       sc.setJobGroup("marker", "listener bus marker")
       sc.parallelize(Seq(1), 1).count()
       sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
       assert(groups.contains("marker"))
-      assert(!groups.contains("decon-construct"), s"jobs started while building the plan: $groups")
-      built
+      assert(!groups.contains("body"), s"jobs started while $what: $groups")
+      result
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("after a warm-up call, reading the tokens table starts no Spark job") {
+    graft.sources.Tokens.table(spark, dir)
+    withoutJobs("reading the tokens table")(graft.sources.Tokens.table(spark, dir))
+  }
+
+  test("building the decontamination plan starts no Spark job") {
+    val rows = (0 until 200).map { i =>
+      val toks = Array.tabulate(6 + i % 9)(j => (i * 7 + j * 3) % 40)
+      (s"doc-$i", toks, toks.length, s"src${i % 3}")
+    }
+    val tokens = spark.createDataFrame(rows).toDF("doc_id", "tokens", "n_tok", "source")
+    val (out, evalGrams) = withoutJobs("building the decontamination plan")(
+      Decontamination.decontaminateLazy(tokens, "src0", 4, cfg))
     try {
       val exact = Decontamination.decontaminateExact(tokens, "src0", 4).collect().toSeq
       assert(out.collect().toSeq === exact)

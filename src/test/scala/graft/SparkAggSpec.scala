@@ -471,10 +471,10 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     var ss = 0
     elems.foreach(e => ss = BottomK.add(sh, sv, ss, SipHash.hashLong(K0, K1, e), e))
     val serialBytes = BottomK.toBytes(sh, sv, ss, BlockedBloom.TypeTag.Long,
-      SipHash.hashLong(K0, K1, K0 ^ K1))
+      SipHash.hashLong(K0, K1, K0 ^ K1), BottomK.SerialVersion, BottomK.LongValues)
     for (parts <- Seq(1, 3, 8)) {
       val bytes = elems.toDF("x").repartition(parts)
-        .agg(NativeAggs.column(Sample(K0, K1, 64, weighted = false), col("x")))
+        .agg(NativeAggs.column(Sample(K0, K1, 64, weighted = false, BottomK.LongValues), col("x")))
         .head().getAs[Array[Byte]](0)
       assert(bytes.sameElements(serialBytes), s"BottomK at $parts partitions differs from serial")
     }
@@ -505,12 +505,13 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     var ss = 0
     elems.foreach { e =>
       val b = e.getBytes("UTF-8")
-      ss = BottomK.addG(sh, sv, ss, SipHash.hash64(K0, K1, b), b)
+      ss = BottomK.add(sh, sv, ss, SipHash.hash64(K0, K1, b), b)
     }
-    val serialBytes = BottomK.toBytesStr(sh, sv, ss, SipHash.hashLong(K0, K1, K0 ^ K1))
+    val serialBytes = BottomK.toBytes(sh, sv, ss, BlockedBloom.TypeTag.String, SipHash.hashLong(K0, K1, K0 ^ K1),
+      BottomK.SerialVersion, BottomK.StringValues)
     for (parts <- Seq(1, 4)) {
       val bytes = elems.toDF("x").repartition(parts)
-        .agg(NativeAggs.column(StringSample(K0, K1, 64, weighted = false), col("x")))
+        .agg(NativeAggs.column(Sample(K0, K1, 64, weighted = false, BottomK.StringValues), col("x")))
         .head().getAs[Array[Byte]](0)
       assert(bytes.sameElements(serialBytes), s"string BottomK at $parts partitions != serial")
     }
@@ -630,19 +631,20 @@ class SparkAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("tokens fixture: a documents file rewritten under the same path is tokenized with its new words") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("tokens-fixture").toString
-    def write(texts: String*): Unit = texts.zipWithIndex.map { case (t, i) => (s"d$i", t, "s") }
+    // doc_id is BIGINT, as in the documents schema Tokens declares (FIXTURES.md §1)
+    def write(texts: String*): Unit = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "s") }
       .toDF("doc_id", "text", "source").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def tokens(): Map[String, Seq[Int]] = Tokens.table(spark, dir).collect()
       .map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
     try {
       write("alpha beta", "beta gamma")
-      assert(tokens() === Map("d0" -> Seq(1, 2), "d1" -> Seq(2, 3)))
+      assert(tokens() === Map("0" -> Seq(1, 2), "1" -> Seq(2, 3)))
       write("alpha beta", "beta zeta")
-      assert(tokens() === Map("d0" -> Seq(1, 2), "d1" -> Seq(2, 3)), "zeta takes the id gamma had")
+      assert(tokens() === Map("0" -> Seq(1, 2), "1" -> Seq(2, 3)), "zeta takes the id gamma had")
       write("alpha beta delta", "beta zeta")
       // delta sorts between beta and zeta: every id after beta moves
-      assert(tokens() === Map("d0" -> Seq(1, 2, 3), "d1" -> Seq(2, 4)))
+      assert(tokens() === Map("0" -> Seq(1, 2, 3), "1" -> Seq(2, 4)))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

@@ -2,6 +2,8 @@ package graft.core
 
 import org.scalacheck.{Gen, Prop, Properties}
 
+import BottomK.{LongValues, SerialVersion, SerialVersionWeighted}
+
 /** ScalaCheck properties for the bottom-k value sample: for ARBITRARY
   * element multisets, capacities, splits, and orders, the retained
   * (hash, value) pairs must be exactly the bottom-k of the distinct set
@@ -47,7 +49,8 @@ object BottomKPropertiesSpec extends Properties("BottomK") {
       val partials = xs.zipWithIndex.groupBy(_._2 % parts).toSeq.sortBy(_._1).map { case (_, chunk) =>
         val (h, v, s) = build(chunk.map(_._1), k)
         val (h2, v2, s2, _, _) =
-          BottomK.fromBytes(BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, keyHash))
+          BottomK.fromBytes(BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, keyHash, SerialVersion, LongValues),
+            SerialVersion, LongValues)
         (h2, v2, s2)
       }
       val (mh, mv, ms) = partials
@@ -81,7 +84,7 @@ object BottomKPropertiesSpec extends Properties("BottomK") {
     val (h, v) = BottomK.emptyBuffers(k)
     var s = 0
     elems.foreach { case (x, w) =>
-      s = BottomK.addW(h, v, s, BottomK.esKey(SipHash.hashLong(kk0, k1, x), w), x,
+      s = BottomK.add(h, v, s, BottomK.esKey(SipHash.hashLong(kk0, k1, x), w), x,
         BottomK.cmpLong)
     }
     (h, v, s)
@@ -135,4 +138,113 @@ object BottomKPropertiesSpec extends Properties("BottomK") {
       Prop(s1 == ms && h1.take(s1).sameElements(mh.take(ms)) &&
         v1.take(s1).sameElements(mv.take(ms))) :| s"k=$k parts=$parts"
     }
+
+  // ------------------------------------- model check of the bottom-k core
+  //
+  // KMV and the uniform and weighted samples share one insert and one
+  // merge. The model below is written from the definitions: KMV and the
+  // uniform sample keep the k smallest distinct keys by unsigned order;
+  // the weighted sample keeps the k smallest distinct (key, value) pairs
+  // by (unsigned key, value order). Keys come from a small pool (forced
+  // ties, unsigned-order extremes); inputs are split at random points into
+  // builds of mixed capacities and merged along a random tree.
+
+  /** One bottom-k structure through its public API: `value(key, rnd)`
+    * draws an entry's value (a function of the key for KMV and the uniform
+    * samples, as SipHash makes it in use), `order` is the value order. */
+  private final case class Structure[V](name: String, value: (Long, scala.util.Random) => V,
+      order: (V, V) => Int, newValues: Int => Array[V],
+      add: (Array[Long], Array[V], Int, Long, V) => Int,
+      merge: (Array[Long], Array[V], Int, Array[Long], Array[V], Int) => (Array[Long], Array[V], Int),
+      pairIdentity: Boolean)
+
+  private val kmv = Structure[AnyRef]("KMV", (_, _) => null, (_, _) => 0, _ => null,
+    (h, _, s, key, _) => Kmv.add(h, s, key),
+    (ah, _, as, bh, _, bs) => { val (h, n) = Kmv.merge(ah, as, bh, bs); (h, null, n) }, pairIdentity = false)
+
+  private def uniform[V](name: String, f: Long => V, order: (V, V) => Int,
+      newValues: Int => Array[V]): Structure[V] =
+    Structure[V](name, (key, _) => f(key), order, newValues,
+      (h, v, s, key, x) => BottomK.add(h, v, s, key, x),
+      (ah, av, as, bh, bv, bs) => BottomK.merge(ah, av, as, bh, bv, bs), pairIdentity = false)
+
+  private def weighted[V](name: String, pool: IndexedSeq[V], order: (V, V) => Int,
+      newValues: Int => Array[V]): Structure[V] =
+    Structure[V](name, (_, rnd) => pool(rnd.nextInt(pool.length)), order, newValues,
+      (h, v, s, key, x) => BottomK.add(h, v, s, key, x, order),
+      (ah, av, as, bh, bv, bs) => BottomK.merge(ah, av, as, bh, bv, bs, order), pairIdentity = true)
+
+  private def utf8(x: String): Array[Byte] = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  private val structures: Seq[Structure[_]] = Seq(
+    kmv,
+    uniform[Long]("uniform long", key => key * 0x9e3779b97f4a7c15L + 7L, BottomK.cmpLong, new Array[Long](_)),
+    uniform[Array[Byte]]("uniform string", key => utf8(key.toHexString), BottomK.cmpUtf8,
+      new Array[Array[Byte]](_)),
+    weighted[Long]("weighted long", (-3L to 3L), BottomK.cmpLong, new Array[Long](_)),
+    weighted[Array[Byte]]("weighted string", Vector("", "a", "ab", "b", "\uFFFD", "\uD800\uDC00").map(utf8),
+      BottomK.cmpUtf8, new Array[Array[Byte]](_)))
+
+  /** The model: sort by (unsigned key, value), drop repeated identities,
+    * keep the first k. */
+  private def model[V](st: Structure[V], xs: Seq[(Long, V)], k: Int): Vector[(Long, V)] = {
+    def cmp(a: (Long, V), b: (Long, V)): Int = {
+      val c = java.lang.Long.compareUnsigned(a._1, b._1)
+      if (c != 0) c else st.order(a._2, b._2)
+    }
+    xs.sortWith(cmp(_, _) < 0).foldLeft(Vector.empty[(Long, V)]) { (acc, e) =>
+      if (acc.nonEmpty && acc.last._1 == e._1 && (!st.pairIdentity || cmp(acc.last, e) == 0)) acc
+      else acc :+ e
+    }.take(k)
+  }
+
+  private def matches[V](st: Structure[V], got: (Array[Long], Array[V], Int),
+      want: Vector[(Long, V)]): Boolean = {
+    val (h, v, s) = got
+    s == want.length && want.indices.forall(i => h(i) == want(i)._1 &&
+      (v == null || st.order(v(i), want(i)._2) == 0))
+  }
+
+  private val genKeys: Gen[Vector[Long]] = for {
+    n <- Gen.choose(1, 40)
+    pool <- Gen.listOfN(n, Gen.frequency(6 -> Gen.long, 1 -> Gen.oneOf(0L, -1L, Long.MinValue, Long.MaxValue)))
+  } yield pool.toVector
+
+  private def check[V](st: Structure[V]): Prop =
+    Prop.forAllNoShrink(genKeys, Gen.choose(0, 300), Gen.listOfN(6, Gen.choose(4, 15)), Gen.long) {
+      (pool, n, caps, seed) =>
+        val rnd = new scala.util.Random(seed)
+        val xs = Vector.fill(n) { val key = pool(rnd.nextInt(pool.length)); (key, st.value(key, rnd)) }
+        def build(k: Int, part: Seq[(Long, V)]): (Array[Long], Array[V], Int) = {
+          val h = new Array[Long](k)
+          val v = st.newValues(k)
+          var s = 0
+          part.foreach { case (key, x) => s = st.add(h, v, s, key, x) }
+          (h, v, s)
+        }
+        // random split points, one capacity per part
+        val parts = 1 + rnd.nextInt(caps.length)
+        val cuts = 0 +: Vector.fill(parts - 1)(rnd.nextInt(n + 1)).sorted :+ n
+        val builds = (0 until parts).map { p =>
+          val part = xs.slice(cuts(p), cuts(p + 1))
+          (caps(p), part, build(caps(p), part))
+        }
+        val eachBuild = builds.forall { case (k, part, b) => matches(st, b, model(st, part, k)) }
+        // a random merge tree over the builds, each merge in a random operand order
+        var pending = builds.map(_._3).toVector
+        while (pending.length > 1) {
+          val (a, rest) = { val i = rnd.nextInt(pending.length); (pending(i), pending.patch(i, Nil, 1)) }
+          val (b, others) = { val j = rnd.nextInt(rest.length); (rest(j), rest.patch(j, Nil, 1)) }
+          val (l, r) = if (rnd.nextBoolean()) (a, b) else (b, a)
+          pending = others :+ st.merge(l._1, l._2, l._3, r._1, r._2, r._3)
+        }
+        val kMin = caps.take(parts).min
+        val want = model(st, xs, kMin)
+        Prop(eachBuild && matches(st, pending.head, want) &&
+          matches(st, build(kMin, rnd.shuffle(xs)), want)) :| s"${st.name} n=$n parts=$parts caps=$caps"
+    }
+
+  structures.foreach { st =>
+    property(s"${st.name}: builds and random merge trees match the bottom-k model") = check(st)
+  }
 }

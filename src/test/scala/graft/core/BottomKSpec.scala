@@ -2,6 +2,8 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import BottomK.{LongValues, SerialVersion, SerialVersionWeighted, StringValues}
+
 /** Bottom-k uniform value sample — exact sample below k, merge monoid
   * (split ≡ single build, any split, any order), determinism, uniformity
   * smoke, and serialization validation (family conventions). */
@@ -75,7 +77,7 @@ class BottomKSpec extends AnyFunSuite {
       var s = 0
       elems.foreach { e =>
         val b = e.getBytes("UTF-8")
-        s = BottomK.addG(h, v, s, SipHash.hash64(k0, k1, b), b)
+        s = BottomK.add(h, v, s, SipHash.hash64(k0, k1, b), b)
       }
       (h, v, s)
     }
@@ -86,47 +88,51 @@ class BottomKSpec extends AnyFunSuite {
     // split-merge == single build (the generic merge path)
     val (ah, av, as) = buildS(16, elems.take(100))
     val (bh, bv, bs) = buildS(16, elems.drop(100))
-    val (mh, mv, ms) = BottomK.mergeG(ah, av, as, bh, bv, bs)
+    val (mh, mv, ms) = BottomK.merge(ah, av, as, bh, bv, bs)
     assert(ms === s && mh.take(ms).sameElements(h.take(s)))
     (0 until ms).foreach(i => assert(mv(i).sameElements(v(i))))
     // string layout roundtrip, byte-deterministic
-    val bytes = BottomK.toBytesStr(h, v, s, 0xabcL)
-    val (h2, v2, s2, keyHash) = BottomK.fromBytesStr(bytes)
+    val bytes = BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.String, 0xabcL, SerialVersion, StringValues)
+    val (h2, v2, s2, _, keyHash) = BottomK.fromBytes(bytes, SerialVersion, StringValues)
     assert(s2 === s && keyHash === 0xabcL && h2.take(s).sameElements(h.take(s)))
     (0 until s).foreach(i => assert(v2(i).sameElements(v(i))))
-    assert(BottomK.toBytesStr(h2, v2, s2, keyHash).sameElements(bytes))
+    assert(BottomK.toBytes(h2, v2, s2, BlockedBloom.TypeTag.String, keyHash, SerialVersion, StringValues)
+      .sameElements(bytes))
     // each decoder refuses the other layout's tag
-    intercept[IllegalArgumentException](BottomK.fromBytes(bytes))
+    intercept[IllegalArgumentException](BottomK.fromBytes(bytes, SerialVersion, LongValues))
     val (lh, lv, ls) = build(16, 1L to 100L)
-    val longBytes = BottomK.toBytes(lh, lv, ls, BlockedBloom.TypeTag.Long, 0xabcL)
-    intercept[IllegalArgumentException](BottomK.fromBytesStr(longBytes))
+    val longBytes = BottomK.toBytes(lh, lv, ls, BlockedBloom.TypeTag.Long, 0xabcL, SerialVersion, LongValues)
+    intercept[IllegalArgumentException](BottomK.fromBytes(longBytes, SerialVersion, StringValues))
     // truncated string payload rejected
-    intercept[IllegalArgumentException](BottomK.fromBytesStr(bytes.take(bytes.length - 3)))
+    intercept[IllegalArgumentException](
+      BottomK.fromBytes(bytes.take(bytes.length - 3), SerialVersion, StringValues))
   }
 
   test("serialization roundtrips; corrupt headers and unsorted payloads rejected") {
     val (h, v, s) = build(64, 1L to 200L)
-    val bytes = BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL)
-    val (h2, v2, s2, tag, keyHash) = BottomK.fromBytes(bytes)
+    val bytes = BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL, SerialVersion, LongValues)
+    val (h2, v2, s2, tag, keyHash) = BottomK.fromBytes(bytes, SerialVersion, LongValues)
     assert(s2 === s && tag === BlockedBloom.TypeTag.Long && keyHash === 0xabcL)
     assert(h2.take(s).sameElements(h.take(s)) && v2.take(s).sameElements(v.take(s)))
-    assert(BottomK.toBytes(h2, v2, s2, tag, keyHash).sameElements(bytes))
-    intercept[IllegalArgumentException](BottomK.fromBytes(bytes.take(bytes.length - 1)))
-    intercept[IllegalArgumentException](BottomK.fromBytes(bytes.take(16)))
+    assert(BottomK.toBytes(h2, v2, s2, tag, keyHash, SerialVersion, LongValues).sameElements(bytes))
+    intercept[IllegalArgumentException](
+      BottomK.fromBytes(bytes.take(bytes.length - 1), SerialVersion, LongValues))
+    intercept[IllegalArgumentException](BottomK.fromBytes(bytes.take(16), SerialVersion, LongValues))
     def withHeader(field: Int, x: Long): Array[Byte] = {
       val b = bytes.clone()
       java.nio.ByteBuffer.wrap(b).putLong(field * 8, x)
       b
     }
-    intercept[IllegalArgumentException](BottomK.fromBytes(withHeader(0, 99L))) // version
-    intercept[IllegalArgumentException](BottomK.fromBytes(withHeader(3, (1L << 32) + 64L))) // k
-    intercept[IllegalArgumentException](BottomK.fromBytes(withHeader(4, -1L))) // size
+    def decode(b: Array[Byte]) = BottomK.fromBytes(b, SerialVersion, LongValues)
+    intercept[IllegalArgumentException](decode(withHeader(0, 99L))) // version
+    intercept[IllegalArgumentException](decode(withHeader(3, (1L << 32) + 64L))) // k
+    intercept[IllegalArgumentException](decode(withHeader(4, -1L))) // size
     // swap two hashes -> ascending-order invariant violated
     val bad = bytes.clone()
     val bb = java.nio.ByteBuffer.wrap(bad)
     val a0 = bb.getLong(40); val a1 = bb.getLong(48)
     bb.putLong(40, a1); bb.putLong(48, a0)
-    intercept[IllegalArgumentException](BottomK.fromBytes(bad))
+    intercept[IllegalArgumentException](BottomK.fromBytes(bad, SerialVersion, LongValues))
   }
 
   // ------------------------------------------ ES-weighted sample (v2)
@@ -136,7 +142,7 @@ class BottomKSpec extends AnyFunSuite {
     val (h, v) = BottomK.emptyBuffers(k)
     var s = 0
     elems.foreach { case (x, w) =>
-      s = BottomK.addW(h, v, s, BottomK.esKey(SipHash.hashLong(kk0, k1, x), w), x,
+      s = BottomK.add(h, v, s, BottomK.esKey(SipHash.hashLong(kk0, k1, x), w), x,
         BottomK.cmpLong)
     }
     (h, v, s)
@@ -175,17 +181,18 @@ class BottomKSpec extends AnyFunSuite {
 
   test("weighted layout (v2) round-trips and refuses to cross-decode with uniform (v1)") {
     val (h, v, s) = buildWeighted(16, (1L to 100L).map(x => (x, (x % 7 + 1).toDouble)))
-    val bytes = BottomK.toBytesWeighted(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL)
-    val (h2, v2, s2, tag, keyHash) = BottomK.fromBytesWeighted(bytes)
+    val bytes = BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL, SerialVersionWeighted, LongValues)
+    val (h2, v2, s2, tag, keyHash) = BottomK.fromBytes(bytes, SerialVersionWeighted, LongValues)
     assert(s2 === s && tag === BlockedBloom.TypeTag.Long && keyHash === 0xabcL)
     assert(h2.take(s).sameElements(h.take(s)) && v2.take(s).sameElements(v.take(s)))
-    assert(BottomK.toBytesWeighted(h2, v2, s2, tag, keyHash).sameElements(bytes))
+    assert(BottomK.toBytes(h2, v2, s2, tag, keyHash, SerialVersionWeighted, LongValues).sameElements(bytes))
     // cross-version decodes fail loudly in BOTH directions, naming the mix
-    val e1 = intercept[IllegalArgumentException](BottomK.fromBytes(bytes))
+    val e1 = intercept[IllegalArgumentException](BottomK.fromBytes(bytes, SerialVersion, LongValues))
     assert(e1.getMessage.contains("weighted"))
     val (uh, uv, us) = build(16, 1L to 100L)
-    val uniformBytes = BottomK.toBytes(uh, uv, us, BlockedBloom.TypeTag.Long, 0xabcL)
-    intercept[IllegalArgumentException](BottomK.fromBytesWeighted(uniformBytes))
+    val uniformBytes =
+      BottomK.toBytes(uh, uv, us, BlockedBloom.TypeTag.Long, 0xabcL, SerialVersion, LongValues)
+    intercept[IllegalArgumentException](BottomK.fromBytes(uniformBytes, SerialVersionWeighted, LongValues))
   }
 
   test("weighted STRING layout round-trips and refuses uniform string payloads") {
@@ -195,18 +202,22 @@ class BottomKSpec extends AnyFunSuite {
     var s = 0
     elems.foreach { case (x, w) =>
       val bytes = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      s = BottomK.addW(h, v, s, BottomK.esKey(SipHash.hash64(k0, k1, bytes), w), bytes,
+      s = BottomK.add(h, v, s, BottomK.esKey(SipHash.hash64(k0, k1, bytes), w), bytes,
         BottomK.cmpUtf8)
     }
-    val bytes = BottomK.toBytesStrWeighted(h, v, s, 0xabcL)
-    val (h2, v2, s2, keyHash) = BottomK.fromBytesStrWeighted(bytes)
+    val bytes =
+      BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.String, 0xabcL, SerialVersionWeighted, StringValues)
+    val (h2, v2, s2, _, keyHash) = BottomK.fromBytes(bytes, SerialVersionWeighted, StringValues)
     assert(s2 === s && keyHash === 0xabcL && h2.take(s).sameElements(h.take(s)))
     (0 until s).foreach(i => assert(v2(i).sameElements(v(i))))
     // version and layout cross-decodes all fail loudly
-    intercept[IllegalArgumentException](BottomK.fromBytesStr(bytes))          // v2 as v1
-    intercept[IllegalArgumentException](BottomK.fromBytesWeighted(bytes))     // string as long
-    val uniformStr = BottomK.toBytesStr(h2, v2, s2, 0xabcL)
-    intercept[IllegalArgumentException](BottomK.fromBytesStrWeighted(uniformStr)) // v1 as v2
+    intercept[IllegalArgumentException](BottomK.fromBytes(bytes, SerialVersion, StringValues)) // v2 as v1
+    intercept[IllegalArgumentException](
+      BottomK.fromBytes(bytes, SerialVersionWeighted, LongValues)) // string as long
+    val uniformStr =
+      BottomK.toBytes(h2, v2, s2, BlockedBloom.TypeTag.String, 0xabcL, SerialVersion, StringValues)
+    intercept[IllegalArgumentException](
+      BottomK.fromBytes(uniformStr, SerialVersionWeighted, StringValues)) // v1 as v2
   }
 
   test("weighted split + serialized merge equals single build, any split") {
@@ -215,16 +226,16 @@ class BottomKSpec extends AnyFunSuite {
     (1 to 7).foreach { parts =>
       val partials = elems.zipWithIndex.groupBy(_._2 % parts).values.map { chunk =>
         val (h, v, s) = buildWeighted(32, chunk.map(_._1))
-        BottomK.toBytesWeighted(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL)
+        BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL, SerialVersionWeighted, LongValues)
       }
       val merged = partials.reduce { (a, b) =>
-        val (ah, av, as, tag, kh) = BottomK.fromBytesWeighted(a)
-        val (bh, bv, bs, _, _) = BottomK.fromBytesWeighted(b)
-        val (mh, mv, ms) = BottomK.mergeW(ah, av, as, bh, bv, bs, BottomK.cmpLong)
-        BottomK.toBytesWeighted(mh, mv, ms, tag, kh)
+        val (ah, av, as, tag, kh) = BottomK.fromBytes(a, SerialVersionWeighted, LongValues)
+        val (bh, bv, bs, _, _) = BottomK.fromBytes(b, SerialVersionWeighted, LongValues)
+        val (mh, mv, ms) = BottomK.merge(ah, av, as, bh, bv, bs, BottomK.cmpLong)
+        BottomK.toBytes(mh, mv, ms, tag, kh, SerialVersionWeighted, LongValues)
       }
       assert(merged.sameElements(
-        BottomK.toBytesWeighted(dh, dv, ds, BlockedBloom.TypeTag.Long, 0xabcL)),
+        BottomK.toBytes(dh, dv, ds, BlockedBloom.TypeTag.Long, 0xabcL, SerialVersionWeighted, LongValues)),
         s"parts=$parts")
     }
   }
@@ -238,30 +249,30 @@ class BottomKSpec extends AnyFunSuite {
     val (h, v) = BottomK.emptyBuffers(8)
     var s = 0
     val key = BottomK.esKey(0x1234abcdL << 11, 3.0)
-    s = BottomK.addW(h, v, s, key, 77L, BottomK.cmpLong)
-    s = BottomK.addW(h, v, s, key, 13L, BottomK.cmpLong) // collision, smaller value
+    s = BottomK.add(h, v, s, key, 77L, BottomK.cmpLong)
+    s = BottomK.add(h, v, s, key, 13L, BottomK.cmpLong) // collision, smaller value
     assert(s === 2)
     assert(h(0) === key && h(1) === key)
     assert(v(0) === 13L && v(1) === 77L) // value ascending within the run
-    s = BottomK.addW(h, v, s, key, 77L, BottomK.cmpLong) // exact pair dup
+    s = BottomK.add(h, v, s, key, 77L, BottomK.cmpLong) // exact pair dup
     assert(s === 2)
     // merge dedups exact pairs only, keeps the colliding distinct pair
     val (h2, v2) = BottomK.emptyBuffers(8)
     var s2 = 0
-    s2 = BottomK.addW(h2, v2, s2, key, 77L, BottomK.cmpLong)
-    s2 = BottomK.addW(h2, v2, s2, key, 99L, BottomK.cmpLong)
-    val (mh, mv, ms) = BottomK.mergeW(h, v, s, h2, v2, s2, BottomK.cmpLong)
+    s2 = BottomK.add(h2, v2, s2, key, 77L, BottomK.cmpLong)
+    s2 = BottomK.add(h2, v2, s2, key, 99L, BottomK.cmpLong)
+    val (mh, mv, ms) = BottomK.merge(h, v, s, h2, v2, s2, BottomK.cmpLong)
     assert(ms === 3)
     assert(mh.take(3).forall(_ == key) && mv.take(3).sameElements(Array(13L, 77L, 99L)))
     // saturation tie-break: at capacity, a pair >= the max pair is rejected,
     // a pair below it displaces the max
     val (h3, v3) = BottomK.emptyBuffers(2)
     var s3 = 0
-    s3 = BottomK.addW(h3, v3, s3, key, 20L, BottomK.cmpLong)
-    s3 = BottomK.addW(h3, v3, s3, key, 10L, BottomK.cmpLong)
-    s3 = BottomK.addW(h3, v3, s3, key, 30L, BottomK.cmpLong) // >= max pair: rejected
+    s3 = BottomK.add(h3, v3, s3, key, 20L, BottomK.cmpLong)
+    s3 = BottomK.add(h3, v3, s3, key, 10L, BottomK.cmpLong)
+    s3 = BottomK.add(h3, v3, s3, key, 30L, BottomK.cmpLong) // >= max pair: rejected
     assert(s3 === 2 && v3.take(2).sameElements(Array(10L, 20L)))
-    s3 = BottomK.addW(h3, v3, s3, key, 15L, BottomK.cmpLong) // displaces (key, 20)
+    s3 = BottomK.add(h3, v3, s3, key, 15L, BottomK.cmpLong) // displaces (key, 20)
     assert(s3 === 2 && v3.take(2).sameElements(Array(10L, 15L)))
   }
 
@@ -275,12 +286,12 @@ class BottomKSpec extends AnyFunSuite {
     val key = BottomK.esKey(0x1234abcdL << 11, 3.0)
     val (h, v) = BottomK.emptyBuffers(8)
     var s = 0
-    Seq(77L, 13L, 99L).foreach(x => s = BottomK.addW(h, v, s, key, x, BottomK.cmpLong))
-    val bytes = BottomK.toBytesWeighted(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL)
-    val (h2, v2, s2, tag, kh) = BottomK.fromBytesWeighted(bytes)
+    Seq(77L, 13L, 99L).foreach(x => s = BottomK.add(h, v, s, key, x, BottomK.cmpLong))
+    val bytes = BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, 0xabcL, SerialVersionWeighted, LongValues)
+    val (h2, v2, s2, tag, kh) = BottomK.fromBytes(bytes, SerialVersionWeighted, LongValues)
     assert(s2 === 3 && tag === BlockedBloom.TypeTag.Long && kh === 0xabcL)
     assert(h2.take(s).sameElements(h.take(s)) && v2.take(s).sameElements(v.take(s)))
-    assert(BottomK.toBytesWeighted(h2, v2, s2, tag, kh).sameElements(bytes))
+    assert(BottomK.toBytes(h2, v2, s2, tag, kh, SerialVersionWeighted, LongValues).sameElements(bytes))
     // corrupt: swap the values of the first two collided entries so the
     // equal-key run's values DESCEND -> pair-ascending validation rejects
     val bad = bytes.clone()
@@ -288,27 +299,28 @@ class BottomKSpec extends AnyFunSuite {
     val vOff = 40 + 8 * s
     val x0 = bb.getLong(vOff); val x1 = bb.getLong(vOff + 8)
     bb.putLong(vOff, x1); bb.putLong(vOff + 8, x0)
-    val e = intercept[IllegalArgumentException](BottomK.fromBytesWeighted(bad))
+    val e = intercept[IllegalArgumentException](BottomK.fromBytes(bad, SerialVersionWeighted, LongValues))
     assert(e.getMessage.contains("pairs not strictly ascending"))
     // exact duplicated PAIR in the payload is likewise rejected
     val dup = bytes.clone()
     val db = java.nio.ByteBuffer.wrap(dup)
     db.putLong(vOff + 8, db.getLong(vOff))
-    intercept[IllegalArgumentException](BottomK.fromBytesWeighted(dup))
+    intercept[IllegalArgumentException](BottomK.fromBytes(dup, SerialVersionWeighted, LongValues))
     // string layout: same collided-key round-trip
     def b(x: String) = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val sh = new Array[Long](8)
     val sv = new Array[Array[Byte]](8)
     var ss = 0
     Seq("mango", "apple", "pear").foreach(x =>
-      ss = BottomK.addW(sh, sv, ss, key, b(x), BottomK.cmpUtf8))
-    val sBytes = BottomK.toBytesStrWeighted(sh, sv, ss, 0xabcL)
-    val (sh2, sv2, ss2, skh) = BottomK.fromBytesStrWeighted(sBytes)
+      ss = BottomK.add(sh, sv, ss, key, b(x), BottomK.cmpUtf8))
+    val sBytes =
+      BottomK.toBytes(sh, sv, ss, BlockedBloom.TypeTag.String, 0xabcL, SerialVersionWeighted, StringValues)
+    val (sh2, sv2, ss2, _, skh) = BottomK.fromBytes(sBytes, SerialVersionWeighted, StringValues)
     assert(ss2 === 3 && skh === 0xabcL && sh2.take(3).forall(_ == key))
     assert(sv2.take(3).map(new String(_, java.nio.charset.StandardCharsets.UTF_8)).toSeq
       === Seq("apple", "mango", "pear"))
     // and the serialized second-level merge path accepts collided payloads
-    val (mh, mv, ms) = BottomK.mergeW(h2, v2, s2, h2, v2, s2, BottomK.cmpLong)
+    val (mh, mv, ms) = BottomK.merge(h2, v2, s2, h2, v2, s2, BottomK.cmpLong)
     assert(ms === s2 && mh.take(ms).sameElements(h2.take(s2)))
   }
 

@@ -2,6 +2,8 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import BottomK.{LongValues, SerialVersion, SerialVersionWeighted, StringValues}
+
 /** Golden serialized-sketch files (the analogue of the reference's
   * tests/serialized fixtures, `tests/Main.hs:433-459`): committed
   * bytes must equal a fresh build forever — any drift in hashing, bit
@@ -61,12 +63,13 @@ class GoldenFilesSpec extends AnyFunSuite {
     val (h, v) = BottomK.emptyBuffers(32)
     var s = 0
     (1L to 5000L).foreach(x => s = BottomK.add(h, v, s, SipHash.hashLong(k0, k1, x), x))
-    val fresh = BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, SipHash.hashLong(k0, k1, k0 ^ k1))
+    val fresh = BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, SipHash.hashLong(k0, k1, k0 ^ k1),
+      SerialVersion, LongValues)
     val stored = golden("bottomk_32.bin")
     assert(java.util.Arrays.equals(fresh, stored), "BottomK golden drift")
     // determinism-across-versions is the operator's whole point: the
     // committed sample must decode to the same 32 values forever
-    val (h2, v2, s2, tag, _) = BottomK.fromBytes(stored)
+    val (h2, v2, s2, tag, _) = BottomK.fromBytes(stored, SerialVersion, LongValues)
     assert(tag === BlockedBloom.TypeTag.Long && s2 === 32)
     assert(v2.take(s2).forall(x => x >= 1L && x <= 5000L))
     (0 until s2).foreach(i => assert(h2(i) === SipHash.hashLong(k0, k1, v2(i))))
@@ -135,29 +138,33 @@ class GoldenFilesSpec extends AnyFunSuite {
     val (h, _) = BottomK.emptyBuffers(32)
     val v = new Array[Array[Byte]](32)
     var s = 0
-    (1 to 5000).foreach { i => val b = utf8(i); s = BottomK.addG(h, v, s, SipHash.hash64(k0, k1, b), b) }
+    (1 to 5000).foreach { i => val b = utf8(i); s = BottomK.add(h, v, s, SipHash.hash64(k0, k1, b), b) }
     val stored = golden("bottomk_str_32.bin")
-    assert(java.util.Arrays.equals(BottomK.toBytesStr(h, v, s, keyHash), stored), "string BottomK golden drift")
-    val (h2, v2, s2, kh) = BottomK.fromBytesStr(stored)
+    assert(java.util.Arrays.equals(
+      BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.String, keyHash, SerialVersion, StringValues), stored),
+      "string BottomK golden drift")
+    val (h2, v2, s2, _, kh) = BottomK.fromBytes(stored, SerialVersion, StringValues)
     assert(s2 === 32 && kh === keyHash)
     (0 until s2).foreach(i => assert(h2(i) === SipHash.hash64(k0, k1, v2(i))))
-    val e = intercept[IllegalArgumentException](BottomK.fromBytesStrWeighted(stored))
+    val e = intercept[IllegalArgumentException](
+      BottomK.fromBytes(stored, SerialVersionWeighted, StringValues))
     assert(e.getMessage.contains("must not mix"))
   }
 
   test("bottomk weighted golden file: byte-identical rebuild; the uniform reader rejects it") {
     val (h, v) = BottomK.emptyBuffers(32)
     var s = 0
-    (1L to 5000L).foreach(x => s = BottomK.addW(h, v, s,
+    (1L to 5000L).foreach(x => s = BottomK.add(h, v, s,
       BottomK.esKey(SipHash.hashLong(k0, k1, x), (1 + x % 7).toDouble), x, BottomK.cmpLong))
     val stored = golden("bottomk_weighted_32.bin")
     assert(java.util.Arrays.equals(
-      BottomK.toBytesWeighted(h, v, s, BlockedBloom.TypeTag.Long, keyHash), stored), "weighted BottomK golden drift")
-    val (h2, v2, s2, tag, _) = BottomK.fromBytesWeighted(stored)
+      BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.Long, keyHash, SerialVersionWeighted, LongValues), stored),
+      "weighted BottomK golden drift")
+    val (h2, v2, s2, tag, _) = BottomK.fromBytes(stored, SerialVersionWeighted, LongValues)
     assert(tag === BlockedBloom.TypeTag.Long && s2 === 32)
     (0 until s2).foreach(i => assert(h2(i) ===
       BottomK.esKey(SipHash.hashLong(k0, k1, v2(i)), (1 + v2(i) % 7).toDouble)))
-    val e = intercept[IllegalArgumentException](BottomK.fromBytes(stored))
+    val e = intercept[IllegalArgumentException](BottomK.fromBytes(stored, SerialVersion, LongValues))
     assert(e.getMessage.contains("must not mix"))
   }
 
@@ -167,15 +174,16 @@ class GoldenFilesSpec extends AnyFunSuite {
     var s = 0
     (1 to 5000).foreach { i =>
       val b = utf8(i)
-      s = BottomK.addW(h, v, s, BottomK.esKey(SipHash.hash64(k0, k1, b), (1 + i % 7).toDouble), b, BottomK.cmpUtf8)
+      s = BottomK.add(h, v, s, BottomK.esKey(SipHash.hash64(k0, k1, b), (1 + i % 7).toDouble), b, BottomK.cmpUtf8)
     }
     val stored = golden("bottomk_weighted_str_32.bin")
-    assert(java.util.Arrays.equals(BottomK.toBytesStrWeighted(h, v, s, keyHash), stored),
+    assert(java.util.Arrays.equals(
+      BottomK.toBytes(h, v, s, BlockedBloom.TypeTag.String, keyHash, SerialVersionWeighted, StringValues), stored),
       "weighted string BottomK golden drift")
-    val (_, v2, s2, kh) = BottomK.fromBytesStrWeighted(stored)
+    val (_, v2, s2, _, kh) = BottomK.fromBytes(stored, SerialVersionWeighted, StringValues)
     assert(s2 === 32 && kh === keyHash)
     assert(v2.take(s2).forall(b => new String(b, "UTF-8").startsWith("doc-")))
-    val e = intercept[IllegalArgumentException](BottomK.fromBytesStr(stored))
+    val e = intercept[IllegalArgumentException](BottomK.fromBytes(stored, SerialVersion, StringValues))
     assert(e.getMessage.contains("must not mix"))
   }
 

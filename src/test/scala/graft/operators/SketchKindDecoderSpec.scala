@@ -7,6 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
+import graft.core.BottomK.{LongValues, StringValues}
 import graft.operators.SketchKinds._
 
 /** One decoder property over every sketch kind: each kind's validated
@@ -73,17 +74,18 @@ class SketchKindDecoderSpec extends AnyFunSuite {
         Seq(golden("tdigest_100.bin"), built(TDigestKind(20), SketchInput.Doubles, doubles))),
       ("heavy hitters", HeavyHitters(16),
         Seq(golden("freqitems_16.bin"), built(HeavyHitters(8), SketchInput.Longs, longs))),
-      ("uniform sample", Sample(k0, k1, 32, weighted = false),
-        Seq(golden("bottomk_32.bin"), built(Sample(k0, k1, 8, weighted = false), SketchInput.Longs, longs))),
-      ("weighted sample", Sample(k0, k1, 32, weighted = true),
+      ("uniform sample", Sample(k0, k1, 32, weighted = false, LongValues),
+        Seq(golden("bottomk_32.bin"),
+          built(Sample(k0, k1, 8, weighted = false, LongValues), SketchInput.Longs, longs))),
+      ("weighted sample", Sample(k0, k1, 32, weighted = true, LongValues),
         Seq(golden("bottomk_weighted_32.bin"),
-          built(Sample(k0, k1, 8, weighted = true), SketchInput.Longs, longs))),
-      ("uniform string sample", StringSample(k0, k1, 32, weighted = false),
+          built(Sample(k0, k1, 8, weighted = true, LongValues), SketchInput.Longs, longs))),
+      ("uniform string sample", Sample(k0, k1, 32, weighted = false, StringValues),
         Seq(golden("bottomk_str_32.bin"),
-          built(StringSample(k0, k1, 8, weighted = false), SketchInput.Strings, strings))),
-      ("weighted string sample", StringSample(k0, k1, 32, weighted = true),
+          built(Sample(k0, k1, 8, weighted = false, StringValues), SketchInput.Strings, strings))),
+      ("weighted string sample", Sample(k0, k1, 32, weighted = true, StringValues),
         Seq(golden("bottomk_weighted_str_32.bin"),
-          built(StringSample(k0, k1, 8, weighted = true), SketchInput.Strings, strings))))
+          built(Sample(k0, k1, 8, weighted = true, StringValues), SketchInput.Strings, strings))))
   }
 
   /** The three mutation families over `x`, labelled. */

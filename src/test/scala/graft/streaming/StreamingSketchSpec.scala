@@ -192,7 +192,7 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = stream.toDF().toDF("ts", "source", "tokens")
     val exploded = df.select(col("ts"), col("source"), explode(col("tokens")).as("token"))
     val out = StreamingSketch.windowed(exploded, "ts", "10 minutes", window(col("ts"), "5 minutes"))(
-      column(Sample(Keys.DefaultK0, Keys.DefaultK1, 8, weighted = false), col("token").cast("long"))
+      column(Sample(Keys.DefaultK0, Keys.DefaultK1, 8, weighted = false, graft.core.BottomK.LongValues), col("token").cast("long"))
         .as("sample"))
     val query = out.writeStream.outputMode("complete")
       .format("memory").queryName("stream_bk").start()
@@ -212,11 +212,13 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val serialBytes = graft.core.BottomK.toBytes(sh, sv, s,
         graft.core.BlockedBloom.TypeTag.Long,
-        graft.core.SipHash.hashLong(Keys.DefaultK0, Keys.DefaultK1, Keys.DefaultK0 ^ Keys.DefaultK1))
+        graft.core.SipHash.hashLong(Keys.DefaultK0, Keys.DefaultK1, Keys.DefaultK0 ^ Keys.DefaultK1),
+        graft.core.BottomK.SerialVersion, graft.core.BottomK.LongValues)
       assert(java.util.Arrays.equals(bytes, serialBytes),
         "streaming bottom-k sample differs from serial build")
       // and the sampled values are genuinely a subset of the streamed tokens
-      val (_, v2, s2, _, _) = graft.core.BottomK.fromBytes(bytes)
+      val (_, v2, s2, _, _) = graft.core.BottomK.fromBytes(bytes,
+        graft.core.BottomK.SerialVersion, graft.core.BottomK.LongValues)
       assert(s2 === 8 && v2.take(s2).forall(x => allTokens.contains(x.toInt)))
     } finally query.stop()
   }
@@ -227,7 +229,7 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Timestamp, String, Long, Long)]
     val df = stream.toDF().toDF("ts", "source", "id", "w")
     val out = StreamingSketch.windowed(df, "ts", "10 minutes", window(col("ts"), "5 minutes"))(
-      column(Sample(Keys.DefaultK0, Keys.DefaultK1, 4, weighted = true), col("id"), col("w"))
+      column(Sample(Keys.DefaultK0, Keys.DefaultK1, 4, weighted = true, graft.core.BottomK.LongValues), col("id"), col("w"))
         .as("sample"))
     val query = out.writeStream.outputMode("complete")
       .format("memory").queryName("stream_wbk").start()
@@ -245,14 +247,15 @@ class StreamingSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (sh, sv) = graft.core.BottomK.emptyBuffers(4)
       var s = 0
       (1L to 60L).foreach { i =>
-        s = graft.core.BottomK.addW(sh, sv, s,
+        s = graft.core.BottomK.add(sh, sv, s,
           graft.core.BottomK.esKey(
             graft.core.SipHash.hashLong(Keys.DefaultK0, Keys.DefaultK1, i), w(i).toDouble), i,
           graft.core.BottomK.cmpLong)
       }
-      val serialBytes = graft.core.BottomK.toBytesWeighted(sh, sv, s,
+      val serialBytes = graft.core.BottomK.toBytes(sh, sv, s,
         graft.core.BlockedBloom.TypeTag.Long,
-        graft.core.SipHash.hashLong(Keys.DefaultK0, Keys.DefaultK1, Keys.DefaultK0 ^ Keys.DefaultK1))
+        graft.core.SipHash.hashLong(Keys.DefaultK0, Keys.DefaultK1, Keys.DefaultK0 ^ Keys.DefaultK1),
+        graft.core.BottomK.SerialVersionWeighted, graft.core.BottomK.LongValues)
       assert(java.util.Arrays.equals(bytes, serialBytes),
         "streaming weighted sample differs from serial build")
     } finally query.stop()
