@@ -851,16 +851,15 @@ object PipelineQueries {
     * Plan shape: ONE documents scan carries quality + fingerprint +
     * repetition flags (map-side kernels + the fp window); the
     * contamination drop-set arrives as an ids-only frame from the
-    * decontamination path (uncontaminated grams never shuffle) joined on
-    * doc_id; one source-keyed rollup. Every cell integer-exact — DuckDB
+    * decontamination hits ([[operators.BloomJoin.semi]]: uncontaminated
+    * grams never shuffle) joined on doc_id; one source-keyed rollup. Every cell integer-exact — DuckDB
     * recomputes all six stages from raw text. */
   def curationFunnel(spark: SparkSession, dir: String,
       evalSource: String = "src0"): DataFrame = {
     val d = Tokens.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
-    val (contamIds, evalGrams) = operators.Decontamination.contaminatedDocIdsLazy(
-      Tokens.table(spark, dir), evalSource, 4, SketchQueries.bloomCfg)
-    try {
+    operators.Decontamination.contaminated(
+        Tokens.table(spark, dir), evalSource, 4, SketchQueries.bloomCfg) { hits =>
       val flags = TextPipeline.withRepetitionMetrics(TextPipeline.withQualityMetrics(d))
         .withColumn("fp", TextPipeline.fingerprintCol(d, col("text")))
         .withColumn("kept", row_number().over(
@@ -873,13 +872,13 @@ object PipelineQueries {
       // n_clean caught only downstream by the oracle, not at the join;
       // a non-numeric drift now fails the cast loudly under ANSI instead)
       val withContam = flags
-        .join(contamIds.select(col("doc_id").cast("long").as("contam_key"),
-            lit(true).as("contam")),
+        .join(hits.select(col("doc_id")).distinct().select(
+            col("doc_id").cast("long").as("contam_key"), lit(true).as("contam")),
           col("doc_id") === col("contam_key"), "left")
         .withColumn("clean", coalesce(col("contam"), lit(false)) === false)
         .withColumn("final",
           col("kept") && col("quality_ok") && col("clean") && !col("repetitive"))
-      val result = withContam.groupBy(col("source"))
+      withContam.groupBy(col("source"))
         .agg(
           count(lit(1)).as("n_docs"),
           sum(when(col("quality_ok"), 1L).otherwise(0L)).as("n_quality"),
@@ -889,8 +888,7 @@ object PipelineQueries {
           sum(when(col("final"), 1L).otherwise(0L)).as("n_final"),
           sum(when(col("final"), col("word_count")).otherwise(0L)).as("tok_final"))
         .orderBy(col("source"))
-      Frames.materialize(result)
-    } finally evalGrams.unpersist()
+    }
   }
 
   /** Exact vocabulary build (`q_vocab_build`): the corpus-wide token

@@ -125,37 +125,20 @@ object SketchQueries {
       .select(col("source"), col("sk.bloom").as("sketch")), "sketch"))
   }
 
-  /** Runtime-filter pattern (SURVEY.md §2.2 "Joins"): Bloom built on the
-    * build side (tokens of lang='en' docs), broadcast, used to pre-filter
-    * the probe side, then an exact semi-join — exact results regardless of
-    * false positives; the Bloom only prunes the shuffle. */
+  /** Runtime-filter pattern (SURVEY.md §2.2 "Joins"), through
+    * [[operators.BloomJoin.semi]]: the distinct tokens of lang='en' docs
+    * build the Bloom, which prefilters every (source, token) pair before
+    * the exact semi-join — exact results regardless of false positives. */
   def bloomPrefilterSemijoin(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tokens.documents(spark, dir)
     val t = Tokens.table(spark, dir)
     val enDocIds = docs.where(col("lang") === "en").select(col("doc_id").cast("string").as("doc_id"))
-    // persisted: evaluated once to build the Bloom, reused by the exact
-    // confirmation join (otherwise the join+explode+distinct re-executes).
-    // The final <= #sources-row result is materialized HERE so the cache is
-    // released deterministically (round-3 VERDICT #3: persist() with no
-    // unpersist() accumulated one cached RDD per invocation for the
-    // session's lifetime — bench laps and the driver's repeated runs leak).
     // explode_outer + not-null: one tokenize evaluation (see `exploded`)
-    val buildSide = t.join(enDocIds, "doc_id")
+    val enTokens = t.join(enDocIds, "doc_id")
       .select(explode_outer(col("tokens")).as("token"))
-      .where(col("token").isNotNull).distinct().persist()
-    try {
-      // the Bloom over the build side, as a scalar subquery of this query:
-      // decoded once per task, probed in codegen
-      val sketch = buildSide.agg(bloomAgg(col("token"))).scalar()
-      val probe = exploded(t).distinct()
-      val prefiltered = probe.where(GraftFunctions.bloomMightContain(sketch, col("token")))
-      val result = prefiltered
-        .join(buildSide, Seq("token"), "left_semi") // exact confirmation join
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_shared"))
-        .orderBy(col("source"))
-      Frames.materialize(result) // bounded: one row per source
-    } finally buildSide.unpersist()
+      .where(col("token").isNotNull).distinct()
+    operators.BloomJoin.semi(exploded(t).distinct(), "token", enTokens, "token", bloomCfg)(
+      _.groupBy(col("source")).agg(count(lit(1)).as("n_shared")).orderBy(col("source")))
   }
 
   /** Merge all per-source sketches into one global filter (second-level
@@ -491,29 +474,20 @@ object SketchQueries {
       .orderBy(col("source"))
   }
 
-  /** The canonical runtime-filter join on the TPC-H-ish tables: build a
-    * Bloom over `o_orderkey` of 'P'-status orders (the selective build
-    * side), pre-filter `lineitem` probes with it, then the exact semi-join
-    * confirms — exact regardless of false positives, with the Bloom pruning
-    * the shuffle (the pattern behind Spark's own
-    * spark.sql.optimizer.runtime.bloomFilter rewrite, SURVEY.md §2.2). */
+  /** The canonical runtime-filter join on the TPC-H-ish tables, through
+    * [[operators.BloomJoin.semi]]: a Bloom over `o_orderkey` of 'P'-status
+    * orders (the selective build side) prefilters `lineitem`, then the
+    * exact semi-join confirms — exact regardless of false positives (the
+    * pattern behind Spark's own spark.sql.optimizer.runtime.bloomFilter
+    * rewrite, SURVEY.md §2.2). */
   def bloomJoinLineitem(spark: SparkSession, dir: String): DataFrame = {
     val orders = spark.read.parquet(s"$dir/orders.parquet")
     val lineitem = spark.read.parquet(s"$dir/lineitem.parquet")
-    // persisted build side, released deterministically after the single-row
-    // result materializes (round-3 VERDICT #3 — no per-invocation cache leak)
-    val buildSide = orders.where(col("o_orderstatus") === "P")
-      .select(col("o_orderkey")).persist()
-    try {
-      val sketch = buildSide.agg(bloomAgg(col("o_orderkey").cast("long"))).scalar()
-      val result = lineitem
-        .where(GraftFunctions.bloomMightContain(sketch, col("l_orderkey")))
-        .join(buildSide.withColumnRenamed("o_orderkey", "l_orderkey"), Seq("l_orderkey"), "left_semi")
-        // quantities are integral doubles; cast BEFORE summing so both engines
-        // sum integers exactly (double-accumulation order is not portable)
-        .agg(count(lit(1)).as("n_lines"), sum(col("l_quantity").cast("long")).as("sum_qty"))
-      Frames.materialize(result) // bounded: exactly one row
-    } finally buildSide.unpersist()
+    operators.BloomJoin.semi(lineitem, "l_orderkey",
+        orders.where(col("o_orderstatus") === "P"), "o_orderkey", bloomCfg)(
+      // quantities are integral doubles; cast BEFORE summing so both engines
+      // sum integers exactly (double-accumulation order is not portable)
+      _.agg(count(lit(1)).as("n_lines"), sum(col("l_quantity").cast("long")).as("sum_qty")))
   }
 
   /** HLL distinct users per event type over the events stream table

@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Frames
 import graft.core.BloomConfig
-import graft.plans.{GraftFunctions, NativeAggs}
 
 /** Train/eval n-gram DECONTAMINATION — the canonical LLM-training-pipeline
   * use of a Bloom filter (the reference's membership sketch in its natural
@@ -18,13 +16,12 @@ import graft.plans.{GraftFunctions, NativeAggs}
   *   - eval side: one selective scan -> map-side per-doc gram dedup ->
   *     distinct -> a single Bloom sketch + a small distinct-gram frame.
   *     Benchmark/eval sets are tiny relative to the corpus by construction.
-  *   - train side: map-side gram explode, then the Bloom PREFILTER drops
-  *     ~everything before any join (uncontaminated grams never shuffle),
-  *     and the exact confirmation is a BROADCAST left-semi join against the
-  *     eval gram set — exact regardless of Bloom false positives (the same
-  *     FP-immune pattern as [[graft.SketchQueries.bloomJoinLineitem]]), with
-  *     zero train-side shuffle until the per-doc rollup of the (rare)
-  *     surviving hits.
+  *   - train side: map-side gram explode, then [[BloomJoin.semi]]: the
+  *     Bloom PREFILTER drops ~everything before any join (uncontaminated
+  *     grams never shuffle), and the exact confirmation is a BROADCAST
+  *     left-semi join against the eval gram set — exact regardless of
+  *     Bloom false positives, with zero train-side shuffle until the
+  *     per-doc rollup of the (rare) surviving hits.
   *
   * Gram identity is the n consecutive token ids joined with '|' — injective
   * (ids render without '|'), so hash collisions cannot create false
@@ -103,60 +100,33 @@ object Decontamination {
     * (document, gram) pairs whose gram occurs anywhere in the eval source.
     * Exact — the Bloom is a pruning prefilter only. */
   def decontaminate(tokens: DataFrame, evalSource: String, n: Int,
-      cfg: BloomConfig): DataFrame = {
-    val (out, evalGrams) = decontaminateLazy(tokens, evalSource, n, cfg)
-    // materialize before releasing the persisted eval side
-    try Frames.materialize(out)
-    finally evalGrams.unpersist()
-  }
+      cfg: BloomConfig): DataFrame =
+    contaminated(tokens, evalSource, n, cfg)(report(tokens, evalSource, _))
 
-  /** The shared hit path: confirmed contaminated (doc_id, source, gram)
-    * rows plus the persisted eval gram frame (caller unpersists). Bloom
-    * prefilter in the scan stage, its filter built in the same query (a
-    * scalar subquery over the eval grams, decoded once per task), then the
-    * broadcast exact confirm — FP-immune. Building the plan runs no job. */
-  private def hitRowsLazy(tokens: DataFrame, evalSource: String,
-      n: Int, cfg: BloomConfig): (DataFrame, DataFrame) = {
+  /** `use` applied to the contaminated (doc_id, source, gram) rows of the
+    * train sources, through [[BloomJoin.semi]]: the distinct eval grams
+    * build the filter and are the broadcast build side of the exact
+    * confirm. Serves [[decontaminate]] and the curation funnel's drop-set. */
+  private[graft] def contaminated(tokens: DataFrame, evalSource: String, n: Int,
+      cfg: BloomConfig)(use: DataFrame => DataFrame): DataFrame = {
     val grams = gramRows(tokens, n)
-    val evalGrams = grams.where(col("source") === evalSource)
-      .select(col("gram")).distinct().persist()
-    val sketch = evalGrams.agg(NativeAggs.column(SketchKinds.Bloom(cfg), col("gram"))).scalar()
-    val train = grams.where(col("source") =!= evalSource)
-    val prefiltered =
-      train.where(GraftFunctions.bloomMightContain(sketch, col("gram")))
-    // exact confirm: FP-immune, broadcast (eval gram sets are small by
-    // construction at any corpus scale)
-    (prefiltered.join(broadcast(evalGrams), Seq("gram"), "left_semi"), evalGrams)
+    BloomJoin.semi(grams.where(col("source") =!= evalSource), "gram",
+      grams.where(col("source") === evalSource).select(col("gram")).distinct(), "gram", cfg)(use)
   }
 
-  /** Distinct contaminated train doc ids — the DROP-SET a curation funnel
-    * consumes (same prefilter + confirm path as the report; ids-only
-    * output, so nothing doc-sized shuffles). Caller unpersists the second
-    * frame once the first is consumed. */
-  private[graft] def contaminatedDocIdsLazy(tokens: DataFrame, evalSource: String,
-      n: Int, cfg: BloomConfig): (DataFrame, DataFrame) = {
-    val (hits, evalGrams) = hitRowsLazy(tokens, evalSource, n, cfg)
-    (hits.select(col("doc_id")).distinct(), evalGrams)
-  }
-
-  /** The lazy plan behind [[decontaminate]] plus its persisted eval gram
-    * frame; the caller owns the unpersist. Building it starts no Spark
-    * job. */
-  private[graft] def decontaminateLazy(tokens: DataFrame, evalSource: String,
-      n: Int, cfg: BloomConfig): (DataFrame, DataFrame) = {
-    val (hits, evalGrams) = hitRowsLazy(tokens, evalSource, n, cfg)
+  /** The per-source report of [[decontaminate]] over its hit rows. */
+  private[graft] def report(tokens: DataFrame, evalSource: String, hits: DataFrame): DataFrame = {
     val perSourceHits = hits
       .groupBy(col("source"))
       .agg(countDistinct(col("doc_id")).as("n_contam_docs"),
         count(lit(1)).as("n_hits"))
-    val base = tokens.where(col("source") =!= evalSource)
+    tokens.where(col("source") =!= evalSource)
       .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-    val out = base.join(perSourceHits, Seq("source"), "left")
+      .join(perSourceHits, Seq("source"), "left")
       .select(col("source"), col("n_docs"),
         coalesce(col("n_contam_docs"), lit(0L)).as("n_contam_docs"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"))
       .orderBy(col("source"))
-    (out, evalGrams)
   }
 
   /** The exact twin with NO Bloom prefilter — test-only soundness control:

@@ -33,16 +33,6 @@ object TextPipeline {
     coalesce(graft.plans.GraftFunctions.sipHash64(textCol), lit(0L))
   }
 
-  /** Exact dedup via content fingerprint: one row per distinct fingerprint,
-    * keeping the lexically-smallest doc_id (deterministic winner). */
-  def dedupExactByFingerprint(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("fp", fingerprintCol(docs, col(textCol)))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
-      .where(col("rn") === 1)
-      .drop("rn")
-
   // ----------------------------------------- winnowing (rolling hash)
 
   /** Winnowing modulus/base: P = 2^31 - 1 keeps every intermediate
@@ -331,7 +321,7 @@ object TextPipeline {
     * verified pairs -> cluster labels -> one deterministic winner per
     * cluster. Returns (id, cluster) for every id appearing in a pair,
     * where cluster = the component's MINIMUM id (the canonical winner,
-    * mirroring [[dedupExactByFingerprint]]'s min-doc_id rule).
+    * the min-doc_id rule of exact dedup).
     *
     * Algorithm: iterative min-label propagation with pointer jumping —
     * each round (a) takes the min over own + neighbours' labels, then

@@ -582,6 +582,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = graft.operators.Decontamination
       .decontaminateExact(t, "src0", 4).collect().map(_.toSeq).toSeq
     assert(a === b)
+    // NULL keys on both sides: the helper's null-safe confirm must still
+    // return the rows of a plain `=` semi-join with no prefilter
+    import spark.implicits._
+    val probe = Seq[(Option[String], Int)](
+      (Some("a"), 1), (Some("b"), 2), (None, 3), (Some("d"), 4), (None, 5)).toDF("k", "v")
+    val build = Seq[Option[String]](Some("b"), None, Some("d"), Some("e")).toDF("k")
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_(1).toString)
+    val viaHelper = sorted(graft.operators.BloomJoin.semi(probe, "k", build, "k",
+      SketchQueries.bloomCfg)(identity))
+    assert(viaHelper === sorted(probe.join(build, Seq("k"), "left_semi")))
+    assert(viaHelper.map(_(1)) === Seq(2, 4))
   }
 
   test("decontamination: empty eval source yields zero hits, full doc counts") {

@@ -4,7 +4,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.ScalarSubquery
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.BinaryType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,8 +24,9 @@ import graft.streaming.StreamingSketch
   * stages and subqueries included) must hold no binary literal over
   * 1 KiB, and every Bloom probe's sketch argument must be computed from
   * scalar subqueries only (a subquery, a field of one, or a read function
-  * over them). Building the decontamination plan must start no Spark
-  * job, and neither must reading the tokens table after a warm-up call. */
+  * over them). No Bloom semi-join may probe the build side that built its
+  * filter. Building the decontamination plan must start no Spark job, and
+  * neither must reading the tokens table after a warm-up call. */
 class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -119,12 +122,34 @@ class ProbePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       (s"doc-$i", toks, toks.length, s"src${i % 3}")
     }
     val tokens = spark.createDataFrame(rows).toDF("doc_id", "tokens", "n_tok", "source")
-    val (out, evalGrams) = withoutJobs("building the decontamination plan")(
-      Decontamination.decontaminateLazy(tokens, "src0", 4, cfg))
-    try {
-      val exact = Decontamination.decontaminateExact(tokens, "src0", 4).collect().toSeq
-      assert(out.collect().toSeq === exact)
-      assert(exact.exists(_.getLong(2) > 0L), "the fixture plants contamination")
-    } finally evalGrams.unpersist()
+    // the helper's materialize runs after `use` returns the plan: its jobs
+    // go to their own group, so only the jobs of building the plan count
+    val out = withoutJobs("building the decontamination plan")(
+      Decontamination.contaminated(tokens, "src0", 4, cfg) { hits =>
+        val plan = Decontamination.report(tokens, "src0", hits)
+        spark.sparkContext.setJobGroup("materialize", "BloomJoin.semi materializes the report")
+        plan
+      })
+    val exact = Decontamination.decontaminateExact(tokens, "src0", 4).collect().toSeq
+    assert(out.collect().toSeq === exact)
+    assert(exact.exists(_.getLong(2) > 0L), "the fixture plants contamination")
+  }
+
+  test("no Bloom semi-join probes its own build side") {
+    // the build side of a left-semi join is its right child; every row
+    // there built the filter, so a probe there can only return true
+    val onBuildSide = Seq("q_bloom_prefilter_semijoin", "q_bloom_join_lineitem",
+        "q_ngram_contamination", "q_curation_funnel").flatMap { name =>
+      val plans = PlanCapture.plansOf(spark)(
+        assert(SparkEntry.queries(name)(spark, dir).collect().nonEmpty)).map(_.executedPlan)
+      val semis = plans.flatMap(PlanCapture.collectWithSubqueries(_) {
+        case j: BaseJoinExec if j.joinType == LeftSemi => j
+      })
+      assert(semis.nonEmpty, s"$name: no left-semi join in the executed plans")
+      PlanCapture.expressionsOf(semis.map(_.right)).collect {
+        case r: SketchRead if r.fn.isInstanceOf[BloomProbe] => s"$name: $r"
+      }
+    }
+    assert(onBuildSide.isEmpty, s"build sides probe their own filter:\n${onBuildSide.mkString("\n")}")
   }
 }
